@@ -17,7 +17,13 @@ trait EventStore {
   /** Idempotent schema init/migration (store.go:55-71). */
   def init(): Unit
 
-  /** Dedup-append a batch; returns rows actually stored (S7/R18). */
+  /** Dedup-append a batch; returns rows actually stored (S7/R18).
+    * Rows failing the CHECK (`created_at > epoch`, so NULL too) are
+    * dropped, one row per guid is kept, and guids already stored are
+    * skipped. `ParquetEventStore` keeps a guid's first row, numbers new
+    * rows `max + 1 …` in (created_at, guid) order, and stores a batch
+    * whose rows sit on the driver (a collector page) with one Spark job,
+    * two when its bloom sidecars say a guid may already be stored. */
   def storeCFAuditEvents(batch: DataFrame): Long
 
   /** Ordered page over stored events (store.go:108-145). */

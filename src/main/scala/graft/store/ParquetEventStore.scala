@@ -1,8 +1,18 @@
 package graft.store
 
 import java.sql.Timestamp
-import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession, functions => F}
+import java.time.LocalDate
+import scala.jdk.CollectionConverters._
+import scala.util.Try
 
+import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession, functions => F}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.graftnative.BloomFunctions
+import org.apache.spark.sql.types.{DateType, StructType}
+import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.util.sketch.BloomFilter
+
+import graft.functions.BloomSupport
 import graft.model.Schemas
 import graft.operators.AuditQueries
 import graft.operators.AuditQueries.RawEventFilter
@@ -18,12 +28,29 @@ import graft.operators.AuditQueries.RawEventFilter
   *    partitions.
   *  - **Bounded dedup**: the collector re-fetches with only a 5 s overlap
   *    (collector.go:36), so a batch can only collide with events in its own
-  *    time range. The anti-join right side is pruned to
+  *    time range. Dedup is scoped to partitions with
   *    `event_date >= min(batch date)` — O(overlap), not O(history).
+  *  - **One Spark job per collector page**: a page is at most 100 rows and
+  *    already on the driver. When the batch plan folds to a `LocalRelation`
+  *    (`Collector.pageToDf` always does), `collect()` runs no job, and the
+  *    store dedups, numbers and blooms the rows on the driver. The
+  *    partitioned parquet append is then the only job. The alternative, the
+  *    distributed plan, spends about ten jobs on a page, and per-job launch
+  *    cost, not data volume, bounds the daemon.
+  *  - **Bloom-gated dedup probe** (driver path): each scoped partition's
+  *    `_bloom_guid/<date>` sidecar is read once and probed per guid. Only
+  *    bloom-positive guids (every guid, for a partition with no readable
+  *    sidecar) go to one exact `guid IN (...)` scan over the partitions
+  *    that matched; with no positives there is no probe job. Blooms have
+  *    no false negatives, so the dedup stays exact.
+  *  - **Distributed path** for batches that are not on the driver
+  *    (streaming micro-batches, bulk loads): the scoped anti-join, a
+  *    `row_number` window for ids, one bloom aggregate per touched date.
+  *    Both paths store identical rows, ids, stats and sidecar bytes.
   *  - **Bounded latest-time read**: `max(created_at)` restricted to the max
   *    partition via partition listing, not a full scan.
   *  - **Cursor writes are O(#shippers)**: collected to the driver and
-  *    rewritten atomically (tmp + swap); at any scale #shippers is tiny.
+  *    rewritten with a rename-aside swap; at any scale #shippers is tiny.
   */
 final class ParquetEventStore(spark: SparkSession, warehouseDir: String) extends EventStore {
   private val eventsPath = s"$warehouseDir/cf_audit_events"
@@ -42,31 +69,119 @@ final class ParquetEventStore(spark: SparkSession, warehouseDir: String) extends
 
   override def init(): Unit = {
     // Idempotent, like the reference's in-transaction DDL (store.go:55-71).
-    if (!exists(eventsPath))
+    if (!exists(eventsPath)) {
       emptyEvents.withColumn("event_date", F.to_date(F.col("created_at")))
         .write.partitionBy("event_date").parquet(eventsPath)
+      // A table created here is empty, so its sidecars start exact and the
+      // first batch needs no recovery scan.
+      writeSidecar(maxIdPath, 0L)
+      writeStatsCount(0L)
+    }
+    // A crash inside updateShipperCursor's swap can leave the live cursor
+    // table renamed aside, complete: bring it back rather than start empty.
+    if (!exists(cursorsPath) && exists(cursorsPath + "_old"))
+      renameOrAbort(new org.apache.hadoop.fs.Path(cursorsPath + "_old"),
+        new org.apache.hadoop.fs.Path(cursorsPath))
     if (!exists(cursorsPath))
       emptyCursors.write.parquet(cursorsPath)
   }
 
   override def events: DataFrame = {
-    val df = spark.read.schema(
-      Schemas.cfAuditEvents.add("event_date", org.apache.spark.sql.types.DateType))
-      .parquet(eventsPath)
+    val df = spark.read.schema(eventsWithDateSchema).parquet(eventsPath)
     df.select(Schemas.cfAuditEvents.fieldNames.map(F.col).toSeq: _*)
   }
 
   /** Events with the partition column retained, for pruned scans. */
   private def eventsWithDate: DataFrame =
-    spark.read.schema(
-      Schemas.cfAuditEvents.add("event_date", org.apache.spark.sql.types.DateType))
-      .parquet(eventsPath)
+    spark.read.schema(eventsWithDateSchema).parquet(eventsPath)
 
   override def cursors: DataFrame =
     spark.read.schema(Schemas.shipperCursors).parquet(cursorsPath)
 
   override def storeCFAuditEvents(batch: DataFrame): Long = {
     val (valid, _) = AuditQueries.splitOnCheck(batch) // R21 CHECK constraints
+    // Spark computes event_date and its directory spelling `__day` for the
+    // driver path too, so it names exactly the writer's partitions.
+    val dated = valid
+      .withColumn("id", F.lit(0L)) // assigned below
+      .select(Schemas.cfAuditEvents.fieldNames.map(F.col).toSeq: _*)
+      .withColumn("event_date", F.to_date(F.col("created_at")))
+      .withColumn("__day", F.col("event_date").cast("string"))
+    dated.queryExecution.optimizedPlan match {
+      case _: LocalRelation => storeOnDriver(dated.collect()) // folded: collect runs no job
+      case _ => storeDistributed(valid)
+    }
+  }
+
+  private val eventsWithDateSchema = Schemas.cfAuditEvents.add("event_date", DateType)
+  // The rows carry whatever nulls the batch had, as in the distributed write.
+  private val nullableEventsWithDate =
+    StructType(eventsWithDateSchema.map(_.copy(nullable = true)))
+  private val idIdx = Schemas.cfAuditEvents.fieldIndex("id")
+  private val guidIdx = Schemas.cfAuditEvents.fieldIndex("guid")
+  private val createdIdx = Schemas.cfAuditEvents.fieldIndex("created_at")
+  private val dayIdx = eventsWithDateSchema.length // the trailing `__day`
+
+  /** Spark's string order (UTF-8 bytes, nulls first) — the `row_number`
+    * window's guid tiebreak, reproduced on the driver. */
+  private val guidOrder: Ordering[String] = (a, b) =>
+    if (a == null || b == null) java.lang.Boolean.compare(a != null, b != null)
+    else UTF8String.fromString(a).binaryCompare(UTF8String.fromString(b))
+
+  private val ingestOrder: Ordering[Row] = (a, b) => {
+    val t = a.getTimestamp(createdIdx).compareTo(b.getTimestamp(createdIdx))
+    if (t != 0) t else guidOrder.compare(a.getString(guidIdx), b.getString(guidIdx))
+  }
+
+  /** Driver path for a batch already collected (rows: event columns,
+    * event_date, `__day`): the same dedup, ids and blooms as
+    * [[storeDistributed]], with the parquet append as the only Spark job
+    * unless a bloom sidecar in scope matches a batch guid. */
+  private def storeOnDriver(rows: Array[Row]): Long = {
+    val fresh = rows.distinctBy(_.getString(guidIdx)) // first occurrence per guid wins
+    if (fresh.isEmpty) return 0L
+    val minDay = fresh.map(r => LocalDate.parse(r.getString(dayIdx))).min
+    val scope = partitionDates
+      .filter(d => Try(LocalDate.parse(d)).toOption.exists(!_.isBefore(minDay)))
+    val batchDays = fresh.map(_.getString(dayIdx)).distinct
+    val sidecars = (scope ++ batchDays).distinct.map(d => d -> readBytes(bloomPath(d))).toMap
+    // Blooms have no false negatives: only bloom-positive guids (all guids
+    // where a scoped partition has no readable sidecar) can be stored.
+    val guids = fresh.map(_.getString(guidIdx)).filter(_ != null)
+      .map(g => g -> BloomFunctions.hashDriver(g))
+    val positives = scope.flatMap { d =>
+      val bf = sidecars(d).flatMap(b => Try(BloomFilter.readFrom(b)).toOption)
+      guids.collect { case (g, h) if bf.forall(_.mightContainLong(h)) => d -> g }
+    }
+    val stored =
+      if (positives.isEmpty) Set.empty[String]
+      else spark.read.schema(Schemas.cfAuditEvents)
+        .parquet(positives.map(_._1).distinct.map(d => s"$eventsPath/event_date=$d"): _*)
+        .filter(F.col("guid").isin(positives.map(_._2).distinct: _*))
+        .select("guid").collect().map(_.getString(0)).toSet
+    val kept = fresh.filterNot(r => stored.contains(r.getString(guidIdx))).sorted(ingestOrder)
+    val n = kept.length.toLong
+    if (n > 0) {
+      val base = maxId()
+      val withId = kept.iterator.zipWithIndex.map { case (r, i) =>
+        Row.fromSeq(r.toSeq.init.updated(idIdx, base + 1 + i))
+      }.toSeq
+      val blooms = kept.groupBy(_.getString(dayIdx)).toSeq.map { case (d, rs) =>
+        d -> BloomFunctions.bloomDriver(rs.map(_.getString(guidIdx)), bloomItems, bloomBits)
+      }
+      commit(base, n, blooms, sidecars) {
+        spark.createDataFrame(withId.asJava, nullableEventsWithDate)
+          .coalesce(1) // one file per date, as the window-ordered distributed write
+          .write.mode(SaveMode.Append).partitionBy("event_date").parquet(eventsPath)
+      }
+    }
+    n
+  }
+
+  /** Distributed path, for batches that do not sit on the driver
+    * (streaming micro-batches, bulk loads): overlap-scoped anti-join,
+    * `row_number` ids, one bloom aggregate per touched date. */
+  private def storeDistributed(valid: DataFrame): Long = {
     // Prune the dedup anti-join to partitions the batch can touch (see
     // class doc); fall back to full history only if the batch is empty.
     val minTs = valid.agg(F.min("created_at")).collect()(0)
@@ -83,22 +198,42 @@ final class ParquetEventStore(spark: SparkSession, warehouseDir: String) extends
       .cache()
     val n = withId.count()
     if (n > 0) {
-      // RESERVE the id range (sidecar write) BEFORE appending the data:
-      // ids are contiguous base+1..base+n, and a crash between the two
-      // steps then leaves an id GAP (harmless — the reference's SERIAL
-      // has gaps too), never a stale sidecar that would hand the same
-      // range to the next batch and create duplicate ingest ids.
-      writeSidecar(maxIdPath, base + n)
-      // Guid bloom sidecars ALSO update before the data lands: a bloom
-      // that over-approximates (crash after bloom, before data) only
-      // costs a false-positive partition scan; one that under-
-      // approximates would make lookupByGuid MISS rows.
-      updateGuidBlooms(withId)
-      withId.write.mode(SaveMode.Append).partitionBy("event_date").parquet(eventsPath)
-      writeStatsCount(readStatsCount().getOrElse(0L) + n) // reltuples analog
+      val days = withId.select(F.col("event_date").cast("string")).distinct()
+        .collect().map(_.getString(0)) // bounded by dates touched by one batch
+      val blooms = days.toSeq.map(d => d -> withId
+        .filter(F.col("event_date").cast("string") === d)
+        .agg(BloomSupport.bloomAgg(F.col("guid"), bloomItems, bloomBits).as("bf"))
+        .head.getAs[Array[Byte]]("bf"))
+      commit(base, n, blooms, Map.empty) {
+        withId.write.mode(SaveMode.Append).partitionBy("event_date").parquet(eventsPath)
+      }
     }
     withId.unpersist()
     n
+  }
+
+  /** The durable steps both paths share, in crash-safe order. `read`
+    * holds sidecar bytes the caller already read (others are read here). */
+  private def commit(base: Long, n: Long, blooms: Seq[(String, Array[Byte])],
+                     read: Map[String, Option[Array[Byte]]])(append: => Unit): Unit = {
+    // Exact count before the append when the stats sidecar is missing:
+    // afterwards the table already holds the batch.
+    val countBefore = readStatsCount().getOrElse(AuditQueries.eventCount(events))
+    // RESERVE the id range (sidecar write) BEFORE appending the data:
+    // ids are contiguous base+1..base+n, and a crash between the two
+    // steps then leaves an id GAP (harmless — the reference's SERIAL
+    // has gaps too), never a stale sidecar that would hand the same
+    // range to the next batch and create duplicate ingest ids.
+    writeSidecar(maxIdPath, base + n)
+    // Guid bloom sidecars ALSO update before the data lands: a bloom
+    // that over-approximates (crash after bloom, before data) only
+    // costs a false-positive partition scan; one that under-
+    // approximates would make lookupByGuid MISS rows.
+    blooms.foreach { case (d, b) =>
+      writeBytes(bloomPath(d), mergedSidecar(d, read.getOrElse(d, readBytes(bloomPath(d))), b))
+    }
+    append
+    writeStatsCount(countBefore + n) // reltuples analog
   }
 
   // Fixed per store so every sidecar is mergeInPlace-compatible.
@@ -117,49 +252,39 @@ final class ParquetEventStore(spark: SparkSession, warehouseDir: String) extends
     try out.write(b) finally out.close()
   }
 
-  private def updateGuidBlooms(withId: DataFrame): Unit = {
-    import org.apache.spark.sql.graftnative.BloomFunctions
-    val dates = withId.select(F.col("event_date").cast("string")).distinct()
-      .collect().map(_.getString(0)) // bounded by dates touched by one batch
-    dates.foreach { d =>
-      val batchBloom = withId
-        .filter(F.col("event_date").cast("string") === d)
-        .agg(graft.functions.BloomSupport
-          .bloomAgg(F.col("guid"), bloomItems, bloomBits).as("bf"))
-        .head.getAs[Array[Byte]]("bf")
-      val merged = readBytes(bloomPath(d)) match {
-        case Some(old) =>
-          try BloomFunctions.mergeBloom(old, batchBloom)
-          catch { // sizing drift: rebuild from the partition already on disk
-            case _: Exception =>
-              val dir = s"$eventsPath/event_date=$d"
-              val onDisk =
-                if (exists(dir))
-                  spark.read.schema(Schemas.cfAuditEvents).parquet(dir)
-                    .agg(graft.functions.BloomSupport
-                      .bloomAgg(F.col("guid"), bloomItems, bloomBits).as("bf"))
-                    .head.getAs[Array[Byte]]("bf")
-                else batchBloom
-              BloomFunctions.mergeBloom(onDisk, batchBloom)
-          }
-        case None => batchBloom
-      }
-      writeBytes(bloomPath(d), merged)
+  /** A date's new sidecar bytes: the batch's bloom OR-ed into the old one. */
+  private def mergedSidecar(d: String, old: Option[Array[Byte]],
+                            batchBloom: Array[Byte]): Array[Byte] =
+    old match {
+      case Some(o) =>
+        try BloomFunctions.mergeBloom(o, batchBloom)
+        catch { // sizing drift: rebuild from the partition already on disk
+          case _: Exception =>
+            val dir = s"$eventsPath/event_date=$d"
+            val onDisk =
+              if (exists(dir))
+                spark.read.schema(Schemas.cfAuditEvents).parquet(dir)
+                  .agg(BloomSupport.bloomAgg(F.col("guid"), bloomItems, bloomBits).as("bf"))
+                  .head.getAs[Array[Byte]]("bf")
+              else batchBloom
+            BloomFunctions.mergeBloom(onDisk, batchBloom)
+        }
+      case None => batchBloom
     }
-  }
+
+  /** Date values of the `event_date=` partition directories. */
+  private def partitionDates: Seq[String] =
+    fs.listStatus(new org.apache.hadoop.fs.Path(eventsPath))
+      .filter(d => d.isDirectory && d.getPath.getName.startsWith("event_date="))
+      .map(_.getPath.getName.stripPrefix("event_date="))
+      .toSeq
 
   /** Partitions a guid POINT LOOKUP must scan: every partition whose guid
     * bloom sidecar matches (or that has no sidecar — unprunable). A
     * driver-side metadata decision, O(#partitions), never a data scan. */
-  def guidCandidatePartitions(guid: String): Seq[String] = {
-    import org.apache.spark.sql.graftnative.BloomFunctions
-    fs.listStatus(new org.apache.hadoop.fs.Path(eventsPath))
-      .filter(d => d.isDirectory && d.getPath.getName.startsWith("event_date="))
-      .map(_.getPath.getName.stripPrefix("event_date="))
-      .filter(d => readBytes(bloomPath(d))
-        .forall(b => BloomFunctions.mightContainDriver(b, guid)))
-      .toSeq
-  }
+  def guidCandidatePartitions(guid: String): Seq[String] =
+    partitionDates.filter(d => readBytes(bloomPath(d))
+      .forall(b => BloomFunctions.mightContainDriver(b, guid)))
 
   /** Guid point lookup — the reference's `cf_audit_events_guid` index
     * access path: per-partition bloom sidecars (maintained at store time,
@@ -243,15 +368,15 @@ final class ParquetEventStore(spark: SparkSession, warehouseDir: String) extends
                             to: org.apache.hadoop.fs.Path): Unit =
     StoreIO.renameOrAbort(fs, from, to, "event-store swap")
 
-  /** Rename-aside swap of the whole events tree: the live tree is moved
+  /** Rename-aside swap of a whole table tree: the live tree is moved
     * aside (not deleted) before the new tree's rename, so a crash at any
     * point leaves the data recoverable — either the live tree is still in
     * place, or it sits complete in the `_old` sibling. Delete runs only
     * after the new tree is live, and only if both renames succeeded. */
-  private def swapEventsTree(tmp: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(eventsPath)
+  private def swapTree(tmp: String, live: String): Unit = {
+    val p = new org.apache.hadoop.fs.Path(live)
     val t = new org.apache.hadoop.fs.Path(tmp)
-    val aside = new org.apache.hadoop.fs.Path(eventsPath + "_old")
+    val aside = new org.apache.hadoop.fs.Path(live + "_old")
     if (fs.exists(aside)) fs.delete(aside, true)
     renameOrAbort(p, aside)
     renameOrAbort(t, p)
@@ -278,7 +403,7 @@ final class ParquetEventStore(spark: SparkSession, warehouseDir: String) extends
       .write.mode(SaveMode.Overwrite)
       .option("maxRecordsPerFile", maxRecordsPerFile)
       .partitionBy("event_date").parquet(tmp)
-    swapEventsTree(tmp)
+    swapTree(tmp, eventsPath)
     (before, countFiles())
   }
 
@@ -374,7 +499,7 @@ final class ParquetEventStore(spark: SparkSession, warehouseDir: String) extends
       .write.mode(SaveMode.Overwrite)
       .option("maxRecordsPerFile", maxRecordsPerFile)
       .partitionBy("event_date").parquet(tmp)
-    swapEventsTree(tmp)
+    swapTree(tmp, eventsPath)
     (before, countFiles())
   }
 
@@ -401,12 +526,10 @@ final class ParquetEventStore(spark: SparkSession, warehouseDir: String) extends
     val updated = existing :+ Row(shipperName, ts, shippedId)
     val df = spark.createDataFrame(
       spark.sparkContext.parallelize(updated, 1), Schemas.shipperCursors)
-    // atomic-ish swap: write tmp, delete, rename
+    // Write tmp, then the rename-aside swap: a crash never leaves the
+    // cursors only in a deleted tree (init() restores the `_old` sibling).
     val tmp = cursorsPath + "_tmp"
     df.write.mode(SaveMode.Overwrite).parquet(tmp)
-    val p = new org.apache.hadoop.fs.Path(cursorsPath)
-    val t = new org.apache.hadoop.fs.Path(tmp)
-    if (fs.exists(p)) fs.delete(p, true)
-    renameOrAbort(t, p) // a silent false would leave the cursor update unreported
+    swapTree(tmp, cursorsPath)
   }
 }

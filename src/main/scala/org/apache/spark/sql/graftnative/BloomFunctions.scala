@@ -4,6 +4,7 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Literal, XxHash64}
 import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
 import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.types.StringType
 
 /** Column surface over Catalyst's native bloom-filter pair — the same
   * codegen'd expressions Spark's own runtime row-group filtering injects
@@ -39,13 +40,28 @@ object BloomFunctions {
     * metadata-scale pruning decisions (e.g. per-partition sidecar blooms
     * consulted before planning a scan) where spinning a 1-row job per
     * sidecar would be absurd. */
-  def mightContainDriver(bloomBytes: Array[Byte], value: String): Boolean = {
-    val hash = new XxHash64(Seq(Literal(
-      org.apache.spark.unsafe.types.UTF8String.fromString(value))))
-      .eval(null).asInstanceOf[Long]
+  def mightContainDriver(bloomBytes: Array[Byte], value: String): Boolean =
     org.apache.spark.util.sketch.BloomFilter
       .readFrom(new java.io.ByteArrayInputStream(bloomBytes))
-      .mightContainLong(hash)
+      .mightContainLong(hashDriver(value))
+
+  /** The long [[bloomAgg]] and [[mightContain]] put into / probe the
+    * filter for a string key: `XxHash64` of the value (its seed for null). */
+  def hashDriver(value: String): Long =
+    new XxHash64(Seq(Literal.create(value, StringType))).eval(null).asInstanceOf[Long]
+
+  /** DRIVER-side build, byte-identical to [[bloomAgg]] over the same values
+    * and constants: the aggregate's buffer is `BloomFilter.create(items,
+    * numBits)` fed `putLong(XxHash64(value))`, and its partial buffers merge
+    * by bitwise OR, so row order and partitioning do not show in the bytes.
+    * For batches that already sit on the driver, where the aggregate would
+    * cost one Spark job per filter. */
+  def bloomDriver(values: Iterable[String], items: Long, numBits: Long): Array[Byte] = {
+    val bf = org.apache.spark.util.sketch.BloomFilter.create(items, numBits)
+    values.foreach(v => bf.putLong(hashDriver(v)))
+    val out = new java.io.ByteArrayOutputStream()
+    bf.writeTo(out)
+    out.toByteArray
   }
 
   /** Union two serialized filters built with the same (items, numBits)

@@ -1,12 +1,20 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Path}
+import java.sql.Timestamp
 import java.time.Instant
+import java.util.concurrent.atomic.AtomicInteger
 import scala.collection.mutable
+import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{functions => F}
+import org.apache.spark.TestBus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{DataFrame, Row, functions => F}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.types.StructType
 
 import graft.metrics.{Metrics, MetricsRegistry}
+import graft.model.Schemas
 import graft.sources._
 import graft.store.ParquetEventStore
 import graft.streaming.{Collector, Informer, SplunkHecClient, SplunkShipper}
@@ -289,6 +297,35 @@ class StoreAndPipelineSpec extends SparkSpec {
       rows(0).getString(2) shouldBe "g3"
       rows(0).getTimestamp(1).toInstant shouldBe Instant.parse("2024-01-03T00:00:00Z")
     }
+    it("rebases a lost stats count on the exact count before the append") {
+      val dir = Files.createTempDirectory("graft-store-count").toString
+      val st = new ParquetEventStore(spark, dir); st.init()
+      val f = new CfAuditEventFetcher(new FakeTransport(Map.empty), "")
+      val collector = new Collector(spark, st, f, new MetricsRegistry)
+      val mk = (g: String) => CfWireEvent(g, "2024-01-01T10:00:00Z", "t", "a", "at", "an", "au",
+        "e", "et", "en", "", "sg", "{}")
+      st.storeCFAuditEvents(collector.pageToDf(Seq(mk("a"), mk("b"), mk("c"))))
+      new java.io.File(s"$dir/_stats_count").delete() shouldBe true
+      st.storeCFAuditEvents(collector.pageToDf(Seq(mk("c"), mk("d")))) shouldBe 1L
+      st.getCFEventCount() shouldBe 4L // not the batch size
+      Files.readString(new java.io.File(s"$dir/_stats_count").toPath).trim shouldBe "4"
+    }
+
+    it("restores cursors a crash left renamed aside mid-swap") {
+      val dir = Files.createTempDirectory("graft-store-cursor").toString
+      val st = new ParquetEventStore(spark, dir); st.init()
+      st.updateShipperCursor("s1", "2024-01-01T00:00:00Z", "g1")
+      st.updateShipperCursor("s2", "2024-01-02T00:00:00Z", "g2")
+      new java.io.File(s"$dir/shipper_cursors_old").exists() shouldBe false
+      new java.io.File(s"$dir/shipper_cursors_tmp").exists() shouldBe false
+      // the swap's first rename happened, the second did not
+      Files.move(java.nio.file.Paths.get(s"$dir/shipper_cursors"),
+        java.nio.file.Paths.get(s"$dir/shipper_cursors_old"))
+      val restarted = new ParquetEventStore(spark, dir); restarted.init()
+      restarted.cursors.orderBy("name").collect().map(r => (r.getString(0), r.getString(2))) shouldBe
+        Array(("s1", "g1"), ("s2", "g2"))
+      new java.io.File(s"$dir/shipper_cursors_old").exists() shouldBe false
+    }
   }
 
   describe("Collector (collector.go semantics)") {
@@ -547,6 +584,132 @@ class StoreAndPipelineSpec extends SparkSpec {
       new Informer(st, reg).informOnce()
       reg.gaugeValue(Metrics.InformerEventsTotal) shouldBe 0.0
       reg.gaugeValue(Metrics.InformerLatestEventTimestamp) shouldBe 0.0
+    }
+  }
+
+  // `ParquetEventStore.storeCFAuditEvents` has two paths: batches whose plan
+  // folds to a `LocalRelation` (every collector page) are deduped, numbered
+  // and bloomed on the driver; all others go through the distributed
+  // anti-join / `row_number` / bloom-aggregate plan. Both must leave the
+  // warehouse byte-for-byte in the same state, and the driver path must
+  // cost one Spark job per page.
+
+  // pageToDf's output schema is nullable; so is this one.
+  private val nullableEvents = StructType(Schemas.cfAuditEvents.map(_.copy(nullable = true)))
+
+  private def ev(guid: String, at: String, eventType: String = "t",
+                 org: String = "og", space: String = "sg"): Row = {
+    val ts = scala.util.Try(Timestamp.from(Instant.parse(at))).toOption.orNull
+    Row(0L, guid, ts, at, eventType, "a", "at", "an", "au", "e", "et", "en", org, space, "{}")
+  }
+
+  private def onDriver(rows: Seq[Row]): DataFrame =
+    spark.createDataFrame(rows.asJava, nullableEvents)
+
+  // One slice: first occurrence of an in-batch duplicate is deterministic.
+  private def distributed(rows: Seq[Row]): DataFrame =
+    spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), nullableEvents)
+
+  private def newStoreAt(): (ParquetEventStore, Path) = {
+    val dir = Files.createTempDirectory("graft-store-paths")
+    val st = new ParquetEventStore(spark, dir.toString)
+    st.init()
+    (st, dir)
+  }
+
+  private def bloomFiles(dir: Path): Map[String, Seq[Byte]] = {
+    val d = dir.resolve("_bloom_guid").toFile
+    Option(d.listFiles()).toSeq.flatten
+      .map(f => f.getName -> Files.readAllBytes(f.toPath).toSeq).toMap
+  }
+
+  private def sidecarText(dir: Path, name: String): String =
+    Files.readString(dir.resolve(name)).trim
+
+  private def storedRows(st: ParquetEventStore): Seq[Seq[Any]] =
+    st.events.orderBy("id").collect().map(_.toSeq).toSeq
+
+  describe("driver path == distributed path") {
+    it("stores identical rows, ids, stats and bloom sidecars") {
+      val (drv, dirA) = newStoreAt()
+      val (dst, dirB) = newStoreAt()
+      def both(batch: Seq[Row]): Long = {
+        onDriver(batch).queryExecution.optimizedPlan shouldBe a[LocalRelation]
+        distributed(batch).queryExecution.optimizedPlan should not be a[LocalRelation]
+        val n = drv.storeCFAuditEvents(onDriver(batch))
+        dst.storeCFAuditEvents(distributed(batch)) shouldBe n
+        storedRows(drv) shouldBe storedRows(dst)
+        sidecarText(dirA, "_stats_maxid") shouldBe sidecarText(dirB, "_stats_maxid")
+        sidecarText(dirA, "_stats_count") shouldBe sidecarText(dirB, "_stats_count")
+        bloomFiles(dirA) shouldBe bloomFiles(dirB)
+        n
+      }
+      // in-batch duplicate (first occurrence wins), null org/space, a
+      // pre-epoch row, the epoch itself, an unparseable created_at, and two
+      // guids tied on created_at whose UTF-8 order differs from UTF-16's
+      both(Seq(
+        ev("g1", "2024-03-01T10:00:00Z", eventType = "first"),
+        ev("g2", "2024-03-01T11:00:00Z", org = null, space = null),
+        ev("g1", "2024-03-01T10:00:00Z", eventType = "second"),
+        ev("pre", "1969-12-31T23:59:59Z"),
+        ev("zero", "1970-01-01T00:00:00Z"),
+        ev("bad", "not-a-time"),
+        ev("xＡ", "2024-03-01T09:00:00Z"),
+        ev("x😀", "2024-03-01T09:00:00Z"))) shouldBe 4L
+      drv.events.filter("guid = 'g1'").collect().map(_.getAs[String]("event_type")) shouldBe
+        Array("first")
+      // overlap re-fetch of g2, spanning two dates
+      both(Seq(ev("g2", "2024-03-01T11:00:00Z"), ev("g3", "2024-03-01T12:00:00Z"),
+        ev("g4", "2024-03-02T01:00:00Z"))) shouldBe 2L
+      // g1 re-delivered with a later date: still found in 2024-03-01, the
+      // earlier partition inside the scope (min date of the batch)
+      both(Seq(ev("g5", "2024-03-01T23:00:00Z"), ev("g1", "2024-03-02T05:00:00Z"),
+        ev("g6", "2024-03-02T06:00:00Z"))) shouldBe 2L
+      both(Seq.empty) shouldBe 0L
+      // a scoped partition without its bloom sidecar still dedups exactly
+      Seq(dirA, dirB).foreach(d => Files.delete(d.resolve("_bloom_guid/2024-03-02")))
+      both(Seq(ev("g4", "2024-03-02T01:00:00Z"), ev("g7", "2024-03-02T07:00:00Z"))) shouldBe 1L
+      drv.events.count() shouldBe 9L
+      drv.getCFEventCount() shouldBe 9L
+    }
+  }
+
+  describe("driver path job count") {
+    /** Spark jobs `body` launches on this thread. */
+    def jobsOf(body: => Unit): Int = {
+      val tag = s"store-jobs-${System.nanoTime()}"
+      val n = new AtomicInteger(0)
+      val listener = new SparkListener {
+        override def onJobStart(e: SparkListenerJobStart): Unit =
+          if (e.properties != null && e.properties.getProperty("graft.spec.jobs") == tag)
+            n.incrementAndGet()
+      }
+      spark.sparkContext.addSparkListener(listener)
+      spark.sparkContext.setLocalProperty("graft.spec.jobs", tag)
+      try { body; TestBus.drain(spark.sparkContext); n.get }
+      finally {
+        spark.sparkContext.setLocalProperty("graft.spec.jobs", null)
+        spark.sparkContext.removeSparkListener(listener)
+      }
+    }
+
+    it("costs one job for a fresh-date page and at most two for a re-fetch") {
+      val (st, _) = newStoreAt()
+      val collector = new Collector(spark, st,
+        new CfAuditEventFetcher(new FakeTransport(Map.empty), ""), new MetricsRegistry)
+      val mk = (g: String, at: String) => CfWireEvent(g, at, "t", "a", "at", "an", "au",
+        "e", "et", "en", "", "sg", "{}")
+      val page1 = (0 until 100).map(i => mk(s"p1-$i", f"2024-05-01T10:${i % 60}%02d:00Z"))
+      jobsOf(st.storeCFAuditEvents(collector.pageToDf(page1))) shouldBe 1
+      // the next page re-fetches part of the first one (the 5 s overlap)
+      val page2 = page1.takeRight(10) ++
+        (0 until 90).map(i => mk(s"p2-$i", f"2024-05-01T11:${i % 60}%02d:00Z"))
+      var stored = 0L
+      jobsOf { stored = st.storeCFAuditEvents(collector.pageToDf(page2)) } should be <= 2
+      stored shouldBe 90L
+      jobsOf(st.storeCFAuditEvents(collector.pageToDf(
+        Seq(mk("p3", "2024-05-02T00:00:01Z"))))) shouldBe 1
+      st.getCFEventCount() shouldBe 191L
     }
   }
 }
