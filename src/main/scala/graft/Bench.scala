@@ -794,7 +794,7 @@ object Bench {
     // under SPARK_GRAFT_ONLY — the restricted mode is a per-query
     // iteration aid, not an artifact run.
     if (only.isEmpty && !skipPipe && !shedPipeline) {
-      try artifact.set("pipeline", graft.tools.PipelineBench.runJson(spark, sfDir, cpus.toInt))
+      try artifact.set("pipeline", graft.tools.PipelineBench.runJson(spark, sfDir))
       catch { case e: Throwable =>
         System.err.println(s"[bench] pipeline bench failed: $e") }
       artifact.tierDone("pipeline")

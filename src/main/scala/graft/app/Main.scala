@@ -64,7 +64,12 @@ object Config {
   * daemon threads, serve /metrics + /health, shut down gracefully on
   * SIGTERM (ST7). Collector/informer errors are fatal; shipper errors are
   * absorbed by its own loop (ST5). The Splunk shipper starts only when
-  * both SPLUNK_* vars are set (ST8, main.go:110-122). */
+  * both SPLUNK_* vars are set (ST8, main.go:110-122).
+  *
+  * These thread loops are the daemon's one pipeline shape, as in the
+  * reference. Restart needs no offset log: the collector resumes from the
+  * store's `max(created_at) − 5 s` (a replayable source feeding an
+  * idempotent guid-dedup sink) and the shipper from its cursor table. */
 object Main {
   def main(args: Array[String]): Unit = {
     val cfg = Config.fromEnv()
@@ -115,51 +120,21 @@ object Main {
     }
 
     @volatile var fatal: Option[Throwable] = None
-    // STREAMING_PIPELINE=1 runs the COMPOSED shape: one Structured
-    // Streaming query (DSv2 source → dedup → store → pooled parallel ship,
-    // Trigger.ProcessingTime) in place of the collector+shipper threads —
-    // same semantics, Spark-native execution with checkpointed offsets.
-    // Requires the SPLUNK_* pair (the composed query ships every trigger).
-    val composed = sys.env.getOrElse("STREAMING_PIPELINE", "").nonEmpty &&
-      cfg.splunkApiKey.nonEmpty && cfg.splunkUrl.nonEmpty
-    var composedQuery: Option[org.apache.spark.sql.streaming.StreamingQuery] = None
-    if (composed) {
-      def mkClient() = new SplunkHecClient(
-        new JdkHttpTransport(Duration.ofSeconds(2)), cfg.splunkUrl, cfg.splunkApiKey)
-      val shipper = new SplunkShipper(store, mkClient(), cfg.deployEnv, registry, logger = logger)
-      val pipeline = new graft.streaming.StreamingPipeline(
-        spark, store, shipper, () => mkClient(), cfg.cfApiAddress,
-        triggerMillis = cfg.collectorScheduleMillis, logger = logger,
-        sourceOptions = Map(
-          "paginationWaitMillis" -> cfg.paginationWaitMillis.toString,
-          "cfClientId" -> cfg.cfClientId, "cfClientSecret" -> cfg.cfClientSecret,
-          "cfUsername" -> cfg.cfUsername, "cfPassword" -> cfg.cfPassword))
-      composedQuery = Some(pipeline.start(s"${cfg.warehouseDir}/_pipeline_checkpoint"))
-    } else {
-      spawn("collector") {
-        collector.run(cfg.collectorScheduleMillis, () => stop.get()) match {
-          case Left(e) => fatal = Some(e); stop.set(true) // fail-fast (main.go:94-97)
-          case Right(_) => ()
-        }
+    spawn("collector") {
+      collector.run(cfg.collectorScheduleMillis, () => stop.get()) match {
+        case Left(e) => fatal = Some(e); stop.set(true) // fail-fast (main.go:94-97)
+        case Right(_) => ()
       }
-      if (cfg.splunkApiKey.nonEmpty && cfg.splunkUrl.nonEmpty) { // ST8
-        val hecHttp = new JdkHttpTransport(Duration.ofSeconds(2)) // shipper.go:63
-        val hec = new SplunkHecClient(hecHttp, cfg.splunkUrl, cfg.splunkApiKey)
-        val shipper = new SplunkShipper(store, hec, cfg.deployEnv, registry, logger = logger)
-        spawn("shipper") { shipper.run(cfg.shipperScheduleMillis, () => stop.get()) }
-      }
+    }
+    if (cfg.splunkApiKey.nonEmpty && cfg.splunkUrl.nonEmpty) { // ST8
+      val hecHttp = new JdkHttpTransport(Duration.ofSeconds(2)) // shipper.go:63
+      val hec = new SplunkHecClient(hecHttp, cfg.splunkUrl, cfg.splunkApiKey)
+      val shipper = new SplunkShipper(store, hec, cfg.deployEnv, registry, logger = logger)
+      spawn("shipper") { shipper.run(cfg.shipperScheduleMillis, () => stop.get()) }
     }
     spawn("informer") { informer.run(cfg.informerScheduleMillis, () => stop.get()) }
 
-    while (!stop.get()) {
-      // composed-mode fail-fast: a source/store failure kills the query —
-      // surface it and exit like the collector path (main.go:94-97)
-      composedQuery.filter(q => !q.isActive).foreach { q =>
-        fatal = Option(q.exception.orNull); stop.set(true)
-      }
-      Thread.sleep(200L)
-    }
-    composedQuery.foreach(q => try q.stop() catch { case _: Exception => () })
+    while (!stop.get()) Thread.sleep(200L)
     threads.foreach(_.join(5000L))
     server.stop()
     spark.stop()

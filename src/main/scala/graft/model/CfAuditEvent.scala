@@ -67,33 +67,6 @@ object Schemas {
     StructField("shipped_id", StringType, nullable = false)
   ))
 
-  /** CF API page envelope: identity lives in a `metadata` wrapper, payload
-    * in `entity` (`events.go:12-23`); flattened by the source (S3). */
-  val cfApiPage: StructType = StructType(Seq(
-    StructField("total_results", LongType),
-    StructField("total_pages", LongType),
-    StructField("next_url", StringType),
-    StructField("resources", ArrayType(StructType(Seq(
-      StructField("metadata", StructType(Seq(
-        StructField("guid", StringType),
-        StructField("created_at", StringType)
-      ))),
-      StructField("entity", StructType(Seq(
-        StructField("type", StringType),
-        StructField("actor", StringType),
-        StructField("actor_type", StringType),
-        StructField("actor_name", StringType),
-        StructField("actor_username", StringType),
-        StructField("actee", StringType),
-        StructField("actee_type", StringType),
-        StructField("actee_name", StringType),
-        StructField("organization_guid", StringType),
-        StructField("space_guid", StringType),
-        StructField("metadata", StringType)
-      )))
-    ))))
-  ))
-
   /** `''` → NULL on write (store.go:91 `NULLIF($11,'')::uuid`). */
   def emptyToNull(c: Column): Column = F.nullif(c, F.lit(""))
 

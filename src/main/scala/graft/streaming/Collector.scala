@@ -15,8 +15,8 @@ import graft.store.EventStore
   * (ST1–ST3, S7).
   *
   * Error policy is the reference's fail-fast (collector.go:53-58 +
-  * main.go:91-98): a fetch error aborts the tick and surfaces to the
-  * caller. The re-fetch overlap + guid-dedup store makes the loop safe
+  * main.go:91-98): a fetch or store error aborts the tick and surfaces to
+  * the caller. The re-fetch overlap + guid-dedup store makes the loop safe
   * under at-least-once delivery — exactly Spark's "late data + idempotent
   * sink" pattern.
   */
@@ -57,31 +57,38 @@ final class Collector(
   }
 
   /** One tick: fetch all pages since the resume point, store page-by-page.
-    * Returns Right(collected count) or Left(first error) — fail-fast. */
+    * Returns Right(collected count) or Left(first error) — fail-fast. A
+    * store error (resume-point read or page write) is returned as `Left`
+    * too, so the daemon exits instead of losing its collector thread
+    * (main.go:94-97). */
   def collectOnce(): Either[Throwable, Long] = {
     val t0 = System.nanoTime()
     var collected = 0L
-    val since = pullEventsSince()
-    val it = fetcher.fetchPagesAsync(since) // fetch overlaps store (ST3)
     var error: Option[Throwable] = None
-    while (error.isEmpty && it.hasNext) {
-      val page = it.next()
-      page.error match {
-        case Some(e) =>
-          registry.inc(Metrics.CollectorErrors)
-          lsession.error("err-recv-events", e) // collector.go:55
-          error = Some(e)
-        case None if page.events.nonEmpty =>
-          val n = store.storeCFAuditEvents(pageToDf(page.events))
-          collected += page.events.size // reference counts fetched (collector.go:67-68)
-          eventsCollectedLifetime += page.events.size
-          registry.inc(Metrics.CollectorEventsCollected, page.events.size.toDouble)
-          lsession.info("stored-events", // collector.go:70-77
-            "duration" -> ((System.nanoTime() - t0) / 1e9),
-            "events-collected" -> eventsCollectedLifetime)
-          val _ = n
-        case None => ()
+    try {
+      val it = fetcher.fetchPagesAsync(pullEventsSince()) // fetch overlaps store (ST3)
+      while (error.isEmpty && it.hasNext) {
+        val page = it.next()
+        page.error match {
+          case Some(e) =>
+            registry.inc(Metrics.CollectorErrors)
+            lsession.error("err-recv-events", e) // collector.go:55
+            error = Some(e)
+          case None if page.events.nonEmpty =>
+            store.storeCFAuditEvents(pageToDf(page.events))
+            collected += page.events.size // reference counts fetched (collector.go:67-68)
+            eventsCollectedLifetime += page.events.size
+            registry.inc(Metrics.CollectorEventsCollected, page.events.size.toDouble)
+            lsession.info("stored-events", // collector.go:70-77
+              "duration" -> ((System.nanoTime() - t0) / 1e9),
+              "events-collected" -> eventsCollectedLifetime)
+          case None => ()
+        }
       }
+    } catch {
+      case e: Exception =>
+        lsession.error("err-store-events", e)
+        error = Some(e)
     }
     val duration = (System.nanoTime() - t0) / 1e9
     if (error.isEmpty)

@@ -8,7 +8,6 @@ import org.apache.spark.sql.{DataFrame, Row, functions => F}
 import graft.metrics.{Metrics, MetricsRegistry}
 import graft.sources.{HttpReply, HttpTransport}
 import graft.store.EventStore
-import graft.Pin._
 
 /** Splunk-HEC-style HTTP sink client with the reference's retry policy
   * (`shipper.go:62-86`): 2 s timeout (owned by the transport), backoff
@@ -52,21 +51,6 @@ final class SplunkHecClient(
   }
 }
 
-/** Per-executor-JVM HEC client cache: partitions of successive ticks reuse
-  * one client (and therefore its transport's keep-alive connections) per
-  * pool key instead of constructing a fresh client — and re-handshaking
-  * TLS — for every partition of every tick. Keyed by endpoint identity;
-  * `computeIfAbsent` makes racing partitions on the same executor share a
-  * single instance (SplunkHecClient is thread-safe: its only state is
-  * config). */
-object HecClientPool {
-  private val pool = new java.util.concurrent.ConcurrentHashMap[String, SplunkHecClient]()
-  def getOrCreate(key: String, mk: () => SplunkHecClient): SplunkHecClient =
-    pool.computeIfAbsent(key, _ => mk())
-  def size: Int = pool.size
-  private[graft] def clear(): Unit = pool.clear()
-}
-
 /** Egress loop (`pkg/shippers/cf_audit_events_to_splunk_shipper.go`): every
   * tick read the ≤8192 unshipped events in `created_at` order, ship them
   * serially, stop at the first failure, and commit the cursor for the
@@ -75,11 +59,8 @@ object HecClientPool {
   * (`shipper_test.go:187-203`). Errors never kill the loop (ST5).
   *
   * The per-tick batch is capped at 8192 by the store query (store.go:206),
-  * so collecting it to the driver is bounded by design — this mirrors the
-  * reference's serial semantics bit-for-bit. `shipPartitioned` is the
-  * scale path: range-partitioned parallel POSTs with prefix-partition
-  * cursor commit (ordering preserved *across* partitions by the range
-  * partitioner; within a partition by the sorted iterator).
+  * so collecting it to the driver is bounded by design. Events are POSTed
+  * one per request, serially, as the reference does (`shipper.go:122-135`).
   */
 final class SplunkShipper(
     store: EventStore,
@@ -113,16 +94,8 @@ final class SplunkShipper(
         F.parse_json(F.coalesce(F.col("metadata"), F.lit("null"))).as("metadata")
       ).as("event"))))
 
-  /** One tick. Returns (shipped, failed) counts; never throws (ST5).
-    *
-    * `postBatchSize = 1` reproduces the reference's per-event POST loop
-    * (`shipper.go:122-135`) exactly. HEC accepts concatenated event JSON
-    * in one request, so larger batch sizes amortize the HTTP round trip —
-    * the per-event round trip is the reference's real throughput ceiling
-    * (BASELINE.md) — while ordering and prefix-commit semantics are
-    * unchanged (a failed POST stops the tick; the cursor commits the last
-    * event of the last fully-shipped request). */
-  def shipOnce(postBatchSize: Int = 1): (Long, Long) = {
+  /** One tick. Returns (shipped, failed) counts; never throws (ST5). */
+  def shipOnce(): (Long, Long) = {
     val t0 = System.nanoTime()
     try {
       val batch = withPayload(store.getUnshippedCFAuditEventsForShipper(shipperName))
@@ -130,13 +103,13 @@ final class SplunkShipper(
       var shipped = 0L
       var lastOk: Option[Row] = None
       var failed = false
-      val it = rows.grouped(math.max(1, postBatchSize))
+      val it = rows.iterator
       while (!failed && it.hasNext) {
-        val group = it.next()
-        hec.post(group.map(_.getString(0)).mkString("\n")) match {
+        val row = it.next()
+        hec.post(row.getString(0)) match {
           case Right(_) =>
-            shipped += group.length
-            lastOk = Some(group.last)
+            shipped += 1
+            lastOk = Some(row)
           case Left(e) =>
             failed = true // prefix stops here (shipper.go:125-135)
             lsession.error("err-ship-event", e) // shipper.go:126
@@ -163,65 +136,6 @@ final class SplunkShipper(
     } finally {
       registry.inc(Metrics.ShipperShipDuration, (System.nanoTime() - t0) / 1e9)
     }
-  }
-
-  /** Scale path: POST from executors, one HTTP stream per range partition.
-    * The batch is range-partitioned on (created_at, guid) so partition i
-    * holds strictly earlier events than partition i+1; the cursor commits
-    * the last event of the longest fully-shipped partition prefix,
-    * preserving prefix semantics at parallel throughput.
-    *
-    * `postBatchSize > 1` concatenates that many event payloads per POST
-    * (HEC accepts newline-joined event JSON), amortizing the HTTP round
-    * trip exactly like the serial `shipOnce` batched path; a failed POST
-    * still stops that partition's prefix at the last fully-shipped group.
-    * `clientPoolKey` reuses one client per executor JVM across ticks via
-    * [[HecClientPool]] — keep-alive connections survive tick boundaries
-    * instead of re-handshaking every partition × tick. */
-  def shipPartitionedOnce(
-      parallelism: Int,
-      mkClient: () => SplunkHecClient,
-      postBatchSize: Int = 1,
-      clientPoolKey: Option[String] = None): (Long, Long) = {
-    // localCheckpoint before the range repartition: RangePartitioner
-    // SAMPLES its input to pick boundaries, which would re-run the whole
-    // store query a second time per tick (measured: the parallel path
-    // lost to serial on engine cost alone). Materializing the ≤page-size
-    // batch once makes the sampling pass read checkpointed partitions.
-    val batch = withPayload(store.getUnshippedCFAuditEventsForShipper(shipperName))
-      .pin()
-      .repartitionByRange(parallelism, F.col("created_at"), F.col("guid"))
-      .sortWithinPartitions("created_at", "guid")
-    val perPart = batch.select("__payload", "created_at_raw", "guid").rdd
-      .mapPartitionsWithIndex { (pid, it) =>
-        val client = clientPoolKey.fold(mkClient())(k => HecClientPool.getOrCreate(k, mkClient))
-        var shipped = 0L
-        var last: Option[(String, String)] = None
-        var failed = false
-        val groups = it.grouped(math.max(1, postBatchSize))
-        while (!failed && groups.hasNext) {
-          val g = groups.next()
-          client.post(g.map(_.getString(0)).mkString("\n")) match {
-            case Right(_) =>
-              shipped += g.length
-              last = Some((g.last.getString(1), g.last.getString(2)))
-            case Left(_) => failed = true
-          }
-        }
-        Iterator.single((pid, shipped, failed, last))
-      }.collect().sortBy(_._1)
-    var shipped = 0L
-    var lastOk: Option[(String, String)] = None
-    var anyFailed = false
-    perPart.iterator.takeWhile(_ => !anyFailed).foreach { case (_, n, failed, last) =>
-      shipped += n
-      if (last.isDefined) lastOk = last
-      if (failed) anyFailed = true
-    }
-    lastOk.foreach { case (raw, guid) => store.updateShipperCursor(shipperName, raw, guid) }
-    if (shipped > 0) registry.inc(Metrics.ShipperEventsShipped, shipped.toDouble)
-    if (anyFailed) registry.inc(Metrics.ShipperErrors)
-    (shipped, if (anyFailed) 1L else 0L)
   }
 
   /** Periodic loop: errors are isolated — tick again next schedule (ST5). */

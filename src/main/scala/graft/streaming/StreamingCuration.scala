@@ -5,9 +5,8 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.operators.{AnnIndexStore, IncrementalContamination, IncrementalDedup, TextAnalysis}
 
-/** The WHOLE curation pipeline as ONE Structured Streaming query — the
-  * training-data twin of [[StreamingPipeline]] (which composes the audit
-  * path): a stream of (doc_id, text) documents runs, per micro-batch,
+/** The WHOLE curation pipeline as ONE Structured Streaming query: a
+  * stream of (doc_id, text) documents runs, per micro-batch,
   *
   *   1. the stateless QUALITY gate ([[TextAnalysis.quality]] thresholds
   *      — map-only, no state);

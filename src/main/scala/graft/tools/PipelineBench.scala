@@ -24,7 +24,7 @@ object PipelineBench {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    println(runJson(spark, sfDir, cpus.toInt))
+    println(runJson(spark, sfDir))
     spark.stop()
   }
 
@@ -32,11 +32,11 @@ object PipelineBench {
     * artifact re-measures the store/ship throughput claim every round
     * instead of inheriting it (round-9 verdict item 7). Returns the
     * one-line JSON. */
-  def runJson(spark: SparkSession, sfDir: String, cpus: Int): String = {
+  def runJson(spark: SparkSession, sfDir: String): String = {
     // Bench calls this every artifact round in one long-lived process:
     // the two temp warehouses (100k-event stores) must not accumulate.
     val tmps = scala.collection.mutable.ArrayBuffer[String]()
-    try runMeasured(spark, sfDir, cpus, tmps)
+    try runMeasured(spark, sfDir, tmps)
     finally {
       val fs = org.apache.hadoop.fs.FileSystem.get(
         spark.sparkContext.hadoopConfiguration)
@@ -46,7 +46,7 @@ object PipelineBench {
     }
   }
 
-  private def runMeasured(spark: SparkSession, sfDir: String, cpus: Int,
+  private def runMeasured(spark: SparkSession, sfDir: String,
                           tmps: scala.collection.mutable.ArrayBuffer[String]): String = {
     val wh = Files.createTempDirectory("graft-tpbench").toString
     tmps += wh
@@ -104,30 +104,10 @@ object PipelineBench {
       new SplunkHecClient(noop, "http://noop", "k", sleep = _ => ()), "bench", new MetricsRegistry)
     val (shipped, shipSec, shipTicks) = drain(() => shipper.shipOnce())
 
-    // Batched + pooled parallel ship: range-partitioned executor POSTs,
-    // 64 events per request, one pooled client per executor JVM — the
-    // scale path's engine cost on a fresh store of the same batch.
-    val shipper2 = new SplunkShipper(freshStore(),
-      new SplunkHecClient(noop, "http://noop", "k", sleep = _ => ()), "bench", new MetricsRegistry)
-    val (shipped2, ship2Sec, _) = drain(() => shipper2.shipPartitionedOnce(
-      cpus,
-      () => new SplunkHecClient(noop, "http://noop", "k", sleep = _ => ()),
-      postBatchSize = 64,
-      clientPoolKey = Some("bench-hec")))
-
-    // LATENCY REGIME: the no-op transport hides exactly the cost the
-    // parallel path exists to amortize — the per-POST round trip, the
-    // reference's real ceiling (BASELINE.md: one HTTP POST per event).
-    // A 1 ms simulated round trip (conservative vs a real HEC's
-    // 10-50 ms) restores it, in the REFERENCE'S OWN SHAPE
-    // (postBatchSize = 1) over ONE page tick each: serial pays
-    // page × RTT sequentially on the driver; the partitioned path pays
-    // ~page/parallelism wall-clock. This pair is the serial-vs-parallel
-    // decision's honest evidence. With 64-batching the round trip is
-    // already amortized 64× serially and parallelism cannot beat its
-    // own distribution overhead on what remains — measured and
-    // documented in RUNBOOK.md (the crossover); the no-latency pair
-    // above shows pure engine overhead, where the two now tie.
+    // LATENCY REGIME: the no-op transport hides the per-POST round trip,
+    // the reference's real ceiling (BASELINE.md: one HTTP POST per event).
+    // A 1 ms simulated round trip (conservative vs a real HEC's 10-50 ms)
+    // restores it over ONE page tick: the serial shipper pays page × RTT.
     val lat = new HttpTransport with Serializable {
       def get(url: String, headers: Map[String, String]) = HttpReply(200, "")
       def post(url: String, body: String, headers: Map[String, String]) = {
@@ -141,20 +121,12 @@ object PipelineBench {
     }
     val shipper3 = new SplunkShipper(freshStore(),
       new SplunkHecClient(lat, "http://lat", "k", sleep = _ => ()), "bench", new MetricsRegistry)
-    val (shipped3, ship3Sec) = oneTick(() => shipper3.shipOnce(postBatchSize = 1))
-    val shipper4 = new SplunkShipper(freshStore(),
-      new SplunkHecClient(lat, "http://lat", "k", sleep = _ => ()), "bench", new MetricsRegistry)
-    val (shipped4, ship4Sec) = oneTick(() => shipper4.shipPartitionedOnce(
-      cpus,
-      () => new SplunkHecClient(lat, "http://lat", "k", sleep = _ => ()),
-      postBatchSize = 1,
-      clientPoolKey = Some("bench-hec-lat")))
+    val (shipped3, ship3Sec) = oneTick(() => shipper3.shipOnce())
 
     batch.unpersist()
     s"""{"events":$n,"stored":$stored,"store_sec":$storeSec,"store_eps":${stored / storeSec},""" +
       s""""redup_stored":$redup,"dedup_sec":$dedupSec,""" +
       s""""shipped":$shipped,"ship_ticks":$shipTicks,"ship_sec":$shipSec,"ship_eps":${shipped / shipSec},""" +
-      s""""par_shipped":$shipped2,"par_ship_sec":$ship2Sec,"par_ship_eps":${shipped2 / ship2Sec},""" +
-      s""""lat_ship_eps":${shipped3 / ship3Sec},"lat_par_ship_eps":${shipped4 / ship4Sec}}"""
+      s""""lat_ship_eps":${shipped3 / ship3Sec}}"""
   }
 }

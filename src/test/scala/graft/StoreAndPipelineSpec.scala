@@ -16,7 +16,7 @@ import org.apache.spark.sql.types.StructType
 import graft.metrics.{Metrics, MetricsRegistry}
 import graft.model.Schemas
 import graft.sources._
-import graft.store.ParquetEventStore
+import graft.store.{EventStore, ParquetEventStore}
 import graft.streaming.{Collector, Informer, SplunkHecClient, SplunkShipper}
 
 /** Scriptable POST transport: each call consumes the next status. */
@@ -30,23 +30,30 @@ final class FakePoster(statuses: Seq[Int]) extends HttpTransport with Serializab
   }
 }
 
-/** JVM-static POST counter: executor task closures are deserialized COPIES
-  * even in local mode, so mutations on a captured transport are invisible
-  * to the driver — a static atomic is the one channel that isn't. */
-object ShipCounters {
-  val posts = new java.util.concurrent.atomic.AtomicInteger(0)
+/** Delegates every call to a real store; specs override the calls that fail. */
+class DelegatingStore(inner: EventStore) extends EventStore {
+  def init(): Unit = inner.init()
+  def storeCFAuditEvents(batch: DataFrame): Long = inner.storeCFAuditEvents(batch)
+  def getCFAuditEvents(filter: graft.operators.AuditQueries.RawEventFilter): DataFrame =
+    inner.getCFAuditEvents(filter)
+  def getLatestCFEventTime(): Timestamp = inner.getLatestCFEventTime()
+  def getCFEventCount(): Long = inner.getCFEventCount()
+  def getUnshippedCFAuditEventsForShipper(shipperName: String): DataFrame =
+    inner.getUnshippedCFAuditEventsForShipper(shipperName)
+  def updateShipperCursor(shipperName: String, updatedAt: String, shippedId: String): Unit =
+    inner.updateShipperCursor(shipperName, updatedAt, shippedId)
+  def events: DataFrame = inner.events
+  def cursors: DataFrame = inner.cursors
 }
 
-/** Always-200 transport that counts POSTs via [[ShipCounters]]. */
-final class CountingPoster extends HttpTransport with Serializable {
-  def get(url: String, headers: Map[String, String]): HttpReply = throw new UnsupportedOperationException
-  def post(url: String, body: String, headers: Map[String, String]): HttpReply = {
-    ShipCounters.posts.incrementAndGet()
-    HttpReply(200, "ok")
-  }
+/** Delegates to a real store, except that every page write fails. */
+final class FailingWriteStore(inner: EventStore) extends DelegatingStore(inner) {
+  override def storeCFAuditEvents(batch: DataFrame): Long = throw new RuntimeException("disk full")
 }
 
 class StoreAndPipelineSpec extends SparkSpec {
+
+  private val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
 
   private def newStore() = {
     val dir = Files.createTempDirectory("graft-store").toString
@@ -372,6 +379,215 @@ class StoreAndPipelineSpec extends SparkSpec {
       collector.collectOnce().isLeft shouldBe true
       reg.counterValue(Metrics.CollectorErrors) shouldBe 1.0
     }
+
+    it("returns a store failure as Left, so the daemon exits instead of losing the collector") {
+      val p1 = "/v2/events?q=timestamp%3E1970-01-01T00%3A00%3A00Z&results-per-page=100"
+      val transport = new FakeTransport(Map(
+        p1 -> HttpReply(200, pageJson(Seq("g1"), Seq("2024-01-01T10:00:00Z"), ""))))
+      val collector = new Collector(spark, new FailingWriteStore(newStore()),
+        new CfAuditEventFetcher(transport, "", paginationWaitMillis = 0), new MetricsRegistry)
+      collector.collectOnce().left.map(_.getMessage) shouldBe Left("disk full")
+      collector.run(60000L, () => false).isLeft shouldBe true
+    }
+
+    it("fails the tick on an unparseable created_at and stores none of the page (ANSI cast)") {
+      val p1 = "/v2/events?q=timestamp%3E1970-01-01T00%3A00%3A00Z&results-per-page=100"
+      val transport = new FakeTransport(Map(p1 -> HttpReply(200,
+        pageJson(Seq("g1", "g2"), Seq("2024-01-01T10:00:00Z", "not-a-timestamp"), ""))))
+      val st = newStore()
+      val collector = new Collector(spark, st,
+        new CfAuditEventFetcher(transport, "", paginationWaitMillis = 0), new MetricsRegistry)
+      val result = collector.collectOnce()
+      result.isLeft shouldBe true
+      result.swap.toOption.get.getMessage should include("CAST_INVALID_INPUT")
+      st.events.count() shouldBe 0L
+      st.getCFEventCount() shouldBe 0L
+    }
+
+    it("logs a failed page write as err-store-events at error level") {
+      val p1 = "/v2/events?q=timestamp%3E1970-01-01T00%3A00%3A00Z&results-per-page=100"
+      val transport = new FakeTransport(Map(
+        p1 -> HttpReply(200, pageJson(Seq("g1"), Seq("2024-01-01T10:00:00Z"), ""))))
+      val lines = mutable.ArrayBuffer.empty[String]
+      val collector = new Collector(spark, new FailingWriteStore(newStore()),
+        new CfAuditEventFetcher(transport, "", paginationWaitMillis = 0), new MetricsRegistry,
+        logger = graft.logging.Lager.to("paasauditorspark", lines += _))
+      collector.collectOnce().isLeft shouldBe true
+      val logged = lines.toSeq.map(mapper.readTree(_))
+      val messages = logged.map(_.get("message").asText())
+      messages should not contain "paasauditorspark.cf-audit-event-collector.run.stored-all-events"
+      val err = logged.find(_.get("message").asText() ==
+        "paasauditorspark.cf-audit-event-collector.run.err-store-events").get
+      err.get("log_level").asInt() shouldBe 2
+      err.get("data").get("error").asText() should include("disk full")
+    }
+
+    it("types created_at and maps '' org/space to NULL at the page edge, keeping the raw string") {
+      val collector = new Collector(spark, newStore(),
+        new CfAuditEventFetcher(new FakeTransport(Map.empty), ""), new MetricsRegistry)
+      val df = collector.pageToDf(Seq(
+        CfWireEvent("g1", "2024-01-01T10:00:00Z", "t", "a", "at", "an", "au", "e", "et", "en", "", "sg", "{}"),
+        CfWireEvent("g2", "2024-01-01T11:30:00+01:00", "t", "a", "at", "an", "au", "e", "et", "en", "og", "", "{}")))
+      df.schema.fieldNames.toSeq shouldBe Schemas.cfAuditEvents.fieldNames.toSeq
+      val rows = df.orderBy("guid")
+        .select("created_at", "created_at_raw", "organization_guid", "space_guid", "id").collect()
+      rows(0).getTimestamp(0).toInstant shouldBe Instant.parse("2024-01-01T10:00:00Z")
+      rows(1).getTimestamp(0).toInstant shouldBe Instant.parse("2024-01-01T10:30:00Z")
+      rows(1).getString(1) shouldBe "2024-01-01T11:30:00+01:00" // shipped as received
+      rows(0).isNullAt(2) shouldBe true
+      rows(0).getString(3) shouldBe "sg"
+      rows(1).getString(2) shouldBe "og"
+      rows(1).isNullAt(3) shouldBe true
+      rows.map(_.getLong(4)).toSeq shouldBe Seq(0L, 0L) // ids are the store's to assign
+    }
+
+    it("clamps the resume point at epoch and honours the overlap setting") {
+      val st = newStore()
+      val f = new CfAuditEventFetcher(new FakeTransport(Map.empty), "")
+      val mk = (g: String, at: String) => CfWireEvent(g, at, "t", "a", "at", "an", "au",
+        "e", "et", "en", "", "sg", "{}")
+      val collector = new Collector(spark, st, f, new MetricsRegistry)
+      st.storeCFAuditEvents(collector.pageToDf(Seq(mk("g1", "1970-01-01T00:00:02Z"))))
+      collector.pullEventsSince() shouldBe Instant.EPOCH // 2 s − 5 s clamps at epoch
+      st.storeCFAuditEvents(collector.pageToDf(Seq(mk("g2", "2024-01-01T10:00:00Z"))))
+      new Collector(spark, st, f, new MetricsRegistry, overlapSeconds = 60L).pullEventsSince() shouldBe
+        Instant.parse("2024-01-01T09:59:00Z")
+    }
+
+    it("resumes after a restart from max(created_at) − 5 s without re-storing or losing events") {
+      val dir = Files.createTempDirectory("graft-store-restart").toString
+      val st = new ParquetEventStore(spark, dir); st.init()
+      val p1 = "/v2/events?q=timestamp%3E1970-01-01T00%3A00%3A00Z&results-per-page=100"
+      val first = new Collector(spark, st, new CfAuditEventFetcher(new FakeTransport(Map(
+        p1 -> HttpReply(200, pageJson(Seq("g1", "g2"),
+          Seq("2024-01-01T10:00:00Z", "2024-01-01T10:00:10Z"), "")))), "", paginationWaitMillis = 0),
+        new MetricsRegistry)
+      first.collectOnce() shouldBe Right(2L)
+      // a new process: new store and collector objects over the same warehouse;
+      // g2 is re-fetched by the overlap and g3 arrived while it was down
+      val restarted = new ParquetEventStore(spark, dir); restarted.init()
+      val p2 = "/v2/events?q=timestamp%3E2024-01-01T10%3A00%3A05Z&results-per-page=100"
+      val transport = new FakeTransport(Map(
+        p2 -> HttpReply(200, pageJson(Seq("g2", "g3"),
+          Seq("2024-01-01T10:00:10Z", "2024-01-01T10:00:20Z"), ""))))
+      new Collector(spark, restarted,
+        new CfAuditEventFetcher(transport, "", paginationWaitMillis = 0), new MetricsRegistry)
+        .collectOnce() shouldBe Right(2L)
+      transport.requests.toSeq shouldBe Seq(p2)
+      val rows = restarted.events.orderBy("id").select("id", "guid").collect()
+      rows.map(_.getString(1)).toSeq shouldBe Seq("g1", "g2", "g3")
+      rows.map(_.getLong(0)).toSeq shouldBe Seq(1L, 2L, 3L)
+    }
+
+    it("keeps the pages stored before a mid-feed fetch error, and the next run drops no page") {
+      val p1 = "/v2/events?q=timestamp%3E1970-01-01T00%3A00%3A00Z&results-per-page=100"
+      val p2 = "/v2/events?page=2" // not served: the fetch fails
+      val st = newStore()
+      val reg = new MetricsRegistry
+      val failing = new Collector(spark, st, new CfAuditEventFetcher(new FakeTransport(Map(
+        p1 -> HttpReply(200, pageJson(Seq("g1"), Seq("2024-01-01T10:00:00Z"), p2)))),
+        "", paginationWaitMillis = 0), reg)
+      failing.collectOnce().left.map(_.getMessage) shouldBe Left(s"connection refused: $p2")
+      reg.counterValue(Metrics.CollectorErrors) shouldBe 1.0
+      st.events.select("guid").collect().map(_.getString(0)).toSeq shouldBe Seq("g1")
+      val resume = "/v2/events?q=timestamp%3E2024-01-01T09%3A59%3A55Z&results-per-page=100"
+      val healed = new Collector(spark, st, new CfAuditEventFetcher(new FakeTransport(Map(
+        resume -> HttpReply(200, pageJson(Seq("g1", "g2"),
+          Seq("2024-01-01T10:00:00Z", "2024-01-01T10:00:30Z"), "")))), "", paginationWaitMillis = 0),
+        new MetricsRegistry)
+      healed.collectOnce() shouldBe Right(2L)
+      st.events.orderBy("id").select("guid").collect().map(_.getString(0)).toSeq shouldBe Seq("g1", "g2")
+    }
+
+    it("authenticates every page GET via UAA when credentials are configured, as Main wires it") {
+      val api = "https://cf.example.com"
+      val p1 = "/v2/events?q=timestamp%3E1970-01-01T00%3A00%3A00Z&results-per-page=100"
+      val p2 = "/v2/events?page=2"
+      val gets = mutable.ArrayBuffer.empty[(String, Map[String, String])]
+      val tokenPosts = new AtomicInteger(0)
+      val cf = new HttpTransport {
+        def get(url: String, headers: Map[String, String]): HttpReply = {
+          gets += ((url, headers))
+          if (url == api + "/v2/info") HttpReply(200, """{"token_endpoint":"https://uaa.example.com"}""")
+          else if (!headers.get("Authorization").contains("Bearer tok-1"))
+            HttpReply(401, """{"error":"invalid_token"}""")
+          else if (url == api + p1) HttpReply(200, pageJson(Seq("g1"), Seq("2024-01-01T10:00:00Z"), p2))
+          else HttpReply(200, pageJson(Seq("g2"), Seq("2024-01-01T10:00:01Z"), ""))
+        }
+        def post(url: String, body: String, headers: Map[String, String]): HttpReply = {
+          tokenPosts.incrementAndGet()
+          HttpReply(200, """{"access_token":"tok-1","token_type":"bearer","expires_in":43199}""")
+        }
+      }
+      val auth = new UaaAuthenticator(cf, CfAuthConfig(api, clientId = "auditor", clientSecret = "s3cret"))
+      val st = newStore()
+      val collector = new Collector(spark, st,
+        new CfAuditEventFetcher(new AuthenticatedTransport(cf, auth), api, paginationWaitMillis = 0),
+        new MetricsRegistry)
+      collector.collectOnce() shouldBe Right(2L)
+      st.events.orderBy("id").select("guid").collect().map(_.getString(0)).toSeq shouldBe Seq("g1", "g2")
+      tokenPosts.get() shouldBe 1
+      val pageGets = gets.toSeq.filter(_._1.contains("/v2/events"))
+      pageGets.map(_._1) shouldBe Seq(api + p1, api + p2)
+      pageGets.foreach(_._2("Authorization") shouldBe "Bearer tok-1")
+    }
+
+    it("run ticks on its schedule until stop flips, then returns Right") {
+      val p1 = "/v2/events?q=timestamp%3E1970-01-01T00%3A00%3A00Z&results-per-page=100"
+      val p2 = "/v2/events?q=timestamp%3E2024-01-01T09%3A59%3A55Z&results-per-page=100"
+      val body = pageJson(Seq("g1"), Seq("2024-01-01T10:00:00Z"), "")
+      val transport = new FakeTransport(Map(p1 -> HttpReply(200, body), p2 -> HttpReply(200, body)))
+      val st = newStore()
+      val reg = new MetricsRegistry
+      val collector = new Collector(spark, st,
+        new CfAuditEventFetcher(transport, "", paginationWaitMillis = 0), reg)
+      collector.run(0L, () => transport.requests.size >= 2) shouldBe Right(())
+      transport.requests.toSeq shouldBe Seq(p1, p2) // second tick resumes from max − 5 s
+      st.events.count() shouldBe 1L
+      reg.counterValue(Metrics.CollectorEventsCollected) shouldBe 2.0 // fetched, as collector.go counts
+    }
+  }
+
+  describe("collector and shipper ticks (the daemon's thread loops)") {
+    it("store every guid once and deliver every event in order as the feed grows") {
+      val feed = Seq( // in (created_at, guid) order; released over three ticks
+        Seq(("g1", "2024-01-01T10:00:00Z"), ("g2", "2024-01-01T10:00:00Z"),
+          ("g3", "2024-01-01T10:00:01Z")),
+        Seq(("g4", "2024-01-01T10:00:03Z"), ("g5", "2024-01-01T10:00:03Z")),
+        Seq(("g6", "2024-01-01T10:01:00Z")))
+      var released = Seq.empty[(String, String)]
+      // serves the released events after the request's timestamp>T, newest
+      // first; the collector's 5 s overlap re-fetches stored events
+      val cf = new HttpTransport {
+        def get(url: String, headers: Map[String, String]): HttpReply = {
+          val t = "timestamp%3E([^&]+)".r.findFirstMatchIn(url)
+            .map(m => Instant.parse(java.net.URLDecoder.decode(m.group(1), "UTF-8"))).get
+          val page = released.filter { case (_, at) => Instant.parse(at).isAfter(t) }.reverse
+          HttpReply(200, pageJson(page.map(_._1), page.map(_._2), ""))
+        }
+        def post(url: String, body: String, headers: Map[String, String]): HttpReply =
+          throw new UnsupportedOperationException
+      }
+      val st = newStore()
+      val reg = new MetricsRegistry
+      val collector = new Collector(spark, st,
+        new CfAuditEventFetcher(cf, "", paginationWaitMillis = 0), reg)
+      val hec = new FakePoster(Nil)
+      val shipper = new SplunkShipper(st,
+        new SplunkHecClient(hec, "https://hec", "KEY", sleep = _ => ()), "test-env", reg)
+      for (events <- feed) {
+        released ++= events
+        collector.collectOnce().isRight shouldBe true
+        shipper.shipOnce()._2 shouldBe 0L
+      }
+      val all = feed.flatten.map(_._1)
+      st.events.select("guid").collect().map(_.getString(0)).sorted shouldBe all
+      val received = hec.posts.toSeq.map(p => "\"guid\":\"(g\\d+)\"".r.findFirstMatchIn(p._2).get.group(1))
+      received.distinct shouldBe all // first receipts in (created_at, guid) order
+      val cursor = st.cursors.collect().head
+      cursor.getAs[String]("shipped_id") shouldBe "g6"
+      cursor.getAs[Timestamp]("updated_at").toInstant shouldBe Instant.parse("2024-01-01T10:01:00Z")
+    }
   }
 
   describe("SplunkHecClient retry policy (shipper.go:62-86)") {
@@ -388,14 +604,43 @@ class StoreAndPipelineSpec extends SparkSpec {
       hec.post("{}").isLeft shouldBe true
       poster.posts.size shouldBe 4 // initial + 3 retries
     }
+    it("treats any 2xx as success without retrying (shipper.go:216-223)") {
+      val poster = new FakePoster(Seq(201, 204))
+      val hec = new SplunkHecClient(poster, "https://hec", "KEY", sleep = _ => ())
+      hec.post("{}").map(_.status) shouldBe Right(201)
+      hec.post("{}").map(_.status) shouldBe Right(204)
+      poster.posts.size shouldBe 2
+    }
+    it("backs off from 100 ms, doubling to a 2 s cap, plus under 500 ms of jitter") {
+      val sleeps = mutable.ArrayBuffer.empty[Long]
+      val poster = new FakePoster(Seq.fill(7)(503))
+      val hec = new SplunkHecClient(poster, "https://hec", "KEY", maxRetries = 6, sleep = sleeps += _)
+      hec.post("{}").left.map(_.getMessage) shouldBe Left("received status code 503 with body ok")
+      poster.posts.size shouldBe 7
+      val base = Seq(100L, 200L, 400L, 800L, 1600L, 2000L)
+      sleeps.size shouldBe base.size
+      sleeps.zip(base).foreach { case (slept, b) => slept should (be >= b and be < b + 500L) }
+    }
+    it("retries transport errors and returns the last one") {
+      val attempts = new AtomicInteger(0)
+      val down = new HttpTransport {
+        def get(url: String, headers: Map[String, String]): HttpReply = throw new UnsupportedOperationException
+        def post(url: String, body: String, headers: Map[String, String]): HttpReply =
+          throw new java.io.IOException(s"connection reset ${attempts.incrementAndGet()}")
+      }
+      val hec = new SplunkHecClient(down, "https://hec", "KEY", sleep = _ => ())
+      hec.post("{}").left.map(_.getMessage) shouldBe Left("connection reset 4")
+      attempts.get() shouldBe 4
+    }
   }
 
   describe("SplunkShipper (ST4/ST5)") {
-    def seed(st: ParquetEventStore): Unit = {
+    def seed(st: ParquetEventStore): Unit = seedAt(st,
+      Seq(("g1", "2024-01-01T10:00:00Z"), ("g2", "2024-01-01T11:00:00Z"), ("g3", "2024-01-01T12:00:00Z")))
+
+    def seedAt(st: ParquetEventStore, events: Seq[(String, String)]): Unit = {
       import spark.implicits._
-      val batch = Seq(
-        ("g1", "2024-01-01T10:00:00Z"), ("g2", "2024-01-01T11:00:00Z"), ("g3", "2024-01-01T12:00:00Z")
-      ).toDF("guid", "created_at_raw")
+      val batch = events.toDF("guid", "created_at_raw")
         .withColumn("created_at", F.to_timestamp(F.col("created_at_raw")))
         .withColumn("event_type", F.lit("t")).withColumn("actor", F.lit("a"))
         .withColumn("actor_type", F.lit("t")).withColumn("actor_name", F.lit("n"))
@@ -447,133 +692,103 @@ class StoreAndPipelineSpec extends SparkSpec {
       st.cursors.collect()(0).getString(2) shouldBe "g3"
     }
 
-    it("batched HEC posts preserve order and prefix-commit (postBatchSize=2)") {
-      val st = newStore(); seed(st)
-      val poster = new FakePoster(Seq.fill(10)(200))
+    def postedGuids(poster: FakePoster): Seq[String] =
+      poster.posts.toSeq.map(p => mapper.readTree(p._2).get("event").get("guid").asText())
+
+    it("ships nothing and commits no cursor when the store is empty") {
+      val st = newStore()
+      val poster = new FakePoster(Nil)
       val reg = new MetricsRegistry
       val shipper = new SplunkShipper(st,
         new SplunkHecClient(poster, "https://hec", "KEY", sleep = _ => ()), "test-env", reg)
-      shipper.shipOnce(postBatchSize = 2) shouldBe ((3L, 0L))
-      poster.posts.size shouldBe 2 // ceil(3/2) requests
-      poster.posts.head._2.linesIterator.size shouldBe 2 // two events in request 1
-      poster.posts.head._2 should include(""""guid":"g1"""")
-      poster.posts.head._2 should include(""""guid":"g2"""")
-      st.cursors.collect()(0).getString(2) shouldBe "g3"
+      shipper.shipOnce() shouldBe ((0L, 0L))
+      poster.posts shouldBe empty
+      st.cursors.count() shouldBe 0L
+      reg.counterValue(Metrics.ShipperEventsShipped) shouldBe 0.0
     }
 
-    it("parallel range-partitioned ship preserves prefix-commit semantics") {
+    it("posts the reference's event shape: raw created_at, type, '' for NULL org/space, metadata object, no id") {
       val st = newStore(); seed(st)
-      val poster = new FakePoster(Seq.fill(10)(200))
+      val poster = new FakePoster(Nil)
+      val shipper = new SplunkShipper(st,
+        new SplunkHecClient(poster, "https://hec/services/collector", "KEY", sleep = _ => ()),
+        "test-env", new MetricsRegistry)
+      shipper.shipOnce() shouldBe ((3L, 0L))
+      val (url, body, headers) = poster.posts.head
+      url shouldBe "https://hec/services/collector"
+      headers("Content-Type") shouldBe "application/json"
+      val env = mapper.readTree(body)
+      env.fieldNames().asScala.toSeq shouldBe Seq("sourcetype", "source", "event")
+      val ev = env.get("event")
+      ev.fieldNames().asScala.toSeq shouldBe Seq("guid", "created_at", "type", "actor", "actor_type",
+        "actor_name", "actor_username", "actee", "actee_type", "actee_name", "organization_guid",
+        "space_guid", "metadata")
+      ev.get("created_at").asText() shouldBe "2024-01-01T10:00:00Z"
+      ev.get("type").asText() shouldBe "t"
+      ev.get("organization_guid").asText() shouldBe ""
+      ev.get("space_guid").asText() shouldBe ""
+      ev.get("metadata").isObject shouldBe true
+    }
+
+    it("re-ships the cursor second's other events on the next tick (boundary at-least-once, R6)") {
+      val st = newStore()
+      seedAt(st, Seq(("g1", "2024-01-01T10:00:00Z"), ("g2", "2024-01-01T10:00:00Z")))
+      val poster = new FakePoster(Nil)
+      val shipper = new SplunkShipper(st,
+        new SplunkHecClient(poster, "https://hec", "KEY", sleep = _ => ()), "test-env", new MetricsRegistry)
+      shipper.shipOnce() shouldBe ((2L, 0L))
+      st.cursors.collect()(0).getString(2) shouldBe "g2"
+      shipper.shipOnce() shouldBe ((1L, 0L)) // same second, not the cursor's own guid
+      postedGuids(poster) shouldBe Seq("g1", "g2", "g1")
+      st.cursors.collect()(0).getString(2) shouldBe "g1"
+    }
+
+    it("keeps one cursor per shipper name") {
+      val st = newStore(); seed(st)
+      def shipperNamed(name: String, poster: FakePoster) = new SplunkShipper(st,
+        new SplunkHecClient(poster, "https://hec", "KEY", sleep = _ => ()), "test-env",
+        new MetricsRegistry, shipperName = name)
+      val (pa, pb) = (new FakePoster(Nil), new FakePoster(Nil))
+      shipperNamed("a", pa).shipOnce() shouldBe ((3L, 0L))
+      shipperNamed("b", pb).shipOnce() shouldBe ((3L, 0L)) // a's cursor does not move b's
+      postedGuids(pb) shouldBe Seq("g1", "g2", "g3")
+      st.cursors.orderBy("name").collect().map(r => (r.getString(0), r.getString(2))).toSeq shouldBe
+        Seq(("a", "g3"), ("b", "g3"))
+      shipperNamed("a", pa).shipOnce() shouldBe ((0L, 0L))
+    }
+
+    it("absorbs a failed unshipped read as a failed tick and logs it (ST5)") {
+      val st = newStore(); seed(st)
+      val broken = new DelegatingStore(st) {
+        override def getUnshippedCFAuditEventsForShipper(shipperName: String): DataFrame =
+          throw new RuntimeException("scan failed")
+      }
+      val poster = new FakePoster(Nil)
+      val reg = new MetricsRegistry
+      val lines = mutable.ArrayBuffer.empty[String]
+      val shipper = new SplunkShipper(broken,
+        new SplunkHecClient(poster, "https://hec", "KEY", sleep = _ => ()), "test-env", reg,
+        logger = graft.logging.Lager.to("paasauditorspark", lines += _))
+      shipper.shipOnce() shouldBe ((0L, 1L))
+      poster.posts shouldBe empty
+      reg.counterValue(Metrics.ShipperErrors) shouldBe 1.0
+      val err = lines.toSeq.map(mapper.readTree(_)).find(_.get("message").asText() ==
+        "paasauditorspark.cf-audit-events-to-splunk-shipper.run.err-get-unshipped-cf-audit-events-for-shipper").get
+      err.get("log_level").asInt() shouldBe 2
+      err.get("data").get("error").asText() should include("scan failed")
+    }
+
+    it("run keeps ticking after a failed tick and ships everything once HEC heals (ST5)") {
+      val st = newStore(); seed(st)
+      val poster = new FakePoster(Seq(500, 500, 500, 500)) // first tick: g1 fails every attempt
       val reg = new MetricsRegistry
       val shipper = new SplunkShipper(st,
         new SplunkHecClient(poster, "https://hec", "KEY", sleep = _ => ()), "test-env", reg)
-      val (shipped, failed) = shipper.shipPartitionedOnce(2,
-        () => new SplunkHecClient(poster, "https://hec", "KEY", sleep = _ => ()))
-      shipped shouldBe 3L
-      failed shouldBe 0L
+      shipper.run(0L, () => poster.posts.size >= 7)
+      postedGuids(poster) shouldBe Seq("g1", "g1", "g1", "g1", "g1", "g2", "g3")
+      reg.counterValue(Metrics.ShipperErrors) shouldBe 1.0
+      reg.counterValue(Metrics.ShipperEventsShipped) shouldBe 3.0
       st.cursors.collect()(0).getString(2) shouldBe "g3"
-    }
-
-    /** POST transport that rejects any body naming `failGuid` (injected
-      * mid-batch failure), shared across serial and parallel drives. */
-    class GuidFailPoster(failGuid: String) extends HttpTransport with Serializable {
-      val posts: mutable.ArrayBuffer[String] = mutable.ArrayBuffer.empty
-      def get(url: String, headers: Map[String, String]): HttpReply = throw new UnsupportedOperationException
-      def post(url: String, body: String, headers: Map[String, String]): HttpReply = {
-        posts.synchronized { posts += body }
-        if (body.contains(s""""guid":"$failGuid"""")) HttpReply(500, "boom") else HttpReply(200, "ok")
-      }
-    }
-
-    def seed6(st: ParquetEventStore): Unit = {
-      import spark.implicits._
-      val batch = (1 to 6).map(i => (s"g$i", f"2024-01-01T1$i%d:00:00Z"))
-        .toDF("guid", "created_at_raw")
-        .withColumn("created_at", F.to_timestamp(F.col("created_at_raw")))
-        .withColumn("event_type", F.lit("t")).withColumn("actor", F.lit("a"))
-        .withColumn("actor_type", F.lit("t")).withColumn("actor_name", F.lit("n"))
-        .withColumn("actor_username", F.lit("u")).withColumn("actee", F.lit("e"))
-        .withColumn("actee_type", F.lit("t")).withColumn("actee_name", F.lit("n"))
-        .withColumn("organization_guid", F.lit(null).cast("string"))
-        .withColumn("space_guid", F.lit(null).cast("string"))
-        .withColumn("metadata", F.lit("{}"))
-        .withColumn("id", F.lit(0L))
-      st.storeCFAuditEvents(batch)
-      ()
-    }
-
-    def mkShipper(st: ParquetEventStore, poster: HttpTransport) = new SplunkShipper(st,
-      new SplunkHecClient(poster, "https://hec", "KEY", maxRetries = 0, sleep = _ => ()),
-      "test-env", new MetricsRegistry)
-
-    it("parallel ship commits the same cursor as serial under the same mid-batch failure") {
-      for (failAt <- Seq("g2", "g5")) { // failure in the first and in a later range partition
-        val serialStore = newStore(); seed6(serialStore)
-        val parallelStore = newStore(); seed6(parallelStore)
-        val serialShipped = mkShipper(serialStore, new GuidFailPoster(failAt)).shipOnce()._1
-        val parallelShipped = {
-          val p = new GuidFailPoster(failAt)
-          mkShipper(parallelStore, p).shipPartitionedOnce(2,
-            () => new SplunkHecClient(p, "https://hec", "KEY", maxRetries = 0, sleep = _ => ()))._1
-        }
-        val serialCur = serialStore.cursors.collect()(0).getString(2)
-        val parallelCur = parallelStore.cursors.collect()(0).getString(2)
-        withClue(s"failAt=$failAt:") {
-          parallelCur shouldBe serialCur // identical committed prefix boundary
-          parallelShipped shouldBe serialShipped // identical prefix accounting
-        }
-      }
-    }
-
-    it("batched parallel ship (postBatchSize=3) amortizes POSTs with identical delivery") {
-      ShipCounters.posts.set(0)
-      val st = newStore(); seed6(st)
-      val (shipped, failed) = mkShipper(st, new CountingPoster).shipPartitionedOnce(2,
-        () => new SplunkHecClient(new CountingPoster, "https://hec", "KEY", maxRetries = 0, sleep = _ => ()),
-        postBatchSize = 3)
-      (shipped, failed) shouldBe ((6L, 0L))
-      st.cursors.collect()(0).getString(2) shouldBe "g6"
-      ShipCounters.posts.get() shouldBe 2 // one 3-event POST per range partition, not 6
-    }
-
-    it("batched parallel ship stops each partition at its last fully-shipped group and redelivers after heal") {
-      val st = newStore(); seed6(st)
-      val failing = new GuidFailPoster("g5")
-      mkShipper(st, failing).shipPartitionedOnce(2,
-        () => new SplunkHecClient(failing, "https://hec", "KEY", maxRetries = 0, sleep = _ => ()),
-        postBatchSize = 2)
-      // partition 1's first group [g4,g5] fails -> committed prefix is
-      // partition 0's fully-shipped tail (group granularity, like shipOnce)
-      st.cursors.collect()(0).getString(2) shouldBe "g3"
-      val healed = new FakePoster(Seq.fill(10)(200))
-      val (reshipped, f2) = mkShipper(st, healed).shipOnce()
-      (reshipped, f2) shouldBe ((3L, 0L)) // g4..g6, at-least-once, no loss
-      st.cursors.collect()(0).getString(2) shouldBe "g6"
-    }
-
-    it("HecClientPool shares ONE client per key across partitions and ticks") {
-      graft.streaming.HecClientPool.clear()
-      val st = newStore(); seed6(st)
-      val sh = mkShipper(st, new CountingPoster)
-      def mk() = new SplunkHecClient(new CountingPoster, "https://hec", "KEY", maxRetries = 0, sleep = _ => ())
-      sh.shipPartitionedOnce(2, () => mk(), clientPoolKey = Some("hec-pool-test"))
-      sh.shipPartitionedOnce(2, () => mk(), clientPoolKey = Some("hec-pool-test")) // next tick
-      // 2 partitions x 2 ticks all resolved to a single pooled client
-      graft.streaming.HecClientPool.size shouldBe 1
-      st.cursors.collect()(0).getString(2) shouldBe "g6"
-    }
-
-    it("parallel ship redelivers everything past the committed prefix after the failure heals") {
-      val st = newStore(); seed6(st)
-      val failing = new GuidFailPoster("g3")
-      mkShipper(st, failing).shipPartitionedOnce(2,
-        () => new SplunkHecClient(failing, "https://hec", "KEY", maxRetries = 0, sleep = _ => ()))
-      st.cursors.collect()(0).getString(2) shouldBe "g2" // prefix boundary before the failure
-      val healed = new FakePoster(Seq.fill(10)(200))
-      val (reshipped, failed) = mkShipper(st, healed).shipOnce()
-      (reshipped, failed) shouldBe ((4L, 0L)) // g3..g6 redelivered (at-least-once)
-      (3 to 6).foreach(i => healed.posts.map(_._2).exists(_.contains(s""""guid":"g$i"""")) shouldBe true)
-      st.cursors.collect()(0).getString(2) shouldBe "g6"
     }
   }
 
@@ -584,6 +799,40 @@ class StoreAndPipelineSpec extends SparkSpec {
       new Informer(st, reg).informOnce()
       reg.gaugeValue(Metrics.InformerEventsTotal) shouldBe 0.0
       reg.gaugeValue(Metrics.InformerLatestEventTimestamp) shouldBe 0.0
+    }
+
+    it("reads the stored count and the latest created_at into the gauges") {
+      val st = newStore()
+      val collector = new Collector(spark, st,
+        new CfAuditEventFetcher(new FakeTransport(Map.empty), ""), new MetricsRegistry)
+      val mk = (g: String, at: String) => CfWireEvent(g, at, "t", "a", "at", "an", "au",
+        "e", "et", "en", "", "sg", "{}")
+      st.storeCFAuditEvents(collector.pageToDf(Seq(
+        mk("g1", "2024-01-01T10:00:00Z"), mk("g2", "2024-01-02T08:30:00Z"))))
+      val reg = new MetricsRegistry
+      new Informer(st, reg).informOnce()
+      reg.gaugeValue(Metrics.InformerEventsTotal) shouldBe 2.0
+      reg.gaugeValue(Metrics.InformerLatestEventTimestamp) shouldBe
+        Instant.parse("2024-01-02T08:30:00Z").getEpochSecond.toDouble
+    }
+
+    it("sets both gauges to 0 and logs each error when the store fails (informer.go:42,48)") {
+      val broken = new DelegatingStore(newStore()) {
+        override def getCFEventCount(): Long = throw new RuntimeException("no stats")
+        override def getLatestCFEventTime(): Timestamp = throw new RuntimeException("no table")
+      }
+      val reg = new MetricsRegistry
+      reg.setGauge(Metrics.InformerEventsTotal, 5.0)
+      reg.setGauge(Metrics.InformerLatestEventTimestamp, 5.0)
+      val lines = mutable.ArrayBuffer.empty[String]
+      new Informer(broken, reg, logger = graft.logging.Lager.to("paasauditorspark", lines += _)).informOnce()
+      reg.gaugeValue(Metrics.InformerEventsTotal) shouldBe 0.0
+      reg.gaugeValue(Metrics.InformerLatestEventTimestamp) shouldBe 0.0
+      val logged = lines.toSeq.map(mapper.readTree(_))
+      logged.map(_.get("message").asText()) shouldBe Seq(
+        "paasauditorspark.informer.run.err-event-db-get-cf-event-count",
+        "paasauditorspark.informer.run.err-event-db-get-latest-cf-event-time")
+      logged.foreach(_.get("log_level").asInt() shouldBe 2)
     }
   }
 
