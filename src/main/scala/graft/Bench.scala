@@ -56,7 +56,7 @@ object Bench {
     * parses the parent's last {"metric"...} line and must never see the
     * child's restricted artifact line. The log is deleted on success and
     * kept (path printed) on failure. */
-  private def forkedMin(name: String, sfDir: String, cpus: String,
+  private def forkedMin(name: String, sfDir: String, cpus: Int,
                         samples: Int): Option[ArbiterResult] = {
     import scala.jdk.CollectionConverters._
     val classes = new java.io.File(
@@ -82,7 +82,7 @@ object Bench {
     pb.environment().put("SPARK_GRAFT_HEAVY_PASSES", "0")
     pb.environment().put("SPARK_GRAFT_BENCH_FILE", sidecar.getPath)
     pb.environment().put("SPARK_GRAFT_SF_DIR", sfDir)
-    pb.environment().put("SPARK_GRAFT_CPUS", cpus)
+    pb.environment().put("SPARK_GRAFT_CPUS", cpus.toString)
     pb.redirectOutput(log)
     pb.redirectError(log)
     val load = loadAvg1m()
@@ -205,6 +205,18 @@ object Bench {
         frags.getOrElse("value", "0.000") + ",\"unit\":\"sec\""
       ((head +: body) :+ tail).mkString("{", ",", "}")
     }
+    /** The compact line printed last on stdout, for a reader that keeps
+      * only a ~2000-character tail: the headline fields and the path of
+      * the file holding the full artifact (`null` when none is written). */
+    def summary(cpus: Int): String = synchronized {
+      dynamic().foreach { case (k, v) => frags(k) = v }
+      val path = outFile.fold("null")(f =>
+        "\"" + java.nio.file.Paths.get(f).toAbsolutePath + "\"")
+      "{\"metric\":\"total\",\"value\":" + frags.getOrElse("value", "0.000") +
+        ",\"unit\":\"sec\",\"sf\":" + frags.getOrElse("sf", "null") +
+        ",\"cpus\":" + cpus + ",\"failures\":" + frags.getOrElse("failures", "0") +
+        ",\"wall_sec\":" + frags.getOrElse("wall_sec", "0.000") + ",\"artifact\":" + path + "}"
+    }
     /** Write the current state as a complete artifact line. Never
       * throws (a failing flush must not kill the run or the hook). */
     def write(interrupted: Boolean = false): Unit = {
@@ -228,7 +240,7 @@ object Bench {
     val benchT0 = System.nanoTime()
     def elapsedSec: Double = (System.nanoTime() - benchT0) / 1e9
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = GraftSession.defaultCpus
     // SPARK_GRAFT_ONLY=q_a,q_b restricts the run (local iteration aid)
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
     // WALL-CLOCK BUDGET (r16 verdict #2: the instrument grew a tier per
@@ -247,35 +259,8 @@ object Bench {
     val budgetSec: Double = sys.env.get("SPARK_GRAFT_BENCH_BUDGET_SEC").map(_.toDouble)
       .getOrElse(if (only.isDefined) Double.MaxValue else 2850.0)
     def remainingSec: Double = budgetSec - elapsedSec
-    // NOTE: measured at sf0.1, finer spark.sql.files.maxPartitionBytes
-    // splits (1 MB) INCREASED total time 30.8s -> 51.6s — per-task overhead
-    // dominates single-digit-MB inputs; the default 128 MB split is right
-    // here and at scale. Keeping defaults deliberately.
     def newSession(): SparkSession = {
-      val s = SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        // the default 128-group fallback turns the bounded-heap top-k
-        // (ObjectHashAggregate) into sort-based aggregation on any real
-        // query count, re-creating the window sort it replaces; a
-        // collect_top_k buffer is <= k small structs, so 64k in-flight
-        // groups per partition is still only tens of MB
-        .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "65536")
-        .getOrCreate()
-      s.sparkContext.setLogLevel("WARN")
-      // The bounded-axis single-partition windows (Evaluation tile
-      // cumulants, Survival event-axis folds, the DuckDB-mirror-shaped
-      // SQL) are DELIBERATE — each axis is guarded — but WindowExec's
-      // "No Partition Defined" WARN repeated thousands of times was the
-      // ENTIRE surviving tail of the truncated r16 driver log, burying
-      // every real diagnostic (r16 verdict). Silence that one logger;
-      // everything else stays at WARN.
-      try org.apache.logging.log4j.core.config.Configurator.setLevel(
-        "org.apache.spark.sql.execution.window.WindowExec",
-        org.apache.logging.log4j.Level.ERROR)
-      catch { case _: Throwable => () }
+      val s = GraftSession(cpus)
       // Warm the session (codegen, parquet footer cache, executor threads) so
       // the first measured query doesn't absorb JVM/session startup.
       try s.read.parquet(s"$sfDir/lineitem.parquet").count()
@@ -415,7 +400,7 @@ object Bench {
     def canaryOnce(): Double = {
       val s = spark
       val t0 = System.nanoTime()
-      s.range(0L, 20000000L, 1L, cpus.toInt)
+      s.range(0L, 20000000L, 1L, cpus)
         .selectExpr("id % 9973 AS k")
         .groupBy("k").count().count()
       (System.nanoTime() - t0) / 1e9
@@ -963,16 +948,13 @@ object Bench {
     val line = artifact.render(interrupted = false)
     artifact.write()
     artifact.markDone()
-    // Print the artifact line BEFORE teardown ...
+    // The full artifact line first; the compact summary is the absolute
+    // last stdout line, because a tail capture of ~2000 characters sliced
+    // into the ~25 KB full line (BENCH_r18 `parsed: null`).
     println(line)
     System.out.flush()
     spark.stop()
-    // ... and again as the ABSOLUTE LAST stdout output: three rounds of
-    // driver artifacts were head-truncated by a tail-capture window that
-    // sliced into the (long) JSON line. Whether the capture keeps the head
-    // or the tail of stdout, one complete copy survives; a parser taking
-    // the last line matching {"metric":...} gets this intact copy.
-    println(line)
+    println(artifact.summary(cpus))
     System.out.flush()
   }
 }

@@ -2839,7 +2839,7 @@ object SparkEntry {
     // 8.89 / min 8.03 s — ~2 s was grid contention; the rest is inside
     // the ±40-80% band calibrated for this family on identical code
     // (train is ~half the single-shot cost and its path is unchanged
-    // since r5; IvfPqProfile: train 8.7 s vs search 8.8 s at local[8]).
+    // since r5; profiled alone: train 8.7 s vs search 8.8 s at local[8]).
     "q_ivf_pq" -> ((s, dir) => {
       val e = t(s, dir, "embeddings")
       val (cents, books) = Similarity.trainIvfPqModel(

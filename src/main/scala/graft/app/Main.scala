@@ -3,16 +3,14 @@ package graft.app
 import java.time.Duration
 import java.util.concurrent.atomic.AtomicBoolean
 
-import org.apache.spark.sql.SparkSession
-
 import graft.metrics.{MetricsRegistry, MetricsServer}
 import graft.sources.{AuthenticatedTransport, CfAuditEventFetcher, CfAuthConfig, HttpTransport, JdkHttpTransport, UaaAuthenticator}
 import graft.store.{EventStore, JdbcEventStore, ParquetEventStore}
 import graft.streaming.{Collector, Informer, SplunkHecClient, SplunkShipper}
 
 /** Env-var config mirroring the reference's names and defaults
-  * (`main_config.go:34-65`). Durations accept Go-style suffixed values
-  * for the common forms (`200ms`, `15s`, `2m`). */
+  * (`main_config.go:34-65`). Durations take Go `time.ParseDuration`
+  * syntax, as the reference's env does. */
 final case class Config(
     deployEnv: String,
     databaseUrl: String,
@@ -34,13 +32,30 @@ object Config {
   private def env(k: String, default: String = ""): String =
     sys.env.getOrElse(k, default)
 
-  private[app] def parseDurationMillis(s: String, defaultMillis: Long): Long =
+  private val durationPart = """(\d+\.?\d*|\.\d+)(ns|us|µs|μs|ms|s|m|h)"""
+  private val GoDuration = s"[-+]?(?:$durationPart)+".r
+  private val GoDurationPart = durationPart.r
+  private val unitNanos = Map("ns" -> 1L, "us" -> 1000L, "µs" -> 1000L, "μs" -> 1000L,
+    "ms" -> 1000000L, "s" -> 1000000000L, "m" -> 60000000000L, "h" -> 3600000000000L)
+
+  /** The value of env var `name` in Go `time.ParseDuration` syntax
+    * (`250ms`, `1m30s`, `1.5s`, `0`), in whole milliseconds; empty keeps
+    * the default. */
+  private[graft] def parseDurationMillis(name: String, s: String, defaultMillis: Long): Long =
     if (s.isEmpty) defaultMillis
-    else if (s.endsWith("ms")) s.dropRight(2).toLong
-    else if (s.endsWith("s")) s.dropRight(1).toLong * 1000L
-    else if (s.endsWith("m")) s.dropRight(1).toLong * 60000L
-    else if (s.endsWith("h")) s.dropRight(1).toLong * 3600000L
-    else s.toLong
+    else if (s == "0") 0L
+    else if (!GoDuration.matches(s))
+      throw new IllegalArgumentException(
+        s"$name: invalid duration '$s' (expected Go syntax such as 250ms, 1m30s or 1.5s)")
+    else {
+      val nanos = GoDurationPart.findAllMatchIn(s)
+        .map(m => BigDecimal(m.group(1)) * unitNanos(m.group(2))).sum
+      val millis = (nanos / 1000000).toLong
+      if (s.startsWith("-")) -millis else millis
+    }
+
+  private def duration(name: String, defaultMillis: Long): Long =
+    parseDurationMillis(name, env(name), defaultMillis)
 
   def fromEnv(): Config = Config(
     deployEnv = env("DEPLOY_ENV", "dev"),
@@ -51,10 +66,10 @@ object Config {
     cfClientSecret = env("CF_CLIENT_SECRET"),
     cfUsername = env("CF_USERNAME"),
     cfPassword = env("CF_PASSWORD"),
-    paginationWaitMillis = parseDurationMillis(env("FETCHER_PAGINATION_WAIT_TIME"), 200L),
-    collectorScheduleMillis = parseDurationMillis(env("COLLECTOR_SCHEDULE"), 2L * 60 * 1000),
-    informerScheduleMillis = parseDurationMillis(env("INFORMER_SCHEDULE"), 15000L),
-    shipperScheduleMillis = parseDurationMillis(env("SHIPPER_SCHEDULE"), 15000L),
+    paginationWaitMillis = duration("FETCHER_PAGINATION_WAIT_TIME", 200L),
+    collectorScheduleMillis = duration("COLLECTOR_SCHEDULE", 2L * 60 * 1000),
+    informerScheduleMillis = duration("INFORMER_SCHEDULE", 15000L),
+    shipperScheduleMillis = duration("SHIPPER_SCHEDULE", 15000L),
     splunkApiKey = env("SPLUNK_API_KEY"),
     splunkUrl = env("SPLUNK_HEC_ENDPOINT_URL"),
     listenPort = env("PORT", "9299").toInt)
@@ -73,12 +88,7 @@ object Config {
 object Main {
   def main(args: Array[String]): Unit = {
     val cfg = Config.fromEnv()
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[32]"))
-      .appName("paasauditorspark")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
+    val spark = graft.GraftSession(master = sys.env.get("SPARK_MASTER"))
 
     val store: EventStore =
       if (cfg.databaseUrl.nonEmpty)

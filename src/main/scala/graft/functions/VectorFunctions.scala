@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 
 /** Engine-facing surface for the native vector expressions (implementation
   * in `org.apache.spark.sql.graftnative` for private[sql] access). */
@@ -17,16 +17,4 @@ object VectorFunctions {
   /** Codegen'd squared L2 distance of `array<float>` to `array<double>`. */
   def fdDistSq(a: Column, b: Column): Column =
     org.apache.spark.sql.graftnative.FloatVectorDot.distSq(a, b)
-
-  /** Register `fv_dot` on a live session for SQL use. */
-  def register(spark: SparkSession): Unit =
-    org.apache.spark.sql.graftnative.FloatVectorDot.register(spark)
-
-  /** Install the HOF-dot → native-kernel optimizer rule on a LIVE session
-    * (sessions built from a builder get it via `GraftExtensions`). */
-  def installDotRewrite(spark: SparkSession): Unit =
-    if (!spark.experimental.extraOptimizations.contains(
-        org.apache.spark.sql.graftnative.NativeDotRule))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ org.apache.spark.sql.graftnative.NativeDotRule
 }

@@ -116,18 +116,20 @@ final class SplunkShipper(
             registry.inc(Metrics.ShipperErrors)
         }
       }
-      lastOk.foreach { r =>
-        // Commit cursor with the RAW created_at string (shipper.go:140-143).
-        store.updateShipperCursor(shipperName, r.getString(1), r.getString(2))
-        lsession.info("shipped-events",
-          "shipped" -> shipped, "last_guid" -> r.getString(2))
-        registry.inc(Metrics.ShipperEventsShipped, shipped.toDouble)
-        // "Not fatal" parse for the latest-shipped gauge (shipper.go:158-169).
-        try registry.setGauge(Metrics.ShipperLatestEventTimestamp,
-          OffsetDateTime.parse(r.getString(1)).toInstant.getEpochSecond.toDouble)
-        catch { case _: Exception => () }
+      // Commit cursor with the RAW created_at string (shipper.go:140-143).
+      if (!lastOk.forall(r => commitCursor(r.getString(1), r.getString(2)))) (0L, 1L)
+      else {
+        lastOk.foreach { r =>
+          lsession.info("shipped-events",
+            "shipped" -> shipped, "last_guid" -> r.getString(2))
+          registry.inc(Metrics.ShipperEventsShipped, shipped.toDouble)
+          // "Not fatal" parse for the latest-shipped gauge (shipper.go:158-169).
+          try registry.setGauge(Metrics.ShipperLatestEventTimestamp,
+            OffsetDateTime.parse(r.getString(1)).toInstant.getEpochSecond.toDouble)
+          catch { case _: Exception => () }
+        }
+        (shipped, if (failed) 1L else 0L)
       }
-      (shipped, if (failed) 1L else 0L)
     } catch {
       case e: Exception =>
         lsession.error("err-get-unshipped-cf-audit-events-for-shipper", e) // shipper.go:110
@@ -137,6 +139,17 @@ final class SplunkShipper(
       registry.inc(Metrics.ShipperShipDuration, (System.nanoTime() - t0) / 1e9)
     }
   }
+
+  /** A failed commit fails the tick under its own action (shipper.go:145-151);
+    * the shipped prefix is re-shipped next tick. */
+  private def commitCursor(createdAtRaw: String, guid: String): Boolean =
+    try { store.updateShipperCursor(shipperName, createdAtRaw, guid); true }
+    catch {
+      case e: Exception =>
+        lsession.error("err-update-shipper-cursor", e)
+        registry.inc(Metrics.ShipperErrors)
+        false
+    }
 
   /** Periodic loop: errors are isolated — tick again next schedule (ST5). */
   def run(scheduleMillis: Long, stop: () => Boolean): Unit = {

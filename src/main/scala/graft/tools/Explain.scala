@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: print the formatted physical plan of named SparkEntry
   * queries (comma-separated in args or SPARK_GRAFT_ONLY) against
   * SPARK_GRAFT_SF_DIR — the `.explain("formatted")` loop the scale
@@ -12,13 +10,7 @@ object Explain {
     val names: Seq[String] =
       if (args.nonEmpty) args.toSeq.flatMap(_.split(","))
       else sys.env.get("SPARK_GRAFT_ONLY").toSeq.flatMap(_.split(","))
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession()
     names.foreach { n =>
       graft.SparkEntry.queries.get(n) match {
         case Some(fn) =>

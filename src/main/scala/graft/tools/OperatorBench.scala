@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession, functions => F}
+import org.apache.spark.sql.{Column, DataFrame, functions => F}
 import org.apache.spark.sql.expressions.Window
 
 import graft.operators._
@@ -8,19 +8,12 @@ import graft.operators._
 /** Operator-level evidence bench: each scale-sensitive operator measured
   * against its naive formulation on the same inputs — the numbers behind
   * the plan choices (two-phase prefix sums, wide one-pass signatures,
-  * df-capped in-row pair explosion, native dot kernel). One JSON line per
+  * df-capped in-row pair explosion, IVF+PQ search). One JSON line per
   * comparison on stdout. */
 object OperatorBench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession()
 
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
     val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
@@ -82,25 +75,7 @@ object OperatorBench {
     def jaccardInRow: Long = Dedup.jaccardPairs(shingles, 0.05, maxDf = 1000000L).count()
     report("jaccard_pairs", jaccardSelfJoin, jaccardInRow)
 
-    // 4. dot kernel: HOF aggregate/zip_with vs native codegen'd fv_dot
-    // (amplified via a 200-query brute-force scoring pass)
-    val queries = emb.filter(F.col("vec_id") < 200)
-    def dotHof: Long = {
-      val q = queries.select(F.col("vec_id").as("qid"), F.col("embedding").as("qv"))
-      emb.crossJoin(F.broadcast(q))
-        .select(Similarity.dot(F.col("embedding"), F.col("qv")).as("d"))
-        .filter(F.col("d") > 1e9).count() // force full evaluation, keep nothing
-    }
-    def dotNative: Long = {
-      import graft.functions.VectorFunctions.{fvDot => ndot}
-      val q = queries.select(F.col("vec_id").as("qid"), F.col("embedding").as("qv"))
-      emb.crossJoin(F.broadcast(q))
-        .select(ndot(F.col("embedding"), F.col("qv")).as("d"))
-        .filter(F.col("d") > 1e9).count()
-    }
-    report("dot_kernel", dotHof, dotNative)
-
-    // 5. self-ANN top-3: brute-force all-pairs vs the composed IVF+PQ
+    // 4. self-ANN top-3: brute-force all-pairs vs the composed IVF+PQ
     // QUERY phase against a pre-trained model (training and PQ encoding
     // are offline index-build steps in deployment, amortized over every
     // query batch — timing them per query would charge the index build to
@@ -115,7 +90,7 @@ object OperatorBench {
         nprobe = 5, shortlist = 24, k = 3).count()
     report("ivf_pq_ann", annBrute, annIvfPq)
 
-    // 6. persisted-index serving (train-rarely/encode-always): retrain the
+    // 5. persisted-index serving (train-rarely/encode-always): retrain the
     // IVF+PQ model inside every query run (what a one-shot batch job does)
     // vs serve from the AnnIndexStore codes table built ONCE — the per-run
     // delta is the whole train+encode cost, which on a 100 TB append
@@ -130,7 +105,7 @@ object OperatorBench {
       idx.search(emb, "vec_id", "embedding", nprobe = 5, shortlist = 24, k = 3).count()
     report("ann_index_serve", annTrainServe, annIndexServe)
 
-    // 7. simhash band width: candidate volume from 4-bit bands over the
+    // 6. simhash band width: candidate volume from 4-bit bands over the
     // 16-bit fingerprint vs 16-bit bands over the 64-bit fingerprint.
     // (The verified pair sets differ — a wider print is strictly more
     // precise — so this reports candidate:verified selectivity, not an

@@ -14,19 +14,11 @@ import org.apache.spark.sql.SparkSession
 object Profile {
   def main(args: Array[String]): Unit = {
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val passes = sys.env.getOrElse("SPARK_GRAFT_PASSES", "3").toInt
     val names: Seq[String] =
       if (args.nonEmpty) args.toSeq.flatMap(_.split(","))
       else sys.env.get("SPARK_GRAFT_ONLY").toSeq.flatMap(_.split(","))
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "65536")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession()
     try spark.read.parquet(s"$dir/lineitem.parquet").count()
     catch { case _: Throwable => () }
 
@@ -78,7 +70,7 @@ object Profile {
             val wall = (System.nanoTime() - t0) / 1e9
             // listener events are async; let the bus drain before reading
             Thread.sleep(300)
-            val core = taskTimeMs / 1e3 / cpus.toDouble
+            val core = taskTimeMs / 1e3 / spark.sparkContext.defaultParallelism
             println(f"""{"q":"$n","pass":$p,"wall_sec":$wall%.3f,"jobs":$jobs,"stages":$stages,"tasks":$tasks,"task_time_sec":${taskTimeMs / 1e3}%.2f,"task_over_cores_sec":$core%.3f,"driver_residue_sec":${wall - core}%.3f,"shuffle_read_mb":${shufReadB / 1e6}%.1f,"shuffle_write_mb":${shufWriteB / 1e6}%.1f,"input_mb":${inputB / 1e6}%.1f}""")
             if (traceJobs) {
               import scala.jdk.CollectionConverters._

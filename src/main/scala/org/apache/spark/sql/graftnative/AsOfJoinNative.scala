@@ -3,7 +3,7 @@
 package org.apache.spark.sql.graftnative
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, AttributeReference, GenericInternalRow, SortOrder}
 import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, LogicalPlan}
@@ -161,13 +161,6 @@ object AsOfJoinStrategy extends SparkStrategy {
 }
 
 object AsOfJoinNative {
-  /** Register the planner strategy on a live session (idempotent). */
-  def register(spark: SparkSession): Unit = {
-    val cur = spark.experimental.extraStrategies
-    if (!cur.exists(_.isInstanceOf[AsOfJoinStrategy.type]))
-      spark.experimental.extraStrategies = cur :+ AsOfJoinStrategy
-  }
-
   def join(
       left: DataFrame,
       right: DataFrame,
@@ -176,7 +169,7 @@ object AsOfJoinNative {
       rightTime: String,
       rightVals: Seq[String]): DataFrame = {
     val spark = left.sparkSession
-    register(spark)
+    GraftExtensions.setup(spark) // plans on any session, not only GraftSession's
     val rightOut = right.queryExecution.analyzed.output
     val asofAttrs = rightVals.map { v =>
       val src = rightOut.find(_.name == v).getOrElse(

@@ -4,10 +4,9 @@
  * graft.functions.VectorFunctions. */
 package org.apache.spark.sql.graftnative
 
-import org.apache.spark.sql.{Column, SparkSession, SparkSessionExtensions}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.classic.ExpressionUtils
 import org.apache.spark.sql.types.{AbstractDataType, ArrayType, DataType, DoubleType, FloatType}
@@ -215,11 +214,6 @@ object FloatVectorDot {
   def distSq(a: Column, b: Column): Column =
     ExpressionUtils.column(FloatDoubleVectorDistSq(
       ExpressionUtils.expression(a), ExpressionUtils.expression(b)))
-
-  /** Register `fv_dot` for SQL use on an existing session. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "fv_dot", exprs => FloatVectorDot(exprs(0), exprs(1)), "scala_udf")
 }
 
 /** Optimizer rule (`Rule[LogicalPlan]`): rewrite the portable higher-order
@@ -231,7 +225,8 @@ object FloatVectorDot {
   * loop inside whole-stage codegen. Safe because the two are equivalent on
   * EVERY input, including unequal lengths and null elements (both yield
   * null) — see the expression's edge-semantics note. Users keep writing
-  * the portable form; sessions with the rule installed run the kernel. */
+  * the portable form; sessions `GraftExtensions.setup` has run on (every
+  * `graft.GraftSession`) run the kernel. */
 object NativeDotRule extends org.apache.spark.sql.catalyst.rules.Rule[org.apache.spark.sql.catalyst.plans.logical.LogicalPlan] {
   import org.apache.spark.sql.catalyst.expressions._
   import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
@@ -280,18 +275,5 @@ object NativeDotRule extends org.apache.spark.sql.catalyst.rules.Rule[org.apache
           case _ => false
         } =>
       FloatVectorDot(l, r)
-  }
-}
-
-/** `SparkSessionExtensions` hook: `.withExtensions(new GraftExtensions)`
-  * makes `fv_dot` available to every session built from the builder and
-  * installs the HOF-dot → native-kernel optimizer rule. */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  def apply(e: SparkSessionExtensions): Unit = {
-    e.injectFunction((
-      FunctionIdentifier("fv_dot"),
-      new ExpressionInfo(classOf[FloatVectorDot].getName, "fv_dot"),
-      (exprs: Seq[Expression]) => FloatVectorDot(exprs(0), exprs(1))))
-    e.injectOptimizerRule(_ => NativeDotRule)
   }
 }

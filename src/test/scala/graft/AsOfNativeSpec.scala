@@ -23,6 +23,18 @@ class AsOfNativeSpec extends SparkSpec {
     out.collect()(0).getLong(3) shouldBe 2L
   }
 
+  it("plans on a session GraftSession did not build (joinNative installs its strategy)") {
+    val other = spark.newSession()
+    other.experimental.extraStrategies shouldBe empty
+    val left = other.createDataFrame(Seq((1L, 1L, ts("2024-01-01T10:00:00Z"))))
+      .toDF("event_id", "user_id", "ts")
+    val right = other.createDataFrame(Seq((2L, 1L, ts("2024-01-01T09:00:00Z"))))
+      .toDF("event_id", "user_id", "ts")
+    val out = AsOfJoin.joinNative(left, right, "user_id", "ts", "ts", Seq("event_id"))
+    out.queryExecution.executedPlan.toString should include("AsOfJoin")
+    out.collect()(0).getLong(3) shouldBe 2L
+  }
+
   it("matches the union+window formulation on randomized data") {
     val rnd = new scala.util.Random(7)
     val leftRows = Seq.tabulate(400) { i =>

@@ -109,4 +109,30 @@ class BenchArtifactSpec extends AnyFunSpec with Matchers {
     val iT = line.indexOf("\"completed_tiers\"")
     (iQ < iJ && iJ < iS && iS < iT) shouldBe true
   }
+
+  it("the summary line of a full-size artifact parses and stays within 1,900 characters") {
+    val f = java.nio.file.Files.createTempFile("graft-art-", ".json").toString
+    val a = newArtifact(Some(f), () => Seq("wall_sec" -> "2512.345"))
+    // a board-sized artifact: 330 query rows in several maps, like a full run
+    val rows = (1 to 330).map(i => "\"q_query_name_" + i + "\":" + (i * 0.123)).mkString("{", ",", "}")
+    Seq("queries", "queries_min", "queries_isolated", "canary").foreach(a.set(_, rows))
+    a.set("value", "301.250")
+    a.set("sf", "\"/data/sf0.1\"")
+    a.set("failures", "2")
+    a.set("errors", "{\"q_a\":\"boom\",\"q_b\":\"bang\"}")
+    a.render(false).length should be > 20000
+    val line = a.summary(cpus = 4)
+    line.length should be <= 1900
+    line should not include "\n"
+    val node = mapper.readTree(line)
+    node.get("metric").asText() shouldBe "total"
+    node.get("value").asDouble() shouldBe 301.25
+    node.get("unit").asText() shouldBe "sec"
+    node.get("sf").asText() shouldBe "/data/sf0.1"
+    node.get("cpus").asInt() shouldBe 4
+    node.get("failures").asInt() shouldBe 2
+    node.get("wall_sec").asDouble() shouldBe 2512.345
+    node.get("artifact").asText() shouldBe java.nio.file.Paths.get(f).toAbsolutePath.toString
+    newArtifact().summary(cpus = 8).contains("\"artifact\":null") shouldBe true
+  }
 }

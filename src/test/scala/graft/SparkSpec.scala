@@ -11,11 +11,6 @@ trait SparkSpec extends AnyFunSpec with Matchers with BeforeAndAfterAll {
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-tests")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  // 4 cores whatever SPARK_GRAFT_CPUS says: the forked test groups share the host
+  lazy val session: SparkSession = GraftSession(cpus = 4)
 }

@@ -778,6 +778,37 @@ class StoreAndPipelineSpec extends SparkSpec {
       err.get("data").get("error").asText() should include("scan failed")
     }
 
+    it("logs a failed cursor commit under its own action and re-ships the batch next tick (ST5)") {
+      val st = newStore(); seed(st)
+      var commitFails = true
+      val flaky = new DelegatingStore(st) {
+        override def updateShipperCursor(shipperName: String, updatedAt: String, shippedId: String): Unit =
+          if (commitFails) throw new RuntimeException("cursor swap failed")
+          else super.updateShipperCursor(shipperName, updatedAt, shippedId)
+      }
+      val poster = new FakePoster(Nil)
+      val reg = new MetricsRegistry
+      val lines = mutable.ArrayBuffer.empty[String]
+      val shipper = new SplunkShipper(flaky,
+        new SplunkHecClient(poster, "https://hec", "KEY", sleep = _ => ()), "test-env", reg,
+        logger = graft.logging.Lager.to("paasauditorspark", lines += _))
+      shipper.shipOnce() shouldBe ((0L, 1L))
+      postedGuids(poster) shouldBe Seq("g1", "g2", "g3")
+      reg.counterValue(Metrics.ShipperErrors) shouldBe 1.0
+      reg.counterValue(Metrics.ShipperEventsShipped) shouldBe 0.0
+      st.cursors.count() shouldBe 0L
+      val logged = lines.toSeq.map(mapper.readTree(_))
+      val errs = logged.filter(_.get("log_level").asInt() == 2)
+      errs.map(_.get("message").asText()) shouldBe
+        Seq("paasauditorspark.cf-audit-events-to-splunk-shipper.run.err-update-shipper-cursor")
+      errs.head.get("data").get("error").asText() should include("cursor swap failed")
+      commitFails = false
+      shipper.shipOnce() shouldBe ((3L, 0L))
+      postedGuids(poster) shouldBe Seq("g1", "g2", "g3", "g1", "g2", "g3")
+      st.cursors.collect()(0).getString(2) shouldBe "g3"
+      reg.counterValue(Metrics.ShipperEventsShipped) shouldBe 3.0
+    }
+
     it("run keeps ticking after a failed tick and ships everything once HEC heals (ST5)") {
       val st = newStore(); seed(st)
       val poster = new FakePoster(Seq(500, 500, 500, 500)) // first tick: g1 fails every attempt
@@ -789,6 +820,28 @@ class StoreAndPipelineSpec extends SparkSpec {
       reg.counterValue(Metrics.ShipperErrors) shouldBe 1.0
       reg.counterValue(Metrics.ShipperEventsShipped) shouldBe 3.0
       st.cursors.collect()(0).getString(2) shouldBe "g3"
+    }
+  }
+
+  describe("Config durations (Go time.ParseDuration, main_config.go:55-58)") {
+    import graft.app.Config.parseDurationMillis
+    it("parses single- and multi-unit values to whole milliseconds") {
+      Seq("250ms" -> 250L, "90s" -> 90000L, "2m" -> 120000L, "1m30s" -> 90000L,
+        "1.5s" -> 1500L, "1h" -> 3600000L).foreach { case (v, ms) =>
+        withClue(v) { parseDurationMillis("SHIPPER_SCHEDULE", v, 15000L) shouldBe ms }
+      }
+    }
+
+    it("keeps the default for an empty value") {
+      parseDurationMillis("COLLECTOR_SCHEDULE", "", 120000L) shouldBe 120000L
+    }
+
+    it("rejects malformed values with a message naming the variable") {
+      Seq("garbage", "15", "1.5", "s", "1x").foreach { v =>
+        val e = intercept[IllegalArgumentException](parseDurationMillis("INFORMER_SCHEDULE", v, 15000L))
+        e.getMessage should include("INFORMER_SCHEDULE")
+        e.getMessage should include(s"'$v'")
+      }
     }
   }
 

@@ -8,16 +8,25 @@ import graft.operators.Similarity
 class VectorFunctionsSpec extends SparkSpec {
   import spark.implicits._
 
-  private val vecs = Seq(
+  private val vecRows = Seq(
     (0L, Array(0.25f, -1.5f, 3.75f, 0.125f)),
     (1L, Array(1.0f, 2.0f, -0.5f, 4.25f)),
-    (2L, Array(0.0f, 0.0f, 0.0f, 0.0f))
-  ).toDF("vec_id", "embedding")
+    (2L, Array(0.0f, 0.0f, 0.0f, 0.0f)))
+  private val vecs = vecRows.toDF("vec_id", "embedding")
+
+  // A session without GraftExtensions: NativeDotRule cannot rewrite the
+  // HOF reference here, so the bit-identity tests compare the kernel with
+  // the interpreted aggregate/zip_with, not with itself.
+  private lazy val plain = spark.newSession()
 
   it("native fv_dot is bit-identical to the HOF formulation") {
-    val out = vecs.as("a").crossJoin(vecs.as("b")).select(
+    val pv = plain.createDataFrame(vecRows).toDF("vec_id", "embedding")
+    val df = pv.as("a").crossJoin(pv.as("b")).select(
       VectorFunctions.fvDot($"a.embedding", $"b.embedding").as("native"),
-      Similarity.dot($"a.embedding", $"b.embedding").as("hof")).collect()
+      Similarity.dot($"a.embedding", $"b.embedding").as("hof"))
+    df.queryExecution.optimizedPlan.toString should include("zip_with") // not rewritten
+    val out = df.collect()
+    out should have size 9
     out.foreach { r =>
       java.lang.Double.doubleToLongBits(r.getDouble(0)) shouldBe
         java.lang.Double.doubleToLongBits(r.getDouble(1))
@@ -31,7 +40,6 @@ class VectorFunctionsSpec extends SparkSpec {
   }
 
   it("null array yields null; registered SQL function works") {
-    VectorFunctions.register(spark)
     vecs.createOrReplaceTempView("v")
     val r = spark.sql(
       "SELECT fv_dot(embedding, embedding) AS d FROM v WHERE vec_id = 1").collect()(0)
@@ -41,11 +49,11 @@ class VectorFunctionsSpec extends SparkSpec {
   }
 
   it("matches the HOF form on edge cases: unequal lengths and null elements both yield null") {
-    val edgy = Seq(
+    val edgy = plain.createDataFrame(Seq(
       (0L, Array[java.lang.Float](1.0f, 2.0f), Array[java.lang.Float](3.0f, 4.0f)),  // clean
       (1L, Array[java.lang.Float](1.0f, 2.0f), Array[java.lang.Float](3.0f)),        // unequal length
       (2L, Array[java.lang.Float](1.0f, null), Array[java.lang.Float](3.0f, 4.0f))   // null element
-    ).toDF("id", "a", "b")
+    )).toDF("id", "a", "b")
     val out = edgy.select(
       $"id",
       VectorFunctions.fvDot($"a", $"b").as("native"),
@@ -87,7 +95,6 @@ class VectorFunctionsSpec extends SparkSpec {
   }
 
   it("NativeDotRule rewrites the portable HOF dot into the native kernel (Rule[LogicalPlan])") {
-    VectorFunctions.installDotRewrite(spark)
     // parquet-backed: a local relation would be constant-folded away
     // before the plan assertion could see anything
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
@@ -108,7 +115,6 @@ class VectorFunctionsSpec extends SparkSpec {
   }
 
   it("NativeDotRule does NOT match look-alike lambdas (sum of squares, degenerate merge)") {
-    VectorFunctions.installDotRewrite(spark)
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     // (x, y) -> x * x zipped against ANOTHER array is a sum of squares of
     // the left side, not a dot product — must stay un-rewritten
@@ -129,6 +135,26 @@ class VectorFunctionsSpec extends SparkSpec {
         F.lit(0.0), (acc, _) => acc + acc).as("s"))
     degenerate.queryExecution.optimizedPlan.toString should not include "fv_dot"
     degenerate.collect().foreach(_.getDouble(0) shouldBe 0.0) // 0 doubled forever
+  }
+
+  it("a GraftSession session runs UTC with shuffle partitions = cpus, no UI and WindowExec at ERROR") {
+    spark.conf.get("spark.sql.session.timeZone") shouldBe "UTC"
+    spark.conf.get("spark.sql.shuffle.partitions") shouldBe "4"
+    spark.conf.get("spark.sql.objectHashAggregate.sortBased.fallbackThreshold") shouldBe "65536"
+    spark.sparkContext.getConf.get("spark.ui.enabled") shouldBe "false"
+    spark.sparkContext.uiWebUrl shouldBe None
+    org.apache.logging.log4j.LogManager
+      .getLogger("org.apache.spark.sql.execution.window.WindowExec").getLevel shouldBe
+      org.apache.logging.log4j.Level.ERROR
+  }
+
+  it("GraftExtensions.setup is idempotent: one NativeDotRule and one AsOfJoinStrategy after two runs") {
+    import org.apache.spark.sql.graftnative.{AsOfJoinStrategy, GraftExtensions, NativeDotRule}
+    GraftExtensions.setup(spark)
+    GraftExtensions.setup(spark)
+    spark.experimental.extraOptimizations.count(_ == NativeDotRule) shouldBe 1
+    spark.experimental.extraStrategies.count(_ == AsOfJoinStrategy) shouldBe 1
+    spark.sql("SELECT fv_dot(array(1.0f, 2.0f), array(3.0f, 4.0f))").collect()(0).getDouble(0) shouldBe 11.0
   }
 
   it("participates in whole-stage codegen (parquet-backed pipeline)") {
