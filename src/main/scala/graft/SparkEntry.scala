@@ -402,6 +402,19 @@ object SparkEntry {
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     baseQueries ++ sharedSqlQueries
 
+  /** The names a run is restricted to, in order: the comma lists in `args`
+    * if any, else the one in `SPARK_GRAFT_ONLY`; `None` when neither is
+    * given. A name not in `known` throws, naming every such name, rather
+    * than silently running fewer rows than asked. */
+  def onlyNames(known: collection.Set[String], args: Seq[String] = Nil): Option[Seq[String]] =
+    (if (args.nonEmpty) Some(args.mkString(",")) else sys.env.get("SPARK_GRAFT_ONLY")).map { l =>
+      val names = l.split(",").map(_.trim).filter(_.nonEmpty).distinct.toSeq
+      val unknown = names.filterNot(known)
+      if (unknown.nonEmpty)
+        throw new IllegalArgumentException(s"unknown query name(s): ${unknown.mkString(", ")}")
+      names
+    }
+
   private def baseQueries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // --- reference parity: the five store.go query shapes (§2B) ---
     "q_unshipped_cursor" -> ((s, dir) =>

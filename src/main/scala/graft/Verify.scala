@@ -5,6 +5,8 @@ import java.nio.file.{Files, Paths}
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
+    // SPARK_GRAFT_ONLY=q_a,q_b restricts the run (local iteration aid)
+    val only = SparkEntry.onlyNames(SparkEntry.queries.keySet)
     val spark = GraftSession()
     spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
     new java.io.File(outDir).mkdirs()
@@ -14,9 +16,7 @@ object Verify {
     import scala.concurrent.{Await, Future}
     import scala.concurrent.ExecutionContext.Implicits.global
     import scala.concurrent.duration._
-    // SPARK_GRAFT_ONLY=q_a,q_b restricts the run (local iteration aid)
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
-    val selected = only.fold(SparkEntry.queries)(f => SparkEntry.queries.filter(kv => f(kv._1)))
+    val selected = only.fold(SparkEntry.queries)(ns => SparkEntry.queries.filter(kv => ns.contains(kv._1)))
     selected.foreach { case (name, fn) =>
       // job group set inside the Future: it is thread-local to the
       // submitting thread; the timeout path cancels by name cross-thread

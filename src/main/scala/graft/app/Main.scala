@@ -3,6 +3,8 @@ package graft.app
 import java.time.Duration
 import java.util.concurrent.atomic.AtomicBoolean
 
+import org.apache.hadoop.util.ShutdownHookManager
+
 import graft.metrics.{MetricsRegistry, MetricsServer}
 import graft.sources.{AuthenticatedTransport, CfAuditEventFetcher, CfAuthConfig, HttpTransport, JdkHttpTransport, UaaAuthenticator}
 import graft.store.{EventStore, JdbcEventStore, ParquetEventStore}
@@ -77,15 +79,18 @@ object Config {
 
 /** Process wiring (`main.go:24-135`): init store, start the four loops on
   * daemon threads, serve /metrics + /health, shut down gracefully on
-  * SIGTERM (ST7). Collector/informer errors are fatal; shipper errors are
-  * absorbed by its own loop (ST5). The Splunk shipper starts only when
-  * both SPLUNK_* vars are set (ST8, main.go:110-122).
+  * SIGTERM (ST7: the loops drain before Spark stops). Collector/informer
+  * errors are fatal; shipper errors are absorbed by its own loop (ST5).
+  * The Splunk shipper starts only when both SPLUNK_* vars are set (ST8,
+  * main.go:110-122).
   *
   * These thread loops are the daemon's one pipeline shape, as in the
   * reference. Restart needs no offset log: the collector resumes from the
   * store's `max(created_at) − 5 s` (a replayable source feeding an
   * idempotent guid-dedup sink) and the shipper from its cursor table. */
 object Main {
+  private val DrainHookPriority = 50
+
   def main(args: Array[String]): Unit = {
     val cfg = Config.fromEnv()
     val spark = graft.GraftSession(master = sys.env.get("SPARK_MASTER"))
@@ -105,7 +110,6 @@ object Main {
     server.start()
 
     val stop = new AtomicBoolean(false)
-    sys.addShutdownHook { stop.set(true) }
 
     val rawHttp = new JdkHttpTransport(Duration.ofSeconds(30)) // CF timeout (main_config.go:51)
     // UAA OAuth (main.go:45-48): authenticate every CF request when client
@@ -144,9 +148,22 @@ object Main {
     }
     spawn("informer") { informer.run(cfg.informerScheduleMillis, () => stop.get()) }
 
+    // Stop the loops and wait, at most 5 s in all, for each to finish its
+    // in-flight page write or post; then stop serving. Runs once, from
+    // whichever of the main thread and the SIGTERM hook gets here first.
+    lazy val drained: Unit = {
+      stop.set(true)
+      val deadline = System.currentTimeMillis() + 5000L
+      threads.foreach(t => t.join(math.max(1L, deadline - System.currentTimeMillis())))
+      server.stop()
+    }
+    // SIGTERM: drain before Spark's own hook, which sits at priority 40 in
+    // the same Hadoop manager (hooks run one at a time, highest first), so
+    // no tick runs on a stopped SparkContext.
+    ShutdownHookManager.get().addShutdownHook(() => drained, DrainHookPriority)
+
     while (!stop.get()) Thread.sleep(200L)
-    threads.foreach(_.join(5000L))
-    server.stop()
+    drained
     spark.stop()
     fatal.foreach { e => System.err.println(s"fatal: $e"); e.printStackTrace(); sys.exit(1) }
   }

@@ -40,10 +40,10 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession, functions => F}
   *    partitioning keeps appends and streaming replays (overwrite one
   *    partition) independent of every other batch;
   *  - `claims/` — one zero-byte `batch-N.claim` per allocated batch id.
-  *    [[append]] allocates ids by ATOMIC claim (O_EXCL create, the
-  *    [[graft.store.ManifestTable]] slot protocol): two racing appenders
-  *    serialize onto distinct ids instead of both computing the same
-  *    listStatus max+1 and silently overwriting each other's partition.
+  *    [[append]] allocates ids by ATOMIC claim (an O_EXCL create that
+  *    exactly one appender wins per id): two racing appenders serialize
+  *    onto distinct ids instead of both computing the same listStatus
+  *    max+1 and silently overwriting each other's partition.
   *
   * At cluster scale `dir` is any Hadoop-FS path (all I/O goes through the
   * path's FileSystem).
@@ -151,9 +151,9 @@ final class AnnIndexStore(spark: SparkSession, dir: String) {
     }
   }
 
-  /** Allocate the next batch id by ATOMIC claim-file create (O_EXCL — the
-    * [[graft.store.ManifestTable.commit]] slot protocol; on S3-style
-    * stores swap the create for a conditional PUT). A plain listStatus
+  /** Allocate the next batch id by ATOMIC claim-file create (O_EXCL: the
+    * create fails if the file exists, so one appender wins each id; on
+    * S3-style stores swap the create for a conditional PUT). A plain listStatus
     * max+1 lets two racing appenders claim the same id and the second
     * overwrite silently replace the first's codes. */
   private def claimBatchId(): Long = {

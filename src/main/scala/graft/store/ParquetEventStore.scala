@@ -5,6 +5,7 @@ import java.time.LocalDate
 import scala.jdk.CollectionConverters._
 import scala.util.Try
 
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession, functions => F}
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.graftnative.BloomFunctions
@@ -59,7 +60,7 @@ final class ParquetEventStore(spark: SparkSession, warehouseDir: String) extends
   private def fs = org.apache.hadoop.fs.FileSystem.get(
     spark.sparkContext.hadoopConfiguration)
 
-  private def exists(p: String): Boolean = fs.exists(new org.apache.hadoop.fs.Path(p))
+  private def exists(p: String): Boolean = fs.exists(new Path(p))
 
   private def emptyEvents: DataFrame =
     spark.createDataFrame(spark.sparkContext.emptyRDD[Row], Schemas.cfAuditEvents)
@@ -80,8 +81,7 @@ final class ParquetEventStore(spark: SparkSession, warehouseDir: String) extends
     // A crash inside updateShipperCursor's swap can leave the live cursor
     // table renamed aside, complete: bring it back rather than start empty.
     if (!exists(cursorsPath) && exists(cursorsPath + "_old"))
-      renameOrAbort(new org.apache.hadoop.fs.Path(cursorsPath + "_old"),
-        new org.apache.hadoop.fs.Path(cursorsPath))
+      renameOrAbort(new Path(cursorsPath + "_old"), new Path(cursorsPath))
     if (!exists(cursorsPath))
       emptyCursors.write.parquet(cursorsPath)
   }
@@ -241,13 +241,13 @@ final class ParquetEventStore(spark: SparkSession, warehouseDir: String) extends
   private val bloomBits = 1L << 23
 
   private def bloomPath(date: String) =
-    new org.apache.hadoop.fs.Path(s"$warehouseDir/_bloom_guid/$date")
+    new Path(s"$warehouseDir/_bloom_guid/$date")
 
-  private def readBytes(p: org.apache.hadoop.fs.Path): Option[Array[Byte]] =
+  private def readBytes(p: Path): Option[Array[Byte]] =
     if (!fs.exists(p)) None
     else { val in = fs.open(p); try Some(in.readAllBytes()) finally in.close() }
 
-  private def writeBytes(p: org.apache.hadoop.fs.Path, b: Array[Byte]): Unit = {
+  private def writeBytes(p: Path, b: Array[Byte]): Unit = {
     val out = fs.create(p, true)
     try out.write(b) finally out.close()
   }
@@ -272,12 +272,23 @@ final class ParquetEventStore(spark: SparkSession, warehouseDir: String) extends
       case None => batchBloom
     }
 
+  /** The `event_date=` partition directories. */
+  private def partitionDirs: Seq[FileStatus] =
+    fs.listStatus(new Path(eventsPath))
+      .filter(d => d.isDirectory && d.getPath.getName.startsWith("event_date="))
+      .toSeq
+
   /** Date values of the `event_date=` partition directories. */
   private def partitionDates: Seq[String] =
-    fs.listStatus(new org.apache.hadoop.fs.Path(eventsPath))
-      .filter(d => d.isDirectory && d.getPath.getName.startsWith("event_date="))
-      .map(_.getPath.getName.stripPrefix("event_date="))
-      .toSeq
+    partitionDirs.map(_.getPath.getName.stripPrefix("event_date="))
+
+  /** Parquet files anywhere under the events table. */
+  private def countFiles(): Long = {
+    val it = fs.listFiles(new Path(eventsPath), true)
+    var n = 0L
+    while (it.hasNext) { if (it.next().getPath.getName.endsWith(".parquet")) n += 1 }
+    n
+  }
 
   /** Partitions a guid POINT LOOKUP must scan: every partition whose guid
     * bloom sidecar matches (or that has no sidecar — unprunable). A
@@ -330,10 +341,10 @@ final class ParquetEventStore(spark: SparkSession, warehouseDir: String) extends
   override def getCFEventCount(): Long =
     readStatsCount().getOrElse(AuditQueries.eventCount(events))
 
-  private def statsPath = new org.apache.hadoop.fs.Path(s"$warehouseDir/_stats_count")
-  private def maxIdPath = new org.apache.hadoop.fs.Path(s"$warehouseDir/_stats_maxid")
+  private def statsPath = new Path(s"$warehouseDir/_stats_count")
+  private def maxIdPath = new Path(s"$warehouseDir/_stats_maxid")
 
-  private def readSidecar(p: org.apache.hadoop.fs.Path): Option[Long] =
+  private def readSidecar(p: Path): Option[Long] =
     if (!fs.exists(p)) None
     else {
       val in = fs.open(p)
@@ -342,7 +353,7 @@ final class ParquetEventStore(spark: SparkSession, warehouseDir: String) extends
       finally in.close()
     }
 
-  private def writeSidecar(p: org.apache.hadoop.fs.Path, v: Long): Unit = {
+  private def writeSidecar(p: Path, v: Long): Unit = {
     val out = fs.create(p, true)
     try out.write(v.toString.getBytes("UTF-8")) finally out.close()
   }
@@ -364,24 +375,23 @@ final class ParquetEventStore(spark: SparkSession, warehouseDir: String) extends
     AuditQueries.unshipped(pruned, cursors, shipperName)
   }
 
-  private def renameOrAbort(from: org.apache.hadoop.fs.Path,
-                            to: org.apache.hadoop.fs.Path): Unit =
+  private def renameOrAbort(from: Path, to: Path): Unit =
     StoreIO.renameOrAbort(fs, from, to, "event-store swap")
 
-  /** Rename-aside swap of a whole table tree: the live tree is moved
-    * aside (not deleted) before the new tree's rename, so a crash at any
-    * point leaves the data recoverable — either the live tree is still in
-    * place, or it sits complete in the `_old` sibling. Delete runs only
-    * after the new tree is live, and only if both renames succeeded. */
-  private def swapTree(tmp: String, live: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(live)
-    val t = new org.apache.hadoop.fs.Path(tmp)
-    val aside = new org.apache.hadoop.fs.Path(live + "_old")
+  /** Rename-aside swap of a whole tree: the live tree is moved aside (not
+    * deleted) before the new tree's rename, so a crash at any point leaves
+    * the data recoverable — either the live tree is still in place, or it
+    * sits complete in the `aside` sibling (`_old` by default). Delete runs
+    * only after the new tree is live, and only if both renames succeeded. */
+  private def swapTree(tmp: Path, live: Path, aside: Path): Unit = {
     if (fs.exists(aside)) fs.delete(aside, true)
-    renameOrAbort(p, aside)
-    renameOrAbort(t, p)
+    renameOrAbort(live, aside)
+    renameOrAbort(tmp, live)
     fs.delete(aside, true)
   }
+
+  private def swapTree(tmp: String, live: String): Unit =
+    swapTree(new Path(tmp), new Path(live), new Path(live + "_old"))
 
   /** Compact the events table: micro-batch ingest writes one file per page
     * per partition, and at 100 TB the small-files problem kills scan
@@ -390,12 +400,6 @@ final class ParquetEventStore(spark: SparkSession, warehouseDir: String) extends
     * op (single-writer store; run between collector ticks, or per-partition
     * for live tables). Returns (files before, files after). */
   def compact(maxRecordsPerFile: Long = 1000000L): (Long, Long) = {
-    def countFiles(): Long = {
-      val it = fs.listFiles(new org.apache.hadoop.fs.Path(eventsPath), true)
-      var n = 0L
-      while (it.hasNext) { if (it.next().getPath.getName.endsWith(".parquet")) n += 1 }
-      n
-    }
     val before = countFiles()
     val tmp = eventsPath + "_compact"
     eventsWithDate
@@ -414,37 +418,27 @@ final class ParquetEventStore(spark: SparkSession, warehouseDir: String) extends
     * most one partition's rewrite (the original stays until its rename).
     * Returns (partitions rewritten, files before, files after). */
   def compactPartial(maxFiles: Int = 8, maxRecordsPerFile: Long = 1000000L): (Long, Long, Long) = {
-    val parts = fs.listStatus(new org.apache.hadoop.fs.Path(eventsPath))
-      .filter(d => d.isDirectory && d.getPath.getName.startsWith("event_date="))
-    def filesIn(p: org.apache.hadoop.fs.Path): Long =
+    def filesIn(p: Path): Long =
       fs.listStatus(p).count(_.getPath.getName.endsWith(".parquet")).toLong
+    val parts = partitionDirs
     val before = parts.map(d => filesIn(d.getPath)).sum
     var rewritten = 0L
     parts.foreach { d =>
       if (filesIn(d.getPath) > maxFiles) {
         // Dot-prefixed siblings so partition discovery never sees them.
         val parent = d.getPath.getParent
-        val tmp = new org.apache.hadoop.fs.Path(parent, "." + d.getPath.getName + ".compact")
-        val aside = new org.apache.hadoop.fs.Path(parent, "." + d.getPath.getName + ".old")
+        val tmp = new Path(parent, "." + d.getPath.getName + ".compact")
+        val aside = new Path(parent, "." + d.getPath.getName + ".old")
         spark.read.schema(Schemas.cfAuditEvents).parquet(d.getPath.toString)
           .coalesce(1)
           .write.mode(SaveMode.Overwrite)
           .option("maxRecordsPerFile", maxRecordsPerFile)
           .parquet(tmp.toString)
-        // Swap via rename-aside, not delete-then-rename: a crash between
-        // the two renames leaves the data intact in the `.old` sibling
-        // (recoverable by hand), instead of a window where the partition
-        // is simply gone. Delete happens only after the new data is live.
-        if (fs.exists(aside)) fs.delete(aside, true)
-        renameOrAbort(d.getPath, aside)
-        renameOrAbort(tmp, d.getPath)
-        fs.delete(aside, true)
+        swapTree(tmp, d.getPath, aside)
         rewritten += 1
       }
     }
-    val after = fs.listStatus(new org.apache.hadoop.fs.Path(eventsPath))
-      .filter(d => d.isDirectory && d.getPath.getName.startsWith("event_date="))
-      .map(d => filesIn(d.getPath)).sum
+    val after = partitionDirs.map(d => filesIn(d.getPath)).sum
     (rewritten, before, after)
   }
 
@@ -481,16 +475,8 @@ final class ParquetEventStore(spark: SparkSession, warehouseDir: String) extends
   def compactZOrder(dims: Seq[org.apache.spark.sql.Column], filesPerDay: Int,
                     maxRecordsPerFile: Long): (Long, Long) = {
     import graft.operators.Layout
-    def countFiles(): Long = {
-      val it = fs.listFiles(new org.apache.hadoop.fs.Path(eventsPath), true)
-      var n = 0L
-      while (it.hasNext) { if (it.next().getPath.getName.endsWith(".parquet")) n += 1 }
-      n
-    }
     val before = countFiles()
-    val days = fs.listStatus(new org.apache.hadoop.fs.Path(eventsPath))
-      .count(d => d.isDirectory && d.getPath.getName.startsWith("event_date="))
-      .max(1)
+    val days = partitionDirs.size.max(1)
     val tmp = eventsPath + "_compact"
     Layout.zValueN(eventsWithDate, dims, "__z")
       .repartitionByRange(days * filesPerDay, F.col("event_date"), F.col("__z"))
@@ -507,10 +493,7 @@ final class ParquetEventStore(spark: SparkSession, warehouseDir: String) extends
     * partitions) metadata operation, the point of date-partitioned layout
     * (no rewrite, no row-level delete). Returns dropped partition count. */
   def expireBefore(cutoff: java.sql.Date): Long = {
-    val dirs = fs.listStatus(new org.apache.hadoop.fs.Path(eventsPath))
-      .filter(_.isDirectory)
-      .filter(_.getPath.getName.startsWith("event_date="))
-    val dropped = dirs.filter { d =>
+    val dropped = partitionDirs.filter { d =>
       val v = d.getPath.getName.stripPrefix("event_date=")
       java.sql.Date.valueOf(v).before(cutoff)
     }

@@ -60,14 +60,17 @@ final class Collector(
     * Returns Right(collected count) or Left(first error) — fail-fast. A
     * store error (resume-point read or page write) is returned as `Left`
     * too, so the daemon exits instead of losing its collector thread
-    * (main.go:94-97). */
-  def collectOnce(): Either[Throwable, Long] = {
+    * (main.go:94-97). `stop` is checked between pages: once it flips, the
+    * tick ends as `Right` after the page in hand, and the next run
+    * re-fetches the rest from the resume point. */
+  def collectOnce(stop: () => Boolean = () => false): Either[Throwable, Long] = {
     val t0 = System.nanoTime()
     var collected = 0L
     var error: Option[Throwable] = None
+    var stopped = false
     try {
       val it = fetcher.fetchPagesAsync(pullEventsSince()) // fetch overlaps store (ST3)
-      while (error.isEmpty && it.hasNext) {
+      while (error.isEmpty && !stopped && it.hasNext) {
         val page = it.next()
         page.error match {
           case Some(e) =>
@@ -84,6 +87,7 @@ final class Collector(
               "events-collected" -> eventsCollectedLifetime)
           case None => ()
         }
+        stopped = stop()
       }
     } catch {
       case e: Exception =>
@@ -103,7 +107,7 @@ final class Collector(
     lsession.info("start") // collector.go:32-33
     try {
       while (!stop()) {
-        collectOnce() match {
+        collectOnce(stop) match {
           case Left(e) => return Left(e) // fail-fast, main exits (main.go:94-97)
           case Right(_) => ()
         }

@@ -7,17 +7,12 @@ package graft.tools
 object Explain {
   def main(args: Array[String]): Unit = {
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
-    val names: Seq[String] =
-      if (args.nonEmpty) args.toSeq.flatMap(_.split(","))
-      else sys.env.get("SPARK_GRAFT_ONLY").toSeq.flatMap(_.split(","))
+    val queries = graft.SparkEntry.queries
+    val names = graft.SparkEntry.onlyNames(queries.keySet, args.toSeq).getOrElse(Nil)
     val spark = graft.GraftSession()
     names.foreach { n =>
-      graft.SparkEntry.queries.get(n) match {
-        case Some(fn) =>
-          println(s"\n===== $n =====")
-          fn(spark, dir).explain("formatted")
-        case None => System.err.println(s"unknown query: $n")
-      }
+      println(s"\n===== $n =====")
+      queries(n)(spark, dir).explain("formatted")
     }
     spark.stop()
   }

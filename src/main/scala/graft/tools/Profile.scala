@@ -1,7 +1,7 @@
 package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Dev tool (guide §1): attribute a query's WALL time between cluster
   * work and driver/scheduling overhead. Runs each named SparkEntry query
@@ -15,9 +15,12 @@ object Profile {
   def main(args: Array[String]): Unit = {
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val passes = sys.env.getOrElse("SPARK_GRAFT_PASSES", "3").toInt
-    val names: Seq[String] =
-      if (args.nonEmpty) args.toSeq.flatMap(_.split(","))
-      else sys.env.get("SPARK_GRAFT_ONLY").toSeq.flatMap(_.split(","))
+    // the queries, and the bench-only ops as a one-row frame after they run
+    val runnable: Map[String, (SparkSession, String) => DataFrame] =
+      graft.SparkEntry.queries ++ graft.SparkEntry.benchOps.map { case (n, op) =>
+        n -> ((s: SparkSession, d: String) => { op(s, d); s.range(1).toDF() })
+      }
+    val names = graft.SparkEntry.onlyNames(runnable.keySet, args.toSeq).getOrElse(Nil)
     val spark = graft.GraftSession()
     try spark.read.parquet(s"$dir/lineitem.parquet").count()
     catch { case _: Throwable => () }
@@ -56,30 +59,25 @@ object Profile {
     }
     spark.sparkContext.addSparkListener(listener)
     names.foreach { n =>
-      graft.SparkEntry.queries.get(n).orElse(
-        graft.SparkEntry.benchOps.get(n).map(op =>
-          (s: SparkSession, d: String) => { op(s, d); s.range(1).toDF() })) match {
-        case Some(fn) =>
-          (1 to passes).foreach { p =>
-            jobs = 0; stages = 0; tasks = 0; taskTimeMs = 0
-            shufReadB = 0; shufWriteB = 0; inputB = 0
-            jobSites.clear()
-            spark.sparkContext.setJobDescription(s"$n#$p")
-            val t0 = System.nanoTime()
-            fn(spark, dir).count()
-            val wall = (System.nanoTime() - t0) / 1e9
-            // listener events are async; let the bus drain before reading
-            Thread.sleep(300)
-            val core = taskTimeMs / 1e3 / spark.sparkContext.defaultParallelism
-            println(f"""{"q":"$n","pass":$p,"wall_sec":$wall%.3f,"jobs":$jobs,"stages":$stages,"tasks":$tasks,"task_time_sec":${taskTimeMs / 1e3}%.2f,"task_over_cores_sec":$core%.3f,"driver_residue_sec":${wall - core}%.3f,"shuffle_read_mb":${shufReadB / 1e6}%.1f,"shuffle_write_mb":${shufWriteB / 1e6}%.1f,"input_mb":${inputB / 1e6}%.1f}""")
-            if (traceJobs) {
-              import scala.jdk.CollectionConverters._
-              jobSites.asScala.toSeq.sortBy(-_._2).foreach { case (site, c) =>
-                println(s"""  jobsite $c x $site""")
-              }
-            }
+      val fn = runnable(n)
+      (1 to passes).foreach { p =>
+        jobs = 0; stages = 0; tasks = 0; taskTimeMs = 0
+        shufReadB = 0; shufWriteB = 0; inputB = 0
+        jobSites.clear()
+        spark.sparkContext.setJobDescription(s"$n#$p")
+        val t0 = System.nanoTime()
+        fn(spark, dir).count()
+        val wall = (System.nanoTime() - t0) / 1e9
+        // listener events are async; let the bus drain before reading
+        Thread.sleep(300)
+        val core = taskTimeMs / 1e3 / spark.sparkContext.defaultParallelism
+        println(f"""{"q":"$n","pass":$p,"wall_sec":$wall%.3f,"jobs":$jobs,"stages":$stages,"tasks":$tasks,"task_time_sec":${taskTimeMs / 1e3}%.2f,"task_over_cores_sec":$core%.3f,"driver_residue_sec":${wall - core}%.3f,"shuffle_read_mb":${shufReadB / 1e6}%.1f,"shuffle_write_mb":${shufWriteB / 1e6}%.1f,"input_mb":${inputB / 1e6}%.1f}""")
+        if (traceJobs) {
+          import scala.jdk.CollectionConverters._
+          jobSites.asScala.toSeq.sortBy(-_._2).foreach { case (site, c) =>
+            println(s"""  jobsite $c x $site""")
           }
-        case None => System.err.println(s"unknown query: $n")
+        }
       }
     }
     spark.stop()

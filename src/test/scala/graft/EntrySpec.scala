@@ -15,4 +15,27 @@ class EntrySpec extends SparkSpec {
     (o -- q) shouldBe empty
     (q -- o) shouldBe empty
   }
+
+  it("a restricted run rejects unknown names, naming each one") {
+    val e = intercept[IllegalArgumentException](
+      SparkEntry.onlyNames(SparkEntry.queries.keySet, Seq("q1,q_unshipped_cursor", "q_nope")))
+    e.getMessage should include ("q1")
+    e.getMessage should include ("q_nope")
+    e.getMessage should not include ("q_unshipped_cursor")
+    SparkEntry.onlyNames(SparkEntry.queries.keySet, Seq("q_unshipped_cursor")) shouldBe
+      Some(Seq("q_unshipped_cursor"))
+  }
+
+  it("a restricted run's list is trimmed, skips empty items and repeats, and keeps its order") {
+    SparkEntry.onlyNames(SparkEntry.queries.keySet,
+      Seq(" q_unshipped_cursor , ,q_latest_event_time", "q_unshipped_cursor,")) shouldBe
+      Some(Seq("q_unshipped_cursor", "q_latest_event_time"))
+  }
+
+  it("bench-op names restrict Bench, which runs them, but not Verify") {
+    val bench = SparkEntry.queries.keySet ++ SparkEntry.benchOps.keySet
+    SparkEntry.onlyNames(bench, Seq("ivf_pq_serve")) shouldBe Some(Seq("ivf_pq_serve"))
+    an[IllegalArgumentException] should be thrownBy
+      SparkEntry.onlyNames(SparkEntry.queries.keySet, Seq("ivf_pq_serve"))
+  }
 }

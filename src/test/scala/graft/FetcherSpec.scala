@@ -224,5 +224,82 @@ class FetcherSpec extends SparkSpec {
       auth.bearerToken()
       stub.tokenPosts.size shouldBe 2 // re-fetched
     }
+
+    /** CF+UAA stub with fixed /v2/info and /oauth/token replies; page GETs
+      * always succeed. */
+    class ScriptedUaa(info: HttpReply, token: HttpReply) extends HttpTransport {
+      var infoGets = 0
+      var tokenPosts = 0
+      val pageGets: mutable.ArrayBuffer[String] = mutable.ArrayBuffer.empty
+      def get(url: String, headers: Map[String, String]): HttpReply =
+        if (url == api + "/v2/info") { infoGets += 1; info }
+        else { pageGets += url; HttpReply(200, pageBody(Seq("g1"), "")) }
+      def post(url: String, body: String, headers: Map[String, String]): HttpReply = {
+        tokenPosts += 1
+        token
+      }
+    }
+    val okInfo = HttpReply(200, s"""{"token_endpoint":"$uaa"}""")
+    val okToken = HttpReply(200, """{"access_token":"tok-1","token_type":"bearer","expires_in":43199}""")
+
+    it("a failed token-endpoint discovery ends the fetch with an error page and sends no page GET") {
+      val stub = new ScriptedUaa(HttpReply(503, "unavailable"), okToken)
+      val auth = new UaaAuthenticator(stub, CfAuthConfig(api, clientId = "c", clientSecret = "s"))
+      val pages = new CfAuditEventFetcher(new AuthenticatedTransport(stub, auth), api, paginationWaitMillis = 0)
+        .fetchPages(since).toSeq
+      pages.size shouldBe 1
+      pages.head.error.get.getMessage should include("token endpoint discovery failed with status code 503")
+      stub.tokenPosts shouldBe 0
+      stub.pageGets shouldBe empty
+    }
+
+    it("a /v2/info reply without token_endpoint is an error naming the missing field") {
+      val stub = new ScriptedUaa(HttpReply(200, """{"api_version":"2.0"}"""), okToken)
+      val auth = new UaaAuthenticator(stub, CfAuthConfig(api, clientId = "c", clientSecret = "s"))
+      intercept[RuntimeException](auth.bearerToken()).getMessage should include("no token_endpoint")
+      stub.tokenPosts shouldBe 0
+    }
+
+    it("a non-200 token exchange is an error carrying its status") {
+      val stub = new ScriptedUaa(okInfo, HttpReply(401, """{"error":"unauthorized"}"""))
+      val auth = new UaaAuthenticator(stub, CfAuthConfig(api, username = "admin", password = "bad"))
+      intercept[RuntimeException](auth.bearerToken()).getMessage shouldBe
+        "token exchange failed with status code 401"
+    }
+
+    it("a token reply without access_token is an error, not an empty Bearer") {
+      val stub = new ScriptedUaa(okInfo, HttpReply(200, """{"token_type":"bearer","expires_in":600}"""))
+      val auth = new UaaAuthenticator(stub, CfAuthConfig(api, clientId = "c", clientSecret = "s"))
+      intercept[RuntimeException](auth.bearerToken()).getMessage should include("no access_token")
+    }
+
+    it("a token reply without expires_in stays cached for 300 s minus the 60 s skew") {
+      var now = 0L
+      val stub = new ScriptedUaa(okInfo, HttpReply(200, """{"access_token":"tok-1","token_type":"bearer"}"""))
+      val auth = new UaaAuthenticator(stub, CfAuthConfig(api, clientId = "c", clientSecret = "s"),
+        nowMillis = () => now)
+      auth.bearerToken() shouldBe "tok-1"
+      now = 240000L - 1L
+      auth.bearerToken()
+      stub.tokenPosts shouldBe 1 // still cached
+      now = 240000L
+      auth.bearerToken()
+      stub.tokenPosts shouldBe 2 // expired at exactly 240 s
+    }
+
+    it("discovers the token endpoint once and reuses it for every later grant") {
+      val stub = new ScriptedUaa(okInfo, okToken)
+      val auth = new UaaAuthenticator(stub, CfAuthConfig(api, clientId = "c", clientSecret = "s"))
+      (1 to 3).foreach { _ => auth.invalidate(); auth.bearerToken() shouldBe "tok-1" }
+      stub.tokenPosts shouldBe 3
+      stub.infoGets shouldBe 1
+    }
+
+    it("auth is on with a client pair or a username, and off for a bare API address") {
+      CfAuthConfig(api).enabled shouldBe false
+      CfAuthConfig(api, password = "pw", clientSecret = "s").enabled shouldBe false
+      CfAuthConfig(api, clientId = "c", clientSecret = "s").enabled shouldBe true
+      CfAuthConfig(api, username = "admin", password = "pw").enabled shouldBe true
+    }
   }
 }

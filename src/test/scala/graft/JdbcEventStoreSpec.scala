@@ -130,6 +130,20 @@ class JdbcEventStoreSpec extends SparkSpec {
       cur(1).getTimestamp(1).toInstant.toString shouldBe "2024-01-02T10:00:00Z"
     }
 
+    it("cursor upsert reads a raw timestamp's UTC offset, storing the instant it names") {
+      val st = newJdbcStore()
+      st.updateShipperCursor("splunk", "2024-01-02T12:00:00+02:00", "g1")
+      st.cursors.collect().map(_.getTimestamp(1).toInstant.toString).toSeq shouldBe
+        Seq("2024-01-02T10:00:00Z")
+    }
+
+    it("cursor upsert keeps a raw timestamp's fractional seconds to the microsecond") {
+      val st = newJdbcStore()
+      st.updateShipperCursor("splunk", "2024-01-02T10:00:00.123456Z", "g1")
+      st.cursors.collect().map(_.getTimestamp(1).toInstant.toString).toSeq shouldBe
+        Seq("2024-01-02T10:00:00.123456Z")
+    }
+
     it("latest event time: epoch sentinel when empty, max created_at when populated (R14)") {
       val st = newJdbcStore()
       st.getLatestCFEventTime() shouldBe Schemas.epoch

@@ -78,4 +78,53 @@ class LoggingAndMetricsSpec extends SparkSpec {
       text should include("process_uptime_seconds")
     } finally server.stop()
   }
+
+  it("/health answers OK, and stop() frees the port for the next start") {
+    val port = { val s = new java.net.ServerSocket(0); val p = s.getLocalPort; s.close(); p }
+    val server = new MetricsServer(new MetricsRegistry, port)
+    server.start() shouldBe port
+    try {
+      val conn = new java.net.URI(s"http://127.0.0.1:$port/health").toURL.openConnection()
+        .asInstanceOf[java.net.HttpURLConnection]
+      conn.getResponseCode shouldBe 200
+      new String(conn.getInputStream.readAllBytes(), "UTF-8") shouldBe "OK"
+    } finally server.stop()
+    val again = new MetricsServer(new MetricsRegistry, port)
+    again.start() shouldBe port // bind succeeds: the first server let go of it
+    again.stop()
+  }
+
+  it("lager sessions nest into the message; data holds the context, then the call's fields") {
+    val lines = mutable.ArrayBuffer.empty[String]
+    val root = Lager.to("src", l => { lines += l; () })
+    val l = root.session("a").withData("k" -> 1).session("b")
+    l.info("act", "n" -> 2L, "s" -> Seq(1))
+    l.error("bad", new RuntimeException("boom"), "flag" -> true)
+    root.info("top")
+    val Seq(info, err, top) = lines.toSeq.map(mapper.readTree)
+    info.get("source").asText() shouldBe "src"
+    info.get("message").asText() shouldBe "src.a.b.act"
+    info.get("log_level").asInt() shouldBe 1
+    info.get("data").toString shouldBe """{"k":1,"n":2,"s":"List(1)"}"""
+    err.get("message").asText() shouldBe "src.a.b.bad"
+    err.get("log_level").asInt() shouldBe 2
+    err.get("data").toString shouldBe
+      """{"k":1,"flag":true,"error":"java.lang.RuntimeException: boom"}"""
+    top.get("message").asText() shouldBe "src.top"
+    top.get("data").size() shouldBe 0
+  }
+
+  it("counters accumulate, gauges keep the last value, and the exposition lists both sorted") {
+    val r = new MetricsRegistry
+    r.inc("b_total"); r.inc("b_total", 2.5); r.inc("a_total")
+    r.setGauge("z_gauge", 3.0); r.setGauge("z_gauge", 1.0)
+    r.counterValue("b_total") shouldBe 3.5
+    r.gaugeValue("z_gauge") shouldBe 1.0
+    r.counterValue("missing") shouldBe 0.0
+    r.gaugeValue("missing") shouldBe 0.0
+    r.exposition shouldBe
+      "# TYPE a_total counter\na_total 1.0\n" +
+      "# TYPE b_total counter\nb_total 3.5\n" +
+      "# TYPE z_gauge gauge\nz_gauge 1.0\n"
+  }
 }

@@ -276,6 +276,59 @@ class StoreAndPipelineSpec extends SparkSpec {
       st.events.collect().map(_.getAs[String]("guid")) shouldBe Array("new1")
     }
 
+    it("expireBefore drops only event_date= directories, leaving the table's other entries alone") {
+      val (st, dir) = newStoreAt()
+      st.storeCFAuditEvents(onDriver(Seq(
+        ev("old1", "2024-01-01T10:00:00Z"), ev("new1", "2024-02-01T10:00:00Z"))))
+      val table = dir.resolve("cf_audit_events")
+      val hidden = Files.createDirectory(table.resolve(".event_date=2023-01-01.old"))
+      val marker = Files.createFile(table.resolve("_marker"))
+      st.expireBefore(java.sql.Date.valueOf("2024-02-01")) shouldBe 1L
+      Files.exists(hidden) shouldBe true
+      Files.exists(marker) shouldBe true
+      st.events.select("guid").collect().map(_.getString(0)).toSeq shouldBe Seq("new1")
+    }
+
+    it("compact reports the events table's on-disk parquet file counts before and after") {
+      val (st, dir) = newStoreAt()
+      def parquetFiles(): Long = {
+        val s = Files.walk(dir.resolve("cf_audit_events"))
+        try s.iterator().asScala.count(_.getFileName.toString.endsWith(".parquet")).toLong
+        finally s.close()
+      }
+      (1 to 3).foreach { b =>
+        st.storeCFAuditEvents(onDriver(Seq(
+          ev(s"g$b", s"2024-01-0${b}T10:00:00Z"), ev(s"h$b", s"2024-01-01T1$b:00:00Z"))))
+      }
+      val onDisk = parquetFiles()
+      val (before, after) = st.compact()
+      before shouldBe onDisk
+      after shouldBe parquetFiles()
+      after shouldBe 3L // one file per event_date
+      st.events.count() shouldBe 6L
+    }
+
+    it("compactPartial replaces an aside left by an interrupted swap and leaves no hidden sibling") {
+      val (st, dir) = newStoreAt()
+      (1 to 3).foreach { b =>
+        st.storeCFAuditEvents(onDriver(Seq(ev(s"g$b", s"2024-02-01T0$b:00:00Z"))))
+      }
+      val table = dir.resolve("cf_audit_events")
+      val stale = Files.createDirectory(table.resolve(".event_date=2024-02-01.old"))
+      Files.write(stale.resolve("part-stale.parquet"), Array[Byte](1, 2, 3))
+      val (rewritten, before, after) = st.compactPartial(maxFiles = 2)
+      rewritten shouldBe 1L
+      after shouldBe 1L
+      after should be < before
+      val siblings = {
+        val s = Files.list(table)
+        try s.iterator().asScala.map(_.getFileName.toString).filter(_.startsWith(".event_date=")).toSeq
+        finally s.close()
+      }
+      siblings shouldBe empty
+      st.events.select("guid").collect().map(_.getString(0)).sorted.toSeq shouldBe Seq("g1", "g2", "g3")
+    }
+
     it("unshipped scan prunes partitions from the cursor date") {
       val st = newStore()
       val f = new CfAuditEventFetcher(new FakeTransport(Map.empty), "")
@@ -332,6 +385,31 @@ class StoreAndPipelineSpec extends SparkSpec {
       restarted.cursors.orderBy("name").collect().map(r => (r.getString(0), r.getString(2))) shouldBe
         Array(("s1", "g1"), ("s2", "g2"))
       new java.io.File(s"$dir/shipper_cursors_old").exists() shouldBe false
+    }
+  }
+
+  describe("StoreIO") {
+    import org.apache.hadoop.fs.{FileSystem, FilterFileSystem, Path => HPath}
+    import graft.store.StoreIO
+
+    it("renameOrAbort turns a rename that returns false into an error naming the step and paths") {
+      val local = FileSystem.getLocal(new org.apache.hadoop.conf.Configuration())
+      val dir = Files.createTempDirectory("graft-rename")
+      val live = Files.createDirectory(dir.resolve("live"))
+      Files.write(live.resolve("data"), "kept".getBytes("UTF-8"))
+      val from = new HPath(live.toUri)
+      val to = new HPath(dir.resolve("moved").toUri)
+      val refusing = new FilterFileSystem(local) {
+        override def rename(src: HPath, dst: HPath): Boolean = false
+      }
+      val e = intercept[java.io.IOException](StoreIO.renameOrAbort(refusing, from, to, "test swap"))
+      e.getMessage should include("test swap rename")
+      e.getMessage should include("returned false")
+      e.getMessage should include(live.toString)
+      // a rename that succeeds moves the tree and returns quietly
+      StoreIO.renameOrAbort(local, from, to, "test swap")
+      Files.exists(live) shouldBe false
+      new String(Files.readAllBytes(dir.resolve("moved/data")), "UTF-8") shouldBe "kept"
     }
   }
 
@@ -546,6 +624,54 @@ class StoreAndPipelineSpec extends SparkSpec {
       st.events.count() shouldBe 1L
       reg.counterValue(Metrics.CollectorEventsCollected) shouldBe 2.0 // fetched, as collector.go counts
     }
+
+    it("stops between pages once the stop flag flips, keeping the pages already stored") {
+      val p1 = "/v2/events?q=timestamp%3E1970-01-01T00%3A00%3A00Z&results-per-page=100"
+      val p2 = "/v2/events?page=2"
+      val p3 = "/v2/events?page=3"
+      val transport = new FakeTransport(Map(
+        p1 -> HttpReply(200, pageJson(Seq("g1", "g2"), Seq("2024-01-01T10:00:00Z", "2024-01-01T11:00:00Z"), p2)),
+        p2 -> HttpReply(200, pageJson(Seq("g3"), Seq("2024-01-01T12:00:00Z"), p3)),
+        p3 -> HttpReply(200, pageJson(Seq("g4"), Seq("2024-01-01T13:00:00Z"), ""))))
+      val st = newStore()
+      val writes = new AtomicInteger(0)
+      val counting = new DelegatingStore(st) {
+        override def storeCFAuditEvents(batch: DataFrame): Long = {
+          writes.incrementAndGet()
+          super.storeCFAuditEvents(batch)
+        }
+      }
+      val collector = new Collector(spark, counting,
+        new CfAuditEventFetcher(transport, "", paginationWaitMillis = 0), new MetricsRegistry)
+      collector.collectOnce(() => writes.get() >= 1) shouldBe Right(2L)
+      writes.get() shouldBe 1
+      st.events.select("guid").collect().map(_.getString(0)).sorted.toSeq shouldBe Seq("g1", "g2")
+    }
+
+    it("run hands its stop flag to the tick: a flip mid-feed ends the loop after the page in hand") {
+      val p1 = "/v2/events?q=timestamp%3E1970-01-01T00%3A00%3A00Z&results-per-page=100"
+      val p2 = "/v2/events?page=2"
+      val p3 = "/v2/events?page=3"
+      val transport = new FakeTransport(Map(
+        p1 -> HttpReply(200, pageJson(Seq("g1"), Seq("2024-01-01T10:00:00Z"), p2)),
+        p2 -> HttpReply(200, pageJson(Seq("g2"), Seq("2024-01-01T11:00:00Z"), p3)),
+        p3 -> HttpReply(200, pageJson(Seq("g3"), Seq("2024-01-01T12:00:00Z"), ""))))
+      val st = newStore()
+      val writes = new AtomicInteger(0)
+      val counting = new DelegatingStore(st) {
+        override def storeCFAuditEvents(batch: DataFrame): Long = {
+          writes.incrementAndGet()
+          super.storeCFAuditEvents(batch)
+        }
+      }
+      val collector = new Collector(spark, counting,
+        new CfAuditEventFetcher(transport, "", paginationWaitMillis = 0), new MetricsRegistry)
+      val t0 = System.nanoTime()
+      collector.run(3600000L, () => writes.get() >= 1) shouldBe Right(())
+      (System.nanoTime() - t0) should be < 60L * 1000000000L // not the 1 h schedule
+      writes.get() shouldBe 1
+      st.events.select("guid").collect().map(_.getString(0)).toSeq shouldBe Seq("g1")
+    }
   }
 
   describe("collector and shipper ticks (the daemon's thread loops)") {
@@ -587,6 +713,76 @@ class StoreAndPipelineSpec extends SparkSpec {
       val cursor = st.cursors.collect().head
       cursor.getAs[String]("shipped_id") shouldBe "g6"
       cursor.getAs[Timestamp]("updated_at").toInstant shouldBe Instant.parse("2024-01-01T10:01:00Z")
+    }
+  }
+
+  describe("Main on SIGTERM (ST7, main.go:124-135)") {
+    it("drains the collector before Spark stops: no fatal exit, no error line, page 1 stored once") {
+      // A CF stub that holds page 2 until after the SIGTERM, as a slow API
+      // would: the collector is then mid-tick while the JVM shuts down.
+      val release = new java.util.concurrent.CountDownLatch(1)
+      val pool = java.util.concurrent.Executors.newCachedThreadPool()
+      val cf = com.sun.net.httpserver.HttpServer.create(new java.net.InetSocketAddress("127.0.0.1", 0), 0)
+      cf.setExecutor(pool)
+      cf.createContext("/v2/events", (ex: com.sun.net.httpserver.HttpExchange) => {
+        val body =
+          if (ex.getRequestURI.getRawQuery.contains("page=2")) {
+            release.await(60, java.util.concurrent.TimeUnit.SECONDS)
+            pageJson(Seq("g3"), Seq("2024-01-01T10:00:02Z"), "")
+          } else pageJson(Seq("g1", "g2"), Seq("2024-01-01T10:00:00Z", "2024-01-01T10:00:01Z"),
+            "/v2/events?page=2")
+        val bytes = body.getBytes("UTF-8")
+        ex.sendResponseHeaders(200, bytes.length.toLong)
+        ex.getResponseBody.write(bytes)
+        ex.close()
+      })
+      cf.start()
+      val dir = Files.createTempDirectory("graft-main")
+      val log = dir.resolve("daemon.log")
+      val metricsPort = { val s = new java.net.ServerSocket(0); try s.getLocalPort finally s.close() }
+      // this JVM's classpath and JVM options, with a smaller heap
+      val jvmArgs = java.lang.management.ManagementFactory.getRuntimeMXBean.getInputArguments.asScala.toSeq
+      val cmd = Seq(new java.io.File(System.getProperty("java.home"), "bin/java").getPath) ++ jvmArgs ++
+        Seq("-Xmx1g", "-cp", System.getProperty("java.class.path"), "graft.app.Main")
+      val pb = new ProcessBuilder(cmd.asJava).directory(dir.toFile)
+        .redirectErrorStream(true).redirectOutput(log.toFile)
+      Seq("DATABASE_URL", "CF_CLIENT_ID", "CF_CLIENT_SECRET", "CF_USERNAME", "CF_PASSWORD",
+        "SPLUNK_API_KEY", "SPLUNK_HEC_ENDPOINT_URL").foreach(pb.environment().remove)
+      pb.environment().putAll(Map(
+        "WAREHOUSE_DIR" -> s"$dir/warehouse",
+        "CF_API_ADDRESS" -> s"http://127.0.0.1:${cf.getAddress.getPort}",
+        "FETCHER_PAGINATION_WAIT_TIME" -> "0",
+        "COLLECTOR_SCHEDULE" -> "1h",
+        "PORT" -> metricsPort.toString,
+        "SPARK_MASTER" -> "local[1]",
+        "SPARK_GRAFT_CPUS" -> "1").asJava)
+      def logText = new String(Files.readAllBytes(log), "UTF-8")
+      val proc = pb.start()
+      try {
+        val deadline = System.nanoTime() + 180L * 1000000000L
+        while (proc.isAlive && !logText.contains("run.stored-events") && System.nanoTime() < deadline)
+          Thread.sleep(100L)
+        withClue(logText) { logText should include ("cf-audit-event-collector.run.stored-events") }
+        proc.destroy() // SIGTERM
+        Thread.sleep(1000L) // long enough for Spark's own hook to stop an undrained context
+        release.countDown()
+        proc.waitFor(60, java.util.concurrent.TimeUnit.SECONDS) shouldBe true
+      } finally {
+        release.countDown()
+        proc.destroyForcibly()
+        cf.stop(0)
+        pool.shutdownNow()
+      }
+      val lines = logText.split("\n").toSeq
+      withClue(logText) {
+        lines.filter(l => l.contains("fatal:") || l.contains("SparkContext has been shutdown")) shouldBe empty
+        lines.filter(l => l.startsWith("{") && l.contains(".err-")) shouldBe empty
+        lines.exists(_.contains("cf-audit-event-collector.run.end")) shouldBe true
+      }
+      val guids = new ParquetEventStore(spark, s"$dir/warehouse").events
+        .select("guid").collect().map(_.getString(0)).toSeq
+      guids.filter(Set("g1", "g2")).sorted shouldBe Seq("g1", "g2")
+      guids.distinct.size shouldBe guids.size
     }
   }
 
