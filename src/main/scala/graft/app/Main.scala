@@ -93,6 +93,9 @@ object Main {
 
   def main(args: Array[String]): Unit = {
     val cfg = Config.fromEnv()
+    val registry = new MetricsRegistry
+    // Bind PORT before Spark starts, so its driver cannot take the port.
+    val server = new MetricsServer(registry, cfg.listenPort)
     val spark = graft.GraftSession(master = sys.env.get("SPARK_MASTER"))
 
     val store: EventStore =
@@ -105,8 +108,6 @@ object Main {
     val logger = graft.logging.Lager("paasauditorspark")
     logger.info("starting", "deploy_env" -> cfg.deployEnv)
 
-    val registry = new MetricsRegistry
-    val server = new MetricsServer(registry, cfg.listenPort)
     server.start()
 
     val stop = new AtomicBoolean(false)

@@ -86,10 +86,11 @@ object JvmMetrics {
 
 /** `/metrics` + `/health` exposition server (main.go:75-86 analog), built on
   * the JDK's embedded HTTP server — no extra dependencies. Serves the nine
-  * application metrics plus the default JVM/process gauges. */
+  * application metrics plus the default JVM/process gauges. The port is
+  * bound on construction, so nothing started later (Spark's driver, say)
+  * can take it; `start()` begins serving. */
 final class MetricsServer(registry: MetricsRegistry, port: Int) {
   import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
-  private var server: Option[HttpServer] = None
 
   private def respond(ex: HttpExchange, code: Int, body: String): Unit = {
     val bytes = body.getBytes("UTF-8")
@@ -98,19 +99,31 @@ final class MetricsServer(registry: MetricsRegistry, port: Int) {
     try os.write(bytes) finally os.close()
   }
 
-  def start(): Int = {
-    val s = HttpServer.create(new java.net.InetSocketAddress(port), 0)
-    s.createContext("/metrics", new HttpHandler {
-      def handle(ex: HttpExchange): Unit =
-        respond(ex, 200, registry.exposition + JvmMetrics.exposition)
-    })
-    s.createContext("/health", new HttpHandler {
-      def handle(ex: HttpExchange): Unit = respond(ex, 200, "OK")
-    })
-    s.start()
-    server = Some(s)
-    s.getAddress.getPort
+  private val server = HttpServer.create(new java.net.InetSocketAddress(port), 0)
+  server.createContext("/metrics", new HttpHandler {
+    def handle(ex: HttpExchange): Unit =
+      respond(ex, 200, registry.exposition + JvmMetrics.exposition)
+  })
+  server.createContext("/health", new HttpHandler {
+    def handle(ex: HttpExchange): Unit = respond(ex, 200, "OK")
+  })
+  private var started = false
+  private var stopped = false
+
+  /** Begins serving `/metrics` and `/health`; returns the bound port. */
+  def start(): Int = synchronized {
+    server.start()
+    started = true
+    server.getAddress.getPort
   }
 
-  def stop(): Unit = { server.foreach(_.stop(0)); server = None }
+  def stop(): Unit = synchronized {
+    if (!stopped) {
+      // The JDK server releases its socket from its dispatcher thread,
+      // which only start() launches.
+      if (!started) server.start()
+      server.stop(0)
+      stopped = true
+    }
+  }
 }

@@ -1,7 +1,7 @@
 package graft.operators
 
 import java.sql.Timestamp
-import org.apache.spark.sql.{Column, DataFrame, functions => F}
+import org.apache.spark.sql.{Column, DataFrame, Row, functions => F}
 import org.apache.spark.sql.expressions.Window
 
 import graft.model.Schemas
@@ -15,7 +15,8 @@ import graft.model.Schemas
   *
   * Scale notes (100 TB design point):
   *  - every pipeline is fully distributed — no `collect()` in the data path;
-  *  - cursor frames are 1 row per shipper, always broadcast;
+  *  - cursor frames are 1 row per shipper, broadcast, or resolved on the
+  *    driver and passed as literals (`unshippedAfter`);
   *  - sort+limit shapes compile to `TakeOrderedAndProject` (no full sort);
   *  - the unshipped scan prunes on `created_at >= cursor` which, over a
   *    date-partitioned store, becomes partition pruning (see ParquetEventStore).
@@ -80,6 +81,17 @@ object AuditQueries {
       .limit(1)
   }
 
+  /** [[lastShipped]] over cursor rows `(name, updated_at, shipped_id)`
+    * already on the driver: the newest row for `shipperName`, or
+    * `(epoch, '')`. A NULL `updated_at` sorts last, as in the CTE; among
+    * rows tied on `updated_at`, where the CTE's pick is unspecified, the
+    * first cursor row wins. */
+  def lastShippedOf(cursors: Seq[Row], shipperName: String): (Timestamp, String) =
+    (cursors.collect {
+      case r if !r.isNullAt(0) && r.getString(0) == shipperName && !r.isNullAt(1) =>
+        (r.getTimestamp(1), r.getString(2))
+    } :+ ((Schemas.epoch, ""))).reduceLeft((a, b) => if (b._1.after(a._1)) b else a)
+
   /** `GetUnshippedCFAuditEventsForShipper` (store.go:191-225) — the richest
     * reference query: resume-from-cursor range filter (R5), earliest-first
     * bounded batch (R15, cap 8192 at store.go:206), and the last-shipped-guid
@@ -89,10 +101,8 @@ object AuditQueries {
     *
     * The 1-row cursor frame is broadcast and cross-joined — the Spark form
     * of the reference's scalar subqueries (R8); no shuffle of `events`.
-    *
-    * `tieBreak` orders equal-timestamp events deterministically (the
-    * reference inherits Postgres' arbitrary tie order; we pin guid order so
-    * results are stable across runs and engines).
+    * A caller that resolved the cursor already passes it to
+    * [[unshippedAfter]], the same query with the cursor as columns.
     */
   def unshipped(
       events: DataFrame,
@@ -106,14 +116,27 @@ object AuditQueries {
     val outCols =
       if (payloadCols.nonEmpty) payloadCols
       else events.columns.toSeq
+    unshippedAfter(events.crossJoin(F.broadcast(cur)),
+      F.col("__cursor_ts"), F.col("__cursor_guid"), outCols, batchCap)
+  }
+
+  /** The unshipped query after cursor resolution: events at or after
+    * `cursorTs`, earliest first, capped at `batchCap`, then without the
+    * `cursorGuid` event. Ties on `created_at` are ordered by guid (the
+    * reference inherits Postgres' arbitrary tie order; pinning guid order
+    * keeps results stable across runs and engines). */
+  def unshippedAfter(
+      events: DataFrame,
+      cursorTs: Column,
+      cursorGuid: Column,
+      outCols: Seq[String],
+      batchCap: Int = 8192): DataFrame =
     events
-      .crossJoin(F.broadcast(cur))
-      .filter(F.col("created_at") >= F.col("__cursor_ts"))
+      .filter(F.col("created_at") >= cursorTs)
       .orderBy(F.col("created_at").asc, F.col("guid").asc)
       .limit(batchCap)
-      .filter(F.col("guid").cast("string") =!= F.col("__cursor_guid"))
+      .filter(F.col("guid").cast("string") =!= cursorGuid)
       .select(outCols.map(F.col): _*)
-  }
 
   /** Validation filter for the CHECK constraints (R21,
     * create_cf_audit_events.sql:26-30): split a batch into (valid,

@@ -29,7 +29,10 @@ trait EventStore {
   /** Ordered page over stored events (store.go:108-145). */
   def getCFAuditEvents(filter: RawEventFilter): DataFrame
 
-  /** Max created_at, epoch sentinel when empty (store.go:292-307, R14). */
+  /** Max created_at, epoch sentinel when empty (store.go:292-307, R14).
+    * `ParquetEventStore` reads it from a sidecar kept at store time, with
+    * no Spark job; it scans the latest partition only when the sidecar is
+    * missing. */
   def getLatestCFEventTime(): Timestamp
 
   /** Approximate event count — statistics read, not a scan (R16/S6). */
@@ -39,7 +42,10 @@ trait EventStore {
   def getUnshippedCFAuditEventsForShipper(shipperName: String): DataFrame
 
   /** Cursor upsert; `updatedAt` is the event's RAW string timestamp — the
-    * store performs the cast, like Postgres does (store.go:262-287). */
+    * store performs the cast, like Postgres does (store.go:262-287).
+    * `ParquetEventStore` rewrites its one-row-per-shipper table on the
+    * driver, with no Spark job, and re-reads the table through Spark only
+    * when someone else rewrote it. */
   def updateShipperCursor(shipperName: String, updatedAt: String, shippedId: String): Unit
 
   def events: DataFrame

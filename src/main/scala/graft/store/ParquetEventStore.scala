@@ -8,6 +8,7 @@ import scala.util.Try
 import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession, functions => F}
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.graftnative.BloomFunctions
 import org.apache.spark.sql.types.{DateType, StructType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -48,10 +49,18 @@ import graft.operators.AuditQueries.RawEventFilter
   *    (streaming micro-batches, bulk loads): the scoped anti-join, a
   *    `row_number` window for ids, one bloom aggregate per touched date.
   *    Both paths store identical rows, ids, stats and sidecar bytes.
-  *  - **Bounded latest-time read**: `max(created_at)` restricted to the max
-  *    partition via partition listing, not a full scan.
-  *  - **Cursor writes are O(#shippers)**: collected to the driver and
-  *    rewritten with a rename-aside swap; at any scale #shippers is tiny.
+  *  - **Latest-time read from a sidecar**: `commit` keeps max(created_at)
+  *    in `_stats_latest` (epoch micros), written after the append, so it
+  *    lags the data after a crash and never leads it. The collector and the
+  *    informer read it with no Spark job. Without a readable sidecar the
+  *    read falls back to `max(created_at)` over the latest partition.
+  *  - **Cursor writes are O(#shippers), on the driver**: the store holds the
+  *    cursor rows it last read or wrote, valid while the `shipper_cursors`
+  *    listing is the one it wrote (any other listing, such as a hand edit,
+  *    is re-read once through Spark). An upsert writes one parquet file on
+  *    the driver and swaps it in with a rename-aside swap, and the unshipped
+  *    plan takes the resolved cursor as literals: a steady-state shipper
+  *    tick runs one Spark job, its scan. At any scale #shippers is tiny.
   */
 final class ParquetEventStore(spark: SparkSession, warehouseDir: String) extends EventStore {
   private val eventsPath = s"$warehouseDir/cf_audit_events"
@@ -77,6 +86,7 @@ final class ParquetEventStore(spark: SparkSession, warehouseDir: String) extends
       // first batch needs no recovery scan.
       writeSidecar(maxIdPath, 0L)
       writeStatsCount(0L)
+      writeSidecar(latestPath, 0L) // epoch, the empty-table sentinel
     }
     // A crash inside updateShipperCursor's swap can leave the live cursor
     // table renamed aside, complete: bring it back rather than start empty.
@@ -169,7 +179,7 @@ final class ParquetEventStore(spark: SparkSession, warehouseDir: String) extends
       val blooms = kept.groupBy(_.getString(dayIdx)).toSeq.map { case (d, rs) =>
         d -> BloomFunctions.bloomDriver(rs.map(_.getString(guidIdx)), bloomItems, bloomBits)
       }
-      commit(base, n, blooms, sidecars) {
+      commit(base, n, blooms, sidecars, kept.map(r => micros(r.getTimestamp(createdIdx))).max) {
         spark.createDataFrame(withId.asJava, nullableEventsWithDate)
           .coalesce(1) // one file per date, as the window-ordered distributed write
           .write.mode(SaveMode.Append).partitionBy("event_date").parquet(eventsPath)
@@ -196,7 +206,8 @@ final class ParquetEventStore(spark: SparkSession, warehouseDir: String) extends
       .select(Schemas.cfAuditEvents.fieldNames.map(F.col).toSeq: _*)
       .withColumn("event_date", F.to_date(F.col("created_at")))
       .cache()
-    val n = withId.count()
+    val stats = withId.agg(F.count(F.lit(1)), F.max("created_at")).head()
+    val n = stats.getLong(0)
     if (n > 0) {
       val days = withId.select(F.col("event_date").cast("string")).distinct()
         .collect().map(_.getString(0)) // bounded by dates touched by one batch
@@ -204,7 +215,7 @@ final class ParquetEventStore(spark: SparkSession, warehouseDir: String) extends
         .filter(F.col("event_date").cast("string") === d)
         .agg(BloomSupport.bloomAgg(F.col("guid"), bloomItems, bloomBits).as("bf"))
         .head.getAs[Array[Byte]]("bf"))
-      commit(base, n, blooms, Map.empty) {
+      commit(base, n, blooms, Map.empty, micros(stats.getTimestamp(1))) {
         withId.write.mode(SaveMode.Append).partitionBy("event_date").parquet(eventsPath)
       }
     }
@@ -213,9 +224,11 @@ final class ParquetEventStore(spark: SparkSession, warehouseDir: String) extends
   }
 
   /** The durable steps both paths share, in crash-safe order. `read`
-    * holds sidecar bytes the caller already read (others are read here). */
+    * holds sidecar bytes the caller already read (others are read here);
+    * `batchLatest` is the batch's max created_at in epoch micros. */
   private def commit(base: Long, n: Long, blooms: Seq[(String, Array[Byte])],
-                     read: Map[String, Option[Array[Byte]]])(append: => Unit): Unit = {
+                     read: Map[String, Option[Array[Byte]]], batchLatest: Long)
+                    (append: => Unit): Unit = {
     // Exact count before the append when the stats sidecar is missing:
     // afterwards the table already holds the batch.
     val countBefore = readStatsCount().getOrElse(AuditQueries.eventCount(events))
@@ -234,6 +247,10 @@ final class ParquetEventStore(spark: SparkSession, warehouseDir: String) extends
     }
     append
     writeStatsCount(countBefore + n) // reltuples analog
+    // After the append, so a crash leaves it behind the data, never ahead.
+    // A lost sidecar is rebuilt here from the table, which holds the batch.
+    val latest = readSidecar(latestPath).getOrElse(micros(scanLatest()))
+    writeSidecar(latestPath, math.max(latest, batchLatest))
   }
 
   // Fixed per store so every sidecar is mergeInPlace-compatible.
@@ -323,7 +340,11 @@ final class ParquetEventStore(spark: SparkSession, warehouseDir: String) extends
   override def getCFAuditEvents(filter: RawEventFilter): DataFrame =
     AuditQueries.eventsPage(events, filter)
 
-  override def getLatestCFEventTime(): Timestamp = {
+  override def getLatestCFEventTime(): Timestamp =
+    readSidecar(latestPath).map(fromMicros).getOrElse(scanLatest())
+
+  /** The recovery read behind `_stats_latest`: max(created_at), epoch when empty. */
+  private def scanLatest(): Timestamp = {
     // Restrict to the latest date partition when one exists — the partition
     // column bounds max(created_at), so this reads one partition, not 100 TB.
     val parts = eventsWithDate.select(F.max("event_date")).collect()(0)
@@ -343,15 +364,15 @@ final class ParquetEventStore(spark: SparkSession, warehouseDir: String) extends
 
   private def statsPath = new Path(s"$warehouseDir/_stats_count")
   private def maxIdPath = new Path(s"$warehouseDir/_stats_maxid")
+  private def latestPath = new Path(s"$warehouseDir/_stats_latest")
 
+  private def micros(ts: Timestamp): Long = DateTimeUtils.instantToMicros(ts.toInstant)
+  private def fromMicros(us: Long): Timestamp = Timestamp.from(DateTimeUtils.microsToInstant(us))
+
+  /** A sidecar's value; None when it is absent or unreadable (a torn read
+    * beside a concurrent rewrite included), and the caller recovers. */
   private def readSidecar(p: Path): Option[Long] =
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      try Some(new String(in.readAllBytes(), "UTF-8").trim.toLong)
-      catch { case _: Exception => None }
-      finally in.close()
-    }
+    Try(readBytes(p).map(b => new String(b, "UTF-8").trim.toLong)).toOption.flatten
 
   private def writeSidecar(p: Path, v: Long): Unit = {
     val out = fs.create(p, true)
@@ -363,16 +384,39 @@ final class ParquetEventStore(spark: SparkSession, warehouseDir: String) extends
   private def writeStatsCount(total: Long): Unit = writeSidecar(statsPath, total)
 
   override def getUnshippedCFAuditEventsForShipper(shipperName: String): DataFrame = {
-    // Resolve the 1-row cursor first (the reference's scalar subquery does
-    // the same read) and turn it into a PARTITION predicate: the query's
-    // own filter is on created_at, which prunes files via footer stats but
-    // not partitions — event_date >= date(cursor) prunes whole partitions,
-    // keeping this scan O(unshipped days) on a 100 TB table.
-    val cur = AuditQueries.lastShipped(cursors, shipperName).collect()(0)
-    val pruned = eventsWithDate
-      .filter(F.col("event_date") >= F.to_date(F.lit(cur.getTimestamp(0))))
-      .select(Schemas.cfAuditEvents.fieldNames.map(F.col).toSeq: _*)
-    AuditQueries.unshipped(pruned, cursors, shipperName)
+    // Resolve the cursor on the driver (the reference's scalar subquery)
+    // and plan with it as literals, so building the plan runs no job. It
+    // also becomes a PARTITION predicate: the query's own filter is on
+    // created_at, which prunes files via footer stats but not partitions —
+    // event_date >= date(cursor) prunes whole partitions, keeping this scan
+    // O(unshipped days) on a 100 TB table.
+    val (ts, guid) = AuditQueries.lastShippedOf(cursorRows(), shipperName)
+    val pruned = eventsWithDate.filter(F.col("event_date") >= F.to_date(F.lit(ts)))
+    AuditQueries.unshippedAfter(pruned, F.lit(ts), F.lit(guid), Schemas.cfAuditEvents.fieldNames.toSeq)
+  }
+
+  /** The cursor rows last read or written, and the `shipper_cursors`
+    * listing they belong to. Only the shipper thread reads or writes them. */
+  @volatile private var cursorCache: Option[(Seq[(String, Long, Long)], Seq[Row])] = None
+
+  /** (name, length, modification time) of every entry of `shipper_cursors`. */
+  private def cursorListing(): Seq[(String, Long, Long)] =
+    fs.listStatus(new Path(cursorsPath)).toSeq
+      .map(f => (f.getPath.getName, f.getLen, f.getModificationTime)).sortBy(_._1)
+
+  /** The cursor rows, read through Spark only when the listing is not the
+    * one this store last read or wrote: a hand edit or another writer's
+    * files (INT96 timestamps, several part files) are picked up on the
+    * next call. */
+  private def cursorRows(): Seq[Row] = {
+    val listing = cursorListing()
+    cursorCache match {
+      case Some((l, rows)) if l == listing => rows
+      case _ =>
+        val rows = cursors.collect().toSeq
+        cursorCache = Some((listing, rows))
+        rows
+    }
   }
 
   private def renameOrAbort(from: Path, to: Path): Unit =
@@ -498,21 +542,56 @@ final class ParquetEventStore(spark: SparkSession, warehouseDir: String) extends
       java.sql.Date.valueOf(v).before(cutoff)
     }
     dropped.foreach(d => fs.delete(d.getPath, true))
+    // The newest partition may be gone; the next read rebuilds from the table.
+    if (dropped.nonEmpty) fs.delete(latestPath, false)
     dropped.length.toLong
   }
 
   override def updateShipperCursor(shipperName: String, updatedAt: String, shippedId: String): Unit = {
-    import spark.implicits._
     // Reference passes the raw string and lets the DB cast (store.go:271-281).
     val ts = Timestamp.from(java.time.OffsetDateTime.parse(updatedAt).toInstant)
-    val existing = cursors.filter(F.col("name") =!= shipperName).collect().toSeq
+    val existing = cursorRows().filter(r => !r.isNullAt(0) && r.getString(0) != shipperName)
     val updated = existing :+ Row(shipperName, ts, shippedId)
-    val df = spark.createDataFrame(
-      spark.sparkContext.parallelize(updated, 1), Schemas.shipperCursors)
     // Write tmp, then the rename-aside swap: a crash never leaves the
     // cursors only in a deleted tree (init() restores the `_old` sibling).
-    val tmp = cursorsPath + "_tmp"
-    df.write.mode(SaveMode.Overwrite).parquet(tmp)
-    swapTree(tmp, cursorsPath)
+    val tmp = new Path(cursorsPath + "_tmp")
+    if (fs.exists(tmp)) fs.delete(tmp, true)
+    writeCursorFile(new Path(tmp, "part-00000-cursors.parquet"), updated)
+    swapTree(tmp.toString, cursorsPath)
+    cursorCache = Some((cursorListing(), updated))
+  }
+
+  /** The cursor table's parquet layout: what Spark writes for
+    * `Schemas.shipperCursors`, timestamps as UTC-adjusted micros. */
+  private val cursorFileSchema = {
+    import org.apache.parquet.schema.{LogicalTypeAnnotation => L, Types}
+    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.{BINARY, INT64}
+    Types.buildMessage()
+      .optional(BINARY).as(L.stringType()).named("name")
+      .optional(INT64).as(L.timestampType(true, L.TimeUnit.MICROS)).named("updated_at")
+      .optional(BINARY).as(L.stringType()).named("shipped_id")
+      .named("spark_schema")
+  }
+
+  /** Writes cursor rows as one parquet file on the driver: no Spark job. */
+  private def writeCursorFile(p: Path, rows: Seq[Row]): Unit = {
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    import org.apache.parquet.hadoop.util.HadoopOutputFile
+    val conf = spark.sparkContext.hadoopConfiguration
+    val w = ExampleParquetWriter.builder(HadoopOutputFile.fromPath(p, conf))
+      .withConf(conf)
+      .withType(cursorFileSchema)
+      // Proleptic Gregorian micros, as Spark 3+ writes: no calendar rebase on read.
+      .withExtraMetaData(Map("org.apache.spark.version" -> spark.version).asJava)
+      .build()
+    val groups = new SimpleGroupFactory(cursorFileSchema)
+    try rows.foreach { r =>
+      val g = groups.newGroup()
+      if (!r.isNullAt(0)) g.add("name", r.getString(0))
+      if (!r.isNullAt(1)) g.add("updated_at", micros(r.getTimestamp(1)))
+      if (!r.isNullAt(2)) g.add("shipped_id", r.getString(2))
+      w.write(g)
+    } finally w.close()
   }
 }

@@ -3,6 +3,7 @@
 package org.apache.spark.sql.graftnative
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 
 /** Installs the engine's native pieces on a live session: the `fv_dot` SQL
   * function, the HOF-dot → native-kernel optimizer rule ([[NativeDotRule]])
@@ -10,8 +11,10 @@ import org.apache.spark.sql.SparkSession
   * `graft.GraftSession` runs it on every session it builds. */
 object GraftExtensions {
   def setup(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "fv_dot", exprs => FloatVectorDot(exprs(0), exprs(1)), "scala_udf")
+    val registry = spark.sessionState.functionRegistry
+    if (!registry.functionExists(FunctionIdentifier("fv_dot")))
+      registry.createOrReplaceTempFunction(
+        "fv_dot", exprs => FloatVectorDot(exprs(0), exprs(1)), "scala_udf")
     val exp = spark.experimental
     if (!exp.extraOptimizations.contains(NativeDotRule))
       exp.extraOptimizations = exp.extraOptimizations :+ NativeDotRule

@@ -94,6 +94,14 @@ class LoggingAndMetricsSpec extends SparkSpec {
     again.stop()
   }
 
+  it("a constructed, unstarted server already holds its port; stop() lets it go") {
+    val port = { val s = new java.net.ServerSocket(0); val p = s.getLocalPort; s.close(); p }
+    val server = new MetricsServer(new MetricsRegistry, port)
+    try an[java.net.BindException] should be thrownBy new java.net.ServerSocket(port).close()
+    finally server.stop()
+    new java.net.ServerSocket(port).close() // released without ever serving
+  }
+
   it("lager sessions nest into the message; data holds the context, then the call's fields") {
     val lines = mutable.ArrayBuffer.empty[String]
     val root = Lager.to("src", l => { lines += l; () })

@@ -15,6 +15,7 @@ import org.apache.spark.sql.types.StructType
 
 import graft.metrics.{Metrics, MetricsRegistry}
 import graft.model.Schemas
+import graft.operators.AuditQueries
 import graft.sources._
 import graft.store.{EventStore, ParquetEventStore}
 import graft.streaming.{Collector, Informer, SplunkHecClient, SplunkShipper}
@@ -369,6 +370,80 @@ class StoreAndPipelineSpec extends SparkSpec {
       st.storeCFAuditEvents(collector.pageToDf(Seq(mk("c"), mk("d")))) shouldBe 1L
       st.getCFEventCount() shouldBe 4L // not the batch size
       Files.readString(new java.io.File(s"$dir/_stats_count").toPath).trim shouldBe "4"
+    }
+
+    it("keeps max(created_at) in _stats_latest after the append; a failed append leaves it unchanged") {
+      val (st, dir) = newStoreAt()
+      sidecarText(dir, "_stats_latest") shouldBe "0" // epoch for a new table
+      st.storeCFAuditEvents(onDriver(Seq(
+        ev("g1", "2024-05-01T10:00:00Z"), ev("g2", "2024-05-02T08:30:00.250Z"))))
+      val latest = Instant.parse("2024-05-02T08:30:00.250Z")
+      sidecarText(dir, "_stats_latest") shouldBe (latest.getEpochSecond * 1000000L + 250000L).toString
+      st.getLatestCFEventTime().toInstant shouldBe latest
+      // an older batch does not move it back
+      st.storeCFAuditEvents(onDriver(Seq(ev("g0", "2024-05-02T01:00:00Z")))) shouldBe 1L
+      st.getLatestCFEventTime().toInstant shouldBe latest
+      // a regular file where the writer wants its _temporary directory makes the append throw
+      val blocker = Files.createFile(dir.resolve("cf_audit_events/_temporary"))
+      val before = sidecarText(dir, "_stats_latest")
+      an[Exception] should be thrownBy
+        st.storeCFAuditEvents(onDriver(Seq(ev("g9", "2024-05-03T00:00:00Z"))))
+      sidecarText(dir, "_stats_latest") shouldBe before
+      Files.delete(blocker)
+      st.getLatestCFEventTime().toInstant shouldBe latest
+      st.events.filter("guid = 'g9'").count() shouldBe 0L
+    }
+
+    it("reads a lost _stats_latest from the table, and the next commit rewrites it") {
+      val (st, dir) = newStoreAt()
+      st.storeCFAuditEvents(onDriver(Seq(
+        ev("g1", "2024-05-01T10:00:00Z"), ev("g2", "2024-05-02T08:30:00Z"))))
+      Files.delete(dir.resolve("_stats_latest"))
+      st.getLatestCFEventTime().toInstant shouldBe Instant.parse("2024-05-02T08:30:00Z")
+      // the rebuilt value covers the table, not only the (older) batch
+      st.storeCFAuditEvents(onDriver(Seq(ev("g3", "2024-05-01T11:00:00Z")))) shouldBe 1L
+      Files.exists(dir.resolve("_stats_latest")) shouldBe true
+      st.getLatestCFEventTime().toInstant shouldBe Instant.parse("2024-05-02T08:30:00Z")
+      // an unreadable sidecar reads as lost
+      Files.writeString(dir.resolve("_stats_latest"), "not a number")
+      st.getLatestCFEventTime().toInstant shouldBe Instant.parse("2024-05-02T08:30:00Z")
+    }
+
+    it("expireBefore dropping the newest partition leaves the latest time to the table") {
+      val (st, _) = newStoreAt()
+      st.storeCFAuditEvents(onDriver(Seq(
+        ev("g1", "2024-05-01T10:00:00Z"), ev("g2", "2024-05-02T08:30:00Z"))))
+      st.expireBefore(java.sql.Date.valueOf("2024-05-03")) shouldBe 2L
+      st.getLatestCFEventTime() shouldBe Schemas.epoch
+      st.storeCFAuditEvents(onDriver(Seq(ev("g3", "2024-05-04T09:00:00Z")))) shouldBe 1L
+      st.getLatestCFEventTime().toInstant shouldBe Instant.parse("2024-05-04T09:00:00Z")
+    }
+
+    it("re-reads a cursor table rewritten outside the store (INT96, two part files) on the next tick") {
+      val (st, dir) = newStoreAt()
+      st.storeCFAuditEvents(onDriver(Seq(ev("g1", "2024-05-01T10:00:00Z"),
+        ev("g2", "2024-05-01T10:00:01Z"), ev("g3", "2024-05-01T10:00:02Z"))))
+      st.updateShipperCursor("s", "2024-05-01T10:00:00Z", "g1")
+      st.getUnshippedCFAuditEventsForShipper("s").select("guid").collect().map(_.getString(0)) shouldBe
+        Array("g2", "g3")
+      import spark.implicits._
+      val key = "spark.sql.parquet.outputTimestampType"
+      spark.conf.set(key, "INT96")
+      try Seq(("s", Timestamp.from(Instant.parse("2024-05-01T10:00:01Z")), "g2"),
+          ("other", Timestamp.from(Instant.parse("2024-05-01T10:00:02Z")), "g3"))
+        .toDF("name", "updated_at", "shipped_id").repartition(2)
+        .write.mode("overwrite").parquet(dir.resolve("shipper_cursors").toString)
+      finally spark.conf.unset(key)
+      val parts = Files.list(dir.resolve("shipper_cursors"))
+      try parts.iterator().asScala.count(_.getFileName.toString.endsWith(".parquet")) shouldBe 2
+      finally parts.close()
+      st.getUnshippedCFAuditEventsForShipper("s").select("guid").collect().map(_.getString(0)) shouldBe
+        Array("g3")
+      // the next commit keeps the other shipper's row from the foreign files
+      st.updateShipperCursor("s", "2024-05-01T10:00:02Z", "g3")
+      st.cursors.orderBy("name").collect().map(r => (r.getString(0), r.getString(2))).toSeq shouldBe
+        Seq(("other", "g3"), ("s", "g3"))
+      st.getUnshippedCFAuditEventsForShipper("s").count() shouldBe 0L
     }
 
     it("restores cursors a crash left renamed aside mid-swap") {
@@ -1208,6 +1283,82 @@ class StoreAndPipelineSpec extends SparkSpec {
       jobsOf(st.storeCFAuditEvents(collector.pageToDf(
         Seq(mk("p3", "2024-05-02T00:00:01Z"))))) shouldBe 1
       st.getCFEventCount() shouldBe 191L
+    }
+
+    it("a warm store reads the latest time, plans unshipped, commits the cursor and informs with no job") {
+      val (st, _) = newStoreAt()
+      st.storeCFAuditEvents(onDriver(Seq(
+        ev("g1", "2024-05-01T10:00:00Z"), ev("g2", "2024-05-01T10:00:01Z"))))
+      // a store loads the cursor table through Spark once; then it is warm
+      jobsOf(st.getUnshippedCFAuditEventsForShipper("s")) should be >= 1
+      jobsOf(st.getUnshippedCFAuditEventsForShipper("s")) shouldBe 0
+      jobsOf(st.getLatestCFEventTime()) shouldBe 0
+      jobsOf(st.updateShipperCursor("s", "2024-05-01T10:00:00Z", "g1")) shouldBe 0
+      jobsOf(st.getUnshippedCFAuditEventsForShipper("s")) shouldBe 0
+      jobsOf(new Informer(st, new MetricsRegistry).informOnce()) shouldBe 0
+      val poster = new FakePoster(Nil)
+      val shipper = new SplunkShipper(st, new SplunkHecClient(poster, "https://hec", "KEY", sleep = _ => ()),
+        "test-env", new MetricsRegistry, shipperName = "s")
+      var shipped = (0L, 0L)
+      jobsOf { shipped = shipper.shipOnce() } shouldBe 1 // the unshipped scan; the commit runs none
+      shipped shouldBe ((1L, 0L))
+      jobsOf { shipped = shipper.shipOnce() } shouldBe 1
+      shipped shouldBe ((0L, 0L))
+      st.cursors.collect().map(r => (r.getString(0), r.getString(2))).toSeq shouldBe Seq(("s", "g2"))
+    }
+
+    it("the daemon's literal-cursor unshipped rows, in order, equal AuditQueries.unshipped (property)") {
+      import org.scalacheck.{Gen, Prop, Test}
+      import org.scalacheck.rng.Seed
+      // 23:59:30 + up to 60 s spans two date partitions; whole seconds tie
+      val base = Instant.parse("2024-05-01T23:59:30Z")
+      val at = (secs: Long) => base.plusSeconds(secs).toString
+      val genSmall = for {
+        n <- Gen.chooseNum(0, 40)
+        evs <- Gen.listOfN(n, Gen.zip(Gen.chooseNum(0, 60).map(i => s"g$i"), Gen.chooseNum(0L, 60L)))
+        utf <- Gen.oneOf(true, false)
+        utfAt <- Gen.chooseNum(0L, 60L)
+      } yield evs ++ (if (utf) Seq(("xＡ", utfAt), ("x😀", utfAt)) else Nil) // UTF-16 order != UTF-8
+      val genBulk = Gen.listOfN(8300, Gen.chooseNum(0L, 60L))
+        .map(_.zipWithIndex.map { case (t, i) => (s"b$i", t) })
+      val genCase = for {
+        evs <- Gen.frequency((4, genSmall), (1, genBulk))
+        kind <- Gen.oneOf("none", "on-event", "between", "after-all")
+        pick <- Gen.chooseNum(0, Int.MaxValue)
+        other <- Gen.oneOf(true, false) // another shipper's cursor, after every event
+      } yield (evs, kind, pick, other)
+      val name = "cf-audit-events-to-splunk"
+      val prop = Prop.forAllNoShrink(genCase) { case (evs, kind, pick, other) =>
+        val (st, _) = newStoreAt()
+        st.storeCFAuditEvents(onDriver(evs.map { case (g, t) => ev(g, at(t)) }))
+        val stored = st.events.select("guid", "created_at").orderBy("created_at", "guid").collect()
+        // on, or just after, one of the earliest 64 events: a bulk case keeps > 8192 pending
+        lazy val early = stored(pick % math.min(stored.length, 64))
+        val label = (kind, stored.isEmpty) match {
+          case ("none", _) | (_, true) => "none"
+          case ("on-event", _) =>
+            st.updateShipperCursor(name, early.getTimestamp(1).toInstant.toString, early.getString(0)); kind
+          case ("between", _) => // events sit on whole seconds
+            st.updateShipperCursor(name, early.getTimestamp(1).toInstant.plusMillis(500).toString, "zz"); kind
+          case _ =>
+            st.updateShipperCursor(name, base.plusSeconds(61).toString, stored.last.getString(0)); kind
+        }
+        if (other) st.updateShipperCursor("other", base.plusSeconds(99).toString, "g0")
+        val daemon = st.getUnshippedCFAuditEventsForShipper(name).collect().toSeq
+        val board = AuditQueries.unshipped(st.events, st.cursors, name).collect().toSeq
+        val byTime = stored.groupBy(_.getTimestamp(1)).values
+        val from = AuditQueries.lastShippedOf(st.cursors.collect().toSeq, name)._1
+        val labels = Set(label) ++
+          (if (stored.count(!_.getTimestamp(1).before(from)) > 8192) Set("over-cap") else Set()) ++
+          (if (byTime.exists(_.length > 1)) Set("same-second") else Set()) ++
+          (if (byTime.exists(_.map(_.getString(0)).toSet == Set("xＡ", "x😀"))) Set("utf-tie") else Set())
+        Prop.collect[Set[String]](labels)(Prop(daemon == board) :| s"daemon ${daemon.size} rows, board ${board.size}")
+      }
+      val result = Test.check(Test.Parameters.default.withMinSuccessfulTests(24).withWorkers(1)
+        .withInitialSeed(Seed(20241018L)), prop)
+      withClue(org.scalacheck.util.Pretty.pretty(result)) { result.passed shouldBe true }
+      result.freqMap.getCounts.flatMap(_._1).flatMap { case l: Set[_] => l }.toSet shouldBe
+        Set("none", "on-event", "between", "after-all", "over-cap", "same-second", "utf-tie")
     }
   }
 }

@@ -149,9 +149,32 @@ class VectorFunctionsSpec extends SparkSpec {
   }
 
   it("GraftExtensions.setup is idempotent: one NativeDotRule and one AsOfJoinStrategy after two runs") {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, Logger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
     import org.apache.spark.sql.graftnative.{AsOfJoinStrategy, GraftExtensions, NativeDotRule}
-    GraftExtensions.setup(spark)
-    GraftExtensions.setup(spark)
+    // fv_dot is registered once: a re-registration logs this registry warning
+    val registryLog = LogManager.getLogger(
+      "org.apache.spark.sql.catalyst.analysis.SimpleFunctionRegistry").asInstanceOf[Logger]
+    val replaced = new java.util.concurrent.atomic.AtomicInteger(0)
+    val spy = new AbstractAppender("fv-dot-spy", null, null, true, null) {
+      def append(e: LogEvent): Unit =
+        if (e.getMessage.getFormattedMessage.contains("replaced a previously registered function"))
+          replaced.incrementAndGet()
+    }
+    val level = registryLog.getLevel
+    spy.start()
+    registryLog.addAppender(spy)
+    registryLog.setLevel(Level.WARN)
+    try {
+      GraftExtensions.setup(spark)
+      GraftExtensions.setup(spark)
+    } finally {
+      registryLog.removeAppender(spy)
+      registryLog.setLevel(level)
+      spy.stop()
+    }
+    replaced.get() shouldBe 0
     spark.experimental.extraOptimizations.count(_ == NativeDotRule) shouldBe 1
     spark.experimental.extraStrategies.count(_ == AsOfJoinStrategy) shouldBe 1
     spark.sql("SELECT fv_dot(array(1.0f, 2.0f), array(3.0f, 4.0f))").collect()(0).getDouble(0) shouldBe 11.0
