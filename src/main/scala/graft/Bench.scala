@@ -180,7 +180,7 @@ object Bench {
       "queries_isolated", "queries_isolated_detail", "scaling",
       "queries_arbiter", "canary", "canary_norm", "jvm", "loadavg_start",
       "loadavg_end", "gc_ms_grid", "gc_count_grid", "gc_ms_total",
-      "heap_peak_grid_mb", "errors", "failures", "pipeline", "sf",
+      "heap_peak_grid_mb", "errors", "failures", "sf",
       "passes", "heavy_passes", "stable_reduced", "stable_single_pass",
       "loadavg_wait_sec", "budget_sec", "wall_sec", "shed")
     private val frags = scala.collection.mutable.Map[String, String]()
@@ -248,7 +248,7 @@ object Bench {
     // clock ran out — rc=124, zero evidence). When the remaining budget
     // cannot fit the next tier, tiers shed in the documented order
     // (heavy passes → isolated detail tier → scaling probes → recheck
-    // cap → pipeline as the beyond-plan last resort) and every decision
+    // cap) and every decision
     // is recorded in the artifact's `shed` list. The default 2850 s
     // keeps a full run under the driver's observed ceiling (r15's run
     // used 2928 s and passed; r16's was killed) while leaving room for
@@ -564,16 +564,13 @@ object Bench {
       10.0 + scalingQueries.filter(okNames.contains)
         .map(n => curMinOf(n) * isolatedPasses * 1.35).sum
     val estArbiter = 120.0
-    val estPipeline = 180.0
     val estRecheckNominal = 60.0
     val reserve = 60.0
     val skipIso = sys.env.contains("SPARK_GRAFT_SKIP_ISOLATED")
-    val skipPipe = sys.env.contains("SPARK_GRAFT_SKIP_PIPELINE")
     var shedIsolated = false
     var shedScaling = false
-    var shedPipeline = false
     def estAfterGrid: Double =
-      estRecheckNominal + (if (skipPipe || shedPipeline) 0 else estPipeline) +
+      estRecheckNominal +
         (if (skipIso || shedIsolated) 0 else estIsolated) +
         (if (skipIso || shedScaling) 0 else estScaling) +
         (if (skipIso) 0 else estArbiter) + reserve
@@ -727,8 +724,7 @@ object Bench {
               def estRecheck(k: Int): Double =
                 candidatesAll.take(k).map { case (_, c, _) => 2.0 + 2.0 * c }.sum
               def needBeyondRecheck: Double =
-                (if (skipPipe || shedPipeline) 0 else estPipeline) +
-                  (if (skipIso || shedIsolated) 0 else estIsolated) +
+                (if (skipIso || shedIsolated) 0 else estIsolated) +
                   (if (skipIso || shedScaling) 0 else estScaling) +
                   (if (skipIso) 0 else estArbiter) + reserve
               if (remainingSec < estRecheck(cap) + needBeyondRecheck && !skipIso && !shedIsolated) {
@@ -739,16 +735,8 @@ object Bench {
                 shedScaling = true; artifact.shed("scaling")
                 System.err.println("[bench] budget: shedding scaling probes")
               }
-              // r17 verdict #2/#3: the recheck is the regression
-              // adjudicator and was shed to cap 0 with 109 candidates
-              // unchecked while the pipeline tier still ran. The pipeline
-              // now sheds BEFORE the recheck cap shrinks, and the cap
-              // never drops below 8 — ~30 s of standalone re-runs is
-              // always affordable relative to a wrong regression verdict.
-              if (remainingSec < estRecheck(cap) + needBeyondRecheck && !skipPipe && !shedPipeline) {
-                shedPipeline = true; artifact.shed("pipeline")
-                System.err.println("[bench] budget: shedding pipeline stage")
-              }
+              // The cap never drops below 8: ~30 s of standalone re-runs
+              // is always affordable relative to a wrong regression verdict.
               while (cap > 8 && remainingSec < estRecheck(cap) + needBeyondRecheck) cap -= 1
               if (cap < 24 && candidatesAll.size > cap) {
                 artifact.shed(s"recheck_cap:$cap")
@@ -772,17 +760,6 @@ object Bench {
       }
       renderCanaryNorm(Map.empty).foreach(artifact.set("canary_norm", _))
       artifact.tierDone("recheck")
-    }
-    // Re-measure the store/ship throughput claim every round (the
-    // baseline-ratio headline is ev/s vs the reference's fetch≈500 /
-    // ship≈546 ceilings) instead of inheriting round-8's number. Skipped
-    // under SPARK_GRAFT_ONLY — the restricted mode is a per-query
-    // iteration aid, not an artifact run.
-    if (only.isEmpty && !skipPipe && !shedPipeline) {
-      try artifact.set("pipeline", graft.tools.PipelineBench.runJson(spark, sfDir))
-      catch { case e: Throwable =>
-        System.err.println(s"[bench] pipeline bench failed: $e") }
-      artifact.tierDone("pipeline")
     }
     // ISOLATED re-measure of the heavy tier (round-10 verdict item 1): the
     // in-grid numbers for rows >= ~2 s drift +40-80% under ambient

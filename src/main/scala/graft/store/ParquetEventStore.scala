@@ -1,13 +1,13 @@
 package graft.store
 
+import java.nio.file.{Files, StandardCopyOption}
 import java.sql.Timestamp
 import java.time.LocalDate
 import scala.jdk.CollectionConverters._
 import scala.util.Try
 
-import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.hadoop.fs.{FileContext, FileStatus, Options, Path}
 import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession, functions => F}
-import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.graftnative.BloomFunctions
 import org.apache.spark.sql.types.{DateType, StructType}
@@ -32,23 +32,25 @@ import graft.operators.AuditQueries.RawEventFilter
   *    (collector.go:36), so a batch can only collide with events in its own
   *    time range. Dedup is scoped to partitions with
   *    `event_date >= min(batch date)` — O(overlap), not O(history).
-  *  - **One Spark job per collector page**: a page is at most 100 rows and
-  *    already on the driver. When the batch plan folds to a `LocalRelation`
-  *    (`Collector.pageToDf` always does), `collect()` runs no job, and the
-  *    store dedups, numbers and blooms the rows on the driver. The
-  *    partitioned parquet append is then the only job. The alternative, the
-  *    distributed plan, spends about ten jobs on a page, and per-job launch
-  *    cost, not data volume, bounds the daemon.
-  *  - **Bloom-gated dedup probe** (driver path): each scoped partition's
+  *  - **One write path, on the driver**: a batch is CHECK-split by Spark
+  *    and collected with `limit(MaxBatchRows + 1)`; more than
+  *    [[ParquetEventStore.MaxBatchRows]] valid rows is refused before any
+  *    write. A collector page is at most 100 rows built on the driver, so
+  *    its plan, the limit included, folds to a `LocalRelation` and the
+  *    collect runs no job; any other small batch pays one collect job. The
+  *    store then dedups, numbers and blooms the rows on the driver, and the
+  *    partitioned parquet append is the only job. Per-job launch cost, not
+  *    data volume, bounds the daemon.
+  *  - **Bloom-gated dedup probe**: each scoped partition's
   *    `_bloom_guid/<date>` sidecar is read once and probed per guid. Only
   *    bloom-positive guids (every guid, for a partition with no readable
   *    sidecar) go to one exact `guid IN (...)` scan over the partitions
   *    that matched; with no positives there is no probe job. Blooms have
   *    no false negatives, so the dedup stays exact.
-  *  - **Distributed path** for batches that are not on the driver
-  *    (streaming micro-batches, bulk loads): the scoped anti-join, a
-  *    `row_number` window for ids, one bloom aggregate per touched date.
-  *    Both paths store identical rows, ids, stats and sidecar bytes.
+  *  - **Sidecars are replaced, never rewritten in place**: `_stats_*` and
+  *    `_bloom_guid/<date>` are written to a hidden temporary sibling and
+  *    renamed over the old file, so the informer thread reading
+  *    `_stats_count` beside a commit sees the old value or the new one.
   *  - **Latest-time read from a sidecar**: `commit` keeps max(created_at)
   *    in `_stats_latest` (epoch micros), written after the append, so it
   *    lags the data after a crash and never leads it. The collector and the
@@ -63,6 +65,8 @@ import graft.operators.AuditQueries.RawEventFilter
   *    tick runs one Spark job, its scan. At any scale #shippers is tiny.
   */
 final class ParquetEventStore(spark: SparkSession, warehouseDir: String) extends EventStore {
+  import ParquetEventStore.MaxBatchRows
+
   private val eventsPath = s"$warehouseDir/cf_audit_events"
   private val cursorsPath = s"$warehouseDir/shipper_cursors"
 
@@ -110,21 +114,22 @@ final class ParquetEventStore(spark: SparkSession, warehouseDir: String) extends
 
   override def storeCFAuditEvents(batch: DataFrame): Long = {
     val (valid, _) = AuditQueries.splitOnCheck(batch) // R21 CHECK constraints
-    // Spark computes event_date and its directory spelling `__day` for the
-    // driver path too, so it names exactly the writer's partitions.
+    // Spark computes event_date and its directory spelling `__day`, so the
+    // rows name exactly the writer's partitions.
     val dated = valid
       .withColumn("id", F.lit(0L)) // assigned below
       .select(Schemas.cfAuditEvents.fieldNames.map(F.col).toSeq: _*)
       .withColumn("event_date", F.to_date(F.col("created_at")))
       .withColumn("__day", F.col("event_date").cast("string"))
-    dated.queryExecution.optimizedPlan match {
-      case _: LocalRelation => storeOnDriver(dated.collect()) // folded: collect runs no job
-      case _ => storeDistributed(valid)
-    }
+    val rows = dated.limit(MaxBatchRows + 1).collect() // a collector page: no job
+    if (rows.length > MaxBatchRows)
+      throw new IllegalArgumentException(
+        s"batch has more than $MaxBatchRows valid rows; store it in pages of at most $MaxBatchRows")
+    storeOnDriver(rows)
   }
 
   private val eventsWithDateSchema = Schemas.cfAuditEvents.add("event_date", DateType)
-  // The rows carry whatever nulls the batch had, as in the distributed write.
+  // The rows carry whatever nulls the batch had.
   private val nullableEventsWithDate =
     StructType(eventsWithDateSchema.map(_.copy(nullable = true)))
   private val idIdx = Schemas.cfAuditEvents.fieldIndex("id")
@@ -132,8 +137,8 @@ final class ParquetEventStore(spark: SparkSession, warehouseDir: String) extends
   private val createdIdx = Schemas.cfAuditEvents.fieldIndex("created_at")
   private val dayIdx = eventsWithDateSchema.length // the trailing `__day`
 
-  /** Spark's string order (UTF-8 bytes, nulls first) — the `row_number`
-    * window's guid tiebreak, reproduced on the driver. */
+  /** Spark's string order (UTF-8 bytes, nulls first), the guid tiebreak
+    * of `AuditQueries.assignIngestSeq`, reproduced on the driver. */
   private val guidOrder: Ordering[String] = (a, b) =>
     if (a == null || b == null) java.lang.Boolean.compare(a != null, b != null)
     else UTF8String.fromString(a).binaryCompare(UTF8String.fromString(b))
@@ -143,10 +148,10 @@ final class ParquetEventStore(spark: SparkSession, warehouseDir: String) extends
     if (t != 0) t else guidOrder.compare(a.getString(guidIdx), b.getString(guidIdx))
   }
 
-  /** Driver path for a batch already collected (rows: event columns,
-    * event_date, `__day`): the same dedup, ids and blooms as
-    * [[storeDistributed]], with the parquet append as the only Spark job
-    * unless a bloom sidecar in scope matches a batch guid. */
+  /** Stores a batch already collected (rows: event columns, event_date,
+    * `__day`): first row per guid, dedup against the overlap scope, ids in
+    * (created_at, guid) order, per-date blooms. The parquet append is the
+    * only Spark job unless a bloom sidecar in scope matches a batch guid. */
   private def storeOnDriver(rows: Array[Row]): Long = {
     val fresh = rows.distinctBy(_.getString(guidIdx)) // first occurrence per guid wins
     if (fresh.isEmpty) return 0L
@@ -181,49 +186,14 @@ final class ParquetEventStore(spark: SparkSession, warehouseDir: String) extends
       }
       commit(base, n, blooms, sidecars, kept.map(r => micros(r.getTimestamp(createdIdx))).max) {
         spark.createDataFrame(withId.asJava, nullableEventsWithDate)
-          .coalesce(1) // one file per date, as the window-ordered distributed write
+          .coalesce(1) // one file per date
           .write.mode(SaveMode.Append).partitionBy("event_date").parquet(eventsPath)
       }
     }
     n
   }
 
-  /** Distributed path, for batches that do not sit on the driver
-    * (streaming micro-batches, bulk loads): overlap-scoped anti-join,
-    * `row_number` ids, one bloom aggregate per touched date. */
-  private def storeDistributed(valid: DataFrame): Long = {
-    // Prune the dedup anti-join to partitions the batch can touch (see
-    // class doc); fall back to full history only if the batch is empty.
-    val minTs = valid.agg(F.min("created_at")).collect()(0)
-    val existingScope =
-      if (minTs.isNullAt(0)) emptyEvents
-      else eventsWithDate
-        .filter(F.col("event_date") >= F.to_date(F.lit(minTs.getTimestamp(0))))
-        .select("guid")
-    val deduped = AuditQueries.dedupAgainst(valid, existingScope)
-    val base = maxId()
-    val withId = AuditQueries.assignIngestSeq(deduped, base)
-      .select(Schemas.cfAuditEvents.fieldNames.map(F.col).toSeq: _*)
-      .withColumn("event_date", F.to_date(F.col("created_at")))
-      .cache()
-    val stats = withId.agg(F.count(F.lit(1)), F.max("created_at")).head()
-    val n = stats.getLong(0)
-    if (n > 0) {
-      val days = withId.select(F.col("event_date").cast("string")).distinct()
-        .collect().map(_.getString(0)) // bounded by dates touched by one batch
-      val blooms = days.toSeq.map(d => d -> withId
-        .filter(F.col("event_date").cast("string") === d)
-        .agg(BloomSupport.bloomAgg(F.col("guid"), bloomItems, bloomBits).as("bf"))
-        .head.getAs[Array[Byte]]("bf"))
-      commit(base, n, blooms, Map.empty, micros(stats.getTimestamp(1))) {
-        withId.write.mode(SaveMode.Append).partitionBy("event_date").parquet(eventsPath)
-      }
-    }
-    withId.unpersist()
-    n
-  }
-
-  /** The durable steps both paths share, in crash-safe order. `read`
+  /** The durable steps of a store, in crash-safe order. `read`
     * holds sidecar bytes the caller already read (others are read here);
     * `batchLatest` is the batch's max created_at in epoch micros. */
   private def commit(base: Long, n: Long, blooms: Seq[(String, Array[Byte])],
@@ -264,30 +234,47 @@ final class ParquetEventStore(spark: SparkSession, warehouseDir: String) extends
     if (!fs.exists(p)) None
     else { val in = fs.open(p); try Some(in.readAllBytes()) finally in.close() }
 
+  /** The one sidecar writer: writes a hidden temporary sibling, then
+    * renames it over `p`, so a concurrent reader sees the old bytes or the
+    * new ones, never a truncated or missing file. On a local filesystem
+    * Hadoop will not rename onto an existing file, and FileContext's
+    * OVERWRITE deletes the target first, so the sidecar goes through
+    * rename(2), which replaces atomically; it is written without a `.crc`
+    * (a stale one from an in-place write is removed), so no checksum can
+    * disagree with it. Elsewhere (HDFS) FileContext's OVERWRITE rename is
+    * the atomic replace. */
   private def writeBytes(p: Path, b: Array[Byte]): Unit = {
-    val out = fs.create(p, true)
-    try out.write(b) finally out.close()
+    val tmp = new Path(p.getParent, s".${p.getName}.tmp")
+    if (fs.getUri.getScheme == "file") {
+      def local(q: Path) = new java.io.File(fs.makeQualified(q).toUri).toPath
+      Files.createDirectories(local(p.getParent))
+      Files.write(local(tmp), b)
+      Files.deleteIfExists(local(new Path(p.getParent, s".${p.getName}.crc")))
+      Files.move(local(tmp), local(p), StandardCopyOption.ATOMIC_MOVE)
+    } else {
+      val out = fs.create(tmp, true)
+      try out.write(b) finally out.close()
+      FileContext.getFileContext(fs.getUri, spark.sparkContext.hadoopConfiguration)
+        .rename(tmp, p, Options.Rename.OVERWRITE)
+    }
   }
 
-  /** A date's new sidecar bytes: the batch's bloom OR-ed into the old one. */
+  /** A date's new sidecar bytes: the batch's bloom OR-ed into the old one.
+    * Without a usable old one (lost, or sized differently) the partition
+    * already on disk is re-aggregated: a bloom of the batch alone would
+    * miss the partition's rows, and a later re-fetch of one would be stored
+    * twice. */
   private def mergedSidecar(d: String, old: Option[Array[Byte]],
-                            batchBloom: Array[Byte]): Array[Byte] =
-    old match {
-      case Some(o) =>
-        try BloomFunctions.mergeBloom(o, batchBloom)
-        catch { // sizing drift: rebuild from the partition already on disk
-          case _: Exception =>
-            val dir = s"$eventsPath/event_date=$d"
-            val onDisk =
-              if (exists(dir))
-                spark.read.schema(Schemas.cfAuditEvents).parquet(dir)
-                  .agg(BloomSupport.bloomAgg(F.col("guid"), bloomItems, bloomBits).as("bf"))
-                  .head.getAs[Array[Byte]]("bf")
-              else batchBloom
-            BloomFunctions.mergeBloom(onDisk, batchBloom)
-        }
-      case None => batchBloom
+                            batchBloom: Array[Byte]): Array[Byte] = {
+    def rebuilt: Array[Byte] = {
+      val dir = s"$eventsPath/event_date=$d"
+      if (!exists(dir)) batchBloom
+      else BloomFunctions.mergeBloom(spark.read.schema(Schemas.cfAuditEvents).parquet(dir)
+        .agg(BloomSupport.bloomAgg(F.col("guid"), bloomItems, bloomBits).as("bf"))
+        .head.getAs[Array[Byte]]("bf"), batchBloom)
     }
+    old.flatMap(o => Try(BloomFunctions.mergeBloom(o, batchBloom)).toOption).getOrElse(rebuilt)
+  }
 
   /** The `event_date=` partition directories. */
   private def partitionDirs: Seq[FileStatus] =
@@ -374,10 +361,7 @@ final class ParquetEventStore(spark: SparkSession, warehouseDir: String) extends
   private def readSidecar(p: Path): Option[Long] =
     Try(readBytes(p).map(b => new String(b, "UTF-8").trim.toLong)).toOption.flatten
 
-  private def writeSidecar(p: Path, v: Long): Unit = {
-    val out = fs.create(p, true)
-    try out.write(v.toString.getBytes("UTF-8")) finally out.close()
-  }
+  private def writeSidecar(p: Path, v: Long): Unit = writeBytes(p, v.toString.getBytes("UTF-8"))
 
   private def readStatsCount(): Option[Long] = readSidecar(statsPath)
 
@@ -535,15 +519,24 @@ final class ParquetEventStore(spark: SparkSession, warehouseDir: String) extends
 
   /** Retention: drop whole partitions older than `cutoff` — an O(#dropped
     * partitions) metadata operation, the point of date-partitioned layout
-    * (no rewrite, no row-level delete). Returns dropped partition count. */
+    * (no rewrite, no row-level delete). The dropped dates' bloom sidecars
+    * go with them, and `_stats_count` is rewritten from an exact count.
+    * Returns dropped partition count. */
   def expireBefore(cutoff: java.sql.Date): Long = {
     val dropped = partitionDirs.filter { d =>
       val v = d.getPath.getName.stripPrefix("event_date=")
       java.sql.Date.valueOf(v).before(cutoff)
     }
-    dropped.foreach(d => fs.delete(d.getPath, true))
-    // The newest partition may be gone; the next read rebuilds from the table.
-    if (dropped.nonEmpty) fs.delete(latestPath, false)
+    if (dropped.nonEmpty) {
+      // Both go before the data: a crash then leaves them absent, and the
+      // next read or commit rebuilds them from the table.
+      fs.delete(statsPath, false)
+      fs.delete(latestPath, false) // the newest partition may be gone
+      dropped.foreach(d => fs.delete(d.getPath, true))
+      // After the data: a bloom left behind only over-approximates.
+      dropped.foreach(d => fs.delete(bloomPath(d.getPath.getName.stripPrefix("event_date=")), false))
+      writeStatsCount(AuditQueries.eventCount(events))
+    }
     dropped.length.toLong
   }
 
@@ -594,4 +587,10 @@ final class ParquetEventStore(spark: SparkSession, warehouseDir: String) extends
       w.write(g)
     } finally w.close()
   }
+}
+
+object ParquetEventStore {
+  /** Most valid rows one `storeCFAuditEvents` call takes: the ship batch
+    * cap (store.go:206). A collector page is at most 100 rows. */
+  val MaxBatchRows = 8192
 }

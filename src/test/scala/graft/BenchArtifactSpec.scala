@@ -41,14 +41,14 @@ class BenchArtifactSpec extends AnyFunSpec with Matchers {
     val afterPass1 = mapper.readTree(Files.readString(Paths.get(f)))
     afterPass1.get("queries").get("q1").asDouble() shouldBe 1.5
     afterPass1.get("completed_tiers").get(0).asText() shouldBe "grid_pass1"
-    a.set("pipeline", "{\"store_ev_s\":13000.0}")
-    a.tierDone("pipeline")
-    val afterPipe = mapper.readTree(Files.readString(Paths.get(f)))
-    afterPipe.get("completed_tiers").size() shouldBe 2
-    afterPipe.get("completed_tiers").get(1).asText() shouldBe "pipeline"
-    afterPipe.get("pipeline").get("store_ev_s").asDouble() shouldBe 13000.0
+    a.set("scaling", "{\"q1\":13000.0}")
+    a.tierDone("scaling")
+    val afterScaling = mapper.readTree(Files.readString(Paths.get(f)))
+    afterScaling.get("completed_tiers").size() shouldBe 2
+    afterScaling.get("completed_tiers").get(1).asText() shouldBe "scaling"
+    afterScaling.get("scaling").get("q1").asDouble() shouldBe 13000.0
     // earlier fragments survive later writes
-    afterPipe.get("queries_min").get("q1").asDouble() shouldBe 1.4
+    afterScaling.get("queries_min").get("q1").asDouble() shouldBe 1.4
   }
 
   it("the interrupt flush stamps the partial artifact and the truncation path is parseable") {

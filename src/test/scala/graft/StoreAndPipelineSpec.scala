@@ -265,7 +265,7 @@ class StoreAndPipelineSpec extends SparkSpec {
     }
 
     it("expires whole partitions before a cutoff date") {
-      val st = newStore()
+      val (st, dir) = newStoreAt()
       val f = new CfAuditEventFetcher(new FakeTransport(Map.empty), "")
       val collector = new Collector(spark, st, f, new MetricsRegistry)
       val mk = (g: String, at: String) => CfWireEvent(g, at, "t", "a", "at", "an", "au",
@@ -275,6 +275,13 @@ class StoreAndPipelineSpec extends SparkSpec {
         mk("new1", "2024-02-01T10:00:00Z"))))
       st.expireBefore(java.sql.Date.valueOf("2024-02-01")) shouldBe 2L
       st.events.collect().map(_.getAs[String]("guid")) shouldBe Array("new1")
+      st.getCFEventCount() shouldBe 1L
+      sidecarText(dir, "_stats_count") shouldBe "1"
+      bloomFiles(dir).keySet.filterNot(_.startsWith(".")) shouldBe Set("2024-02-01")
+      bloomFiles(dir).keySet.filter(_.contains("2024-01")) shouldBe empty
+      // later commits add to the exact count, not the pre-expiry one
+      st.storeCFAuditEvents(collector.pageToDf(Seq(mk("new2", "2024-02-02T10:00:00Z")))) shouldBe 1L
+      st.getCFEventCount() shouldBe 2L
     }
 
     it("expireBefore drops only event_date= directories, leaving the table's other entries alone") {
@@ -1160,12 +1167,10 @@ class StoreAndPipelineSpec extends SparkSpec {
     }
   }
 
-  // `ParquetEventStore.storeCFAuditEvents` has two paths: batches whose plan
-  // folds to a `LocalRelation` (every collector page) are deduped, numbered
-  // and bloomed on the driver; all others go through the distributed
-  // anti-join / `row_number` / bloom-aggregate plan. Both must leave the
-  // warehouse byte-for-byte in the same state, and the driver path must
-  // cost one Spark job per page.
+  // `ParquetEventStore.storeCFAuditEvents` has one write path: the batch is
+  // collected (at most `MaxBatchRows` valid rows) and deduped, numbered and
+  // bloomed on the driver. An in-memory model of the store's rules is its
+  // reference, and a collector page must cost one Spark job.
 
   // pageToDf's output schema is nullable; so is this one.
   private val nullableEvents = StructType(Schemas.cfAuditEvents.map(_.copy(nullable = true)))
@@ -1179,7 +1184,7 @@ class StoreAndPipelineSpec extends SparkSpec {
   private def onDriver(rows: Seq[Row]): DataFrame =
     spark.createDataFrame(rows.asJava, nullableEvents)
 
-  // One slice: first occurrence of an in-batch duplicate is deterministic.
+  // One slice: the collected row order is the batch order.
   private def distributed(rows: Seq[Row]): DataFrame =
     spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), nullableEvents)
 
@@ -1202,48 +1207,197 @@ class StoreAndPipelineSpec extends SparkSpec {
   private def storedRows(st: ParquetEventStore): Seq[Seq[Any]] =
     st.events.orderBy("id").collect().map(_.toSeq).toSeq
 
-  describe("driver path == distributed path") {
-    it("stores identical rows, ids, stats and bloom sidecars") {
-      val (drv, dirA) = newStoreAt()
-      val (dst, dirB) = newStoreAt()
-      def both(batch: Seq[Row]): Long = {
-        onDriver(batch).queryExecution.optimizedPlan shouldBe a[LocalRelation]
-        distributed(batch).queryExecution.optimizedPlan should not be a[LocalRelation]
-        val n = drv.storeCFAuditEvents(onDriver(batch))
-        dst.storeCFAuditEvents(distributed(batch)) shouldBe n
-        storedRows(drv) shouldBe storedRows(dst)
-        sidecarText(dirA, "_stats_maxid") shouldBe sidecarText(dirB, "_stats_maxid")
-        sidecarText(dirA, "_stats_count") shouldBe sidecarText(dirB, "_stats_count")
-        bloomFiles(dirA) shouldBe bloomFiles(dirB)
-        n
+  /** Every regular file under `dir` with its bytes. */
+  private def treeBytes(dir: Path): Map[String, Seq[Byte]] = {
+    val s = Files.walk(dir)
+    try s.iterator().asScala.filter(Files.isRegularFile(_))
+      .map(p => dir.relativize(p).toString -> Files.readAllBytes(p).toSeq).toMap
+    finally s.close()
+  }
+
+  describe("store write path") {
+    it("stores what an in-memory model of the store's rules stores, page after page (property)") {
+      import org.scalacheck.{Gen, Prop, Test}
+      import org.scalacheck.rng.Seed
+      // The store's fixed bloom sizing.
+      val (bloomItems, bloomBits) = (1L << 20, 1L << 23)
+      // A pool guid always carries the same created_at, so a later page
+      // holding it is an overlap re-fetch. 23:59:00 + 0..119 s spans two dates.
+      val base = Instant.parse("2024-05-01T23:59:00Z")
+      val poolAt = (i: Int) => base.plusSeconds((i * 37L) % 120).toString
+      val utfPair = Seq("xＡ", "x😀") // UTF-16 order differs from UTF-8's
+      val utfAt = base.plusSeconds(30).toString
+      sealed trait Step
+      final case class Page(events: Seq[(String, String)]) extends Step // (guid, raw created_at)
+      final case class DropBloom(pick: Int) extends Step
+      val genEvent: Gen[Seq[(String, String)]] = Gen.frequency(
+        (10, Gen.chooseNum(0, 29).map(i => Seq((s"g$i", poolAt(i))))),
+        // a pool guid re-delivered a day later: deduped only while its
+        // stored date is inside the page's scope
+        (1, Gen.chooseNum(0, 29).map(i => Seq((s"g$i", Instant.parse(poolAt(i)).plusSeconds(86400).toString)))),
+        (1, Gen.const(utfPair.map(_ -> utfAt))),
+        (1, Gen.oneOf("1969-12-31T23:59:59Z", "1970-01-01T00:00:00Z", null)
+          .flatMap(at => Gen.chooseNum(0, 29).map(i => Seq((s"g$i", at))))))
+      val genPage: Gen[Step] = Gen.frequency(
+        (12, Gen.chooseNum(1, 10).flatMap(n => Gen.listOfN(n, genEvent)).map(es => Page(es.flatten))),
+        (1, Gen.const(Page(Nil))),
+        (1, Gen.chooseNum(1, 4).flatMap(n => Gen.listOfN(n, Gen.chooseNum(0, 29)))
+          .map(is => Page(is.map(i => (s"g$i", if (i % 2 == 0) null else "1970-01-01T00:00:00Z"))))),
+        (1, Gen.chooseNum(0, 29).map(i => Page(Seq((s"g$i", poolAt(i)), (s"bad$i", "not-a-time"))))),
+        (2, Gen.chooseNum(0, 9).map(DropBloom(_))))
+      val genSteps = Gen.chooseNum(4, 10).flatMap(n => Gen.listOfN(n, genPage))
+
+      /** Java's String order is UTF-16; the store orders guids by UTF-8 bytes. */
+      val utf8Order: Ordering[String] = (a, b) =>
+        java.util.Arrays.compareUnsigned(a.getBytes("UTF-8"), b.getBytes("UTF-8"))
+      def micros(at: String): Option[Long] =
+        Option(at).map(Instant.parse).map(i => i.getEpochSecond * 1000000L + i.getNano / 1000)
+      def dateOf(at: String): String = at.take(10)
+
+      val prop = Prop.forAllNoShrink(genSteps) { steps =>
+        val (st, dir) = newStoreAt()
+        val collector = new Collector(spark, st,
+          new CfAuditEventFetcher(new FakeTransport(Map.empty), ""), new MetricsRegistry)
+        // model: stored rows in id order, as (guid, raw created_at, event_type)
+        val model = mutable.ArrayBuffer.empty[(String, String, String)]
+        val lostBlooms = mutable.Set.empty[String] // dates whose sidecar was deleted
+        val labels = mutable.Set.empty[String]
+        val failures = mutable.ArrayBuffer.empty[String]
+        def check(what: String, ok: Boolean): Unit = if (!ok) failures += what
+        steps.zipWithIndex.foreach {
+          case (DropBloom(pick), _) =>
+            val present = model.map(r => dateOf(r._2)).distinct.sorted.filterNot(lostBlooms)
+            if (present.nonEmpty) {
+              val d = present(pick % present.size)
+              Files.delete(dir.resolve(s"_bloom_guid/$d"))
+              lostBlooms += d
+            }
+          case (Page(evs), p) =>
+            val wire = evs.zipWithIndex.map { case ((g, at), k) =>
+              CfWireEvent(g, at, s"t$p-$k", "a", "at", "an", "au", "e", "et", "en", "", "sg", "{}")
+            }
+            val before = model.toVector
+            if (evs.exists(_._2 == "not-a-time")) {
+              // The ANSI cast refuses the whole page before any write.
+              labels += "unparseable"
+              val err = scala.util.Try(st.storeCFAuditEvents(collector.pageToDf(wire))).failed.toOption
+              check(s"page $p: unparseable page not refused", err.exists(_.getMessage.contains("CAST_INVALID_INPUT")))
+            } else {
+              evs.foreach { case (_, at) =>
+                if (at == null) labels += "null"
+                else if (at.startsWith("1969")) labels += "pre-epoch"
+                else if (at.startsWith("1970")) labels += "epoch"
+              }
+              val valid = wire.filter(w => micros(w.created_at).exists(_ > 0L)) // after the epoch
+              if (evs.isEmpty) labels += "empty"
+              else if (valid.isEmpty) labels += "all-invalid"
+              val firsts = valid.distinctBy(_.guid)
+              val minDate = if (firsts.isEmpty) "" else firsts.map(w => dateOf(w.created_at)).min
+              val inScope = before.filter(r => dateOf(r._2) >= minDate).map(_._1).toSet
+              val kept = firsts.filterNot(w => inScope(w.guid))
+                .sortWith { (a, b) =>
+                  val t = micros(a.created_at).get.compare(micros(b.created_at).get)
+                  if (t != 0) t < 0 else utf8Order.lt(a.guid, b.guid)
+                }
+              if (firsts.exists(w => inScope(w.guid))) {
+                labels += "refetch"
+                if (firsts.map(w => dateOf(w.created_at)).distinct.size > 1) labels += "refetch-span-dates"
+              }
+              if (firsts.exists(w => before.exists(_._1 == w.guid) && !inScope(w.guid))) labels += "out-of-scope"
+              if (kept.exists(k => valid.count(_.guid == k.guid) > 1)) labels += "in-page-dup"
+              if (utfPair.forall(g => kept.exists(_.guid == g))) labels += "utf-tie"
+              val keptDates = kept.map(w => dateOf(w.created_at)).toSet
+              if (firsts.nonEmpty && lostBlooms.exists(_ >= minDate)) labels += "probe-lost-bloom"
+              if (keptDates.exists(lostBlooms)) labels += "rebuild-lost-bloom"
+              lostBlooms --= keptDates
+              model ++= kept.map(w => (w.guid, w.created_at, w.event_type))
+              val n = st.storeCFAuditEvents(collector.pageToDf(wire))
+              check(s"page $p: stored $n, model ${kept.size}", n == kept.size.toLong)
+            }
+            // every stored row, in id order
+            val expected = model.zipWithIndex.map { case ((g, at, t), i) =>
+              Seq[Any](i + 1L, g, Timestamp.from(Instant.parse(at)), at, t,
+                "a", "at", "an", "au", "e", "et", "en", null, "sg", "{}")
+            }
+            check(s"page $p: stored rows", storedRows(st) == expected.toSeq)
+            check(s"page $p: count", st.getCFEventCount() == model.size.toLong)
+            check(s"page $p: _stats_maxid", sidecarText(dir, "_stats_maxid") == model.size.toString)
+            val latest = model.map(r => Instant.parse(r._2)).maxOption.getOrElse(Instant.EPOCH)
+            check(s"page $p: latest", st.getLatestCFEventTime().toInstant == latest)
+            // each sidecar is the bloom aggregate over its partition's guids
+            import spark.implicits._
+            val blooms = model.toSeq.map(r => (dateOf(r._2), r._1)).toDF("d", "guid")
+              .groupBy("d").agg(graft.functions.BloomSupport.bloomAgg(F.col("guid"), bloomItems, bloomBits))
+              .collect().map(r => r.getString(0) -> r.getAs[Array[Byte]](1).toSeq).toMap
+            val onDisk = bloomFiles(dir).filter { case (name, _) => !name.startsWith(".") }
+            check(s"page $p: bloom sidecars", onDisk == blooms.filter { case (d, _) => !lostBlooms(d) })
+            check(s"page $p: temporary files left", !treeBytes(dir).keys.exists(_.endsWith(".tmp")))
+        }
+        Prop.collect[Set[String]](labels.toSet)(Prop(failures.isEmpty) :| failures.mkString("; "))
       }
-      // in-batch duplicate (first occurrence wins), null org/space, a
-      // pre-epoch row, the epoch itself, an unparseable created_at, and two
-      // guids tied on created_at whose UTF-8 order differs from UTF-16's
-      both(Seq(
-        ev("g1", "2024-03-01T10:00:00Z", eventType = "first"),
-        ev("g2", "2024-03-01T11:00:00Z", org = null, space = null),
-        ev("g1", "2024-03-01T10:00:00Z", eventType = "second"),
-        ev("pre", "1969-12-31T23:59:59Z"),
-        ev("zero", "1970-01-01T00:00:00Z"),
-        ev("bad", "not-a-time"),
-        ev("xＡ", "2024-03-01T09:00:00Z"),
-        ev("x😀", "2024-03-01T09:00:00Z"))) shouldBe 4L
-      drv.events.filter("guid = 'g1'").collect().map(_.getAs[String]("event_type")) shouldBe
-        Array("first")
-      // overlap re-fetch of g2, spanning two dates
-      both(Seq(ev("g2", "2024-03-01T11:00:00Z"), ev("g3", "2024-03-01T12:00:00Z"),
-        ev("g4", "2024-03-02T01:00:00Z"))) shouldBe 2L
-      // g1 re-delivered with a later date: still found in 2024-03-01, the
-      // earlier partition inside the scope (min date of the batch)
-      both(Seq(ev("g5", "2024-03-01T23:00:00Z"), ev("g1", "2024-03-02T05:00:00Z"),
-        ev("g6", "2024-03-02T06:00:00Z"))) shouldBe 2L
-      both(Seq.empty) shouldBe 0L
-      // a scoped partition without its bloom sidecar still dedups exactly
-      Seq(dirA, dirB).foreach(d => Files.delete(d.resolve("_bloom_guid/2024-03-02")))
-      both(Seq(ev("g4", "2024-03-02T01:00:00Z"), ev("g7", "2024-03-02T07:00:00Z"))) shouldBe 1L
-      drv.events.count() shouldBe 9L
-      drv.getCFEventCount() shouldBe 9L
+      val result = Test.check(Test.Parameters.default.withMinSuccessfulTests(30).withWorkers(1)
+        .withInitialSeed(Seed(20241019L)), prop)
+      withClue(org.scalacheck.util.Pretty.pretty(result)) { result.passed shouldBe true }
+      result.freqMap.getCounts.flatMap(_._1).flatMap { case l: Set[_] => l }.toSet shouldBe
+        Set("refetch", "refetch-span-dates", "out-of-scope", "in-page-dup", "utf-tie", "null",
+          "pre-epoch", "epoch", "unparseable", "empty", "all-invalid", "probe-lost-bloom",
+          "rebuild-lost-bloom")
+    }
+
+    it("stores a parallelized (non-local) batch like its local twin") {
+      val (drv, dirA) = newStoreAt()
+      val (par, dirB) = newStoreAt()
+      val batch = Seq(ev("g1", "2024-03-01T10:00:00Z", eventType = "first"),
+        ev("g2", "2024-03-01T11:00:00Z", org = null), ev("g1", "2024-03-01T10:00:00Z", eventType = "second"))
+      distributed(batch).queryExecution.optimizedPlan should not be a[LocalRelation]
+      drv.storeCFAuditEvents(onDriver(batch)) shouldBe 2L
+      par.storeCFAuditEvents(distributed(batch)) shouldBe 2L
+      storedRows(par) shouldBe storedRows(drv)
+      Seq("_stats_maxid", "_stats_count", "_stats_latest").foreach { s =>
+        sidecarText(dirB, s) shouldBe sidecarText(dirA, s)
+      }
+      bloomFiles(dirB) shouldBe bloomFiles(dirA)
+    }
+
+    it("refuses a batch of more than MaxBatchRows valid rows, naming the cap, and writes nothing") {
+      val (st, dir) = newStoreAt()
+      st.storeCFAuditEvents(onDriver(Seq(ev("g1", "2024-03-01T10:00:00Z")))) shouldBe 1L
+      val before = treeBytes(dir)
+      val cap = ParquetEventStore.MaxBatchRows
+      // invalid rows do not count: cap valid rows plus one pre-epoch row is accepted below
+      val big = (0 to cap).map(i => ev(s"b$i", Instant.parse("2024-03-02T00:00:00Z").plusSeconds(i).toString))
+      val e = the[IllegalArgumentException] thrownBy st.storeCFAuditEvents(onDriver(big))
+      e.getMessage should include(cap.toString)
+      treeBytes(dir) shouldBe before
+      st.storeCFAuditEvents(onDriver(big.tail :+ ev("pre", "1969-12-31T23:59:59Z"))) shouldBe cap.toLong
+      st.getCFEventCount() shouldBe cap + 1L
+    }
+
+    it("replaces _stats_count whole while a reader reads it beside the commits") {
+      val (st, dir) = newStoreAt()
+      val stats = dir.resolve("_stats_count")
+      val done = new java.util.concurrent.atomic.AtomicBoolean(false)
+      // each distinct read in order (a repeat of the previous one is only counted)
+      val reads = mutable.ArrayBuffer.empty[String]
+      var total = 0L
+      val reader = new Thread(() => {
+        while (!done.get()) {
+          val s = scala.util.Try(new String(Files.readAllBytes(stats), "UTF-8")).getOrElse("<absent>")
+          total += 1
+          if (reads.lastOption.forall(_ != s)) reads += s
+        }
+      })
+      reader.start()
+      try (1 to 20).foreach { b =>
+        st.storeCFAuditEvents(onDriver((1 to 3).map(i => ev(s"g$b-$i", f"2024-03-01T10:$b%02d:0${i}Z"))))
+      } finally { done.set(true); reader.join() }
+      total should be > 20L
+      val bad = reads.filterNot(_.matches("[0-9]+"))
+      withClue(s"reads not a whole count, of $total: ${bad.distinct.take(5)}") { bad shouldBe empty }
+      val counts = reads.map(_.toLong).toSeq
+      counts shouldBe counts.sorted // non-decreasing
+      sidecarText(dir, "_stats_count") shouldBe "60"
+      treeBytes(dir).keys.filter(_.endsWith(".tmp")) shouldBe empty
     }
   }
 
@@ -1330,7 +1484,8 @@ class StoreAndPipelineSpec extends SparkSpec {
       val name = "cf-audit-events-to-splunk"
       val prop = Prop.forAllNoShrink(genCase) { case (evs, kind, pick, other) =>
         val (st, _) = newStoreAt()
-        st.storeCFAuditEvents(onDriver(evs.map { case (g, t) => ev(g, at(t)) }))
+        evs.map { case (g, t) => ev(g, at(t)) }.grouped(ParquetEventStore.MaxBatchRows)
+          .foreach(page => st.storeCFAuditEvents(onDriver(page)))
         val stored = st.events.select("guid", "created_at").orderBy("created_at", "guid").collect()
         // on, or just after, one of the earliest 64 events: a bulk case keeps > 8192 pending
         lazy val early = stored(pick % math.min(stored.length, 64))
