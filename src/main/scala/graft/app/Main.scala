@@ -123,7 +123,17 @@ object Main {
     val fetcher = new CfAuditEventFetcher(http, cfg.cfApiAddress,
       paginationWaitMillis = cfg.paginationWaitMillis,
       logger = logger.session("cf-audit-event-fetcher")) // main.go:52
-    val collector = new Collector(spark, store, fetcher, registry, logger = logger)
+    val shipper =
+      if (cfg.splunkApiKey.isEmpty || cfg.splunkUrl.isEmpty) None // ST8
+      else {
+        val hecHttp = new JdkHttpTransport(Duration.ofSeconds(2)) // shipper.go:63
+        val hec = new SplunkHecClient(hecHttp, cfg.splunkUrl, cfg.splunkApiKey)
+        Some(new SplunkShipper(store, hec, cfg.deployEnv, registry, logger = logger))
+      }
+    // A page that stores new rows wakes the shipper: SHIPPER_SCHEDULE is its
+    // longest idle wait, not the store-to-ship delay.
+    val collector = new Collector(spark, store, fetcher, registry, logger = logger,
+      onStored = () => shipper.foreach(_.wake()))
     val informer = new Informer(store, registry, logger = logger)
 
     val threads = scala.collection.mutable.ArrayBuffer.empty[Thread]
@@ -141,12 +151,7 @@ object Main {
         case Right(_) => ()
       }
     }
-    if (cfg.splunkApiKey.nonEmpty && cfg.splunkUrl.nonEmpty) { // ST8
-      val hecHttp = new JdkHttpTransport(Duration.ofSeconds(2)) // shipper.go:63
-      val hec = new SplunkHecClient(hecHttp, cfg.splunkUrl, cfg.splunkApiKey)
-      val shipper = new SplunkShipper(store, hec, cfg.deployEnv, registry, logger = logger)
-      spawn("shipper") { shipper.run(cfg.shipperScheduleMillis, () => stop.get()) }
-    }
+    shipper.foreach(s => spawn("shipper") { s.run(cfg.shipperScheduleMillis, () => stop.get()) })
     spawn("informer") { informer.run(cfg.informerScheduleMillis, () => stop.get()) }
 
     // Stop the loops and wait, at most 5 s in all, for each to finish its

@@ -23,7 +23,8 @@ trait EventStore {
     * skipped. `ParquetEventStore` keeps a guid's first row, numbers new
     * rows `max + 1 …` in (created_at, guid) order, and stores a batch
     * whose rows sit on the driver (a collector page) with one Spark job,
-    * two when its bloom sidecars say a guid may already be stored. */
+    * two when its bloom sidecars say a guid it did not append itself
+    * recently may already be stored. */
   def storeCFAuditEvents(batch: DataFrame): Long
 
   /** Ordered page over stored events (store.go:108-145). */
@@ -38,7 +39,9 @@ trait EventStore {
   /** Approximate event count — statistics read, not a scan (R16/S6). */
   def getCFEventCount(): Long
 
-  /** The 2-CTE unshipped query (store.go:191-225). */
+  /** The 2-CTE unshipped query (store.go:191-225). `ParquetEventStore`
+    * answers a cursor above its tail's watermark from its own recent
+    * appends, with no Spark job. */
   def getUnshippedCFAuditEventsForShipper(shipperName: String): DataFrame
 
   /** Cursor upsert; `updatedAt` is the event's RAW string timestamp — the

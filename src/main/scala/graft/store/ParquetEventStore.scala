@@ -47,6 +47,21 @@ import graft.operators.AuditQueries.RawEventFilter
   *    sidecar) go to one exact `guid IN (...)` scan over the partitions
   *    that matched; with no positives there is no probe job. Blooms have
   *    no false negatives, so the dedup stays exact.
+  *  - **The tail of this store's own appends**: the driver holds the last
+  *    rows this store appended, in (created_at, UTF-8 guid) order, at most
+  *    [[ParquetEventStore.MaxBatchRows]] of them (about 10 MB at 1 KB per
+  *    event), and a watermark. Invariant: every table row with
+  *    `created_at` above the watermark is in the tail. The watermark starts at epoch for a table
+  *    `init` created, and otherwise at the exact `max(created_at)` scanned
+  *    at this store's first append (never `_stats_latest`, which lags the
+  *    data after a crash); until then the tail is unknown and unused. Rows
+  *    join only after their append returned; evicting the oldest past the
+  *    cap raises the watermark to the highest evicted `created_at`, and
+  *    `expireBefore` makes the tail unknown again. Two reads use it:
+  *    a batch guid held in the tail with an in-scope date is stored, so
+  *    it skips the probe (an overlap re-fetch costs only the append), and
+  *    an unshipped read whose cursor is strictly above the watermark is
+  *    answered from the tail as a local DataFrame, with no Spark job.
   *  - **Sidecars are replaced, never rewritten in place**: `_stats_*` and
   *    `_bloom_guid/<date>` are written to a hidden temporary sibling and
   *    renamed over the old file, so the informer thread reading
@@ -61,11 +76,12 @@ import graft.operators.AuditQueries.RawEventFilter
   *    listing is the one it wrote (any other listing, such as a hand edit,
   *    is re-read once through Spark). An upsert writes one parquet file on
   *    the driver and swaps it in with a rename-aside swap, and the unshipped
-  *    plan takes the resolved cursor as literals: a steady-state shipper
-  *    tick runs one Spark job, its scan. At any scale #shippers is tiny.
+  *    plan takes the resolved cursor as literals; a shipper tick whose
+  *    cursor is above the tail's watermark runs no Spark job, any other
+  *    runs one, its scan. At any scale #shippers is tiny.
   */
 final class ParquetEventStore(spark: SparkSession, warehouseDir: String) extends EventStore {
-  import ParquetEventStore.MaxBatchRows
+  import ParquetEventStore.{MaxBatchRows, Tail, TailRow}
 
   private val eventsPath = s"$warehouseDir/cf_audit_events"
   private val cursorsPath = s"$warehouseDir/shipper_cursors"
@@ -91,6 +107,7 @@ final class ParquetEventStore(spark: SparkSession, warehouseDir: String) extends
       writeSidecar(maxIdPath, 0L)
       writeStatsCount(0L)
       writeSidecar(latestPath, 0L) // epoch, the empty-table sentinel
+      tail = Some(Tail(Vector.empty, 0L))
     }
     // A crash inside updateShipperCursor's swap can leave the live cursor
     // table renamed aside, complete: bring it back rather than start empty.
@@ -132,6 +149,7 @@ final class ParquetEventStore(spark: SparkSession, warehouseDir: String) extends
   // The rows carry whatever nulls the batch had.
   private val nullableEventsWithDate =
     StructType(eventsWithDateSchema.map(_.copy(nullable = true)))
+  private val nullableEvents = StructType(Schemas.cfAuditEvents.map(_.copy(nullable = true)))
   private val idIdx = Schemas.cfAuditEvents.fieldIndex("id")
   private val guidIdx = Schemas.cfAuditEvents.fieldIndex("guid")
   private val createdIdx = Schemas.cfAuditEvents.fieldIndex("created_at")
@@ -148,6 +166,19 @@ final class ParquetEventStore(spark: SparkSession, warehouseDir: String) extends
     if (t != 0) t else guidOrder.compare(a.getString(guidIdx), b.getString(guidIdx))
   }
 
+  /** See the class doc; None while unknown. Written by the appending thread
+    * (and `expireBefore`), read by the shipper's. */
+  @volatile private var tail: Option[Tail] = None
+
+  /** `prior` with `added` (rows just appended), cut to the oldest-first
+    * cap. The sort is stable, so rows that tie (NULL guids) stay in id order. */
+  private def extended(prior: Tail, added: Seq[TailRow]): Tail = {
+    val all = (prior.rows ++ added).sortBy(_.row)(ingestOrder)
+    val cut = all.length - MaxBatchRows
+    if (cut <= 0) Tail(all, prior.watermark)
+    else Tail(all.drop(cut), math.max(prior.watermark, all(cut - 1).at))
+  }
+
   /** Stores a batch already collected (rows: event columns, event_date,
     * `__day`): first row per guid, dedup against the overlap scope, ids in
     * (created_at, guid) order, per-date blooms. The parquet append is the
@@ -160,9 +191,12 @@ final class ParquetEventStore(spark: SparkSession, warehouseDir: String) extends
       .filter(d => Try(LocalDate.parse(d)).toOption.exists(!_.isBefore(minDay)))
     val batchDays = fresh.map(_.getString(dayIdx)).distinct
     val sidecars = (scope ++ batchDays).distinct.map(d => d -> readBytes(bloomPath(d))).toMap
-    // Blooms have no false negatives: only bloom-positive guids (all guids
-    // where a scoped partition has no readable sidecar) can be stored.
-    val guids = fresh.map(_.getString(guidIdx)).filter(_ != null)
+    // A guid the tail holds at an in-scope date is stored; the rest are
+    // probed. Blooms have no false negatives: only bloom-positive guids
+    // (all guids where a scoped partition has no readable sidecar) can be.
+    val prior = tail
+    val inTail = (g: String) => prior.exists(_.holds(g, minDay))
+    val guids = fresh.map(_.getString(guidIdx)).filter(g => g != null && !inTail(g))
       .map(g => g -> BloomFunctions.hashDriver(g))
     val positives = scope.flatMap { d =>
       val bf = sidecars(d).flatMap(b => Try(BloomFilter.readFrom(b)).toOption)
@@ -174,9 +208,14 @@ final class ParquetEventStore(spark: SparkSession, warehouseDir: String) extends
         .parquet(positives.map(_._1).distinct.map(d => s"$eventsPath/event_date=$d"): _*)
         .filter(F.col("guid").isin(positives.map(_._2).distinct: _*))
         .select("guid").collect().map(_.getString(0)).toSet
-    val kept = fresh.filterNot(r => stored.contains(r.getString(guidIdx))).sorted(ingestOrder)
+    val kept = fresh.filterNot { r =>
+      val g = r.getString(guidIdx)
+      inTail(g) || stored.contains(g)
+    }.sorted(ingestOrder)
     val n = kept.length.toLong
     if (n > 0) {
+      // Before the append: the exact max the rows above it are measured from.
+      val tailBefore = prior.getOrElse(Tail(Vector.empty, micros(scanLatest())))
       val base = maxId()
       val withId = kept.iterator.zipWithIndex.map { case (r, i) =>
         Row.fromSeq(r.toSeq.init.updated(idIdx, base + 1 + i))
@@ -184,10 +223,16 @@ final class ParquetEventStore(spark: SparkSession, warehouseDir: String) extends
       val blooms = kept.groupBy(_.getString(dayIdx)).toSeq.map { case (d, rs) =>
         d -> BloomFunctions.bloomDriver(rs.map(_.getString(guidIdx)), bloomItems, bloomBits)
       }
-      commit(base, n, blooms, sidecars, kept.map(r => micros(r.getTimestamp(createdIdx))).max) {
+      val added = withId.zip(kept).map { case (r, k) =>
+        TailRow(Row.fromSeq(r.toSeq.take(Schemas.cfAuditEvents.length)), micros(r.getTimestamp(createdIdx)),
+          LocalDate.parse(k.getString(dayIdx)))
+      }
+      commit(base, n, blooms, sidecars, added.map(_.at).max) {
         spark.createDataFrame(withId.asJava, nullableEventsWithDate)
           .coalesce(1) // one file per date
           .write.mode(SaveMode.Append).partitionBy("event_date").parquet(eventsPath)
+        // Only now are the rows in the table; a throwing append adds none.
+        tail = Some(extended(tailBefore, added))
       }
     }
     n
@@ -368,15 +413,26 @@ final class ParquetEventStore(spark: SparkSession, warehouseDir: String) extends
   private def writeStatsCount(total: Long): Unit = writeSidecar(statsPath, total)
 
   override def getUnshippedCFAuditEventsForShipper(shipperName: String): DataFrame = {
-    // Resolve the cursor on the driver (the reference's scalar subquery)
-    // and plan with it as literals, so building the plan runs no job. It
-    // also becomes a PARTITION predicate: the query's own filter is on
-    // created_at, which prunes files via footer stats but not partitions —
-    // event_date >= date(cursor) prunes whole partitions, keeping this scan
-    // O(unshipped days) on a 100 TB table.
+    // Resolve the cursor on the driver (the reference's scalar subquery).
     val (ts, guid) = AuditQueries.lastShippedOf(cursorRows(), shipperName)
-    val pruned = eventsWithDate.filter(F.col("event_date") >= F.to_date(F.lit(ts)))
-    AuditQueries.unshippedAfter(pruned, F.lit(ts), F.lit(guid), Schemas.cfAuditEvents.fieldNames.toSeq)
+    val from = micros(ts)
+    tail.filter(_.watermark < from) match {
+      case Some(t) =>
+        // Every row at or after the cursor is in the tail: unshippedAfter's
+        // filter, order, cap and guid anti-filter (NULL on either side
+        // drops the row) on the driver, as a local DataFrame.
+        val rows = t.rows.iterator.filter(_.at >= from).take(MaxBatchRows).map(_.row)
+          .filter { r => val g = r.getString(guidIdx); guid != null && g != null && g != guid }
+        spark.createDataFrame(rows.toSeq.asJava, nullableEvents)
+      case None =>
+        // Plan with the cursor as literals, so building the plan runs no
+        // job. It also becomes a PARTITION predicate: the query's own filter
+        // is on created_at, which prunes files via footer stats but not
+        // partitions — event_date >= date(cursor) prunes whole partitions,
+        // keeping this scan O(unshipped days) on a 100 TB table.
+        val pruned = eventsWithDate.filter(F.col("event_date") >= F.to_date(F.lit(ts)))
+        AuditQueries.unshippedAfter(pruned, F.lit(ts), F.lit(guid), Schemas.cfAuditEvents.fieldNames.toSeq)
+    }
   }
 
   /** The cursor rows last read or written, and the `shipper_cursors`
@@ -528,6 +584,7 @@ final class ParquetEventStore(spark: SparkSession, warehouseDir: String) extends
       java.sql.Date.valueOf(v).before(cutoff)
     }
     if (dropped.nonEmpty) {
+      tail = None // the next append re-reads the watermark from the table
       // Both go before the data: a crash then leaves them absent, and the
       // next read or commit rebuilds them from the table.
       fs.delete(statsPath, false)
@@ -590,7 +647,25 @@ final class ParquetEventStore(spark: SparkSession, warehouseDir: String) extends
 }
 
 object ParquetEventStore {
-  /** Most valid rows one `storeCFAuditEvents` call takes: the ship batch
-    * cap (store.go:206). A collector page is at most 100 rows. */
+  /** Most valid rows one `storeCFAuditEvents` call takes, and most rows the
+    * tail holds: the ship batch cap (store.go:206). A collector page is at
+    * most 100 rows. */
   val MaxBatchRows = 8192
+
+  private val GuidIdx = Schemas.cfAuditEvents.fieldIndex("guid")
+
+  /** A row this store appended (event columns), its `created_at` in epoch
+    * micros and its `event_date`. */
+  private final case class TailRow(row: Row, at: Long, day: LocalDate)
+
+  /** `rows` in (created_at, guid) order; every table row with
+    * `created_at` above `watermark` (epoch micros) is among them. */
+  private final case class Tail(rows: Vector[TailRow], watermark: Long) {
+    private lazy val latestDay: Map[String, LocalDate] =
+      rows.groupMapReduce(_.row.getString(GuidIdx))(_.day)((a, b) => if (a.isAfter(b)) a else b)
+
+    /** Whether a row of `guid` is held at a date on or after `day`. */
+    def holds(guid: String, day: LocalDate): Boolean =
+      guid != null && latestDay.get(guid).exists(!_.isBefore(day))
+  }
 }

@@ -19,6 +19,10 @@ import graft.store.EventStore
   * the caller. The re-fetch overlap + guid-dedup store makes the loop safe
   * under at-least-once delivery — exactly Spark's "late data + idempotent
   * sink" pattern.
+  *
+  * `onStored` runs after each page write that stored at least one new row;
+  * `Main` wakes the shipper with it, so new rows ship without waiting out
+  * the shipper's schedule.
   */
 final class Collector(
     spark: SparkSession,
@@ -26,11 +30,13 @@ final class Collector(
     fetcher: CfAuditEventFetcher,
     registry: MetricsRegistry,
     overlapSeconds: Long = 5L,
-    logger: graft.logging.Lager = graft.logging.Lager.noop) {
+    logger: graft.logging.Lager = graft.logging.Lager.noop,
+    onStored: () => Unit = () => ()) {
 
   // lager session naming as the reference: collector.go:26 + :31
   private val lsession = logger.session("cf-audit-event-collector").session("run")
   private var eventsCollectedLifetime = 0L
+  private val pacer = new Pacer
 
   /** Resume point: `max(created_at) − overlap`, clamped at epoch, with the
     * reference's year<1970 sentinel handling (collector.go:92-104). */
@@ -78,7 +84,7 @@ final class Collector(
             lsession.error("err-recv-events", e) // collector.go:55
             error = Some(e)
           case None if page.events.nonEmpty =>
-            store.storeCFAuditEvents(pageToDf(page.events))
+            if (store.storeCFAuditEvents(pageToDf(page.events)) > 0) onStored()
             collected += page.events.size // reference counts fetched (collector.go:67-68)
             eventsCollectedLifetime += page.events.size
             registry.inc(Metrics.CollectorEventsCollected, page.events.size.toDouble)
@@ -111,8 +117,7 @@ final class Collector(
           case Left(e) => return Left(e) // fail-fast, main exits (main.go:94-97)
           case Right(_) => ()
         }
-        val deadline = System.currentTimeMillis() + scheduleMillis
-        while (!stop() && System.currentTimeMillis() < deadline) Thread.sleep(50L)
+        pacer.await(scheduleMillis, stop)
       }
       Right(())
     } finally lsession.info("end")

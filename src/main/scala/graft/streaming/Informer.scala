@@ -12,6 +12,7 @@ final class Informer(store: EventStore, registry: MetricsRegistry,
 
   // lager session naming as the reference: informer.go:22 + :27
   private val lsession = logger.session("informer").session("run")
+  private val pacer = new Pacer
 
   def informOnce(): Unit = {
     val count =
@@ -30,8 +31,7 @@ final class Informer(store: EventStore, registry: MetricsRegistry,
     lsession.info("start") // informer.go:29-30
     try while (!stop()) {
       informOnce()
-      val deadline = System.currentTimeMillis() + scheduleMillis
-      while (!stop() && System.currentTimeMillis() < deadline) Thread.sleep(50L)
+      pacer.await(scheduleMillis, stop)
     } finally lsession.info("end")
   }
 }

@@ -151,13 +151,19 @@ final class SplunkShipper(
         false
     }
 
-  /** Periodic loop: errors are isolated — tick again next schedule (ST5). */
+  private val pacer = new Pacer
+
+  /** Ends `run`'s current wait early, so rows just stored ship now; wakes
+    * that arrive while a tick runs coalesce into one more tick. */
+  def wake(): Unit = pacer.wake()
+
+  /** Periodic loop: errors are isolated — tick again next schedule (ST5).
+    * `scheduleMillis` is the longest idle wait: a `wake` ends it early. */
   def run(scheduleMillis: Long, stop: () => Boolean): Unit = {
     lsession.info("start") // shipper.go:96-97
     try while (!stop()) {
       shipOnce()
-      val deadline = System.currentTimeMillis() + scheduleMillis
-      while (!stop() && System.currentTimeMillis() < deadline) Thread.sleep(50L)
+      pacer.await(scheduleMillis, stop)
     } finally lsession.info("end")
   }
 }

@@ -338,7 +338,7 @@ class StoreAndPipelineSpec extends SparkSpec {
     }
 
     it("unshipped scan prunes partitions from the cursor date") {
-      val st = newStore()
+      val (st, dir) = newStoreAt()
       val f = new CfAuditEventFetcher(new FakeTransport(Map.empty), "")
       val collector = new Collector(spark, st, f, new MetricsRegistry)
       val mk = (g: String, at: String) => CfWireEvent(g, at, "t", "a", "at", "an", "au",
@@ -346,7 +346,8 @@ class StoreAndPipelineSpec extends SparkSpec {
       st.storeCFAuditEvents(collector.pageToDf(Seq(
         mk("g1", "2024-01-01T10:00:00Z"), mk("g2", "2024-03-01T10:00:00Z"))))
       st.updateShipperCursor("s", "2024-03-01T00:00:00Z", "g1")
-      val q = st.getUnshippedCFAuditEventsForShipper("s")
+      // a store that has not appended yet (a restarted daemon) scans
+      val q = new ParquetEventStore(spark, dir.toString).getUnshippedCFAuditEventsForShipper("s")
       q.collect().map(_.getAs[String]("guid")) shouldBe Array("g2")
       val plan = q.queryExecution.executedPlan.toString
       plan should include("PartitionFilters")
@@ -798,6 +799,99 @@ class StoreAndPipelineSpec extends SparkSpec {
     }
   }
 
+  describe("loop pacing and the collector-to-shipper wake") {
+    val p1 = "/v2/events?q=timestamp%3E1970-01-01T00%3A00%3A00Z&results-per-page=100"
+    val p2 = "/v2/events?q=timestamp%3E2024-01-01T09%3A59%3A55Z&results-per-page=100"
+    def feed = new FakeTransport(Map(
+      p1 -> HttpReply(200, pageJson(Seq("g1"), Seq("2024-01-01T10:00:00Z"), "")),
+      p2 -> HttpReply(200, pageJson(Seq("g1"), Seq("2024-01-01T10:00:00Z"), ""))))
+    def waitUntil(what: String)(cond: => Boolean): Unit = {
+      val deadline = System.nanoTime() + 60L * 1000000000L
+      while (!cond && System.nanoTime() < deadline) Thread.sleep(10L)
+      withClue(what) { cond shouldBe true }
+    }
+
+    it("Pacer returns at the deadline, on stop, or on a wake; wakes coalesce") {
+      val pacer = new graft.streaming.Pacer
+      def timed(body: => Unit): Long = { val t = System.nanoTime(); body; (System.nanoTime() - t) / 1000000L }
+      timed(pacer.await(300L, () => false)) should be >= 300L
+      timed(pacer.await(60000L, () => true)) should be < 1000L
+      pacer.wake(); pacer.wake() // two wakes before a wait are one
+      timed(pacer.await(60000L, () => false)) should be < 1000L
+      timed(pacer.await(300L, () => false)) should be >= 300L
+      val waker = new Thread(() => { Thread.sleep(200L); pacer.wake() })
+      waker.start()
+      timed(pacer.await(60000L, () => false)) should be < 10000L
+      waker.join()
+    }
+
+    it("a page that stores new rows wakes the shipper: it reaches HEC in under 2 s on a 60 s schedule") {
+      val st = newStore()
+      @volatile var receivedAt = 0L
+      val hec = new HttpTransport {
+        def get(url: String, headers: Map[String, String]): HttpReply = throw new UnsupportedOperationException
+        def post(url: String, body: String, headers: Map[String, String]): HttpReply = {
+          if (receivedAt == 0L) receivedAt = System.nanoTime()
+          HttpReply(200, "ok")
+        }
+      }
+      val reg = new MetricsRegistry
+      val shipper = new SplunkShipper(st, new SplunkHecClient(hec, "https://hec", "KEY", sleep = _ => ()),
+        "test-env", reg)
+      @volatile var wokenAt = 0L
+      val collector = new Collector(spark, st, new CfAuditEventFetcher(feed, "", paginationWaitMillis = 0),
+        new MetricsRegistry, onStored = () => { wokenAt = System.nanoTime(); shipper.wake() })
+      val stop = new java.util.concurrent.atomic.AtomicBoolean(false)
+      val loop = new Thread(() => shipper.run(60000L, () => stop.get()))
+      loop.start()
+      try {
+        waitUntil("the shipper's first tick")(reg.counterValue(Metrics.ShipperShipDuration) > 0.0)
+        collector.collectOnce() shouldBe Right(1L)
+        wokenAt should be > 0L
+        waitUntil("g1 at HEC")(receivedAt > 0L)
+        (receivedAt - wokenAt) should be < 2000L * 1000000L
+      } finally { stop.set(true); loop.join(10000L) }
+      loop.isAlive shouldBe false
+    }
+
+    it("a page that only re-fetches the overlap does not wake the shipper") {
+      val st = newStore()
+      val wakes = new AtomicInteger(0)
+      val collector = new Collector(spark, st, new CfAuditEventFetcher(feed, "", paginationWaitMillis = 0),
+        new MetricsRegistry, onStored = () => wakes.incrementAndGet())
+      collector.collectOnce() shouldBe Right(1L)
+      wakes.get() shouldBe 1
+      collector.collectOnce() shouldBe Right(1L) // fetched again, stored 0
+      wakes.get() shouldBe 1
+      st.events.count() shouldBe 1L
+    }
+
+    it("stop ends every loop within the drain deadline, whatever its schedule") {
+      val st = newStore()
+      val counts = new AtomicInteger(0)
+      val counting = new DelegatingStore(st) {
+        override def getCFEventCount(): Long = { counts.incrementAndGet(); super.getCFEventCount() }
+      }
+      val reg = new MetricsRegistry
+      val collector = new Collector(spark, counting, new CfAuditEventFetcher(feed, "", paginationWaitMillis = 0), reg)
+      val shipper = new SplunkShipper(counting,
+        new SplunkHecClient(new FakePoster(Nil), "https://hec", "KEY", sleep = _ => ()), "test-env", reg)
+      val informer = new Informer(counting, reg)
+      val stop = new java.util.concurrent.atomic.AtomicBoolean(false)
+      val loops = Seq[() => Unit](
+        () => collector.run(60000L, () => stop.get()),
+        () => shipper.run(60000L, () => stop.get()),
+        () => informer.run(60000L, () => stop.get())).map(body => new Thread(() => body()))
+      loops.foreach(_.start())
+      try waitUntil("one tick of each loop")(reg.counterValue(Metrics.CollectorCollectDuration) > 0.0 &&
+        reg.counterValue(Metrics.ShipperShipDuration) > 0.0 && counts.get() > 0)
+      finally stop.set(true)
+      val deadline = System.currentTimeMillis() + 5000L // Main's drain deadline
+      loops.foreach(t => t.join(math.max(1L, deadline - System.currentTimeMillis())))
+      loops.map(_.isAlive) shouldBe Seq(false, false, false)
+    }
+  }
+
   describe("Main on SIGTERM (ST7, main.go:124-135)") {
     it("drains the collector before Spark stops: no fatal exit, no error line, page 1 stored once") {
       // A CF stub that holds page 2 until after the SIGTERM, as a slow API
@@ -1215,6 +1309,27 @@ class StoreAndPipelineSpec extends SparkSpec {
     finally s.close()
   }
 
+  /** Spark jobs `body` launches on this thread. */
+  private def jobsOf(body: => Unit): Int = {
+    val tag = s"store-jobs-${System.nanoTime()}"
+    val n = new AtomicInteger(0)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null && e.properties.getProperty("graft.spec.jobs") == tag)
+          n.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    spark.sparkContext.setLocalProperty("graft.spec.jobs", tag)
+    try { body; TestBus.drain(spark.sparkContext); n.get }
+    finally {
+      spark.sparkContext.setLocalProperty("graft.spec.jobs", null)
+      spark.sparkContext.removeSparkListener(listener)
+    }
+  }
+
+  /** Whether an unshipped read was answered from the store's tail. */
+  private def fromTail(df: DataFrame): Boolean = df.queryExecution.logical.isInstanceOf[LocalRelation]
+
   describe("store write path") {
     it("stores what an in-memory model of the store's rules stores, page after page (property)") {
       import org.scalacheck.{Gen, Prop, Test}
@@ -1230,6 +1345,7 @@ class StoreAndPipelineSpec extends SparkSpec {
       sealed trait Step
       final case class Page(events: Seq[(String, String)]) extends Step // (guid, raw created_at)
       final case class DropBloom(pick: Int) extends Step
+      case object Restart extends Step // a new store over the warehouse: its tail is unknown
       val genEvent: Gen[Seq[(String, String)]] = Gen.frequency(
         (10, Gen.chooseNum(0, 29).map(i => Seq((s"g$i", poolAt(i))))),
         // a pool guid re-delivered a day later: deduped only while its
@@ -1244,7 +1360,8 @@ class StoreAndPipelineSpec extends SparkSpec {
         (1, Gen.chooseNum(1, 4).flatMap(n => Gen.listOfN(n, Gen.chooseNum(0, 29)))
           .map(is => Page(is.map(i => (s"g$i", if (i % 2 == 0) null else "1970-01-01T00:00:00Z"))))),
         (1, Gen.chooseNum(0, 29).map(i => Page(Seq((s"g$i", poolAt(i)), (s"bad$i", "not-a-time"))))),
-        (2, Gen.chooseNum(0, 9).map(DropBloom(_))))
+        (2, Gen.chooseNum(0, 9).map(DropBloom(_))),
+        (1, Gen.const(Restart)))
       val genSteps = Gen.chooseNum(4, 10).flatMap(n => Gen.listOfN(n, genPage))
 
       /** Java's String order is UTF-16; the store orders guids by UTF-8 bytes. */
@@ -1255,16 +1372,22 @@ class StoreAndPipelineSpec extends SparkSpec {
       def dateOf(at: String): String = at.take(10)
 
       val prop = Prop.forAllNoShrink(genSteps) { steps =>
-        val (st, dir) = newStoreAt()
+        val (first, dir) = newStoreAt()
+        var st = first
         val collector = new Collector(spark, st,
           new CfAuditEventFetcher(new FakeTransport(Map.empty), ""), new MetricsRegistry)
         // model: stored rows in id order, as (guid, raw created_at, event_type)
         val model = mutable.ArrayBuffer.empty[(String, String, String)]
         val lostBlooms = mutable.Set.empty[String] // dates whose sidecar was deleted
+        val tailRows = mutable.Set.empty[(String, String)] // (guid, date) stored by the current instance
         val labels = mutable.Set.empty[String]
         val failures = mutable.ArrayBuffer.empty[String]
         def check(what: String, ok: Boolean): Unit = if (!ok) failures += what
         steps.zipWithIndex.foreach {
+          case (Restart, _) =>
+            st = new ParquetEventStore(spark, dir.toString)
+            st.init()
+            tailRows.clear()
           case (DropBloom(pick), _) =>
             val present = model.map(r => dateOf(r._2)).distinct.sorted.filterNot(lostBlooms)
             if (present.nonEmpty) {
@@ -1301,6 +1424,10 @@ class StoreAndPipelineSpec extends SparkSpec {
                 }
               if (firsts.exists(w => inScope(w.guid))) {
                 labels += "refetch"
+                // a dedup hit is served from the tail, or by the probe
+                val inTail = (g: String) => tailRows.exists(r => r._1 == g && r._2 >= minDate)
+                if (firsts.exists(w => inScope(w.guid) && inTail(w.guid))) labels += "dedup-tail"
+                if (firsts.exists(w => inScope(w.guid) && !inTail(w.guid))) labels += "dedup-probe"
                 if (firsts.map(w => dateOf(w.created_at)).distinct.size > 1) labels += "refetch-span-dates"
               }
               if (firsts.exists(w => before.exists(_._1 == w.guid) && !inScope(w.guid))) labels += "out-of-scope"
@@ -1311,6 +1438,7 @@ class StoreAndPipelineSpec extends SparkSpec {
               if (keptDates.exists(lostBlooms)) labels += "rebuild-lost-bloom"
               lostBlooms --= keptDates
               model ++= kept.map(w => (w.guid, w.created_at, w.event_type))
+              tailRows ++= kept.map(w => (w.guid, dateOf(w.created_at)))
               val n = st.storeCFAuditEvents(collector.pageToDf(wire))
               check(s"page $p: stored $n, model ${kept.size}", n == kept.size.toLong)
             }
@@ -1341,7 +1469,7 @@ class StoreAndPipelineSpec extends SparkSpec {
       result.freqMap.getCounts.flatMap(_._1).flatMap { case l: Set[_] => l }.toSet shouldBe
         Set("refetch", "refetch-span-dates", "out-of-scope", "in-page-dup", "utf-tie", "null",
           "pre-epoch", "epoch", "unparseable", "empty", "all-invalid", "probe-lost-bloom",
-          "rebuild-lost-bloom")
+          "rebuild-lost-bloom", "dedup-tail", "dedup-probe")
     }
 
     it("stores a parallelized (non-local) batch like its local twin") {
@@ -1402,24 +1530,6 @@ class StoreAndPipelineSpec extends SparkSpec {
   }
 
   describe("driver path job count") {
-    /** Spark jobs `body` launches on this thread. */
-    def jobsOf(body: => Unit): Int = {
-      val tag = s"store-jobs-${System.nanoTime()}"
-      val n = new AtomicInteger(0)
-      val listener = new SparkListener {
-        override def onJobStart(e: SparkListenerJobStart): Unit =
-          if (e.properties != null && e.properties.getProperty("graft.spec.jobs") == tag)
-            n.incrementAndGet()
-      }
-      spark.sparkContext.addSparkListener(listener)
-      spark.sparkContext.setLocalProperty("graft.spec.jobs", tag)
-      try { body; TestBus.drain(spark.sparkContext); n.get }
-      finally {
-        spark.sparkContext.setLocalProperty("graft.spec.jobs", null)
-        spark.sparkContext.removeSparkListener(listener)
-      }
-    }
-
     it("costs one job for a fresh-date page and at most two for a re-fetch") {
       val (st, _) = newStoreAt()
       val collector = new Collector(spark, st,
@@ -1440,9 +1550,11 @@ class StoreAndPipelineSpec extends SparkSpec {
     }
 
     it("a warm store reads the latest time, plans unshipped, commits the cursor and informs with no job") {
-      val (st, _) = newStoreAt()
-      st.storeCFAuditEvents(onDriver(Seq(
+      val (writer, dir) = newStoreAt()
+      writer.storeCFAuditEvents(onDriver(Seq(
         ev("g1", "2024-05-01T10:00:00Z"), ev("g2", "2024-05-01T10:00:01Z"))))
+      // a restarted store: its tail is unknown until it appends, so the shipper scans
+      val st = new ParquetEventStore(spark, dir.toString)
       // a store loads the cursor table through Spark once; then it is warm
       jobsOf(st.getUnshippedCFAuditEventsForShipper("s")) should be >= 1
       jobsOf(st.getUnshippedCFAuditEventsForShipper("s")) shouldBe 0
@@ -1499,11 +1611,12 @@ class StoreAndPipelineSpec extends SparkSpec {
             st.updateShipperCursor(name, base.plusSeconds(61).toString, stored.last.getString(0)); kind
         }
         if (other) st.updateShipperCursor("other", base.plusSeconds(99).toString, "g0")
-        val daemon = st.getUnshippedCFAuditEventsForShipper(name).collect().toSeq
+        val read = st.getUnshippedCFAuditEventsForShipper(name)
+        val daemon = read.collect().toSeq
         val board = AuditQueries.unshipped(st.events, st.cursors, name).collect().toSeq
         val byTime = stored.groupBy(_.getTimestamp(1)).values
         val from = AuditQueries.lastShippedOf(st.cursors.collect().toSeq, name)._1
-        val labels = Set(label) ++
+        val labels = Set(label, if (fromTail(read)) "tail" else "scan") ++
           (if (stored.count(!_.getTimestamp(1).before(from)) > 8192) Set("over-cap") else Set()) ++
           (if (byTime.exists(_.length > 1)) Set("same-second") else Set()) ++
           (if (byTime.exists(_.map(_.getString(0)).toSet == Set("xＡ", "x😀"))) Set("utf-tie") else Set())
@@ -1513,7 +1626,139 @@ class StoreAndPipelineSpec extends SparkSpec {
         .withInitialSeed(Seed(20241018L)), prop)
       withClue(org.scalacheck.util.Pretty.pretty(result)) { result.passed shouldBe true }
       result.freqMap.getCounts.flatMap(_._1).flatMap { case l: Set[_] => l }.toSet shouldBe
-        Set("none", "on-event", "between", "after-all", "over-cap", "same-second", "utf-tie")
+        Set("none", "on-event", "between", "after-all", "over-cap", "same-second", "utf-tie", "tail", "scan")
+    }
+  }
+
+  describe("the tail of the store's own appends") {
+    val mk = (g: String, at: String) => CfWireEvent(g, at, "t", "a", "at", "an", "au",
+      "e", "et", "en", "", "sg", "{}")
+    def guidsOf(df: DataFrame): Seq[String] = df.select("guid").collect().map(_.getString(0)).toSeq
+    def shipperOf(st: EventStore, poster: FakePoster) = new SplunkShipper(st,
+      new SplunkHecClient(poster, "https://hec", "KEY", sleep = _ => ()), "test-env", new MetricsRegistry,
+      shipperName = "s")
+    def posted(poster: FakePoster): Seq[String] =
+      poster.posts.toSeq.map(p => "\"guid\":\"([^\"]+)\"".r.findFirstMatchIn(p._2).get.group(1))
+
+    it("a warm re-fetch of guids this store appended runs one job, the append") {
+      val (st, _) = newStoreAt()
+      val collector = new Collector(spark, st,
+        new CfAuditEventFetcher(new FakeTransport(Map.empty), ""), new MetricsRegistry)
+      val page1 = (0 until 100).map(i => mk(s"p1-$i", f"2024-05-01T10:00:${i % 60}%02d.$i%03dZ"))
+      st.storeCFAuditEvents(collector.pageToDf(page1)) shouldBe 100L
+      // the collector's 5 s overlap: the last 10 guids again, then 90 new ones
+      val page2 = page1.takeRight(10) ++ (0 until 90).map(i => mk(s"p2-$i", f"2024-05-01T10:01:${i % 60}%02dZ"))
+      var stored = 0L
+      jobsOf { stored = st.storeCFAuditEvents(collector.pageToDf(page2)) } shouldBe 1
+      stored shouldBe 90L
+      st.getCFEventCount() shouldBe 190L
+      st.events.select("guid").distinct().count() shouldBe 190L
+    }
+
+    it("a shipper tick whose cursor is above the watermark runs no Spark job") {
+      val (st, _) = newStoreAt() // init created the table: the watermark is epoch
+      st.storeCFAuditEvents(onDriver(Seq(
+        ev("g1", "2024-05-01T10:00:00Z"), ev("g2", "2024-05-01T10:00:01Z")))) shouldBe 2L
+      st.updateShipperCursor("s", "2024-05-01T10:00:00Z", "g1")
+      val poster = new FakePoster(Nil)
+      val shipper = shipperOf(st, poster)
+      var shipped = (0L, 0L)
+      jobsOf { shipped = shipper.shipOnce() } shouldBe 0
+      shipped shouldBe ((1L, 0L))
+      st.storeCFAuditEvents(onDriver(Seq(ev("g3", "2024-05-01T10:00:02Z")))) shouldBe 1L
+      jobsOf { shipped = shipper.shipOnce() } shouldBe 0
+      shipped shouldBe ((1L, 0L))
+      jobsOf { shipped = shipper.shipOnce() } shouldBe 0 // idle: nothing after g3
+      shipped shouldBe ((0L, 0L))
+      posted(poster) shouldBe Seq("g2", "g3")
+      st.cursors.collect().map(r => (r.getString(0), r.getString(2))).toSeq shouldBe Seq(("s", "g3"))
+    }
+
+    it("a new store over the same warehouse scans until its first append") {
+      val (st, dir) = newStoreAt()
+      st.storeCFAuditEvents(onDriver(Seq(
+        ev("g1", "2024-05-01T10:00:00Z"), ev("g2", "2024-05-01T10:00:01Z")))) shouldBe 2L
+      val restarted = new ParquetEventStore(spark, dir.toString)
+      restarted.init()
+      restarted.updateShipperCursor("s", "2024-05-01T10:00:00Z", "g1")
+      val before = restarted.getUnshippedCFAuditEventsForShipper("s")
+      fromTail(before) shouldBe false
+      guidsOf(before) shouldBe Seq("g2")
+      restarted.storeCFAuditEvents(onDriver(Seq(ev("g3", "2024-05-01T10:00:02Z")))) shouldBe 1L
+      // the first append took the table's exact max, 10:00:01, as its watermark
+      fromTail(restarted.getUnshippedCFAuditEventsForShipper("s")) shouldBe false
+      restarted.updateShipperCursor("s", "2024-05-01T10:00:01.500Z", "none")
+      val after = restarted.getUnshippedCFAuditEventsForShipper("s")
+      fromTail(after) shouldBe true
+      guidsOf(after) shouldBe Seq("g3")
+    }
+
+    it("after evicting past MaxBatchRows, a cursor at or below the watermark gets the scan") {
+      val (st, _) = newStoreAt()
+      val cap = ParquetEventStore.MaxBatchRows
+      val t0 = Instant.parse("2024-05-01T10:00:00Z")
+      st.storeCFAuditEvents(onDriver((0 until cap).map(i => ev(f"a$i%05d", t0.plusMillis(i.toLong).toString))))
+      st.storeCFAuditEvents(onDriver((0 until 10).map(i => ev(s"b$i", t0.plusSeconds(60L + i).toString)))) shouldBe 10L
+      // a00000 .. a00009 left the tail; the watermark is a00009's time
+      def board = AuditQueries.unshipped(st.events, st.cursors, "s").collect().toSeq
+      Seq(5 -> false, 9 -> false, 10 -> true).foreach { case (i, tail) =>
+        st.updateShipperCursor("s", t0.plusMillis(i.toLong).toString, f"a$i%05d")
+        val q = st.getUnshippedCFAuditEventsForShipper("s")
+        withClue(s"cursor on a$i: ") {
+          fromTail(q) shouldBe tail
+          q.collect().toSeq shouldBe board
+        }
+      }
+    }
+
+    it("a throwing append leaves the tail unchanged, so the re-fetch still stores the row") {
+      val (st, dir) = newStoreAt()
+      st.storeCFAuditEvents(onDriver(Seq(ev("g1", "2024-05-01T10:00:00Z")))) shouldBe 1L
+      st.updateShipperCursor("s", "2024-05-01T10:00:00Z", "g1")
+      // a regular file where the writer wants its _temporary directory makes the append throw
+      val blocker = Files.createFile(dir.resolve("cf_audit_events/_temporary"))
+      an[Exception] should be thrownBy
+        st.storeCFAuditEvents(onDriver(Seq(ev("g2", "2024-05-01T10:00:01Z"))))
+      Files.delete(blocker)
+      guidsOf(st.getUnshippedCFAuditEventsForShipper("s")) shouldBe Nil
+      st.storeCFAuditEvents(onDriver(Seq(ev("g2", "2024-05-01T10:00:01Z")))) shouldBe 1L
+      val q = st.getUnshippedCFAuditEventsForShipper("s")
+      fromTail(q) shouldBe true
+      guidsOf(q) shouldBe Seq("g2")
+    }
+
+    it("expireBefore resets the tail: no expired row is read or deduped from it") {
+      val (st, _) = newStoreAt()
+      st.storeCFAuditEvents(onDriver(Seq(
+        ev("g1", "2024-05-01T10:00:00Z"), ev("g2", "2024-05-02T10:00:00Z")))) shouldBe 2L
+      st.updateShipperCursor("s", "2024-05-01T00:00:00Z", "none")
+      guidsOf(st.getUnshippedCFAuditEventsForShipper("s")) shouldBe Seq("g1", "g2")
+      st.expireBefore(java.sql.Date.valueOf("2024-05-02")) shouldBe 1L
+      val q = st.getUnshippedCFAuditEventsForShipper("s")
+      fromTail(q) shouldBe false
+      guidsOf(q) shouldBe Seq("g2")
+      // a re-delivery of the expired g1 is stored again
+      st.storeCFAuditEvents(onDriver(Seq(ev("g1", "2024-05-01T10:00:00Z")))) shouldBe 1L
+      guidsOf(st.getUnshippedCFAuditEventsForShipper("s")) shouldBe Seq("g1", "g2")
+    }
+
+    it("a restart whose _stats_latest lags the data still ships the rows above the lagging sidecar") {
+      val (st, dir) = newStoreAt()
+      st.storeCFAuditEvents(onDriver(Seq(ev("g0", "2024-05-01T09:59:59Z")))) shouldBe 1L
+      st.storeCFAuditEvents(onDriver(Seq(ev("g1", "2024-05-01T10:00:00Z"),
+        ev("g2", "2024-05-01T10:00:02Z"), ev("g3", "2024-05-01T10:00:04Z")))) shouldBe 3L
+      st.updateShipperCursor("s", "2024-05-01T10:00:00Z", "g1")
+      // a crash after the second append, before its _stats_latest write
+      Files.writeString(dir.resolve("_stats_latest"),
+        (Instant.parse("2024-05-01T09:59:59Z").getEpochSecond * 1000000L).toString)
+      val restarted = new ParquetEventStore(spark, dir.toString)
+      restarted.init()
+      // the restarted collector's first page: an overlap re-fetch and one new row
+      restarted.storeCFAuditEvents(onDriver(Seq(
+        ev("g3", "2024-05-01T10:00:04Z"), ev("g4", "2024-05-01T10:00:06Z")))) shouldBe 1L
+      val poster = new FakePoster(Nil)
+      shipperOf(restarted, poster).shipOnce() shouldBe ((3L, 0L))
+      posted(poster) shouldBe Seq("g2", "g3", "g4")
     }
   }
 }
