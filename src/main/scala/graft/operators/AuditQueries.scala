@@ -138,13 +138,14 @@ object AuditQueries {
       .filter(F.col("guid").cast("string") =!= cursorGuid)
       .select(outCols.map(F.col): _*)
 
-  /** Validation filter for the CHECK constraints (R21,
-    * create_cf_audit_events.sql:26-30): split a batch into (valid,
-    * quarantined) on `created_at > epoch`. */
-  def splitOnCheck(events: DataFrame): (DataFrame, DataFrame) = {
-    val ok = F.col("created_at") > F.lit(Schemas.epoch)
-    (events.filter(ok), events.filter(!ok))
-  }
+  /** The CHECK constraint on `created_at` (R21,
+    * create_cf_audit_events.sql:26-30): `created_at > epoch`, so a NULL
+    * `created_at` fails it too. */
+  def passesCheck: Column = F.col("created_at") > F.lit(Schemas.epoch)
+
+  /** Split a batch into (valid, quarantined) on [[passesCheck]]. */
+  def splitOnCheck(events: DataFrame): (DataFrame, DataFrame) =
+    (events.filter(passesCheck), events.filter(!passesCheck))
 
   /** Ingest-sequence assignment (R20): the reference's `id SERIAL` is an
     * ingest order, "not really an id" (create_cf_audit_events.sql:2). We

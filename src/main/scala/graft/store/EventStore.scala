@@ -22,9 +22,10 @@ trait EventStore {
     * dropped, one row per guid is kept, and guids already stored are
     * skipped. `ParquetEventStore` keeps a guid's first row, numbers new
     * rows `max + 1 …` in (created_at, guid) order, and stores a batch
-    * whose rows sit on the driver (a collector page) with one Spark job,
-    * two when its bloom sidecars say a guid it did not append itself
-    * recently may already be stored. */
+    * whose rows sit on the driver (a collector page) with no Spark job:
+    * it writes the parquet files on the driver. One job runs when its
+    * bloom sidecars say a guid it did not append itself recently may
+    * already be stored. */
   def storeCFAuditEvents(batch: DataFrame): Long
 
   /** Ordered page over stored events (store.go:108-145). */
@@ -40,8 +41,9 @@ trait EventStore {
   def getCFEventCount(): Long
 
   /** The 2-CTE unshipped query (store.go:191-225). `ParquetEventStore`
-    * answers a cursor above its tail's watermark from its own recent
-    * appends, with no Spark job. */
+    * answers a cursor above its tail's watermark (any cursor, while the
+    * watermark is the epoch) from its own recent appends, with no Spark
+    * job. */
   def getUnshippedCFAuditEventsForShipper(shipperName: String): DataFrame
 
   /** Cursor upsert; `updatedAt` is the event's RAW string timestamp — the

@@ -9,7 +9,7 @@ import scala.util.Try
 import org.apache.hadoop.fs.{FileContext, FileStatus, Options, Path}
 import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession, functions => F}
 import org.apache.spark.sql.catalyst.util.DateTimeUtils
-import org.apache.spark.sql.graftnative.BloomFunctions
+import org.apache.spark.sql.graftnative.{BloomFunctions, DriverParquet}
 import org.apache.spark.sql.types.{DateType, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.util.sketch.BloomFilter
@@ -32,15 +32,21 @@ import graft.operators.AuditQueries.RawEventFilter
   *    (collector.go:36), so a batch can only collide with events in its own
   *    time range. Dedup is scoped to partitions with
   *    `event_date >= min(batch date)` — O(overlap), not O(history).
-  *  - **One write path, on the driver**: a batch is CHECK-split by Spark
-  *    and collected with `limit(MaxBatchRows + 1)`; more than
+  *  - **One write path, on the driver**: a batch is CHECK-filtered by
+  *    Spark and collected with `limit(MaxBatchRows + 1)`; more than
   *    [[ParquetEventStore.MaxBatchRows]] valid rows is refused before any
   *    write. A collector page is at most 100 rows built on the driver, so
   *    its plan, the limit included, folds to a `LocalRelation` and the
   *    collect runs no job; any other small batch pays one collect job. The
-  *    store then dedups, numbers and blooms the rows on the driver, and the
-  *    partitioned parquet append is the only job. Per-job launch cost, not
-  *    data volume, bounds the daemon.
+  *    store then dedups, numbers, blooms and appends the rows on the
+  *    driver: each date's rows become one parquet file, written through
+  *    Spark's own `ParquetWriteSupport` (`DriverParquet`) as a hidden
+  *    `.<name>.tmp` sibling inside `event_date=<date>/` and renamed to its
+  *    `part-<uuid>.c000.<codec>.parquet` name once every file of the batch
+  *    is written. Readers list no dot file, so a crash before a rename
+  *    leaves nothing visible, and `init` deletes such files. The append
+  *    writes no `_SUCCESS` marker. A collector page launches no Spark job:
+  *    per-job launch cost, not data volume, bounded the daemon.
   *  - **Bloom-gated dedup probe**: each scoped partition's
   *    `_bloom_guid/<date>` sidecar is read once and probed per guid. Only
   *    bloom-positive guids (every guid, for a partition with no readable
@@ -59,9 +65,12 @@ import graft.operators.AuditQueries.RawEventFilter
   *    cap raises the watermark to the highest evicted `created_at`, and
   *    `expireBefore` makes the tail unknown again. Two reads use it:
   *    a batch guid held in the tail with an in-scope date is stored, so
-  *    it skips the probe (an overlap re-fetch costs only the append), and
-  *    an unshipped read whose cursor is strictly above the watermark is
-  *    answered from the tail as a local DataFrame, with no Spark job.
+  *    it skips the probe (an overlap re-fetch runs no job), and an
+  *    unshipped read whose cursor is strictly above the watermark is
+  *    answered from the tail as a local DataFrame, with no Spark job. An
+  *    epoch watermark answers every cursor, the epoch one of a fresh
+  *    shipper included: the CHECK keeps no row at or before the epoch, so
+  *    that tail holds the whole table.
   *  - **Sidecars are replaced, never rewritten in place**: `_stats_*` and
   *    `_bloom_guid/<date>` are written to a hidden temporary sibling and
   *    renamed over the old file, so the informer thread reading
@@ -75,10 +84,11 @@ import graft.operators.AuditQueries.RawEventFilter
   *    cursor rows it last read or wrote, valid while the `shipper_cursors`
   *    listing is the one it wrote (any other listing, such as a hand edit,
   *    is re-read once through Spark). An upsert writes one parquet file on
-  *    the driver and swaps it in with a rename-aside swap, and the unshipped
-  *    plan takes the resolved cursor as literals; a shipper tick whose
-  *    cursor is above the tail's watermark runs no Spark job, any other
-  *    runs one, its scan. At any scale #shippers is tiny.
+  *    the driver (through `DriverParquet`, as the append does) and swaps it
+  *    in with a rename-aside swap, and the unshipped plan takes the
+  *    resolved cursor as literals; a shipper tick the tail answers runs no
+  *    Spark job, any other runs one, its scan. At any scale #shippers is
+  *    tiny.
   */
 final class ParquetEventStore(spark: SparkSession, warehouseDir: String) extends EventStore {
   import ParquetEventStore.{MaxBatchRows, Tail, TailRow}
@@ -113,8 +123,13 @@ final class ParquetEventStore(spark: SparkSession, warehouseDir: String) extends
     // table renamed aside, complete: bring it back rather than start empty.
     if (!exists(cursorsPath) && exists(cursorsPath + "_old"))
       renameOrAbort(new Path(cursorsPath + "_old"), new Path(cursorsPath))
-    if (!exists(cursorsPath))
+    if (!exists(cursorsPath)) {
       emptyCursors.write.parquet(cursorsPath)
+      cursorCache = Some((cursorListing(), Nil)) // known empty: no first read
+    }
+    // Files of an append that crashed before its rename.
+    Option(fs.globStatus(new Path(eventsPath, "event_date=*/.part-*.tmp"))).toSeq.flatten
+      .foreach(f => fs.delete(f.getPath, false))
   }
 
   override def events: DataFrame = {
@@ -130,14 +145,13 @@ final class ParquetEventStore(spark: SparkSession, warehouseDir: String) extends
     spark.read.schema(Schemas.shipperCursors).parquet(cursorsPath)
 
   override def storeCFAuditEvents(batch: DataFrame): Long = {
-    val (valid, _) = AuditQueries.splitOnCheck(batch) // R21 CHECK constraints
-    // Spark computes event_date and its directory spelling `__day`, so the
-    // rows name exactly the writer's partitions.
-    val dated = valid
-      .withColumn("id", F.lit(0L)) // assigned below
-      .select(Schemas.cfAuditEvents.fieldNames.map(F.col).toSeq: _*)
-      .withColumn("event_date", F.to_date(F.col("created_at")))
-      .withColumn("__day", F.col("event_date").cast("string"))
+    // One CHECK filter (R21) and one projection: the event columns, the id
+    // (assigned below) and `__day`, Spark's spelling of the row's
+    // event_date, which names its partition directory as a partitioned
+    // Spark write would.
+    val cols = Schemas.cfAuditEvents.fieldNames.toSeq.map(c => if (c == "id") F.lit(0L).as(c) else F.col(c))
+    val dated = batch.filter(AuditQueries.passesCheck)
+      .select(cols :+ F.to_date(F.col("created_at")).cast("string").as("__day"): _*)
     val rows = dated.limit(MaxBatchRows + 1).collect() // a collector page: no job
     if (rows.length > MaxBatchRows)
       throw new IllegalArgumentException(
@@ -147,13 +161,11 @@ final class ParquetEventStore(spark: SparkSession, warehouseDir: String) extends
 
   private val eventsWithDateSchema = Schemas.cfAuditEvents.add("event_date", DateType)
   // The rows carry whatever nulls the batch had.
-  private val nullableEventsWithDate =
-    StructType(eventsWithDateSchema.map(_.copy(nullable = true)))
   private val nullableEvents = StructType(Schemas.cfAuditEvents.map(_.copy(nullable = true)))
   private val idIdx = Schemas.cfAuditEvents.fieldIndex("id")
   private val guidIdx = Schemas.cfAuditEvents.fieldIndex("guid")
   private val createdIdx = Schemas.cfAuditEvents.fieldIndex("created_at")
-  private val dayIdx = eventsWithDateSchema.length // the trailing `__day`
+  private val dayIdx = Schemas.cfAuditEvents.length // the trailing `__day`
 
   /** Spark's string order (UTF-8 bytes, nulls first), the guid tiebreak
     * of `AuditQueries.assignIngestSeq`, reproduced on the driver. */
@@ -179,10 +191,11 @@ final class ParquetEventStore(spark: SparkSession, warehouseDir: String) extends
     else Tail(all.drop(cut), math.max(prior.watermark, all(cut - 1).at))
   }
 
-  /** Stores a batch already collected (rows: event columns, event_date,
-    * `__day`): first row per guid, dedup against the overlap scope, ids in
-    * (created_at, guid) order, per-date blooms. The parquet append is the
-    * only Spark job unless a bloom sidecar in scope matches a batch guid. */
+  /** Stores a batch already collected (rows: event columns, `__day`):
+    * first row per guid, dedup against the overlap scope, ids in
+    * (created_at, guid) order, per-date blooms, the append on the driver.
+    * No Spark job runs unless a bloom sidecar in scope matches a batch guid
+    * the tail does not hold. */
   private def storeOnDriver(rows: Array[Row]): Long = {
     val fresh = rows.distinctBy(_.getString(guidIdx)) // first occurrence per guid wins
     if (fresh.isEmpty) return 0L
@@ -218,24 +231,38 @@ final class ParquetEventStore(spark: SparkSession, warehouseDir: String) extends
       val tailBefore = prior.getOrElse(Tail(Vector.empty, micros(scanLatest())))
       val base = maxId()
       val withId = kept.iterator.zipWithIndex.map { case (r, i) =>
-        Row.fromSeq(r.toSeq.init.updated(idIdx, base + 1 + i))
+        r.getString(dayIdx) -> Row.fromSeq(r.toSeq.init.updated(idIdx, base + 1 + i))
       }.toSeq
-      val blooms = kept.groupBy(_.getString(dayIdx)).toSeq.map { case (d, rs) =>
+      val byDay = withId.groupMap(_._1)(_._2)
+      val blooms = byDay.toSeq.map { case (d, rs) =>
         d -> BloomFunctions.bloomDriver(rs.map(_.getString(guidIdx)), bloomItems, bloomBits)
       }
-      val added = withId.zip(kept).map { case (r, k) =>
-        TailRow(Row.fromSeq(r.toSeq.take(Schemas.cfAuditEvents.length)), micros(r.getTimestamp(createdIdx)),
-          LocalDate.parse(k.getString(dayIdx)))
+      val added = withId.map { case (d, r) =>
+        TailRow(r, micros(r.getTimestamp(createdIdx)), LocalDate.parse(d))
       }
       commit(base, n, blooms, sidecars, added.map(_.at).max) {
-        spark.createDataFrame(withId.asJava, nullableEventsWithDate)
-          .coalesce(1) // one file per date
-          .write.mode(SaveMode.Append).partitionBy("event_date").parquet(eventsPath)
+        append(byDay)
         // Only now are the rows in the table; a throwing append adds none.
         tail = Some(extended(tailBefore, added))
       }
     }
     n
+  }
+
+  /** The append, on the driver: each date's rows as one parquet file in
+    * its `event_date=` directory. Every file is first written as a hidden
+    * `.<name>.tmp` sibling, which no reader lists, and renamed to its
+    * `part-` name only once all of them are written; a crash before a
+    * rename leaves only hidden files, which `init` deletes. */
+  private def append(byDay: Map[String, Seq[Row]]): Unit = {
+    val files = byDay.toSeq.map { case (day, rows) =>
+      val dir = new Path(eventsPath, s"event_date=$day")
+      val name = DriverParquet.fileName(spark)
+      val tmp = new Path(dir, s".$name.tmp")
+      DriverParquet.write(spark, tmp, Schemas.cfAuditEvents, rows)
+      tmp -> new Path(dir, name)
+    }
+    files.foreach { case (tmp, dst) => StoreIO.renameOrAbort(fs, tmp, dst, "event-store append") }
   }
 
   /** The durable steps of a store, in crash-safe order. `read`
@@ -313,7 +340,7 @@ final class ParquetEventStore(spark: SparkSession, warehouseDir: String) extends
                             batchBloom: Array[Byte]): Array[Byte] = {
     def rebuilt: Array[Byte] = {
       val dir = s"$eventsPath/event_date=$d"
-      if (!exists(dir)) batchBloom
+      if (!fs.isDirectory(new Path(dir))) batchBloom // no partition yet
       else BloomFunctions.mergeBloom(spark.read.schema(Schemas.cfAuditEvents).parquet(dir)
         .agg(BloomSupport.bloomAgg(F.col("guid"), bloomItems, bloomBits).as("bf"))
         .head.getAs[Array[Byte]]("bf"), batchBloom)
@@ -416,7 +443,9 @@ final class ParquetEventStore(spark: SparkSession, warehouseDir: String) extends
     // Resolve the cursor on the driver (the reference's scalar subquery).
     val (ts, guid) = AuditQueries.lastShippedOf(cursorRows(), shipperName)
     val from = micros(ts)
-    tail.filter(_.watermark < from) match {
+    // An epoch watermark means the tail holds every table row: the CHECK
+    // keeps only rows after the epoch. So it answers the epoch cursor too.
+    tail.filter(t => t.watermark == 0L || t.watermark < from) match {
       case Some(t) =>
         // Every row at or after the cursor is in the tail: unshippedAfter's
         // filter, order, cap and guid anti-filter (NULL on either side
@@ -606,43 +635,9 @@ final class ParquetEventStore(spark: SparkSession, warehouseDir: String) extends
     // cursors only in a deleted tree (init() restores the `_old` sibling).
     val tmp = new Path(cursorsPath + "_tmp")
     if (fs.exists(tmp)) fs.delete(tmp, true)
-    writeCursorFile(new Path(tmp, "part-00000-cursors.parquet"), updated)
+    DriverParquet.write(spark, new Path(tmp, "part-00000-cursors.parquet"), Schemas.shipperCursors, updated)
     swapTree(tmp.toString, cursorsPath)
     cursorCache = Some((cursorListing(), updated))
-  }
-
-  /** The cursor table's parquet layout: what Spark writes for
-    * `Schemas.shipperCursors`, timestamps as UTC-adjusted micros. */
-  private val cursorFileSchema = {
-    import org.apache.parquet.schema.{LogicalTypeAnnotation => L, Types}
-    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.{BINARY, INT64}
-    Types.buildMessage()
-      .optional(BINARY).as(L.stringType()).named("name")
-      .optional(INT64).as(L.timestampType(true, L.TimeUnit.MICROS)).named("updated_at")
-      .optional(BINARY).as(L.stringType()).named("shipped_id")
-      .named("spark_schema")
-  }
-
-  /** Writes cursor rows as one parquet file on the driver: no Spark job. */
-  private def writeCursorFile(p: Path, rows: Seq[Row]): Unit = {
-    import org.apache.parquet.example.data.simple.SimpleGroupFactory
-    import org.apache.parquet.hadoop.example.ExampleParquetWriter
-    import org.apache.parquet.hadoop.util.HadoopOutputFile
-    val conf = spark.sparkContext.hadoopConfiguration
-    val w = ExampleParquetWriter.builder(HadoopOutputFile.fromPath(p, conf))
-      .withConf(conf)
-      .withType(cursorFileSchema)
-      // Proleptic Gregorian micros, as Spark 3+ writes: no calendar rebase on read.
-      .withExtraMetaData(Map("org.apache.spark.version" -> spark.version).asJava)
-      .build()
-    val groups = new SimpleGroupFactory(cursorFileSchema)
-    try rows.foreach { r =>
-      val g = groups.newGroup()
-      if (!r.isNullAt(0)) g.add("name", r.getString(0))
-      if (!r.isNullAt(1)) g.add("updated_at", micros(r.getTimestamp(1)))
-      if (!r.isNullAt(2)) g.add("shipped_id", r.getString(2))
-      w.write(g)
-    } finally w.close()
   }
 }
 

@@ -5,6 +5,7 @@ import java.time.Instant
 import org.apache.spark.sql.{SparkSession, functions => F}
 
 import graft.metrics.{Metrics, MetricsRegistry}
+import graft.model.Schemas
 import graft.sources.{CfAuditEventFetcher, CfWireEvent}
 import graft.store.EventStore
 
@@ -50,16 +51,17 @@ final class Collector(
   }
 
   /** Wire page → typed batch with the ingest-boundary conversions applied
-    * once (parse timestamp, ''→NULL on org/space): SURVEY §1.3. */
+    * once (parse timestamp, ''→NULL on org/space): SURVEY §1.3. One
+    * projection, so the plan is analysed once per page. */
   def pageToDf(events: Seq[CfWireEvent]): org.apache.spark.sql.DataFrame = {
     import spark.implicits._
-    events.toDF()
-      .withColumn("created_at_raw", F.col("created_at"))
-      .withColumn("created_at", F.to_timestamp(F.col("created_at_raw")))
-      .withColumn("organization_guid", graft.model.Schemas.emptyToNull(F.col("organization_guid")))
-      .withColumn("space_guid", graft.model.Schemas.emptyToNull(F.col("space_guid")))
-      .withColumn("id", F.lit(0L)) // assigned by the store (R20)
-      .select(graft.model.Schemas.cfAuditEvents.fieldNames.map(F.col).toSeq: _*)
+    events.toDF().select(Schemas.cfAuditEvents.fieldNames.toSeq.map {
+      case "id" => F.lit(0L).as("id") // assigned by the store (R20)
+      case "created_at" => F.to_timestamp(F.col("created_at")).as("created_at")
+      case "created_at_raw" => F.col("created_at").as("created_at_raw")
+      case c @ ("organization_guid" | "space_guid") => Schemas.emptyToNull(F.col(c)).as(c)
+      case c => F.col(c)
+    }: _*)
   }
 
   /** One tick: fetch all pages since the resume point, store page-by-page.

@@ -3,7 +3,11 @@ package graft.streaming
 import java.time.OffsetDateTime
 import scala.util.Random
 
-import org.apache.spark.sql.{DataFrame, Row, functions => F}
+import com.fasterxml.jackson.core.JsonParser
+import com.fasterxml.jackson.databind.{DeserializationFeature, JsonNode, ObjectMapper}
+import com.fasterxml.jackson.databind.cfg.JsonNodeFeature
+import com.fasterxml.jackson.databind.node.NullNode
+import org.apache.spark.sql.{Row, functions => F}
 
 import graft.metrics.{Metrics, MetricsRegistry}
 import graft.sources.{HttpReply, HttpTransport}
@@ -61,6 +65,9 @@ final class SplunkHecClient(
   * The per-tick batch is capped at 8192 by the store query (store.go:206),
   * so collecting it to the driver is bounded by design. Events are POSTed
   * one per request, serially, as the reference does (`shipper.go:122-135`).
+  * A tick collects the payload columns of the batch and builds every HEC
+  * line with Jackson before the first POST, so a row whose `metadata` is
+  * not JSON fails the tick with nothing posted.
   */
 final class SplunkShipper(
     store: EventStore,
@@ -70,43 +77,56 @@ final class SplunkShipper(
     shipperName: String = "cf-audit-events-to-splunk",
     logger: graft.logging.Lager = graft.logging.Lager.noop) {
 
+  import SplunkShipper.{Mapper, PayloadCols}
+
   // lager session naming as the reference: shipper.go:60 + :94
   private val lsession = logger.session("cf-audit-events-to-splunk-shipper").session("run")
 
   /** `{"sourcetype":"cf-audit-event","source":env,"event":{...}}`
-    * (shipper.go:24-28,187-192). The inner event mirrors the wire struct
-    * the reference marshals (`events.go:26-41`): `type` (not event_type),
-    * the RAW created_at string, `''` for NULL org/space (the read-path
-    * coalesce, store.go:137-138), `metadata` as a JSON *object* (variant
-    * passthrough), and no DB id. */
-  private def withPayload(df: DataFrame): DataFrame =
-    df.withColumn("__payload", F.to_json(F.struct(
-      F.lit("cf-audit-event").as("sourcetype"),
-      F.lit(deployEnv).as("source"),
-      F.struct(
-        F.col("guid"),
-        F.col("created_at_raw").as("created_at"),
-        F.col("event_type").as("type"),
-        F.col("actor"), F.col("actor_type"), F.col("actor_name"), F.col("actor_username"),
-        F.col("actee"), F.col("actee_type"), F.col("actee_name"),
-        graft.model.Schemas.nullToEmpty(F.col("organization_guid")).as("organization_guid"),
-        graft.model.Schemas.nullToEmpty(F.col("space_guid")).as("space_guid"),
-        F.parse_json(F.coalesce(F.col("metadata"), F.lit("null"))).as("metadata")
-      ).as("event"))))
+    * (shipper.go:24-28,187-192) for a row of [[PayloadCols]]. The inner
+    * event mirrors the wire struct the reference marshals
+    * (`events.go:26-41`): `type` (not event_type), the RAW created_at
+    * string, `''` for NULL org/space (the read-path coalesce,
+    * store.go:137-138), `metadata` re-read as a JSON tree (`null` when
+    * NULL; text that does not start with a JSON value throws), and no DB
+    * id. A NULL among the other fields leaves the field out. */
+  private def payload(r: Row): String = {
+    val root = Mapper.createObjectNode()
+    root.put("sourcetype", "cf-audit-event").put("source", deployEnv)
+    val event = root.putObject("event")
+    PayloadCols.iterator.zipWithIndex.foreach {
+      case ((_, "metadata"), i) =>
+        event.set[JsonNode]("metadata", if (r.isNullAt(i)) NullNode.instance else metadataTree(r.getString(i)))
+      case ((_, name @ ("organization_guid" | "space_guid")), i) =>
+        event.put(name, if (r.isNullAt(i)) "" else r.getString(i))
+      case ((_, name), i) =>
+        if (!r.isNullAt(i)) event.put(name, r.getString(i))
+    }
+    Mapper.writeValueAsString(root)
+  }
+
+  private def metadataTree(json: String): JsonNode = {
+    val tree = Mapper.readTree(json)
+    if (tree.isMissingNode) throw new IllegalArgumentException("metadata holds no JSON value")
+    tree
+  }
 
   /** One tick. Returns (shipped, failed) counts; never throws (ST5). */
   def shipOnce(): (Long, Long) = {
     val t0 = System.nanoTime()
     try {
-      val batch = withPayload(store.getUnshippedCFAuditEventsForShipper(shipperName))
-      val rows = batch.select("__payload", "created_at_raw", "guid").collect() // ≤8192 by construction
+      val batch = store.getUnshippedCFAuditEventsForShipper(shipperName)
+        .select(PayloadCols.map(c => F.col(c._1)): _*)
+        .collect() // ≤8192 by construction
+      // Every line before the first POST: a bad row fails the tick with nothing posted.
+      val lines = batch.map(payload)
       var shipped = 0L
       var lastOk: Option[Row] = None
       var failed = false
-      val it = rows.iterator
+      val it = batch.iterator.zip(lines.iterator)
       while (!failed && it.hasNext) {
-        val row = it.next()
-        hec.post(row.getString(0)) match {
+        val (row, line) = it.next()
+        hec.post(line) match {
           case Right(_) =>
             shipped += 1
             lastOk = Some(row)
@@ -117,11 +137,11 @@ final class SplunkShipper(
         }
       }
       // Commit cursor with the RAW created_at string (shipper.go:140-143).
-      if (!lastOk.forall(r => commitCursor(r.getString(1), r.getString(2)))) (0L, 1L)
+      if (!lastOk.forall(r => commitCursor(r.getString(1), r.getString(0)))) (0L, 1L)
       else {
         lastOk.foreach { r =>
           lsession.info("shipped-events",
-            "shipped" -> shipped, "last_guid" -> r.getString(2))
+            "shipped" -> shipped, "last_guid" -> r.getString(0))
           registry.inc(Metrics.ShipperEventsShipped, shipped.toDouble)
           // "Not fatal" parse for the latest-shipped gauge (shipper.go:158-169).
           try registry.setGauge(Metrics.ShipperLatestEventTimestamp,
@@ -166,4 +186,23 @@ final class SplunkShipper(
       pacer.await(scheduleMillis, stop)
     } finally lsession.info("end")
   }
+}
+
+object SplunkShipper {
+  /** (column of an unshipped row, its field in the HEC event), in payload
+    * order; `guid` and `created_at_raw` first, as the cursor commit reads them. */
+  private val PayloadCols: Seq[(String, String)] = Seq(
+    "guid" -> "guid", "created_at_raw" -> "created_at", "event_type" -> "type",
+    "actor" -> "actor", "actor_type" -> "actor_type", "actor_name" -> "actor_name",
+    "actor_username" -> "actor_username", "actee" -> "actee", "actee_type" -> "actee_type",
+    "actee_name" -> "actee_name", "organization_guid" -> "organization_guid",
+    "space_guid" -> "space_guid", "metadata" -> "metadata")
+
+  /** Strict JSON, as `parse_json` reads it: the first value (what follows
+    * it is not read), no duplicate keys. Decimal numbers keep their
+    * digits, trailing zeros included. Thread-safe once configured. */
+  private val Mapper: ObjectMapper = new ObjectMapper()
+    .enable(DeserializationFeature.USE_BIG_DECIMAL_FOR_FLOATS)
+    .enable(JsonParser.Feature.STRICT_DUPLICATE_DETECTION)
+    .configure(JsonNodeFeature.STRIP_TRAILING_BIGDECIMAL_ZEROES, false)
 }

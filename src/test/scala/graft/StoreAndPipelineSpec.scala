@@ -19,6 +19,7 @@ import graft.operators.AuditQueries
 import graft.sources._
 import graft.store.{EventStore, ParquetEventStore}
 import graft.streaming.{Collector, Informer, SplunkHecClient, SplunkShipper}
+import org.apache.spark.sql.graftnative.DriverParquet
 
 /** Scriptable POST transport: each call consumes the next status. */
 final class FakePoster(statuses: Seq[Int]) extends HttpTransport with Serializable {
@@ -391,8 +392,8 @@ class StoreAndPipelineSpec extends SparkSpec {
       // an older batch does not move it back
       st.storeCFAuditEvents(onDriver(Seq(ev("g0", "2024-05-02T01:00:00Z")))) shouldBe 1L
       st.getLatestCFEventTime().toInstant shouldBe latest
-      // a regular file where the writer wants its _temporary directory makes the append throw
-      val blocker = Files.createFile(dir.resolve("cf_audit_events/_temporary"))
+      // a regular file where the append wants the new date's directory makes it throw
+      val blocker = Files.createFile(dir.resolve("cf_audit_events/event_date=2024-05-03"))
       val before = sidecarText(dir, "_stats_latest")
       an[Exception] should be thrownBy
         st.storeCFAuditEvents(onDriver(Seq(ev("g9", "2024-05-03T00:00:00Z"))))
@@ -1102,6 +1103,141 @@ class StoreAndPipelineSpec extends SparkSpec {
       ev.get("metadata").isObject shouldBe true
     }
 
+    /** The payload expression the shipper evaluated through Catalyst
+      * before it built lines with Jackson: the oracle for those lines. */
+    def catalystPayloads(df: DataFrame): Seq[String] = df.select(F.to_json(F.struct(
+      F.lit("cf-audit-event").as("sourcetype"), F.lit("test-env").as("source"),
+      F.struct(
+        F.col("guid"), F.col("created_at_raw").as("created_at"), F.col("event_type").as("type"),
+        F.col("actor"), F.col("actor_type"), F.col("actor_name"), F.col("actor_username"),
+        F.col("actee"), F.col("actee_type"), F.col("actee_name"),
+        Schemas.nullToEmpty(F.col("organization_guid")).as("organization_guid"),
+        Schemas.nullToEmpty(F.col("space_guid")).as("space_guid"),
+        F.parse_json(F.coalesce(F.col("metadata"), F.lit("null"))).as("metadata")
+      ).as("event")))).collect().map(_.getString(0)).toSeq
+
+    def withMetadata(r: Row, metadata: String): Row = Row.fromSeq(r.toSeq.updated(14, metadata))
+
+    it("builds every HEC line as the Catalyst to_json/parse_json payload, as a JSON tree, on one line (property)") {
+      import org.scalacheck.{Gen, Prop, Test}
+      import org.scalacheck.rng.Seed
+      import com.fasterxml.jackson.databind.{DeserializationFeature, JsonNode, ObjectMapper}
+      import com.fasterxml.jackson.databind.node.{NullNode, ObjectNode}
+      val exact = new ObjectMapper().enable(DeserializationFeature.USE_BIG_DECIMAL_FOR_FLOATS)
+      def withoutMetadata(line: JsonNode): JsonNode = {
+        val c = line.deepCopy[ObjectNode]()
+        c.get("event").asInstanceOf[ObjectNode].remove("metadata")
+        c
+      }
+      // Spark's variant to_json decodes non-ASCII text with the JVM's default
+      // charset: on a JVM whose default is not UTF-8 (JDK 17 under a POSIX
+      // locale) the Catalyst line carries U+FFFD for each byte of it. There
+      // the oracle holds for the rest of the line, and the metadata is
+      // checked against the source text instead.
+      val utf8Jvm = java.nio.charset.Charset.defaultCharset == java.nio.charset.StandardCharsets.UTF_8
+      // numbers compare by value (1.50 = 1.5, 1e3 = 1000.0); everything else exactly
+      val byValue: java.util.Comparator[JsonNode] = (a, b) =>
+        if (a.isNumber && b.isNumber) a.decimalValue.compareTo(b.decimalValue) else if (a == b) 0 else 1
+      val genString = Gen.oneOf("\"plain\"", "\"\"", "\"\\u00e9\\ud83d\\ude00\\u540d\"", "\"ü😀名\"",
+        "\"quote \\\" backslash \\\\ tab \\t newline \\n\"")
+      // integers up to 38 digits: parse_json keeps them exact (a decimal), as Jackson does
+      val genBigInt = Gen.chooseNum(18, 37).flatMap(n => Gen.listOfN(n, Gen.numChar)).map("9" + _.mkString)
+      val genNumber = Gen.oneOf(Gen.oneOf("1.50", "1e3", "-0", "2.5E-7", "-17", "0.1"), genBigInt,
+        Gen.zip(Gen.chooseNum(0L, 99999999L), Gen.chooseNum(0, 999999)).map { case (a, b) => s"-$a.$b" })
+      val genKey = Gen.oneOf("\"a\"", "\"b\"", "\"k\\u00e9\"", "\"ü\"", "\"request\"", "\"x y\"")
+      val genSep = Gen.oneOf(",", ", ", ",\n  ")
+      def genValue(depth: Int): Gen[String] =
+        if (depth == 0) Gen.oneOf(genString, genNumber, Gen.oneOf("true", "false", "null"))
+        else Gen.frequency(
+          (2, genValue(0)),
+          (1, Gen.zip(Gen.chooseNum(0, 4).flatMap(n => Gen.listOfN(n, genValue(depth - 1))), genSep)
+            .map { case (vs, sep) => vs.mkString("[", sep, "]") }),
+          (3, genObject(depth)))
+      def genObject(depth: Int): Gen[String] =
+        Gen.zip(Gen.chooseNum(0, 4).flatMap(n => Gen.listOfN(n, Gen.zip(genKey, genValue(depth - 1)))), genSep)
+          .map { case (kvs, sep) => kvs.distinctBy(_._1).map { case (k, v) => s"$k:$v" }.mkString("{", sep, "}") }
+      val genMetadata = Gen.frequency((1, Gen.const(null)), (6, genObject(3)), (1, genValue(2)))
+      val genRow = Gen.zip(genMetadata, Gen.option(Gen.oneOf("og", "örg")), Gen.option(Gen.const("sg")),
+        Gen.oneOf("an", "Zoë", "名前"))
+      val genCase = Gen.chooseNum(1, 8).flatMap(n => Gen.listOfN(n, genRow))
+
+      val (st, _) = newStoreAt()
+      val poster = new FakePoster(Nil)
+      val shipper = new SplunkShipper(st, new SplunkHecClient(poster, "https://hec", "KEY", sleep = _ => ()),
+        "test-env", new MetricsRegistry)
+      val t0 = Instant.parse("2024-05-01T10:00:00Z")
+      var n = 0
+      val prop = Prop.forAllNoShrink(genCase) { evs =>
+        val rows = evs.map { case (metadata, org, space, actorName) =>
+          n += 1
+          val at = t0.plusSeconds(n.toLong).toString
+          Row(0L, f"g$n%05d", Timestamp.from(Instant.parse(at)), at, "audit.app.update", "a", "user",
+            actorName, "au", "e", "app", "en", org.orNull, space.orNull, metadata)
+        }
+        poster.posts.clear()
+        st.storeCFAuditEvents(onDriver(rows))
+        val tick = shipper.shipOnce()
+        val lines = poster.posts.map(_._2).toSeq
+        val want = catalystPayloads(st.events.filter(F.col("guid").isin(rows.map(_.getString(1)): _*))
+          .orderBy("created_at", "guid"))
+        val metas = evs.map(_._1)
+        def source(m: String): JsonNode = if (m == null) NullNode.instance else exact.readTree(m)
+        def asciiOnly(m: String): Boolean = source(m).toString.forall(_ < 128)
+        val labels = Set(
+          "catalyst-oracle-whole-line" -> metas.exists(m => utf8Jvm || asciiOnly(m)),
+          "null-metadata" -> metas.contains(null),
+          "null-org" -> evs.exists(_._2.isEmpty), "null-space" -> evs.exists(_._3.isEmpty),
+          "nested" -> metas.exists(m => m != null && m.drop(1).exists(c => c == '{' || c == '[')),
+          "scalar-metadata" -> metas.exists(m => m != null && !m.startsWith("{")),
+          "1.50" -> metas.exists(m => m != null && m.contains("1.50")),
+          "1e3" -> metas.exists(m => m != null && m.contains("1e3")),
+          "big-int" -> metas.exists(m => m != null && m.matches("(?s).*9[0-9]{18}.*")),
+          "unicode-escape" -> metas.exists(m => m != null && m.contains("\\u")),
+          "newline" -> metas.exists(m => m != null && m.contains("\n"))
+        ).collect { case (l, true) => l }
+        val ok = tick == ((rows.size.toLong, 0L)) && lines.size == want.size &&
+          lines.zip(want).zip(metas).forall { case ((l, w), m) =>
+            val (jackson, catalyst) = (exact.readTree(l), exact.readTree(w))
+            !l.contains('\n') &&
+              withoutMetadata(jackson).equals(byValue, withoutMetadata(catalyst)) &&
+              jackson.get("event").get("metadata").equals(byValue, source(m)) &&
+              (!(utf8Jvm || asciiOnly(m)) || jackson.equals(byValue, catalyst))
+          }
+        Prop.collect[Set[String]](labels)(Prop(ok) :| s"tick $tick\njackson  ${lines.mkString("\n")}\ncatalyst ${want.mkString("\n")}")
+      }
+      val result = Test.check(Test.Parameters.default.withMinSuccessfulTests(40).withWorkers(1)
+        .withInitialSeed(Seed(20241020L)), prop)
+      withClue(org.scalacheck.util.Pretty.pretty(result)) { result.passed shouldBe true }
+      result.freqMap.getCounts.flatMap(_._1).flatMap { case l: Set[_] => l }.toSet shouldBe
+        Set("catalyst-oracle-whole-line", "null-metadata", "null-org", "null-space", "nested", "scalar-metadata",
+          "1.50", "1e3", "big-int", "unicode-escape", "newline")
+    }
+
+    it("fails the tick with nothing posted when a row's metadata is not JSON, as parse_json did") {
+      Seq("""{"a":1""", "", "  ", """{"a":1,"a":2}""", "not json").foreach { bad =>
+        withClue(s"metadata [$bad]: ") {
+          val (st, _) = newStoreAt()
+          val rows = Seq(ev("g1", "2024-05-01T10:00:00Z"), withMetadata(ev("g2", "2024-05-01T10:00:01Z"), bad))
+          st.storeCFAuditEvents(onDriver(rows)) shouldBe 2L
+          an[Exception] should be thrownBy catalystPayloads(st.events)
+          val poster = new FakePoster(Nil)
+          val reg = new MetricsRegistry
+          new SplunkShipper(st, new SplunkHecClient(poster, "https://hec", "KEY", sleep = _ => ()),
+            "test-env", reg).shipOnce() shouldBe ((0L, 1L))
+          poster.posts shouldBe empty
+          st.cursors.count() shouldBe 0L
+          reg.counterValue(Metrics.ShipperErrors) shouldBe 1.0
+        }
+      }
+      // text after the first JSON value is not read, by either
+      val (st, _) = newStoreAt()
+      st.storeCFAuditEvents(onDriver(Seq(withMetadata(ev("g1", "2024-05-01T10:00:00Z"), """{"a":1} {"b":"""))))
+      val poster = new FakePoster(Nil)
+      new SplunkShipper(st, new SplunkHecClient(poster, "https://hec", "KEY", sleep = _ => ()),
+        "test-env", new MetricsRegistry).shipOnce() shouldBe ((1L, 0L))
+      mapper.readTree(poster.posts.head._2) shouldBe mapper.readTree(catalystPayloads(st.events).head)
+    }
+
     it("re-ships the cursor second's other events on the next tick (boundary at-least-once, R6)") {
       val st = newStore()
       seedAt(st, Seq(("g1", "2024-01-01T10:00:00Z"), ("g2", "2024-01-01T10:00:00Z")))
@@ -1527,25 +1663,90 @@ class StoreAndPipelineSpec extends SparkSpec {
       sidecarText(dir, "_stats_count") shouldBe "60"
       treeBytes(dir).keys.filter(_.endsWith(".tmp")) shouldBe empty
     }
+
+    it("appends each date's rows as one driver-written parquet file that Spark reads back, footer schema included") {
+      import org.apache.hadoop.fs.{Path => HPath}
+      import org.apache.parquet.hadoop.ParquetFileReader
+      import org.apache.parquet.hadoop.util.HadoopInputFile
+      import org.apache.parquet.schema.LogicalTypeAnnotation
+      import org.apache.spark.sql.types.{DataType, TimestampType}
+      val (st, dir) = newStoreAt()
+      val micros = "2024-05-01T10:00:00.123456Z"
+      val rows = Seq(
+        Row(0L, "g1", Timestamp.from(Instant.parse(micros)), micros, "t", "Zoë", "at", "名前", "au",
+          "e", "et", "en", null, null, null),
+        Row(0L, "g2", Timestamp.from(Instant.parse("2024-05-01T11:00:00Z")), "2024-05-01T11:00:00Z", "t",
+          "a", "at", "an", "au", "e", "et", "en", "og", "sg", """{"k":"ü😀","n":[1,{"x":null}]}"""),
+        Row(0L, "g3", Timestamp.from(Instant.parse("2024-05-02T00:00:00.000001Z")),
+          "2024-05-02T00:00:00.000001Z", "t", "a", "at", "an", "au", "e", "et", "en", "og", null, "{}"))
+      st.storeCFAuditEvents(onDriver(rows)) shouldBe 3L
+      val expected = rows.zipWithIndex.map { case (r, i) => r.toSeq.updated(0, i + 1L) }
+      storedRows(st) shouldBe expected
+      // one file per date, in its directory, named as Spark names a data file
+      val files = treeBytes(dir.resolve("cf_audit_events")).keys.filter(_.endsWith(".parquet")).toSeq.sorted
+      files.map(_.takeWhile(_ != '/')) shouldBe Seq("event_date=2024-05-01", "event_date=2024-05-02")
+      all(files.map(_.dropWhile(_ != '/').drop(1))) should fullyMatch regex
+        s"part-[0-9a-f-]{36}\\.c000${DriverParquet.codec(spark).getExtension.replace(".", "\\.")}\\.parquet"
+      // partition discovery reads event_date from the directory name
+      spark.read.parquet(dir.resolve("cf_audit_events").toString).orderBy("id")
+        .select("event_date").collect().map(_.getDate(0).toString).toSeq shouldBe
+        Seq("2024-05-01", "2024-05-01", "2024-05-02")
+      // the footer schema alone: the 15 event columns, no event_date
+      val day1 = dir.resolve("cf_audit_events").resolve(files.head)
+      val inferred = spark.read.parquet(day1.toString)
+      inferred.schema.fieldNames.toSeq shouldBe Schemas.cfAuditEvents.fieldNames.toSeq
+      inferred.schema("created_at").dataType shouldBe TimestampType
+      inferred.orderBy("id").collect().map(_.toSeq).toSeq shouldBe expected.take(2)
+      val reader = ParquetFileReader.open(HadoopInputFile.fromPath(new HPath(day1.toUri),
+        spark.sparkContext.hadoopConfiguration))
+      val meta = try reader.getFooter.getFileMetaData finally reader.close()
+      val kv = meta.getKeyValueMetaData.asScala
+      DataType.fromJson(kv("org.apache.spark.sql.parquet.row.metadata")) shouldBe
+        StructType(Schemas.cfAuditEvents.map(_.copy(nullable = true)))
+      kv("org.apache.spark.version") shouldBe spark.version.takeWhile(c => c.isDigit || c == '.')
+      meta.getSchema.getType(meta.getSchema.getFieldIndex("created_at")).getLogicalTypeAnnotation shouldBe
+        LogicalTypeAnnotation.timestampType(true, LogicalTypeAnnotation.TimeUnit.MICROS)
+      meta.getSchema.containsField("event_date") shouldBe false
+    }
+
+    it("a crash before an append's rename leaves only a hidden file: reads skip it and init deletes it") {
+      import org.apache.hadoop.fs.{Path => HPath}
+      val (st, dir) = newStoreAt()
+      st.storeCFAuditEvents(onDriver(Seq(ev("g1", "2024-05-01T10:00:00Z")))) shouldBe 1L
+      // what an append leaves when the process dies between its file write and its rename
+      val hidden = dir.resolve("cf_audit_events/event_date=2024-05-01")
+        .resolve(s".${DriverParquet.fileName(spark)}.tmp")
+      DriverParquet.write(spark, new HPath(hidden.toUri), Schemas.cfAuditEvents,
+        Seq(ev("g2", "2024-05-01T10:00:01Z")))
+      Files.exists(hidden) shouldBe true
+      st.events.select("guid").collect().map(_.getString(0)).toSeq shouldBe Seq("g1")
+      spark.read.parquet(dir.resolve("cf_audit_events").toString).count() shouldBe 1L
+      val restarted = new ParquetEventStore(spark, dir.toString)
+      restarted.init()
+      treeBytes(dir).keys.filter(_.contains(".tmp")) shouldBe empty
+      // the lost row is stored when it is fetched again
+      restarted.storeCFAuditEvents(onDriver(Seq(ev("g2", "2024-05-01T10:00:01Z")))) shouldBe 1L
+      restarted.events.select("guid").collect().map(_.getString(0)).sorted.toSeq shouldBe Seq("g1", "g2")
+    }
   }
 
   describe("driver path job count") {
-    it("costs one job for a fresh-date page and at most two for a re-fetch") {
+    it("costs no job for a fresh-date page and at most one for a re-fetch") {
       val (st, _) = newStoreAt()
       val collector = new Collector(spark, st,
         new CfAuditEventFetcher(new FakeTransport(Map.empty), ""), new MetricsRegistry)
       val mk = (g: String, at: String) => CfWireEvent(g, at, "t", "a", "at", "an", "au",
         "e", "et", "en", "", "sg", "{}")
       val page1 = (0 until 100).map(i => mk(s"p1-$i", f"2024-05-01T10:${i % 60}%02d:00Z"))
-      jobsOf(st.storeCFAuditEvents(collector.pageToDf(page1))) shouldBe 1
+      jobsOf(st.storeCFAuditEvents(collector.pageToDf(page1))) shouldBe 0
       // the next page re-fetches part of the first one (the 5 s overlap)
       val page2 = page1.takeRight(10) ++
         (0 until 90).map(i => mk(s"p2-$i", f"2024-05-01T11:${i % 60}%02d:00Z"))
       var stored = 0L
-      jobsOf { stored = st.storeCFAuditEvents(collector.pageToDf(page2)) } should be <= 2
+      jobsOf { stored = st.storeCFAuditEvents(collector.pageToDf(page2)) } should be <= 1
       stored shouldBe 90L
       jobsOf(st.storeCFAuditEvents(collector.pageToDf(
-        Seq(mk("p3", "2024-05-02T00:00:01Z"))))) shouldBe 1
+        Seq(mk("p3", "2024-05-02T00:00:01Z"))))) shouldBe 0
       st.getCFEventCount() shouldBe 191L
     }
 
@@ -1640,7 +1841,7 @@ class StoreAndPipelineSpec extends SparkSpec {
     def posted(poster: FakePoster): Seq[String] =
       poster.posts.toSeq.map(p => "\"guid\":\"([^\"]+)\"".r.findFirstMatchIn(p._2).get.group(1))
 
-    it("a warm re-fetch of guids this store appended runs one job, the append") {
+    it("a warm re-fetch of guids this store appended runs no job") {
       val (st, _) = newStoreAt()
       val collector = new Collector(spark, st,
         new CfAuditEventFetcher(new FakeTransport(Map.empty), ""), new MetricsRegistry)
@@ -1649,7 +1850,7 @@ class StoreAndPipelineSpec extends SparkSpec {
       // the collector's 5 s overlap: the last 10 guids again, then 90 new ones
       val page2 = page1.takeRight(10) ++ (0 until 90).map(i => mk(s"p2-$i", f"2024-05-01T10:01:${i % 60}%02dZ"))
       var stored = 0L
-      jobsOf { stored = st.storeCFAuditEvents(collector.pageToDf(page2)) } shouldBe 1
+      jobsOf { stored = st.storeCFAuditEvents(collector.pageToDf(page2)) } shouldBe 0
       stored shouldBe 90L
       st.getCFEventCount() shouldBe 190L
       st.events.select("guid").distinct().count() shouldBe 190L
@@ -1672,6 +1873,23 @@ class StoreAndPipelineSpec extends SparkSpec {
       shipped shouldBe ((0L, 0L))
       posted(poster) shouldBe Seq("g2", "g3")
       st.cursors.collect().map(r => (r.getString(0), r.getString(2))).toSeq shouldBe Seq(("s", "g3"))
+    }
+
+    it("a fresh store ships its first page with no Spark job: the tail answers the epoch cursor") {
+      val (st, _) = newStoreAt()
+      val poster = new FakePoster(Nil)
+      val shipper = shipperOf(st, poster)
+      var shipped = (0L, 0L)
+      jobsOf { shipped = shipper.shipOnce() } shouldBe 0 // idle, before any page
+      shipped shouldBe ((0L, 0L))
+      val collector = new Collector(spark, st,
+        new CfAuditEventFetcher(new FakeTransport(Map.empty), ""), new MetricsRegistry)
+      st.storeCFAuditEvents(collector.pageToDf((0 until 100).map(i =>
+        mk(f"p$i%03d", f"2024-05-01T10:00:${i % 60}%02d.$i%03dZ")))) shouldBe 100L
+      fromTail(st.getUnshippedCFAuditEventsForShipper("s")) shouldBe true
+      jobsOf { shipped = shipper.shipOnce() } shouldBe 0
+      shipped shouldBe ((100L, 0L))
+      posted(poster) shouldBe (0 until 100).sortBy(i => (i % 60, i)).map(i => f"p$i%03d")
     }
 
     it("a new store over the same warehouse scans until its first append") {
@@ -1715,13 +1933,13 @@ class StoreAndPipelineSpec extends SparkSpec {
       val (st, dir) = newStoreAt()
       st.storeCFAuditEvents(onDriver(Seq(ev("g1", "2024-05-01T10:00:00Z")))) shouldBe 1L
       st.updateShipperCursor("s", "2024-05-01T10:00:00Z", "g1")
-      // a regular file where the writer wants its _temporary directory makes the append throw
-      val blocker = Files.createFile(dir.resolve("cf_audit_events/_temporary"))
+      // a regular file where the append wants the new date's directory makes it throw
+      val blocker = Files.createFile(dir.resolve("cf_audit_events/event_date=2024-05-02"))
       an[Exception] should be thrownBy
-        st.storeCFAuditEvents(onDriver(Seq(ev("g2", "2024-05-01T10:00:01Z"))))
+        st.storeCFAuditEvents(onDriver(Seq(ev("g2", "2024-05-02T10:00:01Z"))))
       Files.delete(blocker)
       guidsOf(st.getUnshippedCFAuditEventsForShipper("s")) shouldBe Nil
-      st.storeCFAuditEvents(onDriver(Seq(ev("g2", "2024-05-01T10:00:01Z")))) shouldBe 1L
+      st.storeCFAuditEvents(onDriver(Seq(ev("g2", "2024-05-02T10:00:01Z")))) shouldBe 1L
       val q = st.getUnshippedCFAuditEventsForShipper("s")
       fromTail(q) shouldBe true
       guidsOf(q) shouldBe Seq("g2")
