@@ -1,8 +1,9 @@
 package graft.store
 
 import java.sql.Timestamp
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row, functions => F}
 
+import graft.model.Schemas
 import graft.operators.AuditQueries.RawEventFilter
 
 /** Spark analog of the reference's `EventDB` interface (`pkg/db/store.go:
@@ -12,9 +13,16 @@ import graft.operators.AuditQueries.RawEventFilter
   * (guid, created_at timestamp, created_at_raw, event_type, actor*,
   * actee*, organization_guid/space_guid nullable, metadata) — the store
   * assigns the ingest sequence `id` (R20) and deduplicates on guid (R18).
+  *
+  * Two members have DataFrame defaults and exist for the daemon's hot
+  * path: [[storeCFAuditEventPage]] (the collector's page write) and
+  * [[getUnshippedCFAuditEventRowsForShipper]] (the shipper's read). A
+  * store that keeps rows on the driver overrides them to build no query
+  * plan; every other store inherits the DataFrame members' behaviour.
   */
 trait EventStore {
-  /** Idempotent schema init/migration (store.go:55-71). */
+  /** Idempotent schema init/migration (store.go:55-71). `ParquetEventStore`
+    * creates a fresh warehouse with no Spark job. */
   def init(): Unit
 
   /** Dedup-append a batch; returns rows actually stored (S7/R18).
@@ -22,11 +30,15 @@ trait EventStore {
     * dropped, one row per guid is kept, and guids already stored are
     * skipped. `ParquetEventStore` keeps a guid's first row, numbers new
     * rows `max + 1 …` in (created_at, guid) order, and stores a batch
-    * whose rows sit on the driver (a collector page) with no Spark job:
-    * it writes the parquet files on the driver. One job runs when its
-    * bloom sidecars say a guid it did not append itself recently may
-    * already be stored. */
+    * whose rows sit on the driver with no Spark job: it writes the parquet
+    * files on the driver. One job runs when its bloom sidecars say a guid
+    * it did not append itself recently may already be stored. */
   def storeCFAuditEvents(batch: DataFrame): Long
+
+  /** [[storeCFAuditEvents]] of a collector page already converted on the
+    * driver. `ParquetEventStore` takes the page's checked rows as they are:
+    * no query plan, and no Spark job unless the dedup probe needs one. */
+  def storeCFAuditEventPage(page: EventPage): Long = storeCFAuditEvents(page.df)
 
   /** Ordered page over stored events (store.go:108-145). */
   def getCFAuditEvents(filter: RawEventFilter): DataFrame
@@ -45,6 +57,14 @@ trait EventStore {
     * watermark is the epoch) from its own recent appends, with no Spark
     * job. */
   def getUnshippedCFAuditEventsForShipper(shipperName: String): DataFrame
+
+  /** [[getUnshippedCFAuditEventsForShipper]]'s rows, collected, with the
+    * `Schemas.cfAuditEvents` columns in that order. `ParquetEventStore`
+    * returns the rows of its tail as they are when the tail answers the
+    * cursor: no query plan. */
+  def getUnshippedCFAuditEventRowsForShipper(shipperName: String): Seq[Row] =
+    getUnshippedCFAuditEventsForShipper(shipperName)
+      .select(Schemas.cfAuditEvents.fieldNames.toSeq.map(F.col): _*).collect().toSeq
 
   /** Cursor upsert; `updatedAt` is the event's RAW string timestamp — the
     * store performs the cast, like Postgres does (store.go:262-287).

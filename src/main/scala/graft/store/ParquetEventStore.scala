@@ -10,7 +10,7 @@ import org.apache.hadoop.fs.{FileContext, FileStatus, Options, Path}
 import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession, functions => F}
 import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.graftnative.{BloomFunctions, DriverParquet}
-import org.apache.spark.sql.types.{DateType, StructType}
+import org.apache.spark.sql.types.DateType
 import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.util.sketch.BloomFilter
 
@@ -32,21 +32,27 @@ import graft.operators.AuditQueries.RawEventFilter
   *    (collector.go:36), so a batch can only collide with events in its own
   *    time range. Dedup is scoped to partitions with
   *    `event_date >= min(batch date)` — O(overlap), not O(history).
-  *  - **One write path, on the driver**: a batch is CHECK-filtered by
-  *    Spark and collected with `limit(MaxBatchRows + 1)`; more than
-  *    [[ParquetEventStore.MaxBatchRows]] valid rows is refused before any
-  *    write. A collector page is at most 100 rows built on the driver, so
-  *    its plan, the limit included, folds to a `LocalRelation` and the
-  *    collect runs no job; any other small batch pays one collect job. The
-  *    store then dedups, numbers, blooms and appends the rows on the
-  *    driver: each date's rows become one parquet file, written through
-  *    Spark's own `ParquetWriteSupport` (`DriverParquet`) as a hidden
-  *    `.<name>.tmp` sibling inside `event_date=<date>/` and renamed to its
-  *    `part-<uuid>.c000.<codec>.parquet` name once every file of the batch
-  *    is written. Readers list no dot file, so a crash before a rename
-  *    leaves nothing visible, and `init` deletes such files. The append
-  *    writes no `_SUCCESS` marker. A collector page launches no Spark job:
-  *    per-job launch cost, not data volume, bounded the daemon.
+  *  - **One write path, on the driver**: a collector page arrives as an
+  *    [[EventPage]], rows already converted and CHECK-filtered on the
+  *    driver, and is stored with no query plan; any other batch is
+  *    CHECK-filtered by Spark and collected with `limit(MaxBatchRows + 1)`
+  *    (no job when its plan folds to a `LocalRelation`, one otherwise).
+  *    More than [[ParquetEventStore.MaxBatchRows]] valid rows is refused
+  *    before any write. The store then dedups, numbers, blooms and appends
+  *    the rows on the driver: each date's rows become one parquet file,
+  *    written through Spark's own `ParquetWriteSupport` (`DriverParquet`)
+  *    as a hidden `.<name>.tmp` sibling inside `event_date=<date>/` and
+  *    renamed to its `part-<uuid>.c000.<codec>.parquet` name once every
+  *    file of the batch is written. Readers list no dot file, so a crash
+  *    before a rename leaves nothing visible, and `init` deletes such
+  *    files. The append writes no `_SUCCESS` marker. A collector page
+  *    launches no Spark job: per-job launch cost, not data volume, bounded
+  *    the daemon.
+  *  - **A Spark-free `init`**: a fresh warehouse's events table is a bare
+  *    directory (what an empty partitioned Spark write leaves, minus
+  *    `_SUCCESS`; every reader passes the schema) and its cursor table one
+  *    empty `DriverParquet` file, so opening it runs no Spark job and
+  *    builds no query plan.
   *  - **Bloom-gated dedup probe**: each scoped partition's
   *    `_bloom_guid/<date>` sidecar is read once and probed per guid. Only
   *    bloom-positive guids (every guid, for a partition with no readable
@@ -67,7 +73,8 @@ import graft.operators.AuditQueries.RawEventFilter
   *    a batch guid held in the tail with an in-scope date is stored, so
   *    it skips the probe (an overlap re-fetch runs no job), and an
   *    unshipped read whose cursor is strictly above the watermark is
-  *    answered from the tail as a local DataFrame, with no Spark job. An
+  *    answered from the tail, with no Spark job (as rows, with no query
+  *    plan either, for the shipper). An
   *    epoch watermark answers every cursor, the epoch one of a fresh
   *    shipper included: the CHECK keeps no row at or before the epoch, so
   *    that tail holds the whole table.
@@ -101,17 +108,11 @@ final class ParquetEventStore(spark: SparkSession, warehouseDir: String) extends
 
   private def exists(p: String): Boolean = fs.exists(new Path(p))
 
-  private def emptyEvents: DataFrame =
-    spark.createDataFrame(spark.sparkContext.emptyRDD[Row], Schemas.cfAuditEvents)
-
-  private def emptyCursors: DataFrame =
-    spark.createDataFrame(spark.sparkContext.emptyRDD[Row], Schemas.shipperCursors)
-
   override def init(): Unit = {
-    // Idempotent, like the reference's in-transaction DDL (store.go:55-71).
+    // Idempotent, like the reference's in-transaction DDL (store.go:55-71),
+    // and Spark-free: no job, no query plan.
     if (!exists(eventsPath)) {
-      emptyEvents.withColumn("event_date", F.to_date(F.col("created_at")))
-        .write.partitionBy("event_date").parquet(eventsPath)
+      fs.mkdirs(new Path(eventsPath)) // an empty table: no partition yet
       // A table created here is empty, so its sidecars start exact and the
       // first batch needs no recovery scan.
       writeSidecar(maxIdPath, 0L)
@@ -123,10 +124,8 @@ final class ParquetEventStore(spark: SparkSession, warehouseDir: String) extends
     // table renamed aside, complete: bring it back rather than start empty.
     if (!exists(cursorsPath) && exists(cursorsPath + "_old"))
       renameOrAbort(new Path(cursorsPath + "_old"), new Path(cursorsPath))
-    if (!exists(cursorsPath)) {
-      emptyCursors.write.parquet(cursorsPath)
-      cursorCache = Some((cursorListing(), Nil)) // known empty: no first read
-    }
+    // One empty file; the table is then known empty, so it needs no first read.
+    if (!exists(cursorsPath)) writeCursors(Nil)
     // Files of an append that crashed before its rename.
     Option(fs.globStatus(new Path(eventsPath, "event_date=*/.part-*.tmp"))).toSeq.flatten
       .foreach(f => fs.delete(f.getPath, false))
@@ -146,13 +145,18 @@ final class ParquetEventStore(spark: SparkSession, warehouseDir: String) extends
 
   override def storeCFAuditEvents(batch: DataFrame): Long = {
     // One CHECK filter (R21) and one projection: the event columns, the id
-    // (assigned below) and `__day`, Spark's spelling of the row's
-    // event_date, which names its partition directory as a partitioned
-    // Spark write would.
+    // assigned below.
     val cols = Schemas.cfAuditEvents.fieldNames.toSeq.map(c => if (c == "id") F.lit(0L).as(c) else F.col(c))
-    val dated = batch.filter(AuditQueries.passesCheck)
-      .select(cols :+ F.to_date(F.col("created_at")).cast("string").as("__day"): _*)
-    val rows = dated.limit(MaxBatchRows + 1).collect() // a collector page: no job
+    val rows = batch.filter(AuditQueries.passesCheck).select(cols: _*)
+      .limit(MaxBatchRows + 1).collect() // a local batch: no job
+    storeChecked(EventPage.checked(rows.toSeq, EventPage.sessionZone(spark)))
+  }
+
+  override def storeCFAuditEventPage(page: EventPage): Long = storeChecked(page.checked)
+
+  /** Stores rows that passed the CHECK, with their event dates, after
+    * refusing more than [[ParquetEventStore.MaxBatchRows]] of them. */
+  private def storeChecked(rows: IndexedSeq[(Row, LocalDate)]): Long = {
     if (rows.length > MaxBatchRows)
       throw new IllegalArgumentException(
         s"batch has more than $MaxBatchRows valid rows; store it in pages of at most $MaxBatchRows")
@@ -160,12 +164,9 @@ final class ParquetEventStore(spark: SparkSession, warehouseDir: String) extends
   }
 
   private val eventsWithDateSchema = Schemas.cfAuditEvents.add("event_date", DateType)
-  // The rows carry whatever nulls the batch had.
-  private val nullableEvents = StructType(Schemas.cfAuditEvents.map(_.copy(nullable = true)))
   private val idIdx = Schemas.cfAuditEvents.fieldIndex("id")
   private val guidIdx = Schemas.cfAuditEvents.fieldIndex("guid")
   private val createdIdx = Schemas.cfAuditEvents.fieldIndex("created_at")
-  private val dayIdx = Schemas.cfAuditEvents.length // the trailing `__day`
 
   /** Spark's string order (UTF-8 bytes, nulls first), the guid tiebreak
     * of `AuditQueries.assignIngestSeq`, reproduced on the driver. */
@@ -191,25 +192,25 @@ final class ParquetEventStore(spark: SparkSession, warehouseDir: String) extends
     else Tail(all.drop(cut), math.max(prior.watermark, all(cut - 1).at))
   }
 
-  /** Stores a batch already collected (rows: event columns, `__day`):
-    * first row per guid, dedup against the overlap scope, ids in
-    * (created_at, guid) order, per-date blooms, the append on the driver.
-    * No Spark job runs unless a bloom sidecar in scope matches a batch guid
-    * the tail does not hold. */
-  private def storeOnDriver(rows: Array[Row]): Long = {
-    val fresh = rows.distinctBy(_.getString(guidIdx)) // first occurrence per guid wins
+  /** Stores checked rows (event columns) with their event dates: first
+    * row per guid, dedup against the overlap scope, ids in (created_at,
+    * guid) order, per-date blooms, the append on the driver. No Spark job
+    * runs unless a bloom sidecar in scope matches a batch guid the tail
+    * does not hold. */
+  private def storeOnDriver(rows: IndexedSeq[(Row, LocalDate)]): Long = {
+    val fresh = rows.distinctBy(_._1.getString(guidIdx)) // first occurrence per guid wins
     if (fresh.isEmpty) return 0L
-    val minDay = fresh.map(r => LocalDate.parse(r.getString(dayIdx))).min
+    val minDay = fresh.map(_._2).min
     val scope = partitionDates
       .filter(d => Try(LocalDate.parse(d)).toOption.exists(!_.isBefore(minDay)))
-    val batchDays = fresh.map(_.getString(dayIdx)).distinct
+    val batchDays = fresh.map(_._2.toString).distinct
     val sidecars = (scope ++ batchDays).distinct.map(d => d -> readBytes(bloomPath(d))).toMap
     // A guid the tail holds at an in-scope date is stored; the rest are
     // probed. Blooms have no false negatives: only bloom-positive guids
     // (all guids where a scoped partition has no readable sidecar) can be.
     val prior = tail
     val inTail = (g: String) => prior.exists(_.holds(g, minDay))
-    val guids = fresh.map(_.getString(guidIdx)).filter(g => g != null && !inTail(g))
+    val guids = fresh.map(_._1.getString(guidIdx)).filter(g => g != null && !inTail(g))
       .map(g => g -> BloomFunctions.hashDriver(g))
     val positives = scope.flatMap { d =>
       val bf = sidecars(d).flatMap(b => Try(BloomFilter.readFrom(b)).toOption)
@@ -221,24 +222,21 @@ final class ParquetEventStore(spark: SparkSession, warehouseDir: String) extends
         .parquet(positives.map(_._1).distinct.map(d => s"$eventsPath/event_date=$d"): _*)
         .filter(F.col("guid").isin(positives.map(_._2).distinct: _*))
         .select("guid").collect().map(_.getString(0)).toSet
-    val kept = fresh.filterNot { r =>
+    val kept = fresh.filterNot { case (r, _) =>
       val g = r.getString(guidIdx)
       inTail(g) || stored.contains(g)
-    }.sorted(ingestOrder)
+    }.sortBy(_._1)(ingestOrder)
     val n = kept.length.toLong
     if (n > 0) {
       // Before the append: the exact max the rows above it are measured from.
       val tailBefore = prior.getOrElse(Tail(Vector.empty, micros(scanLatest())))
       val base = maxId()
-      val withId = kept.iterator.zipWithIndex.map { case (r, i) =>
-        r.getString(dayIdx) -> Row.fromSeq(r.toSeq.init.updated(idIdx, base + 1 + i))
-      }.toSeq
-      val byDay = withId.groupMap(_._1)(_._2)
+      val added = kept.zipWithIndex.map { case ((r, d), i) =>
+        TailRow(Row.fromSeq(r.toSeq.updated(idIdx, base + 1 + i)), micros(r.getTimestamp(createdIdx)), d)
+      }
+      val byDay = added.groupMap(_.day.toString)(_.row)
       val blooms = byDay.toSeq.map { case (d, rs) =>
         d -> BloomFunctions.bloomDriver(rs.map(_.getString(guidIdx)), bloomItems, bloomBits)
-      }
-      val added = withId.map { case (d, r) =>
-        TailRow(r, micros(r.getTimestamp(createdIdx)), LocalDate.parse(d))
       }
       commit(base, n, blooms, sidecars, added.map(_.at).max) {
         append(byDay)
@@ -282,8 +280,8 @@ final class ParquetEventStore(spark: SparkSession, warehouseDir: String) extends
     writeSidecar(maxIdPath, base + n)
     // Guid bloom sidecars ALSO update before the data lands: a bloom
     // that over-approximates (crash after bloom, before data) only
-    // costs a false-positive partition scan; one that under-
-    // approximates would make lookupByGuid MISS rows.
+    // costs a false-positive dedup probe; one that under-approximates
+    // would let a re-fetched guid skip the probe and be stored twice.
     blooms.foreach { case (d, b) =>
       writeBytes(bloomPath(d), mergedSidecar(d, read.getOrElse(d, readBytes(bloomPath(d))), b))
     }
@@ -366,26 +364,6 @@ final class ParquetEventStore(spark: SparkSession, warehouseDir: String) extends
     n
   }
 
-  /** Partitions a guid POINT LOOKUP must scan: every partition whose guid
-    * bloom sidecar matches (or that has no sidecar — unprunable). A
-    * driver-side metadata decision, O(#partitions), never a data scan. */
-  def guidCandidatePartitions(guid: String): Seq[String] =
-    partitionDates.filter(d => readBytes(bloomPath(d))
-      .forall(b => BloomFunctions.mightContainDriver(b, guid)))
-
-  /** Guid point lookup — the reference's `cf_audit_events_guid` index
-    * access path: per-partition bloom sidecars (maintained at store time,
-    * before the data append) prune the scan to the partitions that can
-    * possibly hold the guid; blooms have no false negatives, so the
-    * lookup is exact. */
-  def lookupByGuid(guid: String): DataFrame = {
-    val cands = guidCandidatePartitions(guid)
-    if (cands.isEmpty) emptyEvents
-    else spark.read.schema(Schemas.cfAuditEvents)
-      .parquet(cands.map(d => s"$eventsPath/event_date=$d"): _*)
-      .filter(F.col("guid") === guid)
-  }
-
   /** Highest assigned ingest id. Maintained in a sidecar at store time —
     * at 100 TB a per-micro-batch `max(id)` over the whole table would read
     * the full id column every 2 minutes. The full scan remains only as
@@ -439,7 +417,15 @@ final class ParquetEventStore(spark: SparkSession, warehouseDir: String) extends
 
   private def writeStatsCount(total: Long): Unit = writeSidecar(statsPath, total)
 
-  override def getUnshippedCFAuditEventsForShipper(shipperName: String): DataFrame = {
+  override def getUnshippedCFAuditEventsForShipper(shipperName: String): DataFrame =
+    unshipped(shipperName).fold(identity, rows => spark.createDataFrame(rows.asJava, EventPage.schema))
+
+  override def getUnshippedCFAuditEventRowsForShipper(shipperName: String): Seq[Row] =
+    unshipped(shipperName).fold(_.collect().toSeq, identity)
+
+  /** The unshipped rows from the tail when it holds every row at or after
+    * the cursor (Right), else the scan that reads them (Left). */
+  private def unshipped(shipperName: String): Either[DataFrame, Seq[Row]] = {
     // Resolve the cursor on the driver (the reference's scalar subquery).
     val (ts, guid) = AuditQueries.lastShippedOf(cursorRows(), shipperName)
     val from = micros(ts)
@@ -447,12 +433,10 @@ final class ParquetEventStore(spark: SparkSession, warehouseDir: String) extends
     // keeps only rows after the epoch. So it answers the epoch cursor too.
     tail.filter(t => t.watermark == 0L || t.watermark < from) match {
       case Some(t) =>
-        // Every row at or after the cursor is in the tail: unshippedAfter's
-        // filter, order, cap and guid anti-filter (NULL on either side
-        // drops the row) on the driver, as a local DataFrame.
-        val rows = t.rows.iterator.filter(_.at >= from).take(MaxBatchRows).map(_.row)
-          .filter { r => val g = r.getString(guidIdx); guid != null && g != null && g != guid }
-        spark.createDataFrame(rows.toSeq.asJava, nullableEvents)
+        // unshippedAfter's filter, order, cap and guid anti-filter (NULL on
+        // either side drops the row), on the driver.
+        Right(t.rows.iterator.filter(_.at >= from).take(MaxBatchRows).map(_.row)
+          .filter { r => val g = r.getString(guidIdx); guid != null && g != null && g != guid }.toSeq)
       case None =>
         // Plan with the cursor as literals, so building the plan runs no
         // job. It also becomes a PARTITION predicate: the query's own filter
@@ -460,7 +444,7 @@ final class ParquetEventStore(spark: SparkSession, warehouseDir: String) extends
         // partitions — event_date >= date(cursor) prunes whole partitions,
         // keeping this scan O(unshipped days) on a 100 TB table.
         val pruned = eventsWithDate.filter(F.col("event_date") >= F.to_date(F.lit(ts)))
-        AuditQueries.unshippedAfter(pruned, F.lit(ts), F.lit(guid), Schemas.cfAuditEvents.fieldNames.toSeq)
+        Left(AuditQueries.unshippedAfter(pruned, F.lit(ts), F.lit(guid), Schemas.cfAuditEvents.fieldNames.toSeq))
     }
   }
 
@@ -555,53 +539,6 @@ final class ParquetEventStore(spark: SparkSession, warehouseDir: String) extends
     (rewritten, before, after)
   }
 
-  /** Z-order compaction: [[compact]] plus CLUSTERING — within each date
-    * partition, rows are ordered by the Morton interleave of
-    * (actor-guid hex prefix, time-of-day), so every output file carries a
-    * NARROW min/max range on both `actor` and `created_at`. A stats-aware
-    * scan for "events of actor X between t1 and t2" (the reference's
-    * actor/actee index shape, create_cf_audit_events.sql:19-24) then
-    * prunes multiplicatively at FILE granularity instead of reading the
-    * whole day. The actor dimension uses the first 4 hex chars parsed as
-    * an integer — ORDER-PRESERVING for fixed-charset guid strings, which
-    * is what makes the plain string min/max footer stats selective (a
-    * hash would cluster well but scatter the lexicographic stats).
-    * Non-hex actors land in band 0 and simply cluster together.
-    * All arithmetic is the exact-integer [[graft.operators.Layout]] form;
-    * the z column steers the exchange and is dropped before write. */
-  def compactZOrder(filesPerDay: Int = 8, maxRecordsPerFile: Long = 1000000L): (Long, Long) = {
-    val a16 = F.coalesce(
-      F.when(F.col("actor").rlike("^[0-9a-fA-F]{4}"),
-        F.expr("CAST(conv(substring(actor, 1, 4), 16, 10) AS BIGINT) % 65536")),
-      F.lit(0L))
-    val tod = F.pmod(F.unix_micros(F.col("created_at")), F.lit(86400000000L))
-    compactZOrder(Seq(a16, tod), filesPerDay, maxRecordsPerFile)
-  }
-
-  /** N-column z-order compaction — OPTIMIZE ZORDER BY an arbitrary
-    * dimension LIST (the reference keeps 6 single-column indexes,
-    * create_cf_audit_events.sql:19-24; created_at/org/space/event_type
-    * are all plausible clustering dims). Each expression must evaluate
-    * to a long (order-preserving for the column it stands in for);
-    * [[graft.operators.Layout.zValueN]] min-max normalizes every dim
-    * and interleaves at stride k. */
-  def compactZOrder(dims: Seq[org.apache.spark.sql.Column], filesPerDay: Int,
-                    maxRecordsPerFile: Long): (Long, Long) = {
-    import graft.operators.Layout
-    val before = countFiles()
-    val days = partitionDirs.size.max(1)
-    val tmp = eventsPath + "_compact"
-    Layout.zValueN(eventsWithDate, dims, "__z")
-      .repartitionByRange(days * filesPerDay, F.col("event_date"), F.col("__z"))
-      .sortWithinPartitions(F.col("event_date"), F.col("__z"))
-      .drop("__z")
-      .write.mode(SaveMode.Overwrite)
-      .option("maxRecordsPerFile", maxRecordsPerFile)
-      .partitionBy("event_date").parquet(tmp)
-    swapTree(tmp, eventsPath)
-    (before, countFiles())
-  }
-
   /** Retention: drop whole partitions older than `cutoff` — an O(#dropped
     * partitions) metadata operation, the point of date-partitioned layout
     * (no rewrite, no row-level delete). The dropped dates' bloom sidecars
@@ -630,14 +567,20 @@ final class ParquetEventStore(spark: SparkSession, warehouseDir: String) extends
     // Reference passes the raw string and lets the DB cast (store.go:271-281).
     val ts = Timestamp.from(java.time.OffsetDateTime.parse(updatedAt).toInstant)
     val existing = cursorRows().filter(r => !r.isNullAt(0) && r.getString(0) != shipperName)
-    val updated = existing :+ Row(shipperName, ts, shippedId)
-    // Write tmp, then the rename-aside swap: a crash never leaves the
-    // cursors only in a deleted tree (init() restores the `_old` sibling).
+    writeCursors(existing :+ Row(shipperName, ts, shippedId))
+  }
+
+  /** Writes the cursor table as one parquet file on the driver, into a
+    * `_tmp` tree that replaces the live one by the rename-aside swap (a
+    * crash never leaves the cursors only in a deleted tree; `init` restores
+    * the `_old` sibling), and holds its rows. */
+  private def writeCursors(rows: Seq[Row]): Unit = {
     val tmp = new Path(cursorsPath + "_tmp")
     if (fs.exists(tmp)) fs.delete(tmp, true)
-    DriverParquet.write(spark, new Path(tmp, "part-00000-cursors.parquet"), Schemas.shipperCursors, updated)
-    swapTree(tmp.toString, cursorsPath)
-    cursorCache = Some((cursorListing(), updated))
+    DriverParquet.write(spark, new Path(tmp, "part-00000-cursors.parquet"), Schemas.shipperCursors, rows)
+    if (exists(cursorsPath)) swapTree(tmp.toString, cursorsPath)
+    else renameOrAbort(tmp, new Path(cursorsPath))
+    cursorCache = Some((cursorListing(), rows))
   }
 }
 

@@ -2,12 +2,11 @@ package graft.streaming
 
 import java.time.Instant
 
-import org.apache.spark.sql.{SparkSession, functions => F}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.metrics.{Metrics, MetricsRegistry}
-import graft.model.Schemas
 import graft.sources.{CfAuditEventFetcher, CfWireEvent}
-import graft.store.EventStore
+import graft.store.{EventPage, EventStore}
 
 /** Ingest loop (`pkg/collectors/cf_audit_event_collector.go`): every tick,
   * resume from `max(created_at) − overlap` (epoch-clamped; empty store ⇒
@@ -51,18 +50,10 @@ final class Collector(
   }
 
   /** Wire page → typed batch with the ingest-boundary conversions applied
-    * once (parse timestamp, ''→NULL on org/space): SURVEY §1.3. One
-    * projection, so the plan is analysed once per page. */
-  def pageToDf(events: Seq[CfWireEvent]): org.apache.spark.sql.DataFrame = {
-    import spark.implicits._
-    events.toDF().select(Schemas.cfAuditEvents.fieldNames.toSeq.map {
-      case "id" => F.lit(0L).as("id") // assigned by the store (R20)
-      case "created_at" => F.to_timestamp(F.col("created_at")).as("created_at")
-      case "created_at_raw" => F.col("created_at").as("created_at_raw")
-      case c @ ("organization_guid" | "space_guid") => Schemas.emptyToNull(F.col(c)).as(c)
-      case c => F.col(c)
-    }: _*)
-  }
+    * once, on the driver ([[EventPage]]: parse timestamp, ''→NULL on
+    * org/space): SURVEY §1.3. The daemon stores the page's rows with
+    * `storeCFAuditEventPage`; this is the same rows as a DataFrame. */
+  def pageToDf(events: Seq[CfWireEvent]): DataFrame = EventPage(spark, events).df
 
   /** One tick: fetch all pages since the resume point, store page-by-page.
     * Returns Right(collected count) or Left(first error) — fail-fast. A
@@ -86,7 +77,7 @@ final class Collector(
             lsession.error("err-recv-events", e) // collector.go:55
             error = Some(e)
           case None if page.events.nonEmpty =>
-            if (store.storeCFAuditEvents(pageToDf(page.events)) > 0) onStored()
+            if (store.storeCFAuditEventPage(EventPage(spark, page.events)) > 0) onStored()
             collected += page.events.size // reference counts fetched (collector.go:67-68)
             eventsCollectedLifetime += page.events.size
             registry.inc(Metrics.CollectorEventsCollected, page.events.size.toDouble)

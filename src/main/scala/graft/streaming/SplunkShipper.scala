@@ -7,9 +7,10 @@ import com.fasterxml.jackson.core.JsonParser
 import com.fasterxml.jackson.databind.{DeserializationFeature, JsonNode, ObjectMapper}
 import com.fasterxml.jackson.databind.cfg.JsonNodeFeature
 import com.fasterxml.jackson.databind.node.NullNode
-import org.apache.spark.sql.{Row, functions => F}
+import org.apache.spark.sql.Row
 
 import graft.metrics.{Metrics, MetricsRegistry}
+import graft.model.Schemas
 import graft.sources.{HttpReply, HttpTransport}
 import graft.store.EventStore
 
@@ -63,11 +64,12 @@ final class SplunkHecClient(
   * (`shipper_test.go:187-203`). Errors never kill the loop (ST5).
   *
   * The per-tick batch is capped at 8192 by the store query (store.go:206),
-  * so collecting it to the driver is bounded by design. Events are POSTed
+  * so holding it on the driver is bounded by design. Events are POSTed
   * one per request, serially, as the reference does (`shipper.go:122-135`).
-  * A tick collects the payload columns of the batch and builds every HEC
-  * line with Jackson before the first POST, so a row whose `metadata` is
-  * not JSON fails the tick with nothing posted.
+  * A tick reads the batch as rows (`getUnshippedCFAuditEventRowsForShipper`:
+  * no query plan when the store's tail answers) and builds every HEC line
+  * with Jackson before the first POST, so a row whose `metadata` is not
+  * JSON fails the tick with nothing posted.
   */
 final class SplunkShipper(
     store: EventStore,
@@ -77,13 +79,13 @@ final class SplunkShipper(
     shipperName: String = "cf-audit-events-to-splunk",
     logger: graft.logging.Lager = graft.logging.Lager.noop) {
 
-  import SplunkShipper.{Mapper, PayloadCols}
+  import SplunkShipper.{CreatedRawIdx, GuidIdx, Mapper, PayloadCols}
 
   // lager session naming as the reference: shipper.go:60 + :94
   private val lsession = logger.session("cf-audit-events-to-splunk-shipper").session("run")
 
   /** `{"sourcetype":"cf-audit-event","source":env,"event":{...}}`
-    * (shipper.go:24-28,187-192) for a row of [[PayloadCols]]. The inner
+    * (shipper.go:24-28,187-192) for an event row. The inner
     * event mirrors the wire struct the reference marshals
     * (`events.go:26-41`): `type` (not event_type), the RAW created_at
     * string, `''` for NULL org/space (the read-path coalesce,
@@ -94,12 +96,12 @@ final class SplunkShipper(
     val root = Mapper.createObjectNode()
     root.put("sourcetype", "cf-audit-event").put("source", deployEnv)
     val event = root.putObject("event")
-    PayloadCols.iterator.zipWithIndex.foreach {
-      case ((_, "metadata"), i) =>
+    PayloadCols.foreach {
+      case (i, "metadata") =>
         event.set[JsonNode]("metadata", if (r.isNullAt(i)) NullNode.instance else metadataTree(r.getString(i)))
-      case ((_, name @ ("organization_guid" | "space_guid")), i) =>
+      case (i, name @ ("organization_guid" | "space_guid")) =>
         event.put(name, if (r.isNullAt(i)) "" else r.getString(i))
-      case ((_, name), i) =>
+      case (i, name) =>
         if (!r.isNullAt(i)) event.put(name, r.getString(i))
     }
     Mapper.writeValueAsString(root)
@@ -115,9 +117,7 @@ final class SplunkShipper(
   def shipOnce(): (Long, Long) = {
     val t0 = System.nanoTime()
     try {
-      val batch = store.getUnshippedCFAuditEventsForShipper(shipperName)
-        .select(PayloadCols.map(c => F.col(c._1)): _*)
-        .collect() // ≤8192 by construction
+      val batch = store.getUnshippedCFAuditEventRowsForShipper(shipperName) // ≤8192 by construction
       // Every line before the first POST: a bad row fails the tick with nothing posted.
       val lines = batch.map(payload)
       var shipped = 0L
@@ -137,15 +137,15 @@ final class SplunkShipper(
         }
       }
       // Commit cursor with the RAW created_at string (shipper.go:140-143).
-      if (!lastOk.forall(r => commitCursor(r.getString(1), r.getString(0)))) (0L, 1L)
+      if (!lastOk.forall(r => commitCursor(r.getString(CreatedRawIdx), r.getString(GuidIdx)))) (0L, 1L)
       else {
         lastOk.foreach { r =>
           lsession.info("shipped-events",
-            "shipped" -> shipped, "last_guid" -> r.getString(0))
+            "shipped" -> shipped, "last_guid" -> r.getString(GuidIdx))
           registry.inc(Metrics.ShipperEventsShipped, shipped.toDouble)
           // "Not fatal" parse for the latest-shipped gauge (shipper.go:158-169).
           try registry.setGauge(Metrics.ShipperLatestEventTimestamp,
-            OffsetDateTime.parse(r.getString(1)).toInstant.getEpochSecond.toDouble)
+            OffsetDateTime.parse(r.getString(CreatedRawIdx)).toInstant.getEpochSecond.toDouble)
           catch { case _: Exception => () }
         }
         (shipped, if (failed) 1L else 0L)
@@ -189,14 +189,18 @@ final class SplunkShipper(
 }
 
 object SplunkShipper {
-  /** (column of an unshipped row, its field in the HEC event), in payload
-    * order; `guid` and `created_at_raw` first, as the cursor commit reads them. */
-  private val PayloadCols: Seq[(String, String)] = Seq(
+  private val GuidIdx = Schemas.cfAuditEvents.fieldIndex("guid")
+  private val CreatedRawIdx = Schemas.cfAuditEvents.fieldIndex("created_at_raw")
+
+  /** (index of an event row's column, its field in the HEC event), in
+    * payload order. */
+  private val PayloadCols: Seq[(Int, String)] = Seq(
     "guid" -> "guid", "created_at_raw" -> "created_at", "event_type" -> "type",
     "actor" -> "actor", "actor_type" -> "actor_type", "actor_name" -> "actor_name",
     "actor_username" -> "actor_username", "actee" -> "actee", "actee_type" -> "actee_type",
     "actee_name" -> "actee_name", "organization_guid" -> "organization_guid",
     "space_guid" -> "space_guid", "metadata" -> "metadata")
+    .map { case (col, field) => Schemas.cfAuditEvents.fieldIndex(col) -> field }
 
   /** Strict JSON, as `parse_json` reads it: the first value (what follows
     * it is not read), no duplicate keys. Decimal numbers keep their

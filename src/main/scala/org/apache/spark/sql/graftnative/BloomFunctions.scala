@@ -36,15 +36,6 @@ object BloomFunctions {
         ExpressionUtils.expression(bloom),
         new XxHash64(Seq(ExpressionUtils.expression(value)))))
 
-  /** DRIVER-side probe with hashing identical to [[mightContain]] — for
-    * metadata-scale pruning decisions (e.g. per-partition sidecar blooms
-    * consulted before planning a scan) where spinning a 1-row job per
-    * sidecar would be absurd. */
-  def mightContainDriver(bloomBytes: Array[Byte], value: String): Boolean =
-    org.apache.spark.util.sketch.BloomFilter
-      .readFrom(new java.io.ByteArrayInputStream(bloomBytes))
-      .mightContainLong(hashDriver(value))
-
   /** The long [[bloomAgg]] and [[mightContain]] put into / probe the
     * filter for a string key: `XxHash64` of the value (its seed for null). */
   def hashDriver(value: String): Long =

@@ -11,13 +11,15 @@ import org.apache.spark.TestBus
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row, functions => F}
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.apache.spark.sql.types.StructType
 
 import graft.metrics.{Metrics, MetricsRegistry}
 import graft.model.Schemas
 import graft.operators.AuditQueries
 import graft.sources._
-import graft.store.{EventStore, ParquetEventStore}
+import graft.store.{EventPage, EventStore, ParquetEventStore}
 import graft.streaming.{Collector, Informer, SplunkHecClient, SplunkShipper}
 import org.apache.spark.sql.graftnative.DriverParquet
 
@@ -167,32 +169,6 @@ class StoreAndPipelineSpec extends SparkSpec {
       st.events.orderBy("guid").collect().map(_.getString(1)).toSeq shouldBe beforeRows
     }
 
-    it("guid point lookup prunes to the bloom-matching partition and stays exact") {
-      val st = newStore()
-      val f = new CfAuditEventFetcher(new FakeTransport(Map.empty), "")
-      val collector = new Collector(spark, st, f, new MetricsRegistry)
-      val mk = (g: String, at: String) => CfWireEvent(g, at, "t", "a", "at", "an", "au",
-        "e", "et", "en", "", "sg", "{}")
-      // 60 events across 3 date partitions
-      val wire = (0 until 60).map(i =>
-        mk(s"guid-$i", f"2024-04-${i % 3 + 1}%02dT0${i % 9}:00:00Z"))
-      st.storeCFAuditEvents(collector.pageToDf(wire))
-      // the lookup finds its row...
-      val row = st.lookupByGuid("guid-7").collect()
-      row.length shouldBe 1
-      row(0).getString(1) shouldBe "guid-7"
-      // ...and the metadata decision pruned to (almost) one partition:
-      // guid-7 lives in day 2 only; FP odds at 8M bits are negligible
-      st.guidCandidatePartitions("guid-7") shouldBe Seq("2024-04-02")
-      // absent guid: no partition matches, empty exact result
-      st.guidCandidatePartitions("no-such-guid") shouldBe Seq.empty
-      st.lookupByGuid("no-such-guid").count() shouldBe 0L
-      // a second batch into an existing partition MERGES its bloom
-      st.storeCFAuditEvents(collector.pageToDf(Seq(mk("late-guid", "2024-04-02T10:00:00Z"))))
-      st.guidCandidatePartitions("late-guid") shouldBe Seq("2024-04-02")
-      st.guidCandidatePartitions("guid-7") shouldBe Seq("2024-04-02") // old guids survive the merge
-    }
-
     it("compactPartial rewrites only over-fragmented partitions and leaves healthy ones untouched") {
       val st = newStore()
       val f = new CfAuditEventFetcher(new FakeTransport(Map.empty), "")
@@ -216,53 +192,6 @@ class StoreAndPipelineSpec extends SparkSpec {
       st.events.count() shouldBe 13L
       coldDir.listFiles().map(_.getName).toSet shouldBe coldFiles // untouched
       st.getCFEventCount() shouldBe 13L
-    }
-
-    it("compactZOrder clusters files so actor+time predicates prune; plain compact cannot") {
-      val st = newStore()
-      val f = new CfAuditEventFetcher(new FakeTransport(Map.empty), "")
-      val collector = new Collector(spark, st, f, new MetricsRegistry)
-      // 64 hex-prefixed actors spread over the 16-bit band, 2000 events
-      // interleaved across actors and times of one day
-      val actors = (0 until 64).map(i => f"${i * 1024}%04x-0000-4000-8000-000000000000")
-      val wire = (0 until 2000).map { n =>
-        val minute = (n * 37) % 1440
-        CfWireEvent(s"g$n", f"2024-03-01T${minute / 60}%02d:${minute % 60}%02d:00Z",
-          "t", actors(n % 64), "at", "an", "au", "e", "et", "en", "", "sg", "{}")
-      }
-      st.storeCFAuditEvents(collector.pageToDf(wire))
-
-      // Per-file NATURAL-column min/max — what parquet footer stats give a
-      // real scanner. Returns (files matching actor, files matching
-      // actor AND a 6h window, total files).
-      def touched(actor: String): (Long, Long, Long) = {
-        val ranges = st.events
-          .groupBy(F.input_file_name().as("f"))
-          .agg(F.min("actor").as("alo"), F.max("actor").as("ahi"),
-            F.min("created_at").as("tlo"), F.max("created_at").as("thi"))
-          .collect()
-        val t1 = java.sql.Timestamp.from(java.time.Instant.parse("2024-03-01T06:00:00Z"))
-        val t2 = java.sql.Timestamp.from(java.time.Instant.parse("2024-03-01T12:00:00Z"))
-        val aHit = ranges.count(r => r.getString(1) <= actor && actor <= r.getString(2))
-        val atHit = ranges.count { r =>
-          r.getString(1) <= actor && actor <= r.getString(2) &&
-            !r.getTimestamp(4).after(t2) && !r.getTimestamp(3).before(t1)
-        }
-        (aHit.toLong, atHit.toLong, ranges.length.toLong)
-      }
-
-      // Plain compact preserves ingest (time) order: time predicates prune,
-      // actor predicates cannot — every file spans all actors.
-      st.compact(maxRecordsPerFile = 250)
-      val (plainA, _, plainFiles) = touched(actors(17))
-      plainA shouldBe plainFiles
-
-      st.compactZOrder(filesPerDay = 8, maxRecordsPerFile = 250)
-      st.events.count() shouldBe 2000L // clustering rewrites, loses nothing
-      val (zA, zAT, zFiles) = touched(actors(17))
-      zFiles should be >= 6L
-      zA should be <= plainA / 2 // actor-band clustering prunes on actor alone
-      zAT should be <= zA // the time dimension can only prune further
     }
 
     it("expires whole partitions before a cutoff date") {
@@ -1463,11 +1392,28 @@ class StoreAndPipelineSpec extends SparkSpec {
     }
   }
 
+  /** Query executions (a `QueryExecutionListener`: any action on this
+    * session) and Spark jobs (this thread's) `body` runs. */
+  private def plansAndJobsOf(body: => Unit): (Int, Int) = {
+    val plans = new AtomicInteger(0)
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        plans.incrementAndGet()
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit =
+        plans.incrementAndGet()
+    }
+    spark.listenerManager.register(listener)
+    try { val jobs = jobsOf(body); (plans.get, jobs) } // jobsOf drains the listener bus
+    finally spark.listenerManager.unregister(listener)
+  }
+
   /** Whether an unshipped read was answered from the store's tail. */
   private def fromTail(df: DataFrame): Boolean = df.queryExecution.logical.isInstanceOf[LocalRelation]
 
   describe("store write path") {
-    it("stores what an in-memory model of the store's rules stores, page after page (property)") {
+    /** Over seeded page sequences, `write` (one page into a store) stores
+      * what an in-memory model of the store's rules stores. */
+    def storesLikeTheModel(write: (ParquetEventStore, Collector, Seq[CfWireEvent]) => Long): Unit = {
       import org.scalacheck.{Gen, Prop, Test}
       import org.scalacheck.rng.Seed
       // The store's fixed bloom sizing.
@@ -1539,7 +1485,7 @@ class StoreAndPipelineSpec extends SparkSpec {
             if (evs.exists(_._2 == "not-a-time")) {
               // The ANSI cast refuses the whole page before any write.
               labels += "unparseable"
-              val err = scala.util.Try(st.storeCFAuditEvents(collector.pageToDf(wire))).failed.toOption
+              val err = scala.util.Try(write(st, collector, wire)).failed.toOption
               check(s"page $p: unparseable page not refused", err.exists(_.getMessage.contains("CAST_INVALID_INPUT")))
             } else {
               evs.foreach { case (_, at) =>
@@ -1575,7 +1521,7 @@ class StoreAndPipelineSpec extends SparkSpec {
               lostBlooms --= keptDates
               model ++= kept.map(w => (w.guid, w.created_at, w.event_type))
               tailRows ++= kept.map(w => (w.guid, dateOf(w.created_at)))
-              val n = st.storeCFAuditEvents(collector.pageToDf(wire))
+              val n = write(st, collector, wire)
               check(s"page $p: stored $n, model ${kept.size}", n == kept.size.toLong)
             }
             // every stored row, in id order
@@ -1606,6 +1552,14 @@ class StoreAndPipelineSpec extends SparkSpec {
         Set("refetch", "refetch-span-dates", "out-of-scope", "in-page-dup", "utf-tie", "null",
           "pre-epoch", "epoch", "unparseable", "empty", "all-invalid", "probe-lost-bloom",
           "rebuild-lost-bloom", "dedup-tail", "dedup-probe")
+    }
+
+    it("stores what an in-memory model of the store's rules stores, page after page (property)") {
+      storesLikeTheModel((st, collector, wire) => st.storeCFAuditEvents(collector.pageToDf(wire)))
+    }
+
+    it("stores what the model stores through the collector's driver path, page after page (property)") {
+      storesLikeTheModel((st, _, wire) => st.storeCFAuditEventPage(EventPage(spark, wire)))
     }
 
     it("stores a parallelized (non-local) batch like its local twin") {
@@ -1814,6 +1768,7 @@ class StoreAndPipelineSpec extends SparkSpec {
         if (other) st.updateShipperCursor("other", base.plusSeconds(99).toString, "g0")
         val read = st.getUnshippedCFAuditEventsForShipper(name)
         val daemon = read.collect().toSeq
+        val daemonRows = st.getUnshippedCFAuditEventRowsForShipper(name)
         val board = AuditQueries.unshipped(st.events, st.cursors, name).collect().toSeq
         val byTime = stored.groupBy(_.getTimestamp(1)).values
         val from = AuditQueries.lastShippedOf(st.cursors.collect().toSeq, name)._1
@@ -1821,7 +1776,8 @@ class StoreAndPipelineSpec extends SparkSpec {
           (if (stored.count(!_.getTimestamp(1).before(from)) > 8192) Set("over-cap") else Set()) ++
           (if (byTime.exists(_.length > 1)) Set("same-second") else Set()) ++
           (if (byTime.exists(_.map(_.getString(0)).toSet == Set("xＡ", "x😀"))) Set("utf-tie") else Set())
-        Prop.collect[Set[String]](labels)(Prop(daemon == board) :| s"daemon ${daemon.size} rows, board ${board.size}")
+        Prop.collect[Set[String]](labels)(Prop(daemon == board && daemonRows == daemon) :|
+          s"daemon ${daemon.size} rows, as rows ${daemonRows.size}, board ${board.size}")
       }
       val result = Test.check(Test.Parameters.default.withMinSuccessfulTests(24).withWorkers(1)
         .withInitialSeed(Seed(20241018L)), prop)
@@ -1977,6 +1933,195 @@ class StoreAndPipelineSpec extends SparkSpec {
       val poster = new FakePoster(Nil)
       shipperOf(restarted, poster).shipOnce() shouldBe ((3L, 0L))
       posted(poster) shouldBe Seq("g2", "g3", "g4")
+    }
+  }
+
+  describe("a page and a ship tick with no query plan") {
+    val mk = (g: String, at: String) => CfWireEvent(g, at, "t", "a", "at", "an", "au",
+      "e", "et", "en", "", "sg", "{}")
+
+    /** The wire→row conversion as a Catalyst projection: Spark's own
+      * `to_timestamp` and `nullif`, evaluated by Spark. */
+    def catalystPage(wire: Seq[CfWireEvent]): DataFrame = {
+      import spark.implicits._
+      wire.toDF().select(Schemas.cfAuditEvents.fieldNames.toSeq.map {
+        case "id" => F.lit(0L).as("id")
+        case "created_at" => F.to_timestamp(F.col("created_at")).as("created_at")
+        case "created_at_raw" => F.col("created_at").as("created_at_raw")
+        case c @ ("organization_guid" | "space_guid") => Schemas.emptyToNull(F.col(c)).as(c)
+        case c => F.col(c)
+      }: _*)
+    }
+
+    it("converts a wire page on the driver as Spark's cast, nullif, CHECK and to_date do (property)") {
+      import org.scalacheck.{Gen, Prop, Test}
+      import org.scalacheck.rng.Seed
+      import org.apache.spark.sql.internal.SQLConf
+      val (st, dir) = newStoreAt()
+      val collector = new Collector(spark, st,
+        new CfAuditEventFetcher(new FakeTransport(Map.empty), ""), new MetricsRegistry)
+      // (label, raw created_at)
+      val genAt: Gen[(String, String)] = Gen.frequency(
+        (4, Gen.chooseNum(0L, 86399L).map(s => "Z" -> Instant.parse("2024-05-01T00:00:00Z").plusSeconds(s).toString)),
+        (2, Gen.chooseNum(0, 999999).map(us => "Z" -> f"2024-05-01T23:59:59.$us%06dZ")),
+        (3, Gen.chooseNum(0, 23).map(h => "+01:00" -> f"2024-05-02T$h%02d:30:00+01:00")),
+        (3, Gen.chooseNum(0, 23).map(h => "space" -> f"2024-05-01 $h%02d:15:00")),
+        (3, Gen.chooseNum(0, 23).map(h => "zone-less" -> f"2024-05-01T$h%02d:45:00")),
+        (1, Gen.const("null" -> null)),
+        (1, Gen.const("epoch" -> "1970-01-01T00:00:00Z")),
+        (1, Gen.oneOf("1969-12-31T23:59:59Z", "1500-03-01T00:00:00Z").map("pre-epoch" -> _)),
+        (1, Gen.oneOf("not-a-time", "", "2024-13-01T00:00:00Z").map("unparseable" -> _)))
+      val genEvent = for {
+        guid <- Gen.oneOf("g0", "g1", "g2", "g3", "g4", "xＡ", "x😀")
+        at <- genAt
+        name <- Gen.oneOf("an", "Zoë", "名前")
+        org <- Gen.oneOf("", null, "og", "орг-😀")
+        space <- Gen.oneOf("", null, "sg")
+        meta <- Gen.oneOf("{}", null, """{"k":"ü😀","n":[1,{"x":null}]}""")
+      } yield (at._1, CfWireEvent(guid, at._2, "t", "a", "at", name, "au", "e", "et", "en", org, space, meta))
+      val genCase = for {
+        n <- Gen.chooseNum(0, 8)
+        evs <- Gen.listOfN(n, genEvent)
+        zone <- Gen.oneOf("UTC", "Asia/Kolkata", "America/Los_Angeles")
+        ansi <- Gen.frequency((3, true), (1, false))
+      } yield (evs, zone, ansi)
+      val checkedCols = Schemas.cfAuditEvents.fieldNames.toSeq.map(F.col) :+
+        F.to_date(F.col("created_at")).cast("string")
+      val castFailure = (t: scala.util.Try[_]) => t.failed.toOption.exists(_.getMessage.contains("CAST_INVALID_INPUT"))
+      val prop = Prop.forAllNoShrink(genCase) { case (evs, zone, ansi) =>
+        val wire = evs.map(_._2)
+        val labels = mutable.Set.empty[String] ++ evs.map(_._1)
+        labels += (if (ansi) "ansi" else "ansi-off")
+        if (zone != "UTC") labels += "session-zone"
+        if (wire.exists(w => w.organization_guid == "" || w.space_guid == "")) labels += "empty-org-space"
+        if (wire.exists(_.actor_name != "an")) labels += "non-ascii"
+        if (wire.map(_.guid).distinct.size < wire.size) labels += "dup-guid"
+        val failures = mutable.ArrayBuffer.empty[String]
+        def check(what: String, ok: Boolean): Unit = if (!ok) failures += what
+        val saved = Seq(SQLConf.SESSION_LOCAL_TIMEZONE.key, SQLConf.ANSI_ENABLED.key).map(k => k -> spark.conf.get(k))
+        spark.conf.set(SQLConf.SESSION_LOCAL_TIMEZONE.key, zone)
+        spark.conf.set(SQLConf.ANSI_ENABLED.key, ansi)
+        try {
+          val driver = scala.util.Try(EventPage(spark, wire))
+          val catalyst = scala.util.Try(catalystPage(wire).collect().toSeq.map(_.toSeq))
+          if (ansi && labels("unparseable")) {
+            labels += "refused"
+            check("driver conversion not refused", castFailure(driver))
+            check("Catalyst projection not refused", castFailure(catalyst))
+            check("pageToDf not refused", castFailure(scala.util.Try(collector.pageToDf(wire).collect())))
+            val before = treeBytes(dir)
+            check("driver path stored", castFailure(scala.util.Try(st.storeCFAuditEventPage(EventPage(spark, wire)))))
+            check("DataFrame path stored", castFailure(scala.util.Try(st.storeCFAuditEvents(collector.pageToDf(wire)))))
+            check("the warehouse changed", treeBytes(dir) == before)
+          } else {
+            val page = driver.get
+            check("rows differ from the Catalyst projection", page.rows.map(_.toSeq) == catalyst.get)
+            val oracle = catalystPage(wire).filter(AuditQueries.passesCheck).select(checkedCols: _*)
+              .collect().toSeq.map(_.toSeq)
+            check("checked rows or dates differ", page.checked.map { case (r, d) => r.toSeq :+ d.toString } == oracle)
+            check("pageToDf.filter(passesCheck) differs from the checked rows",
+              collector.pageToDf(wire).filter(AuditQueries.passesCheck).collect().toSeq.map(_.toSeq) ==
+                page.checked.map(_._1.toSeq))
+            if (page.checked.map(_._2).distinct.size > 1) labels += "two-dates"
+          }
+        } finally saved.foreach { case (k, v) => spark.conf.set(k, v) }
+        Prop.collect[Set[String]](labels.toSet)(Prop(failures.isEmpty) :| failures.mkString("; "))
+      }
+      val result = Test.check(Test.Parameters.default.withMinSuccessfulTests(60).withWorkers(1)
+        .withInitialSeed(Seed(20241021L)), prop)
+      withClue(org.scalacheck.util.Pretty.pretty(result)) { result.passed shouldBe true }
+      result.freqMap.getCounts.flatMap(_._1).flatMap { case l: Set[_] => l }.toSet shouldBe
+        Set("Z", "+01:00", "space", "zone-less", "null", "epoch", "pre-epoch", "unparseable", "refused",
+          "ansi", "ansi-off", "session-zone", "empty-org-space", "non-ascii", "dup-guid", "two-dates")
+    }
+
+    it("a fresh warehouse's init, a page with no bloom positives and a tail-answered ship tick plan nothing and run no job") {
+      val dir = Files.createTempDirectory("graft-store-noplan")
+      val st = new ParquetEventStore(spark, dir.toString)
+      plansAndJobsOf(st.init()) shouldBe ((0, 0))
+      var stored = 0L
+      plansAndJobsOf { stored = st.storeCFAuditEventPage(EventPage(spark,
+        (0 until 100).map(i => mk(f"a$i%03d", f"2024-05-01T10:00:${i % 60}%02d.$i%03dZ")))) } shouldBe ((0, 0))
+      stored shouldBe 100L
+      // the same date again, new guids: its bloom sidecar is read and holds none of them
+      plansAndJobsOf { stored = st.storeCFAuditEventPage(EventPage(spark,
+        (0 until 100).map(i => mk(f"b$i%03d", f"2024-05-01T11:00:${i % 60}%02d.$i%03dZ")))) } shouldBe ((0, 0))
+      stored shouldBe 100L
+      val poster = new FakePoster(Nil)
+      val shipper = new SplunkShipper(st, new SplunkHecClient(poster, "https://hec", "KEY", sleep = _ => ()),
+        "test-env", new MetricsRegistry, shipperName = "s")
+      var shipped = (0L, 0L)
+      plansAndJobsOf { shipped = shipper.shipOnce() } shouldBe ((0, 0))
+      shipped shouldBe ((200L, 0L))
+      plansAndJobsOf { shipped = shipper.shipOnce() } shouldBe ((0, 0)) // idle
+      shipped shouldBe ((0L, 0L))
+      // the DataFrame members still plan, and the listener sees it
+      val collector = new Collector(spark, st,
+        new CfAuditEventFetcher(new FakeTransport(Map.empty), ""), new MetricsRegistry)
+      plansAndJobsOf(st.storeCFAuditEvents(collector.pageToDf(Seq(mk("c", "2024-05-01T12:00:00Z")))))._1 should be >= 1
+      plansAndJobsOf(st.getUnshippedCFAuditEventsForShipper("s").collect())._1 should be >= 1
+    }
+
+    it("a restart with _stats_latest and _stats_maxid removed scans, resumes at max - 5 s and numbers on") {
+      val (st, dir) = newStoreAt()
+      st.storeCFAuditEventPage(EventPage(spark, Seq(
+        mk("g1", "2024-05-01T10:00:00Z"), mk("g2", "2024-05-02T08:30:00Z")))) shouldBe 2L
+      Files.delete(dir.resolve("_stats_latest"))
+      Files.delete(dir.resolve("_stats_maxid"))
+      val restarted = new ParquetEventStore(spark, dir.toString)
+      plansAndJobsOf(restarted.init()) shouldBe ((0, 0)) // nothing to create
+      val collector = new Collector(spark, restarted,
+        new CfAuditEventFetcher(new FakeTransport(Map.empty), ""), new MetricsRegistry)
+      var since = Instant.EPOCH
+      jobsOf { since = collector.pullEventsSince() } should be >= 1 // the scan
+      since shouldBe Instant.parse("2024-05-02T08:29:55Z")
+      restarted.storeCFAuditEventPage(EventPage(spark, Seq(
+        mk("g2", "2024-05-02T08:30:00Z"), mk("g3", "2024-05-02T08:30:01Z")))) shouldBe 1L
+      storedRows(restarted).map(r => (r(0), r(1))) shouldBe Seq((1L, "g1"), (2L, "g2"), (3L, "g3"))
+      sidecarText(dir, "_stats_maxid") shouldBe "3"
+      restarted.getLatestCFEventTime().toInstant shouldBe Instant.parse("2024-05-02T08:30:01Z")
+    }
+
+    it("init leaves a fresh warehouse Spark reads back empty, its cursor schema in one file's footer") {
+      import org.apache.hadoop.fs.{Path => HPath}
+      import org.apache.parquet.hadoop.ParquetFileReader
+      import org.apache.parquet.hadoop.util.HadoopInputFile
+      import org.apache.spark.sql.types.DataType
+      val (st, dir) = newStoreAt()
+      st.events.count() shouldBe 0L
+      st.events.schema.fieldNames.toSeq shouldBe Schemas.cfAuditEvents.fieldNames.toSeq
+      st.cursors.count() shouldBe 0L
+      st.cursors.schema.fieldNames.toSeq shouldBe Schemas.shipperCursors.fieldNames.toSeq
+      // the events table: a bare directory
+      Files.isDirectory(dir.resolve("cf_audit_events")) shouldBe true
+      treeBytes(dir.resolve("cf_audit_events")) shouldBe empty
+      // the cursor table: one parquet file, its schema in the footer
+      val files = treeBytes(dir.resolve("shipper_cursors")).keys.toSeq
+      val parquet = files.filter(_.endsWith(".parquet"))
+      parquet.size shouldBe 1
+      files.filterNot(f => f.endsWith(".parquet") || f.endsWith(".parquet.crc")) shouldBe empty
+      spark.read.parquet(dir.resolve("shipper_cursors").toString).schema.fieldNames.toSeq shouldBe
+        Schemas.shipperCursors.fieldNames.toSeq
+      val reader = ParquetFileReader.open(HadoopInputFile.fromPath(
+        new HPath(dir.resolve("shipper_cursors").resolve(parquet.head).toUri), spark.sparkContext.hadoopConfiguration))
+      val footer = try reader.getFooter finally reader.close()
+      DataType.fromJson(footer.getFileMetaData.getKeyValueMetaData.get("org.apache.spark.sql.parquet.row.metadata")) shouldBe
+        StructType(Schemas.shipperCursors.map(_.copy(nullable = true)))
+      footer.getBlocks.asScala.map(_.getRowCount).sum shouldBe 0L
+      // idempotent over a warehouse in use
+      st.storeCFAuditEventPage(EventPage(spark, Seq(mk("g1", "2024-05-01T10:00:00Z")))) shouldBe 1L
+      st.updateShipperCursor("s", "2024-05-01T10:00:00Z", "g1")
+      val inUse = treeBytes(dir)
+      plansAndJobsOf(st.init()) shouldBe ((0, 0))
+      treeBytes(dir) shouldBe inUse
+      // a crash inside a cursor swap, and one before an append's rename
+      Files.move(dir.resolve("shipper_cursors"), dir.resolve("shipper_cursors_old"))
+      val hidden = dir.resolve("cf_audit_events/event_date=2024-05-01").resolve(s".${DriverParquet.fileName(spark)}.tmp")
+      Files.write(hidden, Array[Byte](1, 2, 3))
+      val restarted = new ParquetEventStore(spark, dir.toString)
+      restarted.init()
+      treeBytes(dir) shouldBe inUse
+      restarted.cursors.collect().map(r => (r.getString(0), r.getString(2))).toSeq shouldBe Seq(("s", "g1"))
     }
   }
 }
