@@ -1,5 +1,6 @@
 package graft.streaming
 
+import java.nio.charset.StandardCharsets.UTF_8
 import java.time.OffsetDateTime
 import scala.util.Random
 
@@ -17,7 +18,8 @@ import graft.store.EventStore
 /** Splunk-HEC-style HTTP sink client with the reference's retry policy
   * (`shipper.go:62-86`): 2 s timeout (owned by the transport), backoff
   * 100 ms → 2 s with exponent 2 plus up to 500 ms jitter, 3 retries;
-  * any 2xx is success (`shipper.go:216-223`). */
+  * any 2xx is success (`shipper.go:216-223`). `jitterMillis = 0` adds
+  * no jitter. */
 final class SplunkHecClient(
     http: HttpTransport,
     url: String,
@@ -49,7 +51,7 @@ final class SplunkHecClient(
         val backoff = math.min(
           (initialBackoffMillis * math.pow(2.0, (attempt - 1).toDouble)).toLong,
           maxBackoffMillis)
-        sleep(backoff + Random.nextLong(jitterMillis))
+        sleep(backoff + (if (jitterMillis > 0) Random.nextLong(jitterMillis) else 0L))
       }
     }
     last
@@ -58,18 +60,22 @@ final class SplunkHecClient(
 
 /** Egress loop (`pkg/shippers/cf_audit_events_to_splunk_shipper.go`): every
   * tick read the ≤8192 unshipped events in `created_at` order, ship them
-  * serially, stop at the first failure, and commit the cursor for the
-  * shipped *prefix* only (ST4). Boundary-timestamp re-ships preserve
+  * serially, stop at the first failed request, and commit the cursor for
+  * the shipped *prefix* only (ST4). Boundary-timestamp re-ships preserve
   * at-least-once delivery (R6) — tested behavior in the reference
   * (`shipper_test.go:187-203`). Errors never kill the loop (ST5).
   *
   * The per-tick batch is capped at 8192 by the store query (store.go:206),
-  * so holding it on the driver is bounded by design. Events are POSTed
-  * one per request, serially, as the reference does (`shipper.go:122-135`).
-  * A tick reads the batch as rows (`getUnshippedCFAuditEventRowsForShipper`:
-  * no query plan when the store's tail answers) and builds every HEC line
-  * with Jackson before the first POST, so a row whose `metadata` is not
-  * JSON fails the tick with nothing posted.
+  * so holding it on the driver is bounded by design. A tick reads the
+  * batch as rows (`getUnshippedCFAuditEventRowsForShipper`: no query plan
+  * when the store's tail answers) and builds every HEC line with Jackson
+  * before the first POST, so a row whose `metadata` is not JSON fails the
+  * tick with nothing posted. Where the reference POSTs one event per
+  * request (`shipper.go:122-135`), consecutive lines are joined with `\n`
+  * into bodies of at most [[SplunkShipper.MaxPostBytes]], which HEC reads
+  * as one event per line; the requests go out in ingest order, one at a
+  * time. The cursor commits the last row of the last acknowledged
+  * request: a failed request's rows all re-ship on the next tick.
   */
 final class SplunkShipper(
     store: EventStore,
@@ -79,7 +85,7 @@ final class SplunkShipper(
     shipperName: String = "cf-audit-events-to-splunk",
     logger: graft.logging.Lager = graft.logging.Lager.noop) {
 
-  import SplunkShipper.{CreatedRawIdx, GuidIdx, Mapper, PayloadCols}
+  import SplunkShipper.{CreatedRawIdx, GuidIdx, Mapper, PayloadCols, requests}
 
   // lager session naming as the reference: shipper.go:60 + :94
   private val lsession = logger.session("cf-audit-events-to-splunk-shipper").session("run")
@@ -117,25 +123,23 @@ final class SplunkShipper(
   def shipOnce(): (Long, Long) = {
     val t0 = System.nanoTime()
     try {
-      val batch = store.getUnshippedCFAuditEventRowsForShipper(shipperName) // ≤8192 by construction
+      val batch = store.getUnshippedCFAuditEventRowsForShipper(shipperName).toIndexedSeq // ≤8192 by construction
       // Every line before the first POST: a bad row fails the tick with nothing posted.
       val lines = batch.map(payload)
-      var shipped = 0L
-      var lastOk: Option[Row] = None
+      var shipped = 0 // rows of the acknowledged requests, a prefix of the batch
       var failed = false
-      val it = batch.iterator.zip(lines.iterator)
-      while (!failed && it.hasNext) {
-        val (row, line) = it.next()
-        hec.post(line) match {
-          case Right(_) =>
-            shipped += 1
-            lastOk = Some(row)
+      val bodies = requests(lines)
+      while (!failed && bodies.hasNext) {
+        val (body, until) = bodies.next()
+        hec.post(body) match {
+          case Right(_) => shipped = until
           case Left(e) =>
             failed = true // prefix stops here (shipper.go:125-135)
             lsession.error("err-ship-event", e) // shipper.go:126
             registry.inc(Metrics.ShipperErrors)
         }
       }
+      val lastOk = if (shipped == 0) None else Some(batch(shipped - 1))
       // Commit cursor with the RAW created_at string (shipper.go:140-143).
       if (!lastOk.forall(r => commitCursor(r.getString(CreatedRawIdx), r.getString(GuidIdx)))) (0L, 1L)
       else {
@@ -148,7 +152,7 @@ final class SplunkShipper(
             OffsetDateTime.parse(r.getString(CreatedRawIdx)).toInstant.getEpochSecond.toDouble)
           catch { case _: Exception => () }
         }
-        (shipped, if (failed) 1L else 0L)
+        (shipped.toLong, if (failed) 1L else 0L)
       }
     } catch {
       case e: Exception =>
@@ -189,6 +193,30 @@ final class SplunkShipper(
 }
 
 object SplunkShipper {
+  /** Largest HEC request body the shipper builds, in UTF-8 bytes: well
+    * under HEC's `max_content_length` (inputs.conf), and a bound on what
+    * one failed request re-ships. */
+  val MaxPostBytes: Int = 1000000
+
+  /** Consecutive `lines` joined with `\n` into request bodies of at most
+    * [[MaxPostBytes]] UTF-8 bytes, in order, each with the index just
+    * past its last line. A line is never split: one longer than the cap
+    * is a body alone. */
+  private def requests(lines: IndexedSeq[String]): Iterator[(String, Int)] = {
+    val bytes = lines.map(_.getBytes(UTF_8).length.toLong)
+    Iterator.unfold(0) { from =>
+      Option.when(from < lines.size) {
+        var until = from + 1
+        var size = bytes(from)
+        while (until < lines.size && size + 1 + bytes(until) <= MaxPostBytes) {
+          size += 1 + bytes(until)
+          until += 1
+        }
+        ((lines.slice(from, until).mkString("\n"), until), until)
+      }
+    }
+  }
+
   private val GuidIdx = Schemas.cfAuditEvents.fieldIndex("guid")
   private val CreatedRawIdx = Schemas.cfAuditEvents.fieldIndex("created_at_raw")
 

@@ -27,6 +27,8 @@ import org.apache.spark.sql.graftnative.DriverParquet
 final class FakePoster(statuses: Seq[Int]) extends HttpTransport with Serializable {
   private val q = mutable.Queue(statuses: _*)
   val posts: mutable.ArrayBuffer[(String, String, Map[String, String])] = mutable.ArrayBuffer.empty
+  /** Every posted body split on `\n`, in post order: one HEC event per line. */
+  def lines: Seq[String] = posts.toSeq.flatMap(_._2.split("\n"))
   def get(url: String, headers: Map[String, String]): HttpReply = throw new UnsupportedOperationException
   def post(url: String, body: String, headers: Map[String, String]): HttpReply = {
     posts += ((url, body, headers))
@@ -721,7 +723,7 @@ class StoreAndPipelineSpec extends SparkSpec {
       }
       val all = feed.flatten.map(_._1)
       st.events.select("guid").collect().map(_.getString(0)).sorted shouldBe all
-      val received = hec.posts.toSeq.map(p => "\"guid\":\"(g\\d+)\"".r.findFirstMatchIn(p._2).get.group(1))
+      val received = hec.lines.map(l => "\"guid\":\"(g\\d+)\"".r.findFirstMatchIn(l).get.group(1))
       received.distinct shouldBe all // first receipts in (created_at, guid) order
       val cursor = st.cursors.collect().head
       cursor.getAs[String]("shipped_id") shouldBe "g6"
@@ -923,6 +925,14 @@ class StoreAndPipelineSpec extends SparkSpec {
       sleeps.size shouldBe base.size
       sleeps.zip(base).foreach { case (slept, b) => slept should (be >= b and be < b + 500L) }
     }
+    it("backs off with no jitter when jitterMillis is 0") {
+      val sleeps = mutable.ArrayBuffer.empty[Long]
+      val poster = new FakePoster(Seq(503, 503, 200))
+      val hec = new SplunkHecClient(poster, "https://hec", "KEY", jitterMillis = 0L, sleep = sleeps += _)
+      hec.post("{}").isRight shouldBe true
+      poster.posts.size shouldBe 3
+      sleeps shouldBe Seq(100L, 200L)
+    }
     it("retries transport errors and returns the last one") {
       val attempts = new AtomicInteger(0)
       val down = new HttpTransport {
@@ -937,10 +947,14 @@ class StoreAndPipelineSpec extends SparkSpec {
   }
 
   describe("SplunkShipper (ST4/ST5)") {
-    def seed(st: ParquetEventStore): Unit = seedAt(st,
-      Seq(("g1", "2024-01-01T10:00:00Z"), ("g2", "2024-01-01T11:00:00Z"), ("g3", "2024-01-01T12:00:00Z")))
+    /** Metadata that makes each HEC line longer than half the request cap: one event per request. */
+    val halfCap = s"""{"pad":"${"x" * (SplunkShipper.MaxPostBytes / 2)}"}"""
 
-    def seedAt(st: ParquetEventStore, events: Seq[(String, String)]): Unit = {
+    def seed(st: ParquetEventStore, metadata: String = "{}"): Unit = seedAt(st,
+      Seq(("g1", "2024-01-01T10:00:00Z"), ("g2", "2024-01-01T11:00:00Z"), ("g3", "2024-01-01T12:00:00Z")),
+      metadata)
+
+    def seedAt(st: ParquetEventStore, events: Seq[(String, String)], metadata: String = "{}"): Unit = {
       import spark.implicits._
       val batch = events.toDF("guid", "created_at_raw")
         .withColumn("created_at", F.to_timestamp(F.col("created_at_raw")))
@@ -950,7 +964,7 @@ class StoreAndPipelineSpec extends SparkSpec {
         .withColumn("actee_type", F.lit("t")).withColumn("actee_name", F.lit("n"))
         .withColumn("organization_guid", F.lit(null).cast("string"))
         .withColumn("space_guid", F.lit(null).cast("string"))
-        .withColumn("metadata", F.lit("{}"))
+        .withColumn("metadata", F.lit(metadata))
         .withColumn("id", F.lit(0L))
       st.storeCFAuditEvents(batch)
       ()
@@ -963,7 +977,8 @@ class StoreAndPipelineSpec extends SparkSpec {
       val shipper = new SplunkShipper(st,
         new SplunkHecClient(poster, "https://hec", "KEY", sleep = _ => ()), "test-env", reg)
       shipper.shipOnce() shouldBe ((3L, 0L))
-      poster.posts.size shouldBe 3
+      poster.posts.size shouldBe 1
+      postedGuids(poster) shouldBe Seq("g1", "g2", "g3")
       poster.posts.head._2 should include(""""sourcetype":"cf-audit-event"""")
       poster.posts.head._2 should include(""""source":"test-env"""")
       poster.posts.head._2 should include(""""guid":"g1"""")
@@ -976,7 +991,7 @@ class StoreAndPipelineSpec extends SparkSpec {
     }
 
     it("commits only the shipped prefix on mid-batch failure, then redelivers (at-least-once, shipper_test.go:187-203)") {
-      val st = newStore(); seed(st)
+      val st = newStore(); seed(st, halfCap) // one event per request
       // g1 ok; g2 fails through all 4 attempts; tick stops
       val poster = new FakePoster(Seq(200, 500, 500, 500, 500))
       val reg = new MetricsRegistry
@@ -994,8 +1009,9 @@ class StoreAndPipelineSpec extends SparkSpec {
       st.cursors.collect()(0).getString(2) shouldBe "g3"
     }
 
-    def postedGuids(poster: FakePoster): Seq[String] =
-      poster.posts.toSeq.map(p => mapper.readTree(p._2).get("event").get("guid").asText())
+    def guidOf(line: String): String = mapper.readTree(line).get("event").get("guid").asText()
+
+    def postedGuids(poster: FakePoster): Seq[String] = poster.lines.map(guidOf)
 
     it("ships nothing and commits no cursor when the store is empty") {
       val st = newStore()
@@ -1016,10 +1032,10 @@ class StoreAndPipelineSpec extends SparkSpec {
         new SplunkHecClient(poster, "https://hec/services/collector", "KEY", sleep = _ => ()),
         "test-env", new MetricsRegistry)
       shipper.shipOnce() shouldBe ((3L, 0L))
-      val (url, body, headers) = poster.posts.head
+      val (url, _, headers) = poster.posts.head
       url shouldBe "https://hec/services/collector"
       headers("Content-Type") shouldBe "application/json"
-      val env = mapper.readTree(body)
+      val env = mapper.readTree(poster.lines.head)
       env.fieldNames().asScala.toSeq shouldBe Seq("sourcetype", "source", "event")
       val ev = env.get("event")
       ev.fieldNames().asScala.toSeq shouldBe Seq("guid", "created_at", "type", "actor", "actor_type",
@@ -1106,7 +1122,7 @@ class StoreAndPipelineSpec extends SparkSpec {
         poster.posts.clear()
         st.storeCFAuditEvents(onDriver(rows))
         val tick = shipper.shipOnce()
-        val lines = poster.posts.map(_._2).toSeq
+        val lines = poster.lines
         val want = catalystPayloads(st.events.filter(F.col("guid").isin(rows.map(_.getString(1)): _*))
           .orderBy("created_at", "guid"))
         val metas = evs.map(_._1)
@@ -1164,7 +1180,7 @@ class StoreAndPipelineSpec extends SparkSpec {
       val poster = new FakePoster(Nil)
       new SplunkShipper(st, new SplunkHecClient(poster, "https://hec", "KEY", sleep = _ => ()),
         "test-env", new MetricsRegistry).shipOnce() shouldBe ((1L, 0L))
-      mapper.readTree(poster.posts.head._2) shouldBe mapper.readTree(catalystPayloads(st.events).head)
+      mapper.readTree(poster.lines.head) shouldBe mapper.readTree(catalystPayloads(st.events).head)
     }
 
     it("re-ships the cursor second's other events on the next tick (boundary at-least-once, R6)") {
@@ -1247,7 +1263,7 @@ class StoreAndPipelineSpec extends SparkSpec {
     }
 
     it("run keeps ticking after a failed tick and ships everything once HEC heals (ST5)") {
-      val st = newStore(); seed(st)
+      val st = newStore(); seed(st, halfCap) // one event per request
       val poster = new FakePoster(Seq(500, 500, 500, 500)) // first tick: g1 fails every attempt
       val reg = new MetricsRegistry
       val shipper = new SplunkShipper(st,
@@ -1257,6 +1273,96 @@ class StoreAndPipelineSpec extends SparkSpec {
       reg.counterValue(Metrics.ShipperErrors) shouldBe 1.0
       reg.counterValue(Metrics.ShipperEventsShipped) shouldBe 3.0
       st.cursors.collect()(0).getString(2) shouldBe "g3"
+    }
+
+    /** Rows g01, g02, … one second apart whose HEC lines are `sizes` UTF-8
+      * bytes long: a probe row measures the part of a line the metadata
+      * padding does not. */
+    def rowsOfLineBytes(sizes: Seq[Int]): Seq[Row] = {
+      def padded(i: Int, pad: Int) =
+        withMetadata(ev(f"g$i%02d", f"2024-05-01T10:00:$i%02dZ"), s"""{"p":"${"x" * pad}"}""")
+      val (probe, _) = newStoreAt()
+      probe.storeCFAuditEvents(onDriver(Seq(padded(0, 0))))
+      val poster = new FakePoster(Nil)
+      new SplunkShipper(probe, new SplunkHecClient(poster, "https://hec", "KEY", sleep = _ => ()),
+        "test-env", new MetricsRegistry).shipOnce() shouldBe ((1L, 0L))
+      val fixed = poster.lines.head.length
+      sizes.zipWithIndex.map { case (n, i) => padded(i + 1, n - fixed) }
+    }
+
+    it("joins consecutive lines into bodies of at most MaxPostBytes, in order; an over-cap line goes alone") {
+      val cap = SplunkShipper.MaxPostBytes
+      // g01+g02 fill a body exactly; g03+g04 are one byte over; g05 is over the cap by itself
+      val sizes = Seq(cap / 2, cap - 1 - cap / 2, cap / 2, cap / 2, cap + 10, 1000, 1000)
+      val (st, _) = newStoreAt()
+      st.storeCFAuditEvents(onDriver(rowsOfLineBytes(sizes))) shouldBe 7L
+      val poster = new FakePoster(Nil)
+      val reg = new MetricsRegistry
+      new SplunkShipper(st, new SplunkHecClient(poster, "https://hec", "KEY", sleep = _ => ()),
+        "test-env", reg).shipOnce() shouldBe ((7L, 0L))
+      val bodies = poster.posts.map(_._2).toSeq
+      bodies.map(_.split("\n").toSeq.map(guidOf)) shouldBe
+        Seq(Seq("g01", "g02"), Seq("g03"), Seq("g04"), Seq("g05"), Seq("g06", "g07"))
+      bodies.map(_.getBytes("UTF-8").length) shouldBe Seq(cap, cap / 2, cap / 2, cap + 10, 2001)
+      bodies.foreach { b =>
+        b should not be empty
+        if (b.contains('\n')) b.getBytes("UTF-8").length should be <= cap
+      }
+      poster.lines.map(_.getBytes("UTF-8").length) shouldBe sizes
+      poster.lines.map(mapper.readTree) shouldBe
+        catalystPayloads(st.events.orderBy("created_at", "guid")).map(mapper.readTree)
+      st.cursors.collect()(0).getString(2) shouldBe "g07"
+      reg.counterValue(Metrics.ShipperEventsShipped) shouldBe 7.0
+    }
+
+    it("a failed request k commits request k-1's last row; the next tick starts at request k's first row") {
+      val (st, _) = newStoreAt()
+      st.storeCFAuditEvents(onDriver(rowsOfLineBytes(Seq.fill(9)(300000)))) shouldBe 9L // 3 per request
+      val poster = new FakePoster(Seq(200, 500, 500, 500, 500)) // request 2 fails every attempt
+      val reg = new MetricsRegistry
+      new SplunkShipper(st, new SplunkHecClient(poster, "https://hec", "KEY", sleep = _ => ()),
+        "test-env", reg).shipOnce() shouldBe ((3L, 1L))
+      poster.posts.map(_._2.split("\n").toSeq.map(guidOf)).distinct.toSeq shouldBe
+        Seq(Seq("g01", "g02", "g03"), Seq("g04", "g05", "g06"))
+      st.cursors.collect()(0).getString(2) shouldBe "g03"
+      reg.counterValue(Metrics.ShipperErrors) shouldBe 1.0
+      reg.counterValue(Metrics.ShipperEventsShipped) shouldBe 3.0
+      val poster2 = new FakePoster(Nil)
+      new SplunkShipper(st, new SplunkHecClient(poster2, "https://hec", "KEY", sleep = _ => ()),
+        "test-env", reg).shipOnce() shouldBe ((6L, 0L))
+      poster2.posts.size shouldBe 2
+      guidOf(poster2.posts.head._2.split("\n").head) shouldBe "g04"
+      postedGuids(poster2) shouldBe (4 to 9).map(i => f"g$i%02d")
+      st.cursors.collect()(0).getString(2) shouldBe "g09"
+    }
+
+    it("ships a 300-row tick through the JDK transport to a loopback HEC that splits bodies on newlines") {
+      val (st, _) = newStoreAt()
+      val t0 = Instant.parse("2024-05-01T10:00:00Z")
+      val guids = (0 until 300).map(i => f"g$i%03d")
+      st.storeCFAuditEvents(onDriver(guids.zipWithIndex.map { case (g, i) =>
+        ev(g, t0.plusSeconds(i.toLong).toString) })) shouldBe 300L
+      val received = new java.util.concurrent.ConcurrentLinkedQueue[String]
+      val requests = new AtomicInteger(0)
+      val hec = com.sun.net.httpserver.HttpServer.create(new java.net.InetSocketAddress("127.0.0.1", 0), 0)
+      hec.createContext("/services/collector", (ex: com.sun.net.httpserver.HttpExchange) => {
+        requests.incrementAndGet()
+        new String(ex.getRequestBody.readAllBytes(), "UTF-8").split("\n").filter(_.nonEmpty)
+          .foreach(l => received.add(guidOf(l)))
+        val ok = """{"text":"Success","code":0}""".getBytes("UTF-8")
+        ex.sendResponseHeaders(200, ok.length.toLong)
+        ex.getResponseBody.write(ok)
+        ex.close()
+      })
+      hec.start()
+      try {
+        val url = s"http://127.0.0.1:${hec.getAddress.getPort}/services/collector"
+        new SplunkShipper(st, new SplunkHecClient(new JdkHttpTransport(java.time.Duration.ofSeconds(10)), url, "KEY"),
+          "test-env", new MetricsRegistry).shipOnce() shouldBe ((300L, 0L))
+      } finally hec.stop(0)
+      received.asScala.toSeq shouldBe guids
+      requests.get() shouldBe 1
+      st.cursors.collect()(0).getString(2) shouldBe "g299"
     }
   }
 
@@ -1795,7 +1901,7 @@ class StoreAndPipelineSpec extends SparkSpec {
       new SplunkHecClient(poster, "https://hec", "KEY", sleep = _ => ()), "test-env", new MetricsRegistry,
       shipperName = "s")
     def posted(poster: FakePoster): Seq[String] =
-      poster.posts.toSeq.map(p => "\"guid\":\"([^\"]+)\"".r.findFirstMatchIn(p._2).get.group(1))
+      poster.lines.map(l => "\"guid\":\"([^\"]+)\"".r.findFirstMatchIn(l).get.group(1))
 
     it("a warm re-fetch of guids this store appended runs no job") {
       val (st, _) = newStoreAt()
