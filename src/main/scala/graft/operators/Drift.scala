@@ -45,8 +45,7 @@ object Drift {
 
   /** The [[psi]] scoring tail over pre-aggregated (bucket, n) frames —
     * bucket counts are the drift monitor's MERGEABLE summary (plain
-    * sums), so a streaming accumulator persists per-batch counts and
-    * re-enters here (graft.streaming.StreamingDrift). */
+    * sums). */
   def psiFromCounts(spark: org.apache.spark.sql.SparkSession,
                     refCounts: DataFrame, curCounts: DataFrame, buckets: Int): DataFrame = {
     val grid = spark.range(0, buckets).select(F.col("id").cast("int").as("bucket"))
@@ -68,22 +67,6 @@ object Drift {
         F.round(F.col("p"), 6).as("p"), F.round(F.col("q"), 6).as("q"),
         F.round(F.col("__term"), 6).as("psi_term"),
         F.round(F.col("__psi"), 4).as("psi"))
-  }
-
-  /** The [[psi]] equal-width bucket rule as a standalone projection over
-    * LITERAL reference bounds — the streaming path freezes (lo, hi) at
-    * attach time and buckets every micro-batch with the same arithmetic
-    * the batch operator uses. Returns a (bucket, n) count frame. */
-  def bucketCounts(df: DataFrame, valueCol: String, lo: Double, hi: Double,
-                   buckets: Int): DataFrame = {
-    val v = F.col(valueCol).cast("double")
-    df.filter(v.isNotNull)
-      .select(F.least(F.greatest(
-        F.when(F.lit(hi) === F.lit(lo), F.lit(0))
-          .otherwise(F.floor((v - F.lit(lo)) / ((F.lit(hi) - F.lit(lo)) / buckets))
-            .cast("int")),
-        F.lit(0)), F.lit(buckets - 1)).as("bucket"))
-      .groupBy("bucket").agg(F.count(F.lit(1)).as("n"))
   }
 
   /** Pairwise Jensen–Shannon divergence (natural log; ∈ [0, ln 2])
@@ -154,7 +137,7 @@ object Drift {
 
   /** [[ksTest]] over a pre-aggregated (x, c1, c2) per-distinct-value
     * count frame — the two-sample tests' MERGEABLE summary (plain sums
-    * per value), the entry the streaming accumulator re-enters. */
+    * per value). */
   def ksFromCounts(byV: DataFrame): DataFrame = {
     val (cum, n) = cdfFromCounts(byV)
     val d = cum
@@ -218,8 +201,7 @@ object Drift {
     * (any shape) and MWU (location shift): does slice a's MEAN differ,
     * without assuming equal variances. Computed from the same one-scan
     * (x, c1, c2) count frame as the other two-sample tests: per-slice
-    * n, Σx·c, Σx²·c (three doubles per slice — the mergeable summary a
-    * streaming accumulator could re-enter), then
+    * n, Σx·c, Σx²·c (three doubles per slice, a mergeable summary), then
     *
     *   t = (m₁ − m₂) / √(v₁/n₁ + v₂/n₂),
     *   df = (v₁/n₁ + v₂/n₂)² / ((v₁/n₁)²/(n₁−1) + (v₂/n₂)²/(n₂−1)).
@@ -421,8 +403,8 @@ object Drift {
       .groupBy("x", "y").agg(F.count(F.lit(1)).as("nij")))
 
   /** [[kendallTau]] over a pre-aggregated (x, y, nij) PAIR-count
-    * contingency frame — the streaming re-entry point: P/Q/margins are
-    * exact-integer functions of the merged cells, so streamed == batch
+    * contingency frame: P/Q/margins are exact-integer functions of the
+    * merged cells, so merged cells give the row form's result
     * bit-for-bit. */
   def kendallTauFromCounts(byXY: DataFrame): DataFrame = {
     val cells = byXY
@@ -501,12 +483,11 @@ object Drift {
   }
 
   /** [[spearman]] over a pre-aggregated (x, y, n) PAIR-count frame — the
-    * mergeable summary a streaming accumulator re-enters
-    * (graft.streaming.StreamingDrift.spearmanNow): marginal value counts
+    * mergeable summary: marginal value counts
     * are the pair counts' marginal sums, and every rank sum is the
     * count-weighted form of the row sum. Midranks are exact dyadic
     * rationals and counts exact integers, so each weighted product and
-    * sum stays an exact double (within 2⁵³) — streamed == batch
+    * sum stays an exact double (within 2⁵³) — the row form's result
     * bit-for-bit, no rounding margin needed. */
   def spearmanFromCounts(byXY: DataFrame): DataFrame = {
     val base = byXY.select(F.col("x").cast("double").as("x"),
@@ -574,10 +555,9 @@ object Drift {
   }
 
   /** [[cuped]] over a pre-aggregated (arm, x, y, n) count frame — the
-    * mergeable summary a streaming accumulator re-enters
-    * (graft.streaming.StreamingDrift.cupedNow): every moment becomes the
-    * count-weighted exact-BIGINT form of the row sum (integer metrics —
-    * the operator's contract), so streamed == batch bit-for-bit. The
+    * mergeable summary: every moment becomes the count-weighted
+    * exact-BIGINT form of the row sum (integer metrics — the operator's
+    * contract), so merged counts give the row form's result bit-for-bit. The
     * arm min/max is taken over the MERGED counts, so a micro-batch that
     * saw one arm only can never skew the arm identification. */
   def cupedFromCounts(byAXY: DataFrame): DataFrame = {
@@ -833,8 +813,7 @@ object Drift {
 
   /** [[msprt]] over a pre-aggregated (t, g, x2, c) count frame — the
     * per-(day, arm, centi-value) multiplicities are the test's complete
-    * mergeable summary, the entry a streaming accumulator re-enters
-    * (graft.streaming.StreamingDrift.msprtNow). */
+    * mergeable summary. */
   def msprtFromCounts(byTGX0: DataFrame, a: String, b: String,
                       tau: Double, alpha: Double = 0.05): DataFrame = {
     require(a != b, "arms must be distinct labels")
@@ -1005,8 +984,7 @@ object Drift {
   }
 
   /** [[anovaF]] over a pre-aggregated per-group (g, n, s, q) moment
-    * frame — three plain sums per group, the mergeable summary a
-    * streaming accumulator re-enters (graft.streaming.StreamingDrift). */
+    * frame — three plain sums per group, the mergeable summary. */
   def anovaFromMoments(byG: DataFrame): DataFrame =
     byG.agg(
         F.count(F.lit(1)).as("k"), F.sum("n").as("n"),
@@ -1029,21 +1007,6 @@ object Drift {
         (F.col("n") - F.col("k")).as("df_within"),
         F.when(F.col("__sst") > 0,
           F.round(F.col("__ssb") / F.col("__sst"), 6) + F.lit(0.0)).as("eta2"))
-
-  /** [[anovaF]] over a pre-aggregated (g, x, c) count frame — the same
-    * mergeable per-(group, value) multiplicities the rank tests
-    * accumulate, folded into the moment sums (the streaming-twin entry:
-    * one partial layout serves ANOVA and Kruskal–Wallis both). */
-  def anovaFromCounts(byGV: DataFrame): DataFrame =
-    anovaFromMoments(byGV
-      // count-frame callers (streaming readers) may carry a failed cast:
-      // a NULL value would be skipped by the moment sums but still
-      // counted by n — drop the row entirely instead
-      .filter(F.col("g").isNotNull && F.col("x").isNotNull)
-      .groupBy("g").agg(
-        F.sum("c").as("n"),
-        F.sum(F.col("x") * F.col("c")).as("s"),
-        F.sum(F.col("x") * F.col("x") * F.col("c")).as("q")))
 
   /** KRUSKAL–WALLIS H (Kruskal & Wallis, JASA 1952): the rank-based
     * k-group test — does ANY of `groupCol`'s levels produce
@@ -1172,7 +1135,7 @@ object Drift {
 
   /** [[twoProportionZ]] over a pre-aggregated one-row (n1, s1, n2, s2)
     * count frame — four plain BIGINT counts, the test's complete
-    * mergeable summary (graft.streaming.StreamingDrift.propTestNow). */
+    * mergeable summary. */
   def twoProportionZFromCounts(counts: DataFrame): DataFrame = {
     counts
       // ANSI divide-by-zero guards: an empty arm yields NULL rate/z,

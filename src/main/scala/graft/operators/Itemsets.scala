@@ -48,8 +48,7 @@ object Itemsets {
 
   /** The rule algebra over pre-aggregated count frames — transaction,
     * item, and unordered-pair counts are the miner's MERGEABLE summary
-    * (plain sums), the entry the streaming accumulator re-enters
-    * (graft.streaming.StreamingItemsets). Expects `nTx` (n_tx), `itemN`
+    * (plain sums). Expects `nTx` (n_tx), `itemN`
     * (item, n_item), `pairs` (a, b, n_pair with a < b); thresholds are
     * applied here, so the pair frame may arrive unpruned — by the
     * apriori property the item filter loses nothing a surviving pair

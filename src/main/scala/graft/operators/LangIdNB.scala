@@ -50,9 +50,8 @@ object LangIdNB {
     F.round(F.ln(x) * 1000000.0, 0).cast("long")
 
   /** Per-(lang, gram) integer counts over the labelled corpus — the
-    * model's sufficient statistic, and EXACTLY the streaming twin's
-    * mergeable count-store layout ([[graft.streaming.StreamingLangId]]):
-    * the model is a pure function of this frame. */
+    * model's sufficient statistic: the model is a pure function of this
+    * frame. */
   def gramCounts(docs: DataFrame, textCol: String, labelCol: String): DataFrame =
     docs.filter(F.col(textCol).isNotNull && F.col(labelCol).isNotNull)
       .select(F.col(labelCol).as("lang"),

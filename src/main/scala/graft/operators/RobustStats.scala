@@ -70,8 +70,7 @@ object RobustStats {
   }
 
   /** [[theil]] over a pre-aggregated (grp, x, n) per-group value-count
-    * frame — the mergeable summary a streaming accumulator re-enters
-    * (graft.streaming.StreamingDrift.theilNow): the three per-group
+    * frame, a mergeable summary: the three per-group
     * sums become count-weighted (Σn, Σ n·x, Σ n·x·lnx). On integer
     * count metrics n·x is exact; the x·lnx terms are the same doubles
     * the row form adds n times, so the weighted sums agree with the
@@ -184,47 +183,6 @@ object RobustStats {
           + F.lit(0.0)).as("gini"))
   }
 
-  /** [[hillTailIndex]] over a pre-aggregated (x, c) per-distinct-value
-    * count frame — the mergeable summary a streaming accumulator
-    * re-enters (graft.streaming.StreamingDrift.hillNow): the top-(k+1)
-    * ORDER STATISTICS are the descending distinct values expanded by
-    * multiplicity, so k+1 distinct values always suffice; the heap runs
-    * over the (small) distinct-value frame and the expansion is an
-    * in-row array_repeat bounded by k+1. The fold adds the SAME term
-    * sequence as the row form (ties carry equal terms), so streamed ==
-    * batch bit-for-bit. */
-  def hillFromCounts(byV: DataFrame, k: Int = 50): DataFrame = {
-    require(k >= 1, "need k >= 1")
-    val base = byV.select(F.col("x").cast("double").as("x"), F.col("c").cast("long").as("c"))
-      .filter(F.col("x").isNotNull && F.col("x") > 0 && F.col("c") > 0)
-    base.agg(graft.functions.TopK.collectTopK(
-        F.struct(F.col("x"), F.col("c")), k + 1).as("__tk"))
-      .select(F.slice(F.flatten(F.transform(F.col("__tk"),
-        e => F.array_repeat(e.getField("x"),
-          F.least(e.getField("c"), F.lit((k + 1).toLong)).cast("int")))),
-        1, k + 1).as("xs"))
-      .filter(F.size(F.col("xs")) === k + 1)
-      .withColumn("xk", F.element_at(F.col("xs"), k + 1))
-      .withColumn("__h", F.aggregate(F.slice(F.col("xs"), 1, k),
-        F.lit(0.0), (acc, v) => acc + F.log(v / F.col("xk"))) / k)
-      .select(F.lit(k.toLong).as("k"),
-        (F.round(F.col("xk"), 6) + F.lit(0.0)).as("x_k"),
-        (F.round(F.col("__h"), 6) + F.lit(0.0)).as("hill_h"),
-        (F.round(F.when(F.col("__h") > 0, F.lit(1.0) / F.col("__h")), 6)
-          + F.lit(0.0)).as("alpha"))
-  }
-
-  /** [[gini]] over a pre-aggregated (x, c) per-distinct-value count
-    * frame — the mergeable summary a streaming accumulator re-enters
-    * (graft.streaming.StreamingDrift.giniNow). A tied run of value x
-    * with multiplicity c occupying ranks K+1..K+c contributes
-    * x·(c·K + c(c+1)/2) to the rank-weighted sum regardless of the
-    * within-tie order — the same rank algebra as the row-level [[gini]]
-    * (tie permutations cancel), EXACTLY equal when x·rank products are
-    * integer-exact (count metrics, the common case) and within the
-    * round-6 snap otherwise (one product per value vs c per-row adds).
-    * Cumulative counts via the same two-phase prefix over the
-    * distinct-value axis. */
   /** Cumulative Poisson(1) thresholds as 8-hex-digit strings over the
     * md5 uniform (floor(P(X ≤ k)·2³²) for k = 0..5) — shared between
     * [[poissonBootstrap]] and its SQL mirror so both engines draw the
@@ -287,30 +245,5 @@ object RobustStats {
       .select(F.col("b"), F.col("n"),
         (F.round(F.col("__t6").cast("double") / 1e6 / F.col("n"), 6) + F.lit(0.0)).as("mean"),
         F.col("boot_se"), F.col("lo95"), F.col("median"), F.col("hi95"))
-  }
-
-  def giniFromCounts(byV: DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val base = byV.select(F.col("x").cast("double").as("x"), F.col("c").cast("long").as("c"))
-      .filter(F.col("x").isNotNull && F.col("x") >= 0 && F.col("c") > 0)
-    val (parted, offsets) = TwoPhase.partitionOffsets(
-      base, Seq(F.col("x")), Seq(F.sum("c") -> "__o"))
-    val within = Window.partitionBy("__pid").orderBy("x")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val ranked = parted.join(F.broadcast(offsets), "__pid")
-      // K = count of strictly smaller values (exclusive cumulative)
-      .withColumn("__k", F.col("__o") + F.sum("c").over(within) - F.col("c"))
-      .withColumn("__wi",
-        F.col("x") * (F.col("c") * F.col("__k")
-          + F.col("c") * (F.col("c") + 1) / 2).cast("double"))
-    ranked.agg(F.sum("c").as("n"), F.sum(F.col("x") * F.col("c")).as("__t"),
-        F.sum("__wi").as("__w"))
-      .filter(F.col("n") > 0)
-      .select(F.col("n"),
-        (F.round(F.col("__t"), 4) + F.lit(0.0)).as("total"),
-        (F.round(F.when(F.col("__t") > 0,
-          F.lit(2.0) * F.col("__w") / (F.col("n") * F.col("__t"))
-            - (F.col("n") + 1).cast("double") / F.col("n")), 6)
-          + F.lit(0.0)).as("gini"))
   }
 }

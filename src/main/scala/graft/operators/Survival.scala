@@ -45,8 +45,7 @@ object Survival {
 
   /** The estimator over a pre-aggregated (t, d, c) frame — per-duration
     * event/subject counts are the curve's MERGEABLE summary (plain
-    * sums), the entry a streaming accumulator re-enters
-    * (graft.streaming.StreamingSurvival). */
+    * sums). */
   def kaplanMeierFromCounts(byT: DataFrame): DataFrame = {
     // Both cumulative folds over the event-time axis run as TWO-PHASE
     // prefix sums (r18, guide §2): the axis is pre-aggregated but NOT
@@ -254,8 +253,7 @@ object Survival {
         F.count(F.lit(1)).as("c")))
 
   /** The test over a pre-aggregated (t, g, d, c) frame — per-duration
-    * per-group event/subject counts, the mergeable summary a streaming
-    * accumulator re-enters (graft.streaming.StreamingSurvival). */
+    * per-group event/subject counts, the mergeable summary. */
   def logRankFromCounts(byTG: DataFrame): DataFrame = {
     // Single-group degeneracy guard: with one distinct group ga == gb
     // would count every subject in BOTH cohorts and emit a plausible
@@ -833,8 +831,7 @@ object Survival {
       steps, maxDurations)
 
   /** [[coxBaseline]] over a pre-aggregated (t, g, d, c) frame — the
-    * streaming re-entry point (the per-(t, g) counts are the curves'
-    * complete sufficient statistics, so streamed == batch exactly). */
+    * per-(t, g) counts are the curves' complete sufficient statistics. */
   def coxBaselineFromCounts(byTG: DataFrame, steps: Int = 4,
                             maxDurations: Int = defaultMaxDurations): DataFrame = {
     val spark = byTG.sparkSession
@@ -890,8 +887,7 @@ object Survival {
       steps, maxDurations)
 
   /** [[coxSchoenfeldTrend]] over a pre-aggregated (t, g, d, c) frame —
-    * the streaming re-entry point (residuals are a pure function of the
-    * per-(t, g) counts, so streamed == batch exactly). */
+    * residuals are a pure function of the per-(t, g) counts. */
   def coxSchoenfeldTrendFromCounts(byTG: DataFrame, steps: Int = 4,
                                    maxDurations: Int = defaultMaxDurations): DataFrame = {
     val spark = byTG.sparkSession
@@ -1083,8 +1079,7 @@ object Survival {
     * check runs on the ORIGINAL double value, not the long truncation —
     * a fractional covariate (0.5 → long 0) must land in pattern -1 and
     * trip the post-aggregation guard, not silently pass as 0 (r15
-    * ADVICE). Shared by the batch entry and the streaming write side
-    * ([[graft.streaming.StreamingSurvival]]). */
+    * ADVICE). */
   def patternCol(covCols: Seq[String]): org.apache.spark.sql.Column = {
     val p = covCols.size
     val xds = covCols.map(c => F.col(c).cast("double"))

@@ -631,10 +631,9 @@ object TextAnalysis {
         .groupBy("term").agg(F.count(F.lit(1)).as("c")), topN)
 
   /** [[zipfFit]] over a pre-aggregated (term, c) count frame — the
-    * mergeable summary a streaming accumulator re-enters
-    * (graft.streaming.StreamingDrift.zipfNow): term counts are plain
-    * sums, the top-N heap and the ordered regression sums are functions
-    * of the merged counts alone — streamed == batch bit-for-bit. */
+    * mergeable summary: term counts are plain sums, and the top-N heap
+    * and the ordered regression sums are functions of the merged counts
+    * alone, so merged counts give the row form's result bit-for-bit. */
   def zipfFitFromCounts(counts: DataFrame, topN: Int = 200): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val top = counts.agg(graft.functions.TopK.collectTopK(

@@ -21,11 +21,6 @@ import graft.Pin._
   * accumulates exact integers — the determinism anchor). */
 private[operators] object TwoPhase {
 
-  /** Returns (parted, offsets): `parted` is `df` range-partitioned by
-    * `order` with a `__pid` column; `offsets` has one row per partition
-    * with `__pid` plus one exclusive-prefix column per `aggs` entry
-    * (per-partition aggregate expression → offset column name). Join
-    * `offsets` back with `F.broadcast` on `__pid`. */
   /** Inclusive ordered PREFIX SUMS without a single-partition window:
     * adds, for each `(valueExpr, name)`, a column `name` holding
     * Σ value over all rows at-or-before the current row in `order`
@@ -60,6 +55,11 @@ private[operators] object TwoPhase {
     withSums.drop("__pid").drop(sums.map(s => s"__off_${s._2}"): _*)
   }
 
+  /** Returns (parted, offsets): `parted` is `df` range-partitioned by
+    * `order` with a `__pid` column; `offsets` has one row per partition
+    * with `__pid` plus one exclusive-prefix column per `aggs` entry
+    * (per-partition aggregate expression → offset column name). Join
+    * `offsets` back with `F.broadcast` on `__pid`. */
   def partitionOffsets(df: DataFrame, order: Seq[Column],
                        aggs: Seq[(Column, String)]): (DataFrame, DataFrame) = {
     require(aggs.nonEmpty, "need at least one total")

@@ -17,11 +17,12 @@ import graft.operators.AuditQueries.RawEventFilter
   * reference's own statements verbatim (DDL mirroring
   * `pkg/db/sql/create_cf_audit_events.sql` / `create_shipper_cursors.sql`
   * including the idempotent `metadata` migration and both CHECK
-  * constraints; `INSERT … ON CONFLICT`; `reltuples`), while
-  * [[DerbyDialect]] executes the same row-level semantics on the embedded
-  * engine the test JVM actually has — so the plumbing (init idempotence,
-  * upsert batching, ''⇄NULL uuid edges, type round-trips) is proven by
-  * `JdbcEventStoreSpec`, which the reference never did for its store.
+  * constraints; `INSERT … ON CONFLICT`; `reltuples`). `dialect` is a
+  * parameter so that `JdbcEventStoreSpec` can pass its test-only
+  * `DerbyDialect`, which executes the same row-level semantics on the
+  * embedded engine the test JVM has — so the plumbing (init idempotence,
+  * upsert batching, ''⇄NULL uuid edges, type round-trips) is proven, which
+  * the reference never did for its store.
   *
   * Scale notes: each executor partition opens one connection and writes a
   * multi-row batched upsert — |partitions| parallel streams into the DB.

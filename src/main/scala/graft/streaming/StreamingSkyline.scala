@@ -14,9 +14,9 @@ import graft.operators.Skyline
   * dominated in the full set is dominated by some row of its own
   * batch's skyline or of another batch's — dominance is transitive and
   * the dominator of a dominator dominates), so persisting each batch's
-  * LOCAL skyline and re-skylining the union on read is exact, the
-  * StreamingItemsets partial-counts pattern with "count" replaced by
-  * "nondominated subset". Each batch writes its survivors under
+  * LOCAL skyline and re-skylining the union on read is exact: a
+  * partial-counts pattern with "count" replaced by "nondominated
+  * subset". Each batch writes its survivors under
   * `batch_id=` (replay-idempotent overwrite — a replayed batch rewrites
   * the same rows); a crash between batches loses nothing because every
   * batch's partial is self-contained.

@@ -5,6 +5,8 @@ import java.nio.file.Files
 import graft.functions.BloomSupport
 import graft.operators.{Dedup, IncrementalDedup}
 import org.apache.spark.sql.{functions => F}
+import org.apache.spark.sql.graftnative.BloomFunctions
+import org.apache.spark.util.sketch.IncompatibleMergeException
 
 /** The bloom pre-pass on the incremental-dedup store: sidecar filters are a
   * SUPERSET of the stored keys (no false negatives ever), so filtering the
@@ -114,5 +116,43 @@ class BloomDedupSpec extends SparkSpec {
     val other = (0 until 2000).map(i => s"other-$i").toDF("k")
     val fp = other.filter(BloomSupport.mightContain(F.lit(bytes), F.col("k"))).count()
     fp.toDouble / 2000 should be < 0.01
+  }
+
+  // The daemon store's sidecar constants (ParquetEventStore): 2^20 items in 2^23 bits.
+  private val (items, bits) = (1L << 20, 1L << 23)
+  private def guids(prefix: String, n: Int) = (0 until n).map(i => s"$prefix-$i-\u00e9")
+
+  it("bloomDriver writes the bytes bloomAgg writes over the same keys, whatever the partitioning") {
+    val keys = guids("g", 3000)
+    val agg = keys.toDF("k").repartition(5)
+      .select(BloomFunctions.bloomAgg(F.col("k"), items, bits)).head.getAs[Array[Byte]](0)
+    BloomFunctions.bloomDriver(scala.util.Random.shuffle(keys), items, bits) shouldBe agg
+  }
+
+  it("hashDriver is Spark's xxhash64 of the string key") {
+    val keys = guids("h", 200) ++ Seq("", "a", "\u2603 snow")
+    val spark64 = keys.toDF("k").select($"k", F.xxhash64($"k"))
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    keys.foreach(k => withClue(k)(BloomFunctions.hashDriver(k) shouldBe spark64(k)))
+  }
+
+  it("hashDriver of a NULL key is xxhash64's seed, as the column side hashes it") {
+    val col = Seq(Option.empty[String]).toDF("k").select(F.xxhash64($"k")).head.getLong(0)
+    BloomFunctions.hashDriver(null) shouldBe col
+    col shouldBe 42L
+  }
+
+  it("mergeBloom is the union: the bytes of one filter built over both key sets") {
+    val (a, b) = (guids("a", 500), guids("b", 700))
+    val merged = BloomFunctions.mergeBloom(
+      BloomFunctions.bloomDriver(a, items, bits), BloomFunctions.bloomDriver(b, items, bits))
+    merged shouldBe BloomFunctions.bloomDriver(a ++ b, items, bits)
+  }
+
+  it("mergeBloom refuses filters of different sizes (the store then rebuilds the sidecar)") {
+    val small = BloomFunctions.bloomDriver(guids("s", 10), 1000L, 1L << 13)
+    val large = BloomFunctions.bloomDriver(guids("l", 10), items, bits)
+    an[IncompatibleMergeException] should be thrownBy BloomFunctions.mergeBloom(large, small)
+    an[IncompatibleMergeException] should be thrownBy BloomFunctions.mergeBloom(small, large)
   }
 }

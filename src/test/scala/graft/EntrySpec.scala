@@ -16,6 +16,26 @@ class EntrySpec extends SparkSpec {
     (q -- o) shouldBe empty
   }
 
+  /** A committed row-name list: one name a line. */
+  private def committedNames(resource: String): Set[String] =
+    scala.io.Source.fromFile(s"src/test/resources/$resource", "UTF-8").getLines().map(_.trim).filter(_.nonEmpty).toSet
+
+  private def pinned(kind: String, resource: String, actual: Set[String]): Unit = {
+    val listed = committedNames(resource)
+    withClue(s"$kind rows missing from the registry: ${(listed -- actual).toSeq.sorted.mkString(", ")}; " +
+        s"rows not on $resource: ${(actual -- listed).toSeq.sorted.mkString(", ")}") {
+      actual shouldBe listed
+    }
+  }
+
+  it("the board's query rows are exactly the committed list") {
+    pinned("board", "board_queries.txt", SparkEntry.queries.keySet)
+  }
+
+  it("the bench-op rows are exactly the committed list") {
+    pinned("bench-op", "bench_ops.txt", SparkEntry.benchOps.keySet)
+  }
+
   it("a restricted run rejects unknown names, naming each one") {
     val e = intercept[IllegalArgumentException](
       SparkEntry.onlyNames(SparkEntry.queries.keySet, Seq("q1,q_unshipped_cursor", "q_nope")))

@@ -55,41 +55,4 @@ class ItemsetsSpec extends SparkSpec {
     out(("bread", "milk"))._4 should be < 1.0 // both common, co-occurrence below product
   }
 
-  it("streamed batch-complete baskets across a restart yield the batch rules exactly") {
-    import java.nio.file.{Files => JFiles, Paths}
-    import org.apache.spark.sql.{functions => F}
-    val r = new scala.util.Random(19)
-    // 60 baskets of 2-4 items from a 12-item vocabulary
-    val all = (1 to 60).map { tid =>
-      tid -> r.shuffle((1 to 12).toList).take(2 + r.nextInt(3)).map(i => s"i$i")
-    }
-    val inDir = JFiles.createTempDirectory("graft-rules-in").toString
-    val ckpt = JFiles.createTempDirectory("graft-rules-ckpt").toString
-    val cDir = JFiles.createTempDirectory("graft-rules-counts").toString
-    def write(name: String, part: Seq[(Int, List[String])]): Unit =
-      JFiles.writeString(Paths.get(inDir, name),
-        part.flatMap { case (t, items) => items.map(i => s"$t,$i") }.mkString("\n"))
-    write("f1.txt", all.take(30)) // whole baskets per file: the batch-complete contract
-    val src = () => spark.readStream.text(inDir)
-      .select(F.split(F.col("value"), ",").getItem(0).as("tid"),
-        F.split(F.col("value"), ",").getItem(1).as("item"))
-    val q1 = graft.streaming.StreamingItemsets.attach(src(), ckpt, cDir, "tid", "item", 100)
-    try q1.processAllAvailable() finally q1.stop()
-    write("f2.txt", all.drop(30))
-    val q2 = graft.streaming.StreamingItemsets.attach(src(), ckpt, cDir, "tid", "item", 100)
-    try q2.processAllAvailable() finally q2.stop()
-
-    val streamed = graft.streaming.StreamingItemsets.rulesNow(spark, cDir, 3, 0.2)
-      .collect().map(x => (x.getString(0), x.getString(1)) -> x.toSeq.drop(2)).toMap
-    val batchDf = all.flatMap { case (t, items) => items.map(i => (t, i)) }.toDF("tid", "item")
-    val batch = Itemsets.assocRules(batchDf, 3, 0.2)
-      .collect().map(x => (x.getString(0), x.getString(1)) -> x.toSeq.drop(2)).toMap
-    streamed shouldBe batch
-    streamed should not be empty
-  }
-
-  it("an empty stream directory yields an empty rule board, not a throw") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-rules-empty").toString
-    graft.streaming.StreamingItemsets.rulesNow(spark, dir, 1, 0.0).collect() shouldBe empty
-  }
 }

@@ -110,45 +110,6 @@ class LangIdNBSpec extends SparkSpec {
     kHo should be > -0.2              // and it is chance-like, not anti-predictive
   }
 
-  it("streamed (lang, gram) counts rebuild the batch model exactly across a restart") {
-    import java.nio.file.{Files => JFiles, Paths}
-    val docs = Seq(
-      (0L, "aaaa", "aa"), (1L, "aaab", "aa"), (2L, "zzzz", "zz"),
-      (3L, "zzzy", "zz"), (4L, "x", "aa"), (5L, "azaz", "zz"))
-    val inDir = JFiles.createTempDirectory("graft-li-in").toString
-    def write(name: String, part: Seq[(Long, String, String)]): Unit =
-      JFiles.writeString(Paths.get(inDir, name),
-        part.map { case (i, t, l) => s"$i,$t,$l" }.mkString("\n"))
-    write("f1.txt", docs.take(3))
-    val src = () => spark.readStream.text(inDir)
-      .select(F.split(F.col("value"), ",").getItem(0).cast("long").as("doc_id"),
-        F.split(F.col("value"), ",").getItem(1).as("text"),
-        F.split(F.col("value"), ",").getItem(2).as("lang"))
-    val (ck, cd) = (JFiles.createTempDirectory("li-ck").toString,
-      JFiles.createTempDirectory("li-cd").toString)
-    def drain(): Unit = {
-      val q = graft.streaming.StreamingLangId.attach(
-        src(), ck, cd, "text", "lang", 100)
-      try q.processAllAvailable() finally q.stop()
-    }
-    drain()
-    write("f2.txt", docs.drop(3)) // restart: fresh query, same stores
-    drain()
-    val df = docs.toDF("doc_id", "text", "lang")
-    def sortedRows(d: org.apache.spark.sql.DataFrame) =
-      d.collect().map(_.toSeq).sortBy(_.mkString("|")).toSeq
-    sortedRows(graft.streaming.StreamingLangId.modelNow(spark, cd)) shouldBe
-      sortedRows(LangIdNB.train(df, "text", "lang"))
-    sortedRows(graft.streaming.StreamingLangId.priorsNow(spark, cd)) shouldBe
-      sortedRows(LangIdNB.priors(df, "text", "lang"))
-    // serve against the streamed model == batch trainScore predictions
-    graft.streaming.StreamingLangId.scoreNow(spark, cd, df, "text", "doc_id")
-      .orderBy("doc_id").collect().map(_.toSeq).toSeq shouldBe
-      LangIdNB.score(df, "text", "doc_id",
-        LangIdNB.train(df, "text", "lang"), LangIdNB.priors(df, "text", "lang"))
-        .orderBy("doc_id").collect().map(_.toSeq).toSeq
-  }
-
   it("beats the marker heuristic decisively on the fixture: κ ≥ 0.25 vs κ ≈ 0") {
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     val nb = LangIdNB.trainScore(docs, "text", "lang", "doc_id")

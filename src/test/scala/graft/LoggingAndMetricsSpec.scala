@@ -6,7 +6,7 @@ import scala.collection.mutable
 import com.fasterxml.jackson.databind.ObjectMapper
 
 import graft.logging.Lager
-import graft.metrics.{MetricsRegistry, MetricsServer}
+import graft.metrics.{JvmMetrics, MetricsRegistry, MetricsServer}
 import graft.sources.{CfAuditEventFetcher, HttpReply}
 
 /** Structured-logging shape (lager-style JSON lines with session-scoped
@@ -134,5 +134,52 @@ class LoggingAndMetricsSpec extends SparkSpec {
       "# TYPE a_total counter\na_total 1.0\n" +
       "# TYPE b_total counter\nb_total 3.5\n" +
       "# TYPE z_gauge gauge\nz_gauge 1.0\n"
+  }
+
+  /** One JvmMetrics scrape as name -> (type, value). */
+  private def jvmScrape(): Map[String, (String, Double)] = {
+    val lines = JvmMetrics.exposition.split("\n").toSeq
+    lines.grouped(2).map {
+      case Seq(typeLine, sample) =>
+        val Array("#", "TYPE", name, kind) = typeLine.split(" ")
+        val Array(sampleName, value) = sample.split(" ")
+        sampleName shouldBe name
+        name -> (kind, value.toDouble)
+      case other => fail(s"a TYPE line without its sample: $other")
+    }.toMap
+  }
+
+  it("JvmMetrics exposes ten metrics, each a TYPE line then its sample; counters and only counters end in _total") {
+    val m = jvmScrape()
+    m.keySet shouldBe Set("jvm_memory_bytes_used_heap", "jvm_memory_bytes_used_nonheap", "jvm_memory_bytes_max_heap",
+      "jvm_threads_current", "jvm_threads_daemon", "jvm_classes_currently_loaded", "jvm_gc_collection_count_total",
+      "jvm_gc_collection_seconds_total", "process_start_time_seconds", "process_uptime_seconds")
+    m.foreach { case (name, (kind, _)) => withClue(name)(kind shouldBe (if (name.endsWith("_total")) "counter" else "gauge")) }
+  }
+
+  it("JvmMetrics values agree with the JVM's own management beans, in bytes and seconds") {
+    val runtime = java.lang.management.ManagementFactory.getRuntimeMXBean
+    val upBefore = runtime.getUptime / 1000.0
+    val m = jvmScrape().map { case (n, (_, v)) => n -> v }
+    val upAfter = runtime.getUptime / 1000.0
+    m("process_start_time_seconds") shouldBe runtime.getStartTime / 1000.0
+    m("process_uptime_seconds") should (be >= upBefore and be <= upAfter)
+    m("jvm_memory_bytes_used_heap") should (be > 0.0 and be <= m("jvm_memory_bytes_max_heap"))
+    m("jvm_threads_daemon") should (be > 0.0 and be <= m("jvm_threads_current"))
+    m("jvm_classes_currently_loaded") should be > 1000.0
+  }
+
+  it("JvmMetrics counts every collection the GC beans report, and a forced collection adds to the count") {
+    import scala.jdk.CollectionConverters._
+    def beanCount = java.lang.management.ManagementFactory.getGarbageCollectorMXBeans.asScala
+      .map(_.getCollectionCount.max(0L)).sum.toDouble
+    val before = jvmScrape()
+    (1 to 3).foreach(_ => System.gc())
+    val low = beanCount
+    val after = jvmScrape()
+    val high = beanCount
+    after("jvm_gc_collection_count_total")._2 should (be >= low and be <= high)
+    after("jvm_gc_collection_count_total")._2 should be > before("jvm_gc_collection_count_total")._2
+    after("jvm_gc_collection_seconds_total")._2 should be >= before("jvm_gc_collection_seconds_total")._2
   }
 }

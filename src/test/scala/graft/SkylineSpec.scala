@@ -193,18 +193,6 @@ class SkylineSpec extends SparkSpec {
       .collect() shouldBe empty
   }
 
-  it("giniFromCounts equals the row-level gini on count metrics, ties included") {
-    val r = new scala.util.Random(67)
-    val vals = Seq.fill(400)(r.nextInt(25).toDouble) // heavy ties, integer-exact
-    val rowLevel = giniOf(vals).toSeq
-    val counts = vals.groupBy(identity).toSeq
-      .map { case (v, g) => (v, g.size.toLong) }
-    val fromCounts = graft.operators.RobustStats
-      .giniFromCounts(counts.toDF("x", "c").repartition(7))
-      .collect().head.toSeq
-    fromCounts shouldBe rowLevel
-  }
-
   it("gini excludes negative values and NULLs the degenerate all-zero case") {
     val out = giniOf(Seq(-5.0, 1.0, 1.0))
     out.getLong(0) shouldBe 2L // the negative row is out of support

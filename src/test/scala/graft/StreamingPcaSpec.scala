@@ -3,11 +3,10 @@ package graft
 import org.apache.spark.sql.{functions => F}
 
 import graft.operators.Pca
-import graft.streaming.{StreamingForecast, StreamingPca}
-import graft.operators.TimeSeries
+import graft.streaming.StreamingPca
 
-/** Streaming moments/PCA and streaming Holt-Winters: mergeable-sum
-  * partials re-derive the exact batch boards across restarts. */
+/** Streaming moments/PCA: mergeable-sum partials re-derive the exact
+  * batch board across restarts. */
 class StreamingPcaSpec extends SparkSpec {
   import spark.implicits._
 
@@ -57,41 +56,4 @@ class StreamingPcaSpec extends SparkSpec {
     StreamingPca.covarianceNow(spark, dir, 3).collect() shouldBe empty
   }
 
-  it("streamed day counts forecast exactly like the batch operator, split mid-day") {
-    import java.nio.file.{Files => JFiles, Paths}
-    // 28 days × 3 events/day for one key; the split lands MID-day 14 —
-    // the no-batch-completeness contract the count merge buys
-    val rows = for (d <- 0 until 28; e <- 0 until 3)
-      yield s"k1,2026-03-${"%02d".format(d % 28 + 1)}T0$e:00:00"
-    val inDir = JFiles.createTempDirectory("graft-fc-in").toString
-    val ckpt = JFiles.createTempDirectory("graft-fc-ckpt").toString
-    val cDir = JFiles.createTempDirectory("graft-fc-counts").toString
-    def write(name: String, part: Seq[String]): Unit =
-      JFiles.writeString(Paths.get(inDir, name), part.mkString("\n"))
-    val src = () => spark.readStream.text(inDir)
-      .select(F.split(F.col("value"), ",").getItem(0).as("k"),
-        F.to_timestamp(F.split(F.col("value"), ",").getItem(1)).as("ts"))
-    write("f1.txt", rows.take(43)) // 14 full days + 1 of day 15's 3 events
-    val q1 = StreamingForecast.attach(src(), ckpt, cDir, "k", "ts", 100)
-    try q1.processAllAvailable() finally q1.stop()
-    write("f2.txt", rows.drop(43))
-    val q2 = StreamingForecast.attach(src(), ckpt, cDir, "k", "ts", 100)
-    try q2.processAllAvailable() finally q2.stop()
-
-    val streamed = StreamingForecast.forecastNow(spark, cDir)
-      .orderBy("step").collect().map(r => (r.getInt(1), r.getDouble(2), r.getDouble(3)))
-    val daily = rows.map(_.split(",")).groupBy(p => (p(0)(0), p(1).take(10)))
-      .toSeq.map { case ((_, day), g) =>
-        ("k1", java.sql.Date.valueOf(day), g.size.toDouble)
-      }
-    val batch = TimeSeries.holtWintersForecast(
-        daily.toDF("k", "d", "x"), "k", "d", "x")
-      .orderBy("step").collect().map(r => (r.getInt(1), r.getDouble(2), r.getDouble(3)))
-    streamed shouldBe batch
-    streamed should have length 7
-    // a constant 3/day series is the recursion's fixed point: exact 3s
-    streamed.foreach { case (_, forecast, mae) =>
-      forecast shouldBe 3.0; mae shouldBe 0.0
-    }
-  }
 }

@@ -50,44 +50,6 @@ class SurvivalSpec extends SparkSpec {
     out(3L)._4 shouldBe 0.5
   }
 
-  it("streamed subjects across a restart yield the batch curve exactly") {
-    import java.nio.file.{Files => JFiles, Paths}
-    import org.apache.spark.sql.{functions => F}
-    val r = new scala.util.Random(41)
-    val subjects = Seq.fill(120)((r.nextInt(12), if (r.nextInt(4) == 0) 0 else 1))
-    val inDir = JFiles.createTempDirectory("graft-km-in").toString
-    val ckpt = JFiles.createTempDirectory("graft-km-ckpt").toString
-    val cDir = JFiles.createTempDirectory("graft-km-counts").toString
-    def write(name: String, part: Seq[(Int, Int)]): Unit =
-      JFiles.writeString(Paths.get(inDir, name),
-        part.map { case (d, o) => s"$d,$o" }.mkString("\n"))
-    write("f1.txt", subjects.take(60))
-    val src = () => spark.readStream.text(inDir)
-      .select(F.split(F.col("value"), ",").getItem(0).cast("int").as("dur"),
-        F.split(F.col("value"), ",").getItem(1).cast("int").as("obs"))
-    val q1 = graft.streaming.StreamingSurvival.attach(src(), ckpt, cDir, "dur", "obs", 100)
-    try q1.processAllAvailable() finally q1.stop()
-    write("f2.txt", subjects.drop(60))
-    val q2 = graft.streaming.StreamingSurvival.attach(src(), ckpt, cDir, "dur", "obs", 100)
-    try q2.processAllAvailable() finally q2.stop()
-
-    val streamed = graft.streaming.StreamingSurvival.kmNow(spark, cDir)
-      .collect().map(x => x.getLong(0) -> x.toSeq).toMap
-    val batch = Survival.kaplanMeier(subjects.toDF("dur", "obs"), "dur", "obs")
-      .collect().map(x => x.getLong(0) -> x.toSeq).toMap
-    streamed shouldBe batch
-    streamed.size should be > 5
-    // the CI and hazard readers fold the SAME partials — streamed == batch too
-    graft.streaming.StreamingSurvival.kmCiNow(spark, cDir)
-      .collect().map(_.toSeq).toSet shouldBe
-      Survival.kaplanMeierCI(subjects.toDF("dur", "obs"), "dur", "obs")
-        .collect().map(_.toSeq).toSet
-    graft.streaming.StreamingSurvival.cumhazNow(spark, cDir)
-      .collect().map(_.toSeq).toSet shouldBe
-      Survival.nelsonAalen(subjects.toDF("dur", "obs"), "dur", "obs")
-        .collect().map(_.toSeq).toSet
-  }
-
   // ---- kaplanMeierCI / nelsonAalen -------------------------------------
 
   it("Greenwood bands match the hand-worked textbook case and clip to [0, 1]") {
@@ -555,239 +517,6 @@ class SurvivalSpec extends SparkSpec {
       Survival.coxPhMulti(const, "dur", "obs", Seq("a", "b", "c", "d"))
   }
 
-  it("streamed grouped subjects across a restart yield the batch statistic") {
-    import java.nio.file.{Files => JFiles, Paths}
-    import org.apache.spark.sql.{functions => F}
-    val r = new scala.util.Random(43)
-    val subjects = Seq.fill(100)(
-      (r.nextInt(10), if (r.nextInt(4) == 0) 0 else 1, if (r.nextBoolean()) "x" else "y"))
-    val inDir = JFiles.createTempDirectory("graft-lr-in").toString
-    val ckpt = JFiles.createTempDirectory("graft-lr-ckpt").toString
-    val cDir = JFiles.createTempDirectory("graft-lr-counts").toString
-    def write(name: String, part: Seq[(Int, Int, String)]): Unit =
-      JFiles.writeString(Paths.get(inDir, name),
-        part.map { case (d, o, g) => s"$d,$o,$g" }.mkString("\n"))
-    write("f1.txt", subjects.take(50))
-    val src = () => spark.readStream.text(inDir)
-      .select(F.split(F.col("value"), ",").getItem(0).cast("int").as("dur"),
-        F.split(F.col("value"), ",").getItem(1).cast("int").as("obs"),
-        F.split(F.col("value"), ",").getItem(2).as("g"))
-    val q1 = graft.streaming.StreamingSurvival.attachGrouped(src(), ckpt, cDir, "dur", "obs", "g", 100)
-    try q1.processAllAvailable() finally q1.stop()
-    write("f2.txt", subjects.drop(50))
-    val q2 = graft.streaming.StreamingSurvival.attachGrouped(src(), ckpt, cDir, "dur", "obs", "g", 100)
-    try q2.processAllAvailable() finally q2.stop()
-
-    val streamed = graft.streaming.StreamingSurvival.logRankNow(spark, cDir).collect().head.toSeq
-    val batch = Survival.logRank(subjects.toDF("dur", "obs", "g"), "dur", "obs", "g")
-      .collect().head.toSeq
-    streamed shouldBe batch
-    // the same grouped counts are Cox-PH's complete sufficient stats
-    val coxStreamed = graft.streaming.StreamingSurvival.coxPhNow(spark, cDir)
-      .collect().head.toSeq
-    val coxBatch = Survival.coxPh(subjects.toDF("dur", "obs", "g"), "dur", "obs", "g")
-      .collect().head.toSeq
-    coxStreamed shouldBe coxBatch
-    // ... and the C-index pair counts are exact-integer functions of them
-    val cStreamed = graft.streaming.StreamingSurvival.cIndexNow(spark, cDir)
-      .collect().head.toSeq
-    val cBatch = Survival.cIndexBinary(subjects.toDF("dur", "obs", "g"),
-      "dur", "obs", "g").collect().head.toSeq
-    cStreamed shouldBe cBatch
-    // ... and the RMST-difference reader re-enters the same store
-    graft.streaming.StreamingSurvival.rmstDiffNow(spark, cDir, tau = 6L)
-      .collect().head.toSeq shouldBe
-      Survival.rmstDiff(subjects.toDF("dur", "obs", "g"),
-        "dur", "obs", "g", tau = 6L).collect().head.toSeq
-  }
-
-  it("streamed baseline-hazard and Schoenfeld readers re-enter the grouped store exactly") {
-    import java.nio.file.{Files => JFiles, Paths}
-    import org.apache.spark.sql.{functions => F}
-    val r = new scala.util.Random(47)
-    val subjects = Seq.fill(100)(
-      (r.nextInt(10), if (r.nextInt(4) == 0) 0 else 1, if (r.nextBoolean()) "x" else "y"))
-    val inDir = JFiles.createTempDirectory("graft-bl-in").toString
-    val ckpt = JFiles.createTempDirectory("graft-bl-ckpt").toString
-    val cDir = JFiles.createTempDirectory("graft-bl-counts").toString
-    def write(name: String, part: Seq[(Int, Int, String)]): Unit =
-      JFiles.writeString(Paths.get(inDir, name),
-        part.map { case (d, o, g) => s"$d,$o,$g" }.mkString("\n"))
-    write("f1.txt", subjects.take(50))
-    val src = () => spark.readStream.text(inDir)
-      .select(F.split(F.col("value"), ",").getItem(0).cast("int").as("dur"),
-        F.split(F.col("value"), ",").getItem(1).cast("int").as("obs"),
-        F.split(F.col("value"), ",").getItem(2).as("g"))
-    val q1 = graft.streaming.StreamingSurvival.attachGrouped(src(), ckpt, cDir, "dur", "obs", "g", 100)
-    try q1.processAllAvailable() finally q1.stop()
-    write("f2.txt", subjects.drop(50))
-    val q2 = graft.streaming.StreamingSurvival.attachGrouped(src(), ckpt, cDir, "dur", "obs", "g", 100)
-    try q2.processAllAvailable() finally q2.stop()
-
-    val blStreamed = graft.streaming.StreamingSurvival.coxBaselineNow(spark, cDir)
-      .collect().map(x => x.getLong(0) -> x.toSeq).toMap
-    val blBatch = Survival.coxBaseline(subjects.toDF("dur", "obs", "g"),
-      "dur", "obs", "g").collect().map(x => x.getLong(0) -> x.toSeq).toMap
-    blStreamed shouldBe blBatch
-    blStreamed.size should be > 5
-    graft.streaming.StreamingSurvival.coxSchoenfeldNow(spark, cDir)
-      .collect().head.toSeq shouldBe
-      Survival.coxSchoenfeldTrend(subjects.toDF("dur", "obs", "g"),
-        "dur", "obs", "g").collect().head.toSeq
-  }
-
-  it("streamed stratified / pattern / gridded-covariate Cox twins across a restart equal batch") {
-    import java.nio.file.{Files => JFiles, Paths}
-    import org.apache.spark.sql.{functions => F}
-    val r = new scala.util.Random(51)
-    // (dur, obs, group, stratum, x1, x2, v) — v an exact-half grid
-    val subjects = Seq.fill(120)((r.nextInt(10),
-      if (r.nextInt(4) == 0) 0 else 1,
-      if (r.nextBoolean()) "x" else "y",
-      s"s${r.nextInt(3)}",
-      r.nextInt(2), r.nextInt(2), r.nextInt(7) * 0.5))
-    val inDir = JFiles.createTempDirectory("graft-ct-in").toString
-    def write(name: String, part: Seq[(Int, Int, String, String, Int, Int, Double)]): Unit =
-      JFiles.writeString(Paths.get(inDir, name),
-        part.map { case (d, o, g, s, x1, x2, v) => s"$d,$o,$g,$s,$x1,$x2,$v" }.mkString("\n"))
-    write("f1.txt", subjects.take(60))
-    val src = () => spark.readStream.text(inDir)
-      .select(F.split(F.col("value"), ",").getItem(0).cast("int").as("dur"),
-        F.split(F.col("value"), ",").getItem(1).cast("int").as("obs"),
-        F.split(F.col("value"), ",").getItem(2).as("g"),
-        F.split(F.col("value"), ",").getItem(3).as("s"),
-        F.split(F.col("value"), ",").getItem(4).cast("int").as("x1"),
-        F.split(F.col("value"), ",").getItem(5).cast("int").as("x2"),
-        F.split(F.col("value"), ",").getItem(6).cast("double").as("v"))
-    def drain(attach: () => org.apache.spark.sql.streaming.StreamingQuery): Unit = {
-      val q = attach(); try q.processAllAvailable() finally q.stop()
-    }
-    val (ckS, cdS) = (JFiles.createTempDirectory("ct-ck-s").toString,
-      JFiles.createTempDirectory("ct-cd-s").toString)
-    val (ckP, cdP) = (JFiles.createTempDirectory("ct-ck-p").toString,
-      JFiles.createTempDirectory("ct-cd-p").toString)
-    val (ckV, cdV) = (JFiles.createTempDirectory("ct-ck-v").toString,
-      JFiles.createTempDirectory("ct-cd-v").toString)
-    def drainAll(): Unit = {
-      drain(() => graft.streaming.StreamingSurvival.attachStrat(
-        src(), ckS, cdS, "dur", "obs", "g", "s", 100))
-      drain(() => graft.streaming.StreamingSurvival.attachPattern(
-        src(), ckP, cdP, "dur", "obs", Seq("x1", "x2"), 100))
-      drain(() => graft.streaming.StreamingSurvival.attachCont(
-        src(), ckV, cdV, "dur", "obs", "v", 100))
-    }
-    drainAll()
-    write("f2.txt", subjects.drop(60)) // restart: fresh queries, same stores
-    drainAll()
-
-    val df = subjects.toDF("dur", "obs", "g", "s", "x1", "x2", "v")
-    graft.streaming.StreamingSurvival.coxPhStratNow(spark, cdS)
-      .collect().head.toSeq shouldBe
-      Survival.coxPhStratified(df, "dur", "obs", "g", "s").collect().head.toSeq
-    graft.streaming.StreamingSurvival.coxPhMultiNow(spark, cdP, Seq("x1", "x2"))
-      .collect().map(_.toSeq).toSeq shouldBe
-      Survival.coxPhMulti(df, "dur", "obs", Seq("x1", "x2")).collect().map(_.toSeq).toSeq
-    graft.streaming.StreamingSurvival.coxPhContNow(spark, cdV, "v")
-      .collect().head.toSeq shouldBe
-      Survival.coxPhCont(df, "dur", "obs", "v").collect().head.toSeq
-  }
-
-  it("streamed attach variants drop null rows exactly as the batch entries do") {
-    // concat_ws silently SKIPS null arguments: an unfiltered null
-    // covariate/stratum/group would shift the pipe-segment layout and
-    // the read side would parse a neighbouring slot as the missing
-    // value — a silently corrupted fit where batch drops the row (r16
-    // ADVICE). The write-side isNotNull pre-filters must make streamed
-    // == batch on a null-bearing frame.
-    import java.nio.file.{Files => JFiles, Paths}
-    import org.apache.spark.sql.{functions => F}
-    val clean = Seq(
-      ("1", "1", "x", "s0", "1", "0", "0.5"), ("2", "0", "y", "s1", "0", "1", "1.0"),
-      ("3", "1", "x", "s0", "0", "0", "1.5"), ("4", "1", "y", "s1", "1", "1", "2.0"),
-      ("5", "0", "x", "s0", "1", "0", "0.5"), ("6", "1", "y", "s1", "0", "1", "1.0"),
-      ("2", "1", "x", "s0", "1", "1", "1.5"), ("3", "0", "y", "s1", "0", "0", "2.0"),
-      ("4", "1", "x", "s1", "0", "1", "0.5"), ("5", "1", "y", "s0", "1", "0", "1.5"))
-    // one poisoned row per nullable slot (empty field → null after cast)
-    val poisoned = Seq(
-      ("2", "1", "x", "s0", "1", "0", ""), ("2", "1", "x", "", "1", "0", "1.0"),
-      ("2", "1", "", "s0", "1", "0", "1.0"), ("2", "", "x", "s0", "1", "0", "1.0"),
-      ("", "1", "x", "s0", "1", "0", "1.0"), ("2", "1", "x", "s0", "", "0", "1.0"))
-    val inDir = JFiles.createTempDirectory("graft-nul-in").toString
-    JFiles.writeString(Paths.get(inDir, "f1.txt"),
-      (clean ++ poisoned).map(t => t.productIterator.mkString(",")).mkString("\n"))
-    // empty field → null (nullif BEFORE cast: ANSI cast rejects '')
-    def part(i: Int) = F.nullif(F.split(F.col("value"), ",").getItem(i), F.lit(""))
-    val src = () => spark.readStream.text(inDir)
-      .select(part(0).cast("int").as("dur"), part(1).cast("int").as("obs"),
-        part(2).as("g"), part(3).as("s"),
-        part(4).cast("int").as("x1"), part(5).cast("int").as("x2"),
-        part(6).cast("double").as("v"))
-    def drain(attach: () => org.apache.spark.sql.streaming.StreamingQuery): Unit = {
-      val q = attach(); try q.processAllAvailable() finally q.stop()
-    }
-    def tmp(p: String) = JFiles.createTempDirectory(p).toString
-    val (ckS, cdS, ckP, cdP, ckV, cdV, ckG, cdG) =
-      (tmp("nul-ck-s"), tmp("nul-cd-s"), tmp("nul-ck-p"), tmp("nul-cd-p"),
-        tmp("nul-ck-v"), tmp("nul-cd-v"), tmp("nul-ck-g"), tmp("nul-cd-g"))
-    drain(() => graft.streaming.StreamingSurvival.attachStrat(
-      src(), ckS, cdS, "dur", "obs", "g", "s", 100))
-    drain(() => graft.streaming.StreamingSurvival.attachPattern(
-      src(), ckP, cdP, "dur", "obs", Seq("x1", "x2"), 100))
-    drain(() => graft.streaming.StreamingSurvival.attachCont(
-      src(), ckV, cdV, "dur", "obs", "v", 100))
-    drain(() => graft.streaming.StreamingSurvival.attachGrouped(
-      src(), ckG, cdG, "dur", "obs", "g", 100))
-    // the batch frame carries the SAME nulls — each batch entry's
-    // isNotNull pre-filter defines the expected semantics
-    def opt(x: String): Option[String] = if (x.isEmpty) None else Some(x)
-    val df = (clean ++ poisoned).map { case (d, o, g, s, x1, x2, v) =>
-      (opt(d).map(_.toInt), opt(o).map(_.toInt), opt(g), opt(s),
-        opt(x1).map(_.toInt), opt(x2).map(_.toInt), opt(v).map(_.toDouble))
-    }.toDF("dur", "obs", "g", "s", "x1", "x2", "v")
-    graft.streaming.StreamingSurvival.coxPhStratNow(spark, cdS)
-      .collect().head.toSeq shouldBe
-      Survival.coxPhStratified(df, "dur", "obs", "g", "s").collect().head.toSeq
-    graft.streaming.StreamingSurvival.coxPhMultiNow(spark, cdP, Seq("x1", "x2"))
-      .collect().map(_.toSeq).toSeq shouldBe
-      Survival.coxPhMulti(df, "dur", "obs", Seq("x1", "x2")).collect().map(_.toSeq).toSeq
-    graft.streaming.StreamingSurvival.coxPhContNow(spark, cdV, "v")
-      .collect().head.toSeq shouldBe
-      Survival.coxPhCont(df, "dur", "obs", "v").collect().head.toSeq
-    graft.streaming.StreamingSurvival.logRankNow(spark, cdG)
-      .collect().head.toSeq shouldBe
-      Survival.logRank(df, "dur", "obs", "g").collect().head.toSeq
-  }
-
-  it("streamed competing-risks subjects across a restart yield the batch CIF exactly") {
-    import java.nio.file.{Files => JFiles, Paths}
-    import org.apache.spark.sql.{functions => F}
-    val r = new scala.util.Random(43)
-    // three-way exits: cause 0 (censored) / 1 / 2
-    val subjects = Seq.fill(150)((r.nextInt(10), r.nextInt(3)))
-    val inDir = JFiles.createTempDirectory("graft-aj-in").toString
-    val ckpt = JFiles.createTempDirectory("graft-aj-ckpt").toString
-    val cDir = JFiles.createTempDirectory("graft-aj-counts").toString
-    def write(name: String, part: Seq[(Int, Int)]): Unit =
-      JFiles.writeString(Paths.get(inDir, name),
-        part.map { case (d, k) => s"$d,$k" }.mkString("\n"))
-    write("f1.txt", subjects.take(75))
-    val src = () => spark.readStream.text(inDir)
-      .select(F.split(F.col("value"), ",").getItem(0).cast("int").as("dur"),
-        F.split(F.col("value"), ",").getItem(1).cast("int").as("cause"))
-    val q1 = graft.streaming.StreamingSurvival.attach(src(), ckpt, cDir, "dur", "cause", 100)
-    try q1.processAllAvailable() finally q1.stop()
-    write("f2.txt", subjects.drop(75))
-    val q2 = graft.streaming.StreamingSurvival.attach(src(), ckpt, cDir, "dur", "cause", 100)
-    try q2.processAllAvailable() finally q2.stop()
-
-    val streamed = graft.streaming.StreamingSurvival.aalenJohansenNow(spark, cDir)
-      .collect().map(x => (x.getLong(0), x.getLong(1)) -> x.toSeq).toMap
-    val batch = Survival.aalenJohansen(subjects.toDF("dur", "cause"), "dur", "cause")
-      .collect().map(x => (x.getLong(0), x.getLong(1)) -> x.toSeq).toMap
-    streamed shouldBe batch
-    streamed.size should be > 8
-  }
-
   // ---- quantileSurvival ----------------------------------------------
 
   it("median survival reads the first step at or below 0.5 off the textbook curve") {
@@ -1172,38 +901,6 @@ class SurvivalSpec extends SparkSpec {
     intercept[IllegalArgumentException] {
       Survival.coxPhMixed(ok, "dur", "obs", "v", Seq("b"), maxDurations = 5).collect()
     }.getMessage should include("coxPhMixed")
-  }
-
-  it("streamed mixed Cox twin across a restart equals batch row-for-row") {
-    import java.nio.file.{Files => JFiles, Paths}
-    import org.apache.spark.sql.{functions => F}
-    val r = new scala.util.Random(52)
-    val subjects = Seq.fill(120)((r.nextInt(10),
-      if (r.nextInt(4) == 0) 0 else 1, r.nextInt(7) * 0.5, r.nextInt(2)))
-    val inDir = JFiles.createTempDirectory("graft-cm-in").toString
-    def write(name: String, part: Seq[(Int, Int, Double, Int)]): Unit =
-      JFiles.writeString(Paths.get(inDir, name),
-        part.map { case (d, o, v, b) => s"$d,$o,$v,$b" }.mkString("\n"))
-    write("f1.txt", subjects.take(60))
-    val src = () => spark.readStream.text(inDir)
-      .select(F.split(F.col("value"), ",").getItem(0).cast("int").as("dur"),
-        F.split(F.col("value"), ",").getItem(1).cast("int").as("obs"),
-        F.split(F.col("value"), ",").getItem(2).cast("double").as("v"),
-        F.split(F.col("value"), ",").getItem(3).cast("int").as("b"))
-    val (ck, cd) = (JFiles.createTempDirectory("cm-ck").toString,
-      JFiles.createTempDirectory("cm-cd").toString)
-    def drain(): Unit = {
-      val q = graft.streaming.StreamingSurvival.attachMixed(
-        src(), ck, cd, "dur", "obs", "v", Seq("b"), 100)
-      try q.processAllAvailable() finally q.stop()
-    }
-    drain()
-    write("f2.txt", subjects.drop(60)) // restart: fresh query, same stores
-    drain()
-    graft.streaming.StreamingSurvival.coxPhMixedNow(spark, cd, "v", Seq("b"))
-      .collect().map(_.toSeq).toSeq shouldBe
-      Survival.coxPhMixed(subjects.toDF("dur", "obs", "v", "b"),
-        "dur", "obs", "v", Seq("b")).collect().map(_.toSeq).toSeq
   }
 
   // ---- loud axis guards (r15 directive #2) -------------------------------

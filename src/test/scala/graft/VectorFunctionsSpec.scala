@@ -1,6 +1,14 @@
 package graft
 
 import org.apache.spark.sql.{functions => F}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, Expression}
+import org.apache.spark.sql.catalyst.expressions.codegen.GenerateUnsafeProjection
+import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.graftnative.{FloatDoubleVectorDistSq, FloatDoubleVectorDot, FloatVectorDot,
+  SortedIntersectCount, SortedIntersectCountLong}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, LongType, StringType}
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.functions.VectorFunctions
 import graft.operators.Similarity
@@ -219,5 +227,83 @@ class VectorFunctionsSpec extends SparkSpec {
       org.apache.spark.sql.graftnative.SetFunctions
         .sortedIntersectCountLong(F.col("a"), F.col("b")).as("c"))
       .collect()(0).getInt(0) shouldBe 0
+  }
+
+  /** `kernel` over two bound array inputs, evaluated per row both
+    * interpreted (`eval`) and through a generated projection (its
+    * `doGenCode`); doubles compare by their bits. */
+  private def interpretedAndGenerated(kernel: (Expression, Expression) => Expression,
+                                      types: (DataType, DataType),
+                                      rows: Seq[(Seq[Any], Seq[Any])]): Seq[(Any, Any)] = {
+    val e = kernel(BoundReference(0, types._1, nullable = true), BoundReference(1, types._2, nullable = true))
+    val generated = GenerateUnsafeProjection.generate(Seq(e))
+    def arr(xs: Seq[Any]) = Option(xs).map(x => new GenericArrayData(x.toArray)).orNull
+    def bits(v: Any): Any = v match {
+      case d: Double => java.lang.Double.doubleToLongBits(d)
+      case other => other
+    }
+    rows.map { case (a, b) =>
+      val row = InternalRow(arr(a), arr(b))
+      val out = generated(row)
+      (bits(e.eval(row)), bits(if (out.isNullAt(0)) null else out.get(0, e.dataType)))
+    }
+  }
+
+  /** Sorted distinct random arrays, with empty, NULL and NULL-element
+    * cases (a NULL element makes the count NULL once the walk reaches it). */
+  private def sortedPairs[A](draw: scala.util.Random => A, order: Ordering[A]): Seq[(Seq[Any], Seq[Any])] = {
+    val rnd = new scala.util.Random(29)
+    def arr(): Seq[Any] = Seq.fill(rnd.nextInt(25))(draw(rnd)).distinct.sorted(order)
+    Seq.fill(300)((arr(), arr())) ++ Seq((Seq.empty, arr()), (null, arr()), (arr(), null),
+      (Seq(draw(rnd), null), arr()), (arr() :+ null, arr()))
+  }
+
+  it("sorted_intersect_count's generated code agrees with its interpreted eval and the set intersection") {
+    val rows = sortedPairs[UTF8String](r => UTF8String.fromString(s"t${r.nextInt(40)}"), Ordering.fromLessThan(_.compareTo(_) < 0))
+    checkIntersectCounts(rows, interpretedAndGenerated((l, r) => SortedIntersectCount(l, r),
+      (ArrayType(StringType), ArrayType(StringType)), rows))
+  }
+
+  it("sorted_intersect_count_long's generated code agrees with its interpreted eval and the set intersection") {
+    val rows = sortedPairs[Long](_.nextInt(40).toLong, Ordering.Long)
+    checkIntersectCounts(rows, interpretedAndGenerated((l, r) => SortedIntersectCountLong(l, r),
+      (ArrayType(LongType), ArrayType(LongType)), rows))
+  }
+
+  private def checkIntersectCounts(rows: Seq[(Seq[Any], Seq[Any])], out: Seq[(Any, Any)]): Unit =
+    rows.zip(out).foreach { case ((a, b), (interpreted, generated)) =>
+      generated shouldBe interpreted
+      if (a == null || b == null) interpreted shouldBe (null: Any)
+      else if (!a.contains(null) && !b.contains(null)) interpreted shouldBe a.toSet.intersect(b.toSet).size
+    }
+
+  /** Float vectors against `other`-typed ones: equal and unequal lengths,
+    * NULL elements, NULL arrays. */
+  private def vectorPairs(other: scala.util.Random => Any): Seq[(Seq[Any], Seq[Any])] = {
+    val rnd = new scala.util.Random(31)
+    def floats(n: Int): Seq[Any] = Seq.fill(n)((rnd.nextGaussian() * 3).toFloat)
+    def others(n: Int): Seq[Any] = Seq.fill(n)(other(rnd))
+    (0 until 200).map { i => val n = rnd.nextInt(9); (floats(n), others(if (i % 10 == 0) n + 1 else n)) } ++
+      Seq((floats(3).updated(1, null), others(3)), (floats(3), others(3).updated(2, null)),
+        (null, others(2)), (floats(2), null), (Seq.empty, Seq.empty))
+  }
+
+  private def checkFloatKernel(kernel: (Expression, Expression) => Expression, other: DataType,
+                               draw: scala.util.Random => Any): Unit = {
+    val out = interpretedAndGenerated(kernel, (ArrayType(FloatType), ArrayType(other)), vectorPairs(draw))
+    out.count(_._1 == null) shouldBe 24 // 20 length mismatches, 2 NULL elements, 2 NULL arrays
+    out.foreach { case (interpreted, generated) => generated shouldBe interpreted }
+  }
+
+  it("fd_dot's generated code agrees bit-for-bit with its interpreted eval, edge cases included") {
+    checkFloatKernel((l, r) => FloatDoubleVectorDot(l, r), DoubleType, _.nextGaussian() * 5)
+  }
+
+  it("fd_distsq's generated code agrees bit-for-bit with its interpreted eval, edge cases included") {
+    checkFloatKernel((l, r) => FloatDoubleVectorDistSq(l, r), DoubleType, _.nextGaussian() * 5)
+  }
+
+  it("fv_dot's generated code agrees bit-for-bit with its interpreted eval, edge cases included") {
+    checkFloatKernel((l, r) => FloatVectorDot(l, r), FloatType, r => (r.nextGaussian() * 5).toFloat)
   }
 }
