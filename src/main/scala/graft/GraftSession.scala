@@ -3,7 +3,7 @@ package graft
 import org.apache.logging.log4j.Level
 import org.apache.logging.log4j.core.config.Configurator
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.graftnative.GraftExtensions
+import org.apache.spark.sql.graftnative.{GraftExtensions, LazySession}
 
 /** The one SparkSession recipe: the daemon, the Verify and Bench mains,
   * the dev tools and the test suites all build their session here. */
@@ -13,26 +13,39 @@ object GraftSession {
   def defaultCpus: Int =
     sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt).getOrElse(Runtime.getRuntime.availableProcessors)
 
-  /** Master `local[cpus]` unless given; `cpus` shuffle partitions, UTC,
-    * no UI, Spark logging at WARN, and the native pieces (`fv_dot`, the
-    * HOF-dot rewrite, the as-of join strategy) installed. */
-  def apply(cpus: Int = defaultCpus, master: Option[String] = None): SparkSession = {
-    val spark = SparkSession.builder()
-      .master(master.getOrElse(s"local[$cpus]"))
-      .appName("paasauditorspark")
-      .config("spark.sql.shuffle.partitions", cpus.toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // the default 128-group fallback turns the bounded-heap top-k
-      // (ObjectHashAggregate) into sort-based aggregation on any real
-      // query count, re-creating the window sort it replaces; a
-      // collect_top_k buffer is <= k small structs, so 64k in-flight
-      // groups per partition is still only tens of MB
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "65536")
-      // spark.sql.files.maxPartitionBytes stays at its 128 MB default:
-      // 1 MB splits took the sf0.1 bench from 30.8 s to 51.6 s, per-task
-      // overhead dominating single-digit-MB inputs
-      .getOrCreate()
+  /** The session's options: master `local[cpus]` unless given, `cpus`
+    * shuffle partitions, UTC, no UI. */
+  def options(cpus: Int = defaultCpus, master: Option[String] = None): Seq[(String, String)] = Seq(
+    "spark.master" -> master.getOrElse(s"local[$cpus]"),
+    "spark.app.name" -> "paasauditorspark",
+    "spark.sql.shuffle.partitions" -> cpus.toString,
+    "spark.sql.session.timeZone" -> "UTC",
+    "spark.ui.enabled" -> "false",
+    // the default 128-group fallback turns the bounded-heap top-k
+    // (ObjectHashAggregate) into sort-based aggregation on any real
+    // query count, re-creating the window sort it replaces; a
+    // collect_top_k buffer is <= k small structs, so 64k in-flight
+    // groups per partition is still only tens of MB
+    "spark.sql.objectHashAggregate.sortBased.fallbackThreshold" -> "65536")
+    // spark.sql.files.maxPartitionBytes stays at its 128 MB default:
+    // 1 MB splits took the sf0.1 bench from 30.8 s to 51.6 s, per-task
+    // overhead dominating single-digit-MB inputs
+
+  /** A session with [[options]], Spark logging at WARN, and the native
+    * pieces (`fv_dot`, the HOF-dot rewrite, the as-of join strategy)
+    * installed. */
+  def apply(cpus: Int = defaultCpus, master: Option[String] = None): SparkSession =
+    build(options(cpus, master))
+
+  /** [[apply]] on first use: the session's confs now, with no SparkContext,
+    * and the session itself the first time something asks for it. */
+  def lazily(cpus: Int = defaultCpus, master: Option[String] = None): LazySession = {
+    val opts = options(cpus, master)
+    LazySession(opts)(build(opts))
+  }
+
+  private def build(opts: Seq[(String, String)]): SparkSession = {
+    val spark = SparkSession.builder().config(opts.toMap).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // The bounded-axis single-partition windows (Evaluation tile
     // cumulants, Survival event-axis folds, the DuckDB-mirror-shaped SQL)

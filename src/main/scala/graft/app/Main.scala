@@ -82,7 +82,8 @@ object Config {
   * SIGTERM (ST7: the loops drain before Spark stops). Collector/informer
   * errors are fatal; shipper errors are absorbed by its own loop (ST5).
   * The Splunk shipper starts only when both SPLUNK_* vars are set (ST8,
-  * main.go:110-122).
+  * main.go:110-122). Spark starts at the first scan, not at start-up, and
+  * is stopped at exit only if it started.
   *
   * These thread loops are the daemon's one pipeline shape, as in the
   * reference. Restart needs no offset log: the collector resumes from the
@@ -96,11 +97,13 @@ object Main {
     val registry = new MetricsRegistry
     // Bind PORT before Spark starts, so its driver cannot take the port.
     val server = new MetricsServer(registry, cfg.listenPort)
-    val spark = graft.GraftSession(master = sys.env.get("SPARK_MASTER"))
+    // Spark starts at the first scan, not here: a fresh warehouse's whole
+    // path (store, ship, inform) reads only the session's confs.
+    val spark = graft.GraftSession.lazily(master = sys.env.get("SPARK_MASTER"))
 
     val store: EventStore =
       if (cfg.databaseUrl.nonEmpty)
-        new JdbcEventStore(spark, cfg.databaseUrl, new java.util.Properties())
+        new JdbcEventStore(spark.session, cfg.databaseUrl, new java.util.Properties())
       else new ParquetEventStore(spark, cfg.warehouseDir)
     store.init() // DDL before anything else (main.go:36-43)
 
@@ -170,7 +173,7 @@ object Main {
 
     while (!stop.get()) Thread.sleep(200L)
     drained
-    spark.stop()
+    if (spark.isBuilt) spark.session.stop()
     fatal.foreach { e => System.err.println(s"fatal: $e"); e.printStackTrace(); sys.exit(1) }
   }
 }

@@ -4,8 +4,9 @@ import java.sql.Timestamp
 import java.time.{LocalDate, ZoneId}
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.catalyst.util.DateTimeUtils
+import org.apache.spark.sql.graftnative.LazySession
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.unsafe.types.UTF8String
@@ -18,9 +19,9 @@ import graft.sources.CfWireEvent
   * `Schemas.cfAuditEvents` columns, `id` 0 until the store assigns it
   * (R20), `created_at` cast from the raw string as Spark casts it, and `''`
   * as NULL for org and space (store.go:91). `df` is the same rows as a
-  * DataFrame, built only when asked. */
-final class EventPage private (spark: SparkSession, val rows: IndexedSeq[Row], zone: ZoneId) {
-  lazy val df: DataFrame = spark.createDataFrame(rows.asJava, EventPage.schema)
+  * DataFrame, built only when asked (it builds the session). */
+final class EventPage private (spark: LazySession, val rows: IndexedSeq[Row], zone: ZoneId) {
+  lazy val df: DataFrame = spark.session.createDataFrame(rows.asJava, EventPage.schema)
 
   /** The rows passing the CHECK, each with its `event_date`: see [[EventPage.checked]]. */
   def checked: IndexedSeq[(Row, LocalDate)] = EventPage.checked(rows, zone)
@@ -36,10 +37,11 @@ object EventPage {
     * string→timestamp cast (what `to_timestamp` without a format runs) in
     * the session time zone: under the session's ANSI flag a string it cannot
     * parse fails the whole page with `CAST_INVALID_INPUT`, otherwise it
-    * becomes NULL. */
-  def apply(spark: SparkSession, events: Seq[CfWireEvent]): EventPage = {
-    val zone = sessionZone(spark)
-    val ansi = spark.conf.get(SQLConf.ANSI_ENABLED.key).toBoolean
+    * becomes NULL. It reads the session's conf only, so it builds no
+    * session. */
+  def apply(spark: LazySession, events: Seq[CfWireEvent]): EventPage = {
+    val zone = sessionZone(spark.sqlConf)
+    val ansi = spark.sqlConf.ansiEnabled
     val rows = events.iterator.map { w =>
       Row(0L, w.guid, timestamp(w.created_at, zone, ansi), w.created_at, w.event_type,
         w.actor, w.actor_type, w.actor_name, w.actor_username, w.actee, w.actee_type, w.actee_name,
@@ -49,8 +51,7 @@ object EventPage {
   }
 
   /** `spark.sql.session.timeZone`, the zone of Spark's casts and `to_date`. */
-  def sessionZone(spark: SparkSession): ZoneId =
-    DateTimeUtils.getZoneId(spark.conf.get(SQLConf.SESSION_LOCAL_TIMEZONE.key))
+  def sessionZone(conf: SQLConf): ZoneId = DateTimeUtils.getZoneId(conf.sessionLocalTimeZone)
 
   /** Event rows (`Schemas.cfAuditEvents` columns) passing the CHECK
     * (`AuditQueries.passesCheck`: `created_at` after the epoch, so not

@@ -2,14 +2,15 @@ package graft.store
 
 import java.nio.file.{Files, StandardCopyOption}
 import java.sql.Timestamp
-import java.time.LocalDate
+import java.time.{LocalDate, ZoneOffset}
+import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 import scala.util.Try
 
 import org.apache.hadoop.fs.{FileContext, FileStatus, Options, Path}
 import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession, functions => F}
 import org.apache.spark.sql.catalyst.util.DateTimeUtils
-import org.apache.spark.sql.graftnative.{BloomFunctions, DriverParquet}
+import org.apache.spark.sql.graftnative.{BloomFunctions, DriverParquet, LazySession}
 import org.apache.spark.sql.types.DateType
 import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.util.sketch.BloomFilter
@@ -53,12 +54,22 @@ import graft.operators.AuditQueries.RawEventFilter
   *    `_SUCCESS`; every reader passes the schema) and its cursor table one
   *    empty `DriverParquet` file, so opening it runs no Spark job and
   *    builds no query plan.
+  *  - **A session on first scan**: the store reads the session's two
+  *    confs (`LazySession`) for its driver-side work: the filesystem, the
+  *    parquet writes, the zone. Only a scan builds the session: the
+  *    recovery reads behind the sidecars, the exact dedup probe, a bloom
+  *    rebuild, an unshipped read the tail cannot answer, a cursor re-read,
+  *    and the DataFrame members. A fresh warehouse's whole path needs none.
   *  - **Bloom-gated dedup probe**: each scoped partition's
-  *    `_bloom_guid/<date>` sidecar is read once and probed per guid. Only
+  *    `_bloom_guid/<date>` sidecar is probed per guid. The store keeps each
+  *    date's deserialized filter on the driver while the sidecar's (length,
+  *    modification time) are those it read or wrote, puts a batch's guids
+  *    straight into it, and writes the sidecar at every commit. Only
   *    bloom-positive guids (every guid, for a partition with no readable
   *    sidecar) go to one exact `guid IN (...)` scan over the partitions
-  *    that matched; with no positives there is no probe job. Blooms have
-  *    no false negatives, so the dedup stays exact.
+  *    that matched; with no positives there is no probe job, nor when the
+  *    tail holds every row of the scope (a positive it lacks is then a
+  *    false one). Blooms have no false negatives, so the dedup stays exact.
   *  - **The tail of this store's own appends**: the driver holds the last
   *    rows this store appended, in (created_at, UTF-8 guid) order, at most
   *    [[ParquetEventStore.MaxBatchRows]] of them (about 10 MB at 1 KB per
@@ -97,14 +108,16 @@ import graft.operators.AuditQueries.RawEventFilter
   *    Spark job, any other runs one, its scan. At any scale #shippers is
   *    tiny.
   */
-final class ParquetEventStore(spark: SparkSession, warehouseDir: String) extends EventStore {
+final class ParquetEventStore(session: LazySession, warehouseDir: String) extends EventStore {
   import ParquetEventStore.{MaxBatchRows, Tail, TailRow}
 
   private val eventsPath = s"$warehouseDir/cf_audit_events"
   private val cursorsPath = s"$warehouseDir/shipper_cursors"
 
-  private def fs = org.apache.hadoop.fs.FileSystem.get(
-    spark.sparkContext.hadoopConfiguration)
+  /** The session, built on first use: only scans ask for it. */
+  private def spark: SparkSession = session.session
+
+  private def fs = org.apache.hadoop.fs.FileSystem.get(session.hadoopConf)
 
   private def exists(p: String): Boolean = fs.exists(new Path(p))
 
@@ -149,7 +162,7 @@ final class ParquetEventStore(spark: SparkSession, warehouseDir: String) extends
     val cols = Schemas.cfAuditEvents.fieldNames.toSeq.map(c => if (c == "id") F.lit(0L).as(c) else F.col(c))
     val rows = batch.filter(AuditQueries.passesCheck).select(cols: _*)
       .limit(MaxBatchRows + 1).collect() // a local batch: no job
-    storeChecked(EventPage.checked(rows.toSeq, EventPage.sessionZone(spark)))
+    storeChecked(EventPage.checked(rows.toSeq, EventPage.sessionZone(session.sqlConf)))
   }
 
   override def storeCFAuditEventPage(page: EventPage): Long = storeChecked(page.checked)
@@ -196,26 +209,31 @@ final class ParquetEventStore(spark: SparkSession, warehouseDir: String) extends
     * row per guid, dedup against the overlap scope, ids in (created_at,
     * guid) order, per-date blooms, the append on the driver. No Spark job
     * runs unless a bloom sidecar in scope matches a batch guid the tail
-    * does not hold. */
+    * does not hold, and the tail does not hold the whole scope. */
   private def storeOnDriver(rows: IndexedSeq[(Row, LocalDate)]): Long = {
     val fresh = rows.distinctBy(_._1.getString(guidIdx)) // first occurrence per guid wins
     if (fresh.isEmpty) return 0L
     val minDay = fresh.map(_._2).min
     val scope = partitionDates
       .filter(d => Try(LocalDate.parse(d)).toOption.exists(!_.isBefore(minDay)))
-    val batchDays = fresh.map(_._2.toString).distinct
-    val sidecars = (scope ++ batchDays).distinct.map(d => d -> readBytes(bloomPath(d))).toMap
     // A guid the tail holds at an in-scope date is stored; the rest are
     // probed. Blooms have no false negatives: only bloom-positive guids
     // (all guids where a scoped partition has no readable sidecar) can be.
+    // When every scoped row is in the tail, none of the rest is stored:
+    // the tail holds every row above its watermark, and a row dated minDay
+    // or later in any zone is later than minDay's first instant at +18:00.
     val prior = tail
     val inTail = (g: String) => prior.exists(_.holds(g, minDay))
+    val tailHoldsScope = prior.exists(_.watermark <
+      DateTimeUtils.instantToMicros(minDay.atStartOfDay(ZoneOffset.MAX).toInstant))
     val guids = fresh.map(_._1.getString(guidIdx)).filter(g => g != null && !inTail(g))
       .map(g => g -> BloomFunctions.hashDriver(g))
-    val positives = scope.flatMap { d =>
-      val bf = sidecars(d).flatMap(b => Try(BloomFilter.readFrom(b)).toOption)
-      guids.collect { case (g, h) if bf.forall(_.mightContainLong(h)) => d -> g }
-    }
+    val positives =
+      if (tailHoldsScope) Nil
+      else scope.flatMap { d =>
+        val bf = bloomOf(d)
+        guids.collect { case (g, h) if bf.forall(_.mightContainLong(h)) => d -> g }
+      }
     val stored =
       if (positives.isEmpty) Set.empty[String]
       else spark.read.schema(Schemas.cfAuditEvents)
@@ -235,10 +253,7 @@ final class ParquetEventStore(spark: SparkSession, warehouseDir: String) extends
         TailRow(Row.fromSeq(r.toSeq.updated(idIdx, base + 1 + i)), micros(r.getTimestamp(createdIdx)), d)
       }
       val byDay = added.groupMap(_.day.toString)(_.row)
-      val blooms = byDay.toSeq.map { case (d, rs) =>
-        d -> BloomFunctions.bloomDriver(rs.map(_.getString(guidIdx)), bloomItems, bloomBits)
-      }
-      commit(base, n, blooms, sidecars, added.map(_.at).max) {
+      commit(base, n, byDay.view.mapValues(_.map(_.getString(guidIdx))).toSeq, added.map(_.at).max) {
         append(byDay)
         // Only now are the rows in the table; a throwing append adds none.
         tail = Some(extended(tailBefore, added))
@@ -255,19 +270,18 @@ final class ParquetEventStore(spark: SparkSession, warehouseDir: String) extends
   private def append(byDay: Map[String, Seq[Row]]): Unit = {
     val files = byDay.toSeq.map { case (day, rows) =>
       val dir = new Path(eventsPath, s"event_date=$day")
-      val name = DriverParquet.fileName(spark)
+      val name = DriverParquet.fileName(session)
       val tmp = new Path(dir, s".$name.tmp")
-      DriverParquet.write(spark, tmp, Schemas.cfAuditEvents, rows)
+      DriverParquet.write(session, tmp, Schemas.cfAuditEvents, rows)
       tmp -> new Path(dir, name)
     }
     files.foreach { case (tmp, dst) => StoreIO.renameOrAbort(fs, tmp, dst, "event-store append") }
   }
 
-  /** The durable steps of a store, in crash-safe order. `read`
-    * holds sidecar bytes the caller already read (others are read here);
-    * `batchLatest` is the batch's max created_at in epoch micros. */
-  private def commit(base: Long, n: Long, blooms: Seq[(String, Array[Byte])],
-                     read: Map[String, Option[Array[Byte]]], batchLatest: Long)
+  /** The durable steps of a store, in crash-safe order. `guidsByDay`
+    * holds the batch's guids per date; `batchLatest` is the batch's max
+    * created_at in epoch micros. */
+  private def commit(base: Long, n: Long, guidsByDay: Seq[(String, Seq[String])], batchLatest: Long)
                     (append: => Unit): Unit = {
     // Exact count before the append when the stats sidecar is missing:
     // afterwards the table already holds the batch.
@@ -282,8 +296,11 @@ final class ParquetEventStore(spark: SparkSession, warehouseDir: String) extends
     // that over-approximates (crash after bloom, before data) only
     // costs a false-positive dedup probe; one that under-approximates
     // would let a re-fetched guid skip the probe and be stored twice.
-    blooms.foreach { case (d, b) =>
-      writeBytes(bloomPath(d), mergedSidecar(d, read.getOrElse(d, readBytes(bloomPath(d))), b))
+    guidsByDay.foreach { case (d, guids) =>
+      val bf = bloomOf(d).getOrElse(rebuiltBloom(d))
+      BloomFunctions.putDriver(bf, guids)
+      writeBytes(bloomPath(d), BloomFunctions.toBytes(bf))
+      blooms(d) = (fs.getFileStatus(bloomPath(d)), bf)
     }
     append
     writeStatsCount(countBefore + n) // reltuples analog
@@ -303,6 +320,36 @@ final class ParquetEventStore(spark: SparkSession, warehouseDir: String) extends
   private def readBytes(p: Path): Option[Array[Byte]] =
     if (!fs.exists(p)) None
     else { val in = fs.open(p); try Some(in.readAllBytes()) finally in.close() }
+
+  /** Each date's deserialized bloom sidecar with the status of the file it
+    * was read from or written to. Only the appending thread uses it. */
+  private val blooms = mutable.Map.empty[String, (FileStatus, BloomFilter)]
+
+  /** The date's sidecar filter, None when the sidecar is absent,
+    * unreadable or not of the store's fixed sizing (a probe then takes
+    * every guid as positive, and a commit rebuilds the sidecar). The held
+    * filter serves while the sidecar's length and modification time are
+    * those it was read or written with, so a sidecar deleted or replaced
+    * since is seen; one replaced within the same millisecond at the same
+    * length is not (the sidecars are this store's own files). */
+  private def bloomOf(d: String): Option[BloomFilter] = {
+    val p = bloomPath(d)
+    Try(fs.getFileStatus(p)).toOption match {
+      case None =>
+        blooms.remove(d)
+        None
+      case Some(now) => blooms.get(d) match {
+        case Some((was, bf)) if was.getLen == now.getLen && was.getModificationTime == now.getModificationTime =>
+          Some(bf)
+        case _ =>
+          blooms.remove(d)
+          val bf = Try(readBytes(p).map(b => BloomFilter.readFrom(b))).toOption.flatten
+            .filter(_.isCompatible(BloomFilter.create(bloomItems, bloomBits)))
+          bf.foreach(f => blooms(d) = (now, f))
+          bf
+      }
+    }
+  }
 
   /** The one sidecar writer: writes a hidden temporary sibling, then
     * renames it over `p`, so a concurrent reader sees the old bytes or the
@@ -324,26 +371,21 @@ final class ParquetEventStore(spark: SparkSession, warehouseDir: String) extends
     } else {
       val out = fs.create(tmp, true)
       try out.write(b) finally out.close()
-      FileContext.getFileContext(fs.getUri, spark.sparkContext.hadoopConfiguration)
+      FileContext.getFileContext(fs.getUri, session.hadoopConf)
         .rename(tmp, p, Options.Rename.OVERWRITE)
     }
   }
 
-  /** A date's new sidecar bytes: the batch's bloom OR-ed into the old one.
-    * Without a usable old one (lost, or sized differently) the partition
-    * already on disk is re-aggregated: a bloom of the batch alone would
-    * miss the partition's rows, and a later re-fetch of one would be stored
-    * twice. */
-  private def mergedSidecar(d: String, old: Option[Array[Byte]],
-                            batchBloom: Array[Byte]): Array[Byte] = {
-    def rebuilt: Array[Byte] = {
-      val dir = s"$eventsPath/event_date=$d"
-      if (!fs.isDirectory(new Path(dir))) batchBloom // no partition yet
-      else BloomFunctions.mergeBloom(spark.read.schema(Schemas.cfAuditEvents).parquet(dir)
-        .agg(BloomSupport.bloomAgg(F.col("guid"), bloomItems, bloomBits).as("bf"))
-        .head.getAs[Array[Byte]]("bf"), batchBloom)
-    }
-    old.flatMap(o => Try(BloomFunctions.mergeBloom(o, batchBloom)).toOption).getOrElse(rebuilt)
+  /** A date's filter when its sidecar is lost or unusable: the
+    * partition already on disk re-aggregated (a filter of the batch alone
+    * would miss the partition's rows, and a later re-fetch of one would be
+    * stored twice), or an empty filter when there is no partition yet. */
+  private def rebuiltBloom(d: String): BloomFilter = {
+    val dir = s"$eventsPath/event_date=$d"
+    if (!fs.isDirectory(new Path(dir))) BloomFilter.create(bloomItems, bloomBits)
+    else BloomFilter.readFrom(spark.read.schema(Schemas.cfAuditEvents).parquet(dir)
+      .agg(BloomSupport.bloomAgg(F.col("guid"), bloomItems, bloomBits).as("bf"))
+      .head.getAs[Array[Byte]]("bf"))
   }
 
   /** The `event_date=` partition directories. */
@@ -577,7 +619,7 @@ final class ParquetEventStore(spark: SparkSession, warehouseDir: String) extends
   private def writeCursors(rows: Seq[Row]): Unit = {
     val tmp = new Path(cursorsPath + "_tmp")
     if (fs.exists(tmp)) fs.delete(tmp, true)
-    DriverParquet.write(spark, new Path(tmp, "part-00000-cursors.parquet"), Schemas.shipperCursors, rows)
+    DriverParquet.write(session, new Path(tmp, "part-00000-cursors.parquet"), Schemas.shipperCursors, rows)
     if (exists(cursorsPath)) swapTree(tmp.toString, cursorsPath)
     else renameOrAbort(tmp, new Path(cursorsPath))
     cursorCache = Some((cursorListing(), rows))

@@ -2,7 +2,8 @@ package graft.streaming
 
 import java.time.Instant
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.graftnative.LazySession
 
 import graft.metrics.{Metrics, MetricsRegistry}
 import graft.sources.{CfAuditEventFetcher, CfWireEvent}
@@ -23,9 +24,12 @@ import graft.store.{EventPage, EventStore}
   * `onStored` runs after each page write that stored at least one new row;
   * `Main` wakes the shipper with it, so new rows ship without waiting out
   * the shipper's schedule.
+  *
+  * A page is converted with the session's conf only: the collector builds
+  * no session (`pageToDf` does).
   */
 final class Collector(
-    spark: SparkSession,
+    spark: LazySession,
     store: EventStore,
     fetcher: CfAuditEventFetcher,
     registry: MetricsRegistry,

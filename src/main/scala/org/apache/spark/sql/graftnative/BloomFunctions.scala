@@ -1,10 +1,11 @@
 package org.apache.spark.sql.graftnative
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Literal, XxHash64}
+import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Literal, XXH64, XxHash64}
 import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
 import org.apache.spark.sql.classic.ExpressionUtils
-import org.apache.spark.sql.types.StringType
+import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.util.sketch.BloomFilter
 
 /** Column surface over Catalyst's native bloom-filter pair — the same
   * codegen'd expressions Spark's own runtime row-group filtering injects
@@ -37,34 +38,25 @@ object BloomFunctions {
         new XxHash64(Seq(ExpressionUtils.expression(value)))))
 
   /** The long [[bloomAgg]] and [[mightContain]] put into / probe the
-    * filter for a string key: `XxHash64` of the value (its seed for null). */
+    * filter for a string key: `XxHash64` of the value with its seed, 42
+    * (the seed itself for null), computed directly rather than by
+    * evaluating the expression. */
   def hashDriver(value: String): Long =
-    new XxHash64(Seq(Literal.create(value, StringType))).eval(null).asInstanceOf[Long]
+    if (value == null) 42L else XXH64.hashUTF8String(UTF8String.fromString(value), 42L)
 
-  /** DRIVER-side build, byte-identical to [[bloomAgg]] over the same values
-    * and constants: the aggregate's buffer is `BloomFilter.create(items,
-    * numBits)` fed `putLong(XxHash64(value))`, and its partial buffers merge
-    * by bitwise OR, so row order and partitioning do not show in the bytes.
-    * For batches that already sit on the driver, where the aggregate would
-    * cost one Spark job per filter. */
-  def bloomDriver(values: Iterable[String], items: Long, numBits: Long): Array[Byte] = {
-    val bf = org.apache.spark.util.sketch.BloomFilter.create(items, numBits)
+  /** DRIVER-side build: puts `values` into `bf` as [[bloomAgg]] puts them
+    * into its buffer, `putLong(XxHash64(value))`. A filter made by
+    * `BloomFilter.create(items, numBits)` and fed the same values holds the
+    * bits the aggregate's would: its partial buffers merge by bitwise OR, so
+    * row order and partitioning do not show. For batches that already sit
+    * on the driver, where the aggregate would cost one Spark job. */
+  def putDriver(bf: BloomFilter, values: Iterable[String]): Unit =
     values.foreach(v => bf.putLong(hashDriver(v)))
+
+  /** `bf` serialized, as the aggregate returns it. */
+  def toBytes(bf: BloomFilter): Array[Byte] = {
     val out = new java.io.ByteArrayOutputStream()
     bf.writeTo(out)
-    out.toByteArray
-  }
-
-  /** Union two serialized filters built with the same (items, numBits)
-    * constants. */
-  def mergeBloom(a: Array[Byte], b: Array[Byte]): Array[Byte] = {
-    val fa = org.apache.spark.util.sketch.BloomFilter
-      .readFrom(new java.io.ByteArrayInputStream(a))
-    val fb = org.apache.spark.util.sketch.BloomFilter
-      .readFrom(new java.io.ByteArrayInputStream(b))
-    fa.mergeInPlace(fb)
-    val out = new java.io.ByteArrayOutputStream()
-    fa.writeTo(out)
     out.toByteArray
   }
 }

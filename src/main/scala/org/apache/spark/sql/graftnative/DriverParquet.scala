@@ -1,5 +1,5 @@
 /* Hosted under org.apache.spark.sql.* for private[sql] access
- * (sessionState.conf, newHadoopConf). */
+ * (SessionState.newHadoopConf). */
 package org.apache.spark.sql.graftnative
 
 import org.apache.hadoop.conf.Configuration
@@ -9,10 +9,10 @@ import org.apache.parquet.hadoop.api.WriteSupport
 import org.apache.parquet.hadoop.metadata.CompressionCodecName
 import org.apache.parquet.hadoop.util.HadoopOutputFile
 import org.apache.parquet.io.OutputFile
-import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetOptions, ParquetWriteSupport}
-import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.internal.{SessionState, SQLConf}
 import org.apache.spark.sql.types.StructType
 
 /** Writes a few rows as one parquet file on the driver, with no Spark job:
@@ -23,23 +23,24 @@ import org.apache.spark.sql.types.StructType
   * legacy-format, field-id, nanos and variant settings, and the codec of
   * `spark.sql.parquet.compression.codec`. Timestamps are always
   * TIMESTAMP_MICROS (UTC-adjusted INT64), whatever the session's
-  * `outputTimestampType`. */
+  * `outputTimestampType`. It reads the session's two confs only, so it
+  * builds no session. */
 object DriverParquet {
 
   /** The codec Spark's writer uses for `spark.sql.parquet.compression.codec`. */
-  def codec(spark: SparkSession): CompressionCodecName =
+  def codec(spark: LazySession): CompressionCodecName =
     CompressionCodecName.fromConf(
-      new ParquetOptions(Map.empty[String, String], spark.sessionState.conf).compressionCodecClassName)
+      new ParquetOptions(Map.empty[String, String], spark.sqlConf).compressionCodecClassName)
 
   /** A data file name in Spark's form, `part-<uuid>.c000<codec ext>.parquet`. */
-  def fileName(spark: SparkSession): String =
+  def fileName(spark: LazySession): String =
     s"part-${java.util.UUID.randomUUID()}.c000${codec(spark).getExtension}.parquet"
 
   /** Writes `rows` (external rows of `schema`) to a new file at `file`. */
-  def write(spark: SparkSession, file: Path, schema: StructType, rows: Iterable[Row]): Unit = {
-    val sql = spark.sessionState.conf
+  def write(spark: LazySession, file: Path, schema: StructType, rows: Iterable[Row]): Unit = {
+    val sql = spark.sqlConf
     val nullable = schema.asNullable // as Spark writes every file source
-    val conf = spark.sessionState.newHadoopConf()
+    val conf = SessionState.newHadoopConf(spark.hadoopConf, sql) // a session's newHadoopConf()
     ParquetWriteSupport.setSchema(nullable, conf)
     conf.set(SQLConf.PARQUET_WRITE_LEGACY_FORMAT.key, sql.writeLegacyParquetFormat.toString)
     conf.set(SQLConf.PARQUET_OUTPUT_TIMESTAMP_TYPE.key,

@@ -16,8 +16,11 @@ import org.apache.spark.sql.types.{AbstractDataType, ArrayType, DataType, Intege
   * against millions of candidate pairs with hundreds of tokens each, the
   * allocation-free merge inside whole-stage codegen is the difference
   * between the verify dominating the join and disappearing into it.
-  * NULL array → NULL; a NULL element → NULL (callers pass split() output,
-  * which has none). */
+  * NULL array → NULL. A NULL element gives NULL only if the merge walk
+  * reaches it; a walk that ends first, on the other array's end, gives the
+  * count so far: `["t1", NULL]` counts 0 against `[]`, 1 against `["t1"]`
+  * and NULL against `["t1", "t2"]`. Callers pass split() output, which has
+  * no NULL element. */
 case class SortedIntersectCount(left: Expression, right: Expression)
     extends BinaryExpression with ExpectsInputTypes {
 
@@ -72,7 +75,9 @@ case class SortedIntersectCount(left: Expression, right: Expression)
   * verify kernel once tokens are mapped to dense vocabulary ids (any
   * injective map preserves every intersection count exactly). A primitive
   * `getLong` compare beats UTF8String byte-wise comparison per element,
-  * and the long arrays themselves shuffle smaller than token strings. */
+  * and the long arrays themselves shuffle smaller than token strings.
+  * NULLs as in [[SortedIntersectCount]]: a NULL element gives NULL only if
+  * the merge walk reaches it, else the count so far. */
 case class SortedIntersectCountLong(left: Expression, right: Expression)
     extends BinaryExpression with ExpectsInputTypes {
 

@@ -6,7 +6,7 @@ import graft.functions.BloomSupport
 import graft.operators.{Dedup, IncrementalDedup}
 import org.apache.spark.sql.{functions => F}
 import org.apache.spark.sql.graftnative.BloomFunctions
-import org.apache.spark.util.sketch.IncompatibleMergeException
+import org.apache.spark.util.sketch.BloomFilter
 
 /** The bloom pre-pass on the incremental-dedup store: sidecar filters are a
   * SUPERSET of the stored keys (no false negatives ever), so filtering the
@@ -122,11 +122,18 @@ class BloomDedupSpec extends SparkSpec {
   private val (items, bits) = (1L << 20, 1L << 23)
   private def guids(prefix: String, n: Int) = (0 until n).map(i => s"$prefix-$i-\u00e9")
 
-  it("bloomDriver writes the bytes bloomAgg writes over the same keys, whatever the partitioning") {
+  /** A filter of the store's sizing holding `keys`, put on the driver, as bytes. */
+  private def driverBytes(keys: Seq[String]): Array[Byte] = {
+    val bf = BloomFilter.create(items, bits)
+    BloomFunctions.putDriver(bf, keys)
+    BloomFunctions.toBytes(bf)
+  }
+
+  it("putDriver puts the bits bloomAgg puts over the same keys, whatever the partitioning") {
     val keys = guids("g", 3000)
     val agg = keys.toDF("k").repartition(5)
       .select(BloomFunctions.bloomAgg(F.col("k"), items, bits)).head.getAs[Array[Byte]](0)
-    BloomFunctions.bloomDriver(scala.util.Random.shuffle(keys), items, bits) shouldBe agg
+    driverBytes(scala.util.Random.shuffle(keys)) shouldBe agg
   }
 
   it("hashDriver is Spark's xxhash64 of the string key") {
@@ -142,17 +149,12 @@ class BloomDedupSpec extends SparkSpec {
     col shouldBe 42L
   }
 
-  it("mergeBloom is the union: the bytes of one filter built over both key sets") {
+  it("putDriver into a filter read back from a sidecar is the union: the bytes of one filter built over both key sets") {
     val (a, b) = (guids("a", 500), guids("b", 700))
-    val merged = BloomFunctions.mergeBloom(
-      BloomFunctions.bloomDriver(a, items, bits), BloomFunctions.bloomDriver(b, items, bits))
-    merged shouldBe BloomFunctions.bloomDriver(a ++ b, items, bits)
-  }
-
-  it("mergeBloom refuses filters of different sizes (the store then rebuilds the sidecar)") {
-    val small = BloomFunctions.bloomDriver(guids("s", 10), 1000L, 1L << 13)
-    val large = BloomFunctions.bloomDriver(guids("l", 10), items, bits)
-    an[IncompatibleMergeException] should be thrownBy BloomFunctions.mergeBloom(large, small)
-    an[IncompatibleMergeException] should be thrownBy BloomFunctions.mergeBloom(small, large)
+    val agg = (keys: Seq[String]) => keys.toDF("k")
+      .select(BloomFunctions.bloomAgg(F.col("k"), items, bits)).head.getAs[Array[Byte]](0)
+    val held = BloomFilter.readFrom(agg(a))
+    BloomFunctions.putDriver(held, b)
+    BloomFunctions.toBytes(held) shouldBe agg(a ++ b)
   }
 }

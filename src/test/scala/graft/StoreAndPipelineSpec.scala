@@ -21,7 +21,7 @@ import graft.operators.AuditQueries
 import graft.sources._
 import graft.store.{EventPage, EventStore, ParquetEventStore}
 import graft.streaming.{Collector, Informer, SplunkHecClient, SplunkShipper}
-import org.apache.spark.sql.graftnative.DriverParquet
+import org.apache.spark.sql.graftnative.{BloomFunctions, DriverParquet, LazySession}
 
 /** Scriptable POST transport: each call consumes the next status. */
 final class FakePoster(statuses: Seq[Int]) extends HttpTransport with Serializable {
@@ -886,6 +886,9 @@ class StoreAndPipelineSpec extends SparkSpec {
         lines.filter(l => l.contains("fatal:") || l.contains("SparkContext has been shutdown")) shouldBe empty
         lines.filter(l => l.startsWith("{") && l.contains(".err-")) shouldBe empty
         lines.exists(_.contains("cf-audit-event-collector.run.end")) shouldBe true
+        // A fresh warehouse's pages need no scan, so Spark never started:
+        // not for the pages, and not at shutdown either.
+        lines.filter(_.contains("Running Spark version")) shouldBe empty
       }
       val guids = new ParquetEventStore(spark, s"$dir/warehouse").events
         .select("guid").collect().map(_.getString(0)).toSeq
@@ -2230,6 +2233,178 @@ class StoreAndPipelineSpec extends SparkSpec {
       restarted.init()
       treeBytes(dir) shouldBe inUse
       restarted.cursors.collect().map(r => (r.getString(0), r.getString(2))).toSeq shouldBe Seq(("s", "g1"))
+    }
+  }
+
+  describe("a session built on the first scan") {
+    val mk = (g: String, at: String) => CfWireEvent(g, at, "t", "a", "at", "an", "au",
+      "e", "et", "en", "", "sg", "{}")
+    /** A handle with the daemon's pre-session confs whose session, once
+      * asked for, is this spec's: what `GraftSession.lazily` gives `Main`. */
+    def lazySession(): LazySession = LazySession(GraftSession.options(cpus = 4))(spark)
+    def guidsOf(st: EventStore): Seq[String] = st.events.select("guid").collect().map(_.getString(0)).toSeq.sorted
+    /** Replaces the date's bloom sidecar by one holding `guids`, a few
+      * milliseconds after the store last wrote it. */
+    def replaceBloom(dir: Path, date: String, guids: Seq[String]): Unit = {
+      Thread.sleep(10L)
+      val bf = org.apache.spark.util.sketch.BloomFilter.create(1L << 20, 1L << 23)
+      BloomFunctions.putDriver(bf, guids)
+      Files.write(dir.resolve(s"_bloom_guid/$date"), BloomFunctions.toBytes(bf))
+    }
+
+    it("a pre-session SQL conf is the session's where the store reads it, and a page stored through either writes the same parquet") {
+      import org.apache.hadoop.fs.{Path => HPath}
+      import org.apache.parquet.hadoop.ParquetFileReader
+      import org.apache.parquet.hadoop.util.HadoopInputFile
+      import org.apache.spark.sql.internal.SQLConf
+      val pre = lazySession()
+      Seq(SQLConf.SESSION_LOCAL_TIMEZONE, SQLConf.ANSI_ENABLED, SQLConf.PARQUET_COMPRESSION,
+        SQLConf.PARQUET_WRITE_LEGACY_FORMAT, SQLConf.PARQUET_FIELD_ID_WRITE_ENABLED,
+        SQLConf.LEGACY_PARQUET_NANOS_AS_LONG, SQLConf.PARQUET_ANNOTATE_VARIANT_LOGICAL_TYPE).map(_.key).foreach { k =>
+        withClue(k)(pre.sqlConf.getConfString(k) shouldBe spark.sessionState.conf.getConfString(k))
+      }
+      val page = Seq(mk("g1", "2024-05-01T10:00:00Z"), mk("g2", "2024-05-01T10:00:01.5+01:00"),
+        CfWireEvent("g3", "2024-05-01T10:00:02Z", "t", null, "at", "an", "au", "e", "et", "en", "og", "", "{}"))
+      val stores = Seq(pre, spark: LazySession).map { s =>
+        val dir = Files.createTempDirectory("graft-store-confs")
+        val st = new ParquetEventStore(s, dir.toString)
+        st.init()
+        st.storeCFAuditEventPage(EventPage(s, page)) shouldBe 3L
+        dir
+      }
+      pre.isBuilt shouldBe false
+      def parquetFiles(dir: Path): Seq[Path] = treeBytes(dir).keys.filter(_.endsWith(".parquet")).toSeq.sorted
+        .map(dir.resolve)
+      val Seq(a, b) = stores.map(parquetFiles)
+      a.map(_.getParent.getFileName) shouldBe b.map(_.getParent.getFileName) // the cursor table and one partition
+      a.size shouldBe 2
+      a.zip(b).foreach { case (fa, fb) =>
+        def footer(f: Path) = {
+          val r = ParquetFileReader.open(HadoopInputFile.fromPath(new HPath(f.toUri), spark.sparkContext.hadoopConfiguration))
+          try r.getFooter finally r.close()
+        }
+        val (x, y) = (footer(fa), footer(fb))
+        x.getFileMetaData.getSchema shouldBe y.getFileMetaData.getSchema
+        x.getFileMetaData.getKeyValueMetaData shouldBe y.getFileMetaData.getKeyValueMetaData
+        x.getBlocks.asScala.flatMap(_.getColumns.asScala.map(_.getCodec)) shouldBe
+          y.getBlocks.asScala.flatMap(_.getColumns.asScala.map(_.getCodec))
+        spark.read.parquet(fa.toString).collect().toSeq shouldBe spark.read.parquet(fb.toString).collect().toSeq
+      }
+    }
+
+    it("a backfill through Main's wiring on a fresh warehouse stores, ships and informs with no session") {
+      val p1 = "/v2/events?q=timestamp%3E1970-01-01T00%3A00%3A00Z&results-per-page=100"
+      val p2 = "/v2/events?page=2"
+      // the next tick resumes from max(created_at) − 5 s and re-fetches g3
+      val p3 = "/v2/events?q=timestamp%3E2024-05-02T09%3A59%3A57Z&results-per-page=100"
+      val transport = new FakeTransport(Map(
+        p1 -> HttpReply(200, pageJson(Seq("g1", "g2"), Seq("2024-05-01T10:00:00Z", "2024-05-01T11:00:00Z"), p2)),
+        p2 -> HttpReply(200, pageJson(Seq("g3"), Seq("2024-05-02T10:00:02Z"), "")),
+        p3 -> HttpReply(200, pageJson(Seq("g3", "g4"), Seq("2024-05-02T10:00:02Z", "2024-05-02T10:00:03Z"), ""))))
+      val handle = lazySession()
+      val dir = Files.createTempDirectory("graft-store-lazy")
+      // as Main wires them
+      val registry = new MetricsRegistry
+      val store: EventStore = new ParquetEventStore(handle, dir.toString)
+      store.init()
+      val poster = new FakePoster(Nil)
+      val shipper = new SplunkShipper(store, new SplunkHecClient(poster, "https://hec", "KEY", sleep = _ => ()),
+        "test-env", registry)
+      val wakes = new AtomicInteger(0)
+      val collector = new Collector(handle, store, new CfAuditEventFetcher(transport, "", paginationWaitMillis = 0),
+        registry, onStored = () => { wakes.incrementAndGet(); shipper.wake() })
+      val informer = new Informer(store, registry)
+      informer.informOnce()
+      shipper.shipOnce() shouldBe ((0L, 0L))
+      collector.collectOnce() shouldBe Right(3L)
+      shipper.shipOnce() shouldBe ((3L, 0L))
+      collector.collectOnce() shouldBe Right(2L)
+      shipper.shipOnce() shouldBe ((1L, 0L))
+      informer.informOnce()
+      wakes.get() shouldBe 3
+      transport.requests.toSeq shouldBe Seq(p1, p2, p3)
+      store.getCFEventCount() shouldBe 4L
+      registry.gaugeValue(Metrics.InformerEventsTotal) shouldBe 4.0
+      handle.isBuilt shouldBe false
+      poster.lines.map(l => "\"guid\":\"([^\"]+)\"".r.findFirstMatchIn(l).get.group(1)) shouldBe Seq("g1", "g2", "g3", "g4")
+      // a DataFrame member is a scan
+      guidsOf(store) shouldBe Seq("g1", "g2", "g3", "g4")
+      handle.isBuilt shouldBe true
+    }
+
+    it("a restart with _stats_* and _bloom_guid removed builds the session, scans and stores each guid once") {
+      val (first, dir) = newStoreAt()
+      first.storeCFAuditEventPage(EventPage(spark, Seq(
+        mk("g1", "2024-05-01T10:00:00Z"), mk("g2", "2024-05-01T10:00:01Z")))) shouldBe 2L
+      Seq("_stats_count", "_stats_maxid", "_stats_latest").foreach(f => Files.delete(dir.resolve(f)))
+      treeBytes(dir.resolve("_bloom_guid")).keys.foreach(f => Files.delete(dir.resolve("_bloom_guid").resolve(f)))
+      val handle = lazySession()
+      val restarted = new ParquetEventStore(handle, dir.toString)
+      restarted.init()
+      handle.isBuilt shouldBe false
+      var stored = 0L
+      // the overlap re-fetch of g2 finds no sidecar: every guid is probed, through the scan
+      jobsOf { stored = restarted.storeCFAuditEventPage(EventPage(handle, Seq(
+        mk("g2", "2024-05-01T10:00:01Z"), mk("g3", "2024-05-01T10:00:02Z")))) } should be >= 1
+      stored shouldBe 1L
+      handle.isBuilt shouldBe true
+      storedRows(restarted).map(r => (r(0), r(1))) shouldBe Seq((1L, "g1"), (2L, "g2"), (3L, "g3"))
+      restarted.getCFEventCount() shouldBe 3L
+      restarted.getLatestCFEventTime().toInstant shouldBe Instant.parse("2024-05-01T10:00:02Z")
+      // the sidecar is rebuilt from the partition, the batch included
+      import spark.implicits._
+      bloomFiles(dir)("2024-05-01") shouldBe Seq("g1", "g2", "g3").toDF("g")
+        .agg(graft.functions.BloomSupport.bloomAgg(F.col("g"), 1L << 20, 1L << 23)).head.getAs[Array[Byte]](0).toSeq
+    }
+
+    it("a bloom-positive guid runs no probe while the tail holds every row of the scope, and a probe once it does not") {
+      val handle = lazySession()
+      val dir = Files.createTempDirectory("graft-store-noprobe")
+      val st = new ParquetEventStore(handle, dir.toString)
+      st.init() // a table init created: the watermark is epoch
+      st.storeCFAuditEventPage(EventPage(handle, Seq(mk("g1", "2024-05-01T10:00:00Z")))) shouldBe 1L
+      replaceBloom(dir, "2024-05-01", Seq("g1", "g2")) // g2 tests positive
+      var stored = 0L
+      jobsOf { stored = st.storeCFAuditEventPage(EventPage(handle, Seq(mk("g2", "2024-05-01T10:00:01Z")))) } shouldBe 0
+      stored shouldBe 1L
+      handle.isBuilt shouldBe false
+      // a restarted store's watermark is the table's max(created_at), inside the scope
+      val restarted = new ParquetEventStore(spark, dir.toString)
+      restarted.storeCFAuditEventPage(EventPage(spark, Seq(mk("g3", "2024-05-01T10:00:02Z")))) shouldBe 1L
+      replaceBloom(dir, "2024-05-01", Seq("g1", "g2", "g3", "g4")) // g4 tests positive
+      jobsOf { stored = restarted.storeCFAuditEventPage(EventPage(spark, Seq(mk("g4", "2024-05-01T10:00:03Z")))) } shouldBe 1
+      stored shouldBe 1L
+      guidsOf(restarted) shouldBe Seq("g1", "g2", "g3", "g4")
+    }
+
+    it("a bloom sidecar deleted or replaced between pages is read again, not served from the filter the store holds") {
+      val (first, dir) = newStoreAt()
+      first.storeCFAuditEventPage(EventPage(spark, Seq(mk("g1", "2024-05-01T10:00:00Z")))) shouldBe 1L
+      // a restarted store probes: its watermark is inside the scope
+      val st = new ParquetEventStore(spark, dir.toString)
+      st.storeCFAuditEventPage(EventPage(spark, Seq(mk("g2", "2024-05-01T10:00:01Z")))) shouldBe 1L
+      var stored = 0L
+      // held, unchanged: g3 tests negative, no probe
+      jobsOf { stored = st.storeCFAuditEventPage(EventPage(spark, Seq(mk("g3", "2024-05-01T10:00:02Z")))) } shouldBe 0
+      // replaced by one that holds g4: the store sees g4 positive
+      replaceBloom(dir, "2024-05-01", Seq("g1", "g2", "g3", "g4"))
+      jobsOf { stored = st.storeCFAuditEventPage(EventPage(spark, Seq(mk("g4", "2024-05-01T10:00:03Z")))) } shouldBe 1
+      stored shouldBe 1L
+      // deleted: every guid is probed, and the sidecar is rebuilt from the partition
+      Files.delete(dir.resolve("_bloom_guid/2024-05-01"))
+      jobsOf { stored = st.storeCFAuditEventPage(EventPage(spark, Seq(mk("g5", "2024-05-01T10:00:04Z")))) } should be >= 1
+      stored shouldBe 1L
+      import spark.implicits._
+      val agg = (gs: Seq[String]) => gs.toDF("g")
+        .agg(graft.functions.BloomSupport.bloomAgg(F.col("g"), 1L << 20, 1L << 23)).head.getAs[Array[Byte]](0).toSeq
+      bloomFiles(dir)("2024-05-01") shouldBe agg(Seq("g1", "g2", "g3", "g4", "g5"))
+      // of another sizing: unusable, so probed and rebuilt
+      Files.write(dir.resolve("_bloom_guid/2024-05-01"), BloomFunctions.toBytes(
+        org.apache.spark.util.sketch.BloomFilter.create(1000L, 1L << 13)))
+      jobsOf { stored = st.storeCFAuditEventPage(EventPage(spark, Seq(mk("g6", "2024-05-01T10:00:05Z")))) } should be >= 1
+      stored shouldBe 1L
+      bloomFiles(dir)("2024-05-01") shouldBe agg(Seq("g1", "g2", "g3", "g4", "g5", "g6"))
+      guidsOf(st) shouldBe Seq("g1", "g2", "g3", "g4", "g5", "g6")
     }
   }
 }

@@ -270,6 +270,18 @@ class VectorFunctionsSpec extends SparkSpec {
       (ArrayType(LongType), ArrayType(LongType)), rows))
   }
 
+  it("both sorted_intersect_count kernels count up to a NULL element the merge walk never reaches, generated and interpreted") {
+    val t = (s: String) => UTF8String.fromString(s)
+    val strings = Seq[(Seq[Any], Seq[Any])](
+      (Seq(t("t1"), null), Seq()), (Seq(t("t1"), null), Seq(t("t1"))), (Seq(t("t1"), null), Seq(t("t1"), t("t2"))))
+    val longs = Seq[(Seq[Any], Seq[Any])]((Seq(1L, null), Seq()), (Seq(1L, null), Seq(1L)), (Seq(1L, null), Seq(1L, 2L)))
+    val expected = Seq[(Any, Any)]((0, 0), (1, 1), (null, null))
+    interpretedAndGenerated((l, r) => SortedIntersectCount(l, r),
+      (ArrayType(StringType), ArrayType(StringType)), strings) shouldBe expected
+    interpretedAndGenerated((l, r) => SortedIntersectCountLong(l, r),
+      (ArrayType(LongType), ArrayType(LongType)), longs) shouldBe expected
+  }
+
   private def checkIntersectCounts(rows: Seq[(Seq[Any], Seq[Any])], out: Seq[(Any, Any)]): Unit =
     rows.zip(out).foreach { case ((a, b), (interpreted, generated)) =>
       generated shouldBe interpreted
