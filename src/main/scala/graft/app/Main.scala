@@ -82,8 +82,8 @@ object Config {
   * SIGTERM (ST7: the loops drain before Spark stops). Collector/informer
   * errors are fatal; shipper errors are absorbed by its own loop (ST5).
   * The Splunk shipper starts only when both SPLUNK_* vars are set (ST8,
-  * main.go:110-122). Spark starts at the first scan, not at start-up, and
-  * is stopped at exit only if it started.
+  * main.go:110-122). Spark starts at the first scan, not at start-up nor
+  * once shutdown has begun, and is stopped at exit only if it started.
   *
   * These thread loops are the daemon's one pipeline shape, as in the
   * reference. Restart needs no offset log: the collector resumes from the
@@ -158,10 +158,14 @@ object Main {
     spawn("informer") { informer.run(cfg.informerScheduleMillis, () => stop.get()) }
 
     // Stop the loops and wait, at most 5 s in all, for each to finish its
-    // in-flight page write or post; then stop serving. Runs once, from
+    // in-flight page write or post; then stop serving. Once the handle is
+    // closed, whether Spark was built no longer changes. Runs once, from
     // whichever of the main thread and the SIGTERM hook gets here first.
     lazy val drained: Unit = {
       stop.set(true)
+      // No session is built from here on: a tick that needs one ends as
+      // stopped, and a build under way stops its own session.
+      spark.close()
       val deadline = System.currentTimeMillis() + 5000L
       threads.foreach(t => t.join(math.max(1L, deadline - System.currentTimeMillis())))
       server.stop()

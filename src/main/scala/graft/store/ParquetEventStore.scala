@@ -2,7 +2,7 @@ package graft.store
 
 import java.nio.file.{Files, StandardCopyOption}
 import java.sql.Timestamp
-import java.time.{LocalDate, ZoneOffset}
+import java.time.LocalDate
 import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 import scala.util.Try
@@ -62,14 +62,13 @@ import graft.operators.AuditQueries.RawEventFilter
   *    and the DataFrame members. A fresh warehouse's whole path needs none.
   *  - **Bloom-gated dedup probe**: each scoped partition's
   *    `_bloom_guid/<date>` sidecar is probed per guid. The store keeps each
-  *    date's deserialized filter on the driver while the sidecar's (length,
-  *    modification time) are those it read or wrote, puts a batch's guids
+  *    date's deserialized filter on the driver while the sidecar's
+  *    modification time is the one it read or wrote, puts a batch's guids
   *    straight into it, and writes the sidecar at every commit. Only
   *    bloom-positive guids (every guid, for a partition with no readable
   *    sidecar) go to one exact `guid IN (...)` scan over the partitions
-  *    that matched; with no positives there is no probe job, nor when the
-  *    tail holds every row of the scope (a positive it lacks is then a
-  *    false one). Blooms have no false negatives, so the dedup stays exact.
+  *    that matched; with no positives there is no probe job. Blooms have no
+  *    false negatives, so the dedup stays exact.
   *  - **The tail of this store's own appends**: the driver holds the last
   *    rows this store appended, in (created_at, UTF-8 guid) order, at most
   *    [[ParquetEventStore.MaxBatchRows]] of them (about 10 MB at 1 KB per
@@ -209,7 +208,7 @@ final class ParquetEventStore(session: LazySession, warehouseDir: String) extend
     * row per guid, dedup against the overlap scope, ids in (created_at,
     * guid) order, per-date blooms, the append on the driver. No Spark job
     * runs unless a bloom sidecar in scope matches a batch guid the tail
-    * does not hold, and the tail does not hold the whole scope. */
+    * does not hold. */
   private def storeOnDriver(rows: IndexedSeq[(Row, LocalDate)]): Long = {
     val fresh = rows.distinctBy(_._1.getString(guidIdx)) // first occurrence per guid wins
     if (fresh.isEmpty) return 0L
@@ -219,21 +218,14 @@ final class ParquetEventStore(session: LazySession, warehouseDir: String) extend
     // A guid the tail holds at an in-scope date is stored; the rest are
     // probed. Blooms have no false negatives: only bloom-positive guids
     // (all guids where a scoped partition has no readable sidecar) can be.
-    // When every scoped row is in the tail, none of the rest is stored:
-    // the tail holds every row above its watermark, and a row dated minDay
-    // or later in any zone is later than minDay's first instant at +18:00.
     val prior = tail
     val inTail = (g: String) => prior.exists(_.holds(g, minDay))
-    val tailHoldsScope = prior.exists(_.watermark <
-      DateTimeUtils.instantToMicros(minDay.atStartOfDay(ZoneOffset.MAX).toInstant))
     val guids = fresh.map(_._1.getString(guidIdx)).filter(g => g != null && !inTail(g))
       .map(g => g -> BloomFunctions.hashDriver(g))
-    val positives =
-      if (tailHoldsScope) Nil
-      else scope.flatMap { d =>
-        val bf = bloomOf(d)
-        guids.collect { case (g, h) if bf.forall(_.mightContainLong(h)) => d -> g }
-      }
+    val positives = scope.flatMap { d =>
+      val bf = bloomOf(d)
+      guids.collect { case (g, h) if bf.forall(_.mightContainLong(h)) => d -> g }
+    }
     val stored =
       if (positives.isEmpty) Set.empty[String]
       else spark.read.schema(Schemas.cfAuditEvents)
@@ -300,7 +292,7 @@ final class ParquetEventStore(session: LazySession, warehouseDir: String) extend
       val bf = bloomOf(d).getOrElse(rebuiltBloom(d))
       BloomFunctions.putDriver(bf, guids)
       writeBytes(bloomPath(d), BloomFunctions.toBytes(bf))
-      blooms(d) = (fs.getFileStatus(bloomPath(d)), bf)
+      blooms(d) = (fs.getFileStatus(bloomPath(d)).getModificationTime, bf)
     }
     append
     writeStatsCount(countBefore + n) // reltuples analog
@@ -321,17 +313,19 @@ final class ParquetEventStore(session: LazySession, warehouseDir: String) extend
     if (!fs.exists(p)) None
     else { val in = fs.open(p); try Some(in.readAllBytes()) finally in.close() }
 
-  /** Each date's deserialized bloom sidecar with the status of the file it
-    * was read from or written to. Only the appending thread uses it. */
-  private val blooms = mutable.Map.empty[String, (FileStatus, BloomFilter)]
+  /** Each date's deserialized bloom sidecar with the modification time of
+    * the file it was read from or written to. Only the appending thread
+    * uses it. */
+  private val blooms = mutable.Map.empty[String, (Long, BloomFilter)]
 
   /** The date's sidecar filter, None when the sidecar is absent,
     * unreadable or not of the store's fixed sizing (a probe then takes
     * every guid as positive, and a commit rebuilds the sidecar). The held
-    * filter serves while the sidecar's length and modification time are
-    * those it was read or written with, so a sidecar deleted or replaced
-    * since is seen; one replaced within the same millisecond at the same
-    * length is not (the sidecars are this store's own files). */
+    * filter serves while the sidecar's modification time is the one it was
+    * read or written with, so a sidecar deleted or replaced since is seen;
+    * one replaced within the same millisecond is not (the sidecars are
+    * this store's own files). Its length would add nothing: every sidecar
+    * of the fixed sizing has the same length. */
   private def bloomOf(d: String): Option[BloomFilter] = {
     val p = bloomPath(d)
     Try(fs.getFileStatus(p)).toOption match {
@@ -339,13 +333,12 @@ final class ParquetEventStore(session: LazySession, warehouseDir: String) extend
         blooms.remove(d)
         None
       case Some(now) => blooms.get(d) match {
-        case Some((was, bf)) if was.getLen == now.getLen && was.getModificationTime == now.getModificationTime =>
-          Some(bf)
+        case Some((was, bf)) if was == now.getModificationTime => Some(bf)
         case _ =>
           blooms.remove(d)
           val bf = Try(readBytes(p).map(b => BloomFilter.readFrom(b))).toOption.flatten
-            .filter(_.isCompatible(BloomFilter.create(bloomItems, bloomBits)))
-          bf.foreach(f => blooms(d) = (now, f))
+            .filter(_.bitSize == bloomBits)
+          bf.foreach(f => blooms(d) = (now.getModificationTime, f))
           bf
       }
     }

@@ -105,7 +105,9 @@ final class Collector(
     error.toLeft(collected)
   }
 
-  /** Periodic loop (ST1): run until `stop` flips or a collect fails. */
+  /** Periodic loop (ST1): run until `stop` flips or a collect fails. A
+    * page that needed a session after `Main` closed the handle ends the
+    * loop as stopped. */
   def run(scheduleMillis: Long, stop: () => Boolean): Either[Throwable, Unit] = {
     lsession.info("start") // collector.go:32-33
     try {
@@ -117,6 +119,8 @@ final class Collector(
         pacer.await(scheduleMillis, stop)
       }
       Right(())
+    } catch {
+      case _: LazySession.Closed => Right(())
     } finally lsession.info("end")
   }
 }

@@ -1,5 +1,7 @@
 package graft.streaming
 
+import org.apache.spark.sql.graftnative.LazySession
+
 import graft.metrics.{Metrics, MetricsRegistry}
 import graft.store.EventStore
 
@@ -32,6 +34,8 @@ final class Informer(store: EventStore, registry: MetricsRegistry,
     try while (!stop()) {
       informOnce()
       pacer.await(scheduleMillis, stop)
+    } catch {
+      case _: LazySession.Closed => () // a tick that needed a session after shutdown began
     } finally lsession.info("end")
   }
 }

@@ -9,6 +9,7 @@ import com.fasterxml.jackson.databind.{DeserializationFeature, JsonNode, ObjectM
 import com.fasterxml.jackson.databind.cfg.JsonNodeFeature
 import com.fasterxml.jackson.databind.node.NullNode
 import org.apache.spark.sql.Row
+import org.apache.spark.sql.graftnative.LazySession
 
 import graft.metrics.{Metrics, MetricsRegistry}
 import graft.model.Schemas
@@ -188,6 +189,8 @@ final class SplunkShipper(
     try while (!stop()) {
       shipOnce()
       pacer.await(scheduleMillis, stop)
+    } catch {
+      case _: LazySession.Closed => () // a tick that needed a session after shutdown began
     } finally lsession.info("end")
   }
 }

@@ -825,35 +825,30 @@ class StoreAndPipelineSpec extends SparkSpec {
   }
 
   describe("Main on SIGTERM (ST7, main.go:124-135)") {
-    it("drains the collector before Spark stops: no fatal exit, no error line, page 1 stored once") {
-      // A CF stub that holds page 2 until after the SIGTERM, as a slow API
-      // would: the collector is then mid-tick while the JVM shuts down.
-      val release = new java.util.concurrent.CountDownLatch(1)
+    /** A CF stub on loopback that answers `/v2/events` with `reply(query)`. */
+    def cfStub(reply: String => String): (com.sun.net.httpserver.HttpServer, java.util.concurrent.ExecutorService) = {
       val pool = java.util.concurrent.Executors.newCachedThreadPool()
       val cf = com.sun.net.httpserver.HttpServer.create(new java.net.InetSocketAddress("127.0.0.1", 0), 0)
       cf.setExecutor(pool)
       cf.createContext("/v2/events", (ex: com.sun.net.httpserver.HttpExchange) => {
-        val body =
-          if (ex.getRequestURI.getRawQuery.contains("page=2")) {
-            release.await(60, java.util.concurrent.TimeUnit.SECONDS)
-            pageJson(Seq("g3"), Seq("2024-01-01T10:00:02Z"), "")
-          } else pageJson(Seq("g1", "g2"), Seq("2024-01-01T10:00:00Z", "2024-01-01T10:00:01Z"),
-            "/v2/events?page=2")
-        val bytes = body.getBytes("UTF-8")
+        val bytes = reply(ex.getRequestURI.getRawQuery).getBytes("UTF-8")
         ex.sendResponseHeaders(200, bytes.length.toLong)
         ex.getResponseBody.write(bytes)
         ex.close()
       })
       cf.start()
-      val dir = Files.createTempDirectory("graft-main")
-      val log = dir.resolve("daemon.log")
+      (cf, pool)
+    }
+    /** `Main` in a child JVM (this JVM's classpath and JVM options, a
+      * smaller heap, `local[1]`) over `dir/warehouse`, polling `cf`, its
+      * output in `dir/daemon.log`. */
+    def startMain(dir: Path, cf: com.sun.net.httpserver.HttpServer): Process = {
       val metricsPort = { val s = new java.net.ServerSocket(0); try s.getLocalPort finally s.close() }
-      // this JVM's classpath and JVM options, with a smaller heap
       val jvmArgs = java.lang.management.ManagementFactory.getRuntimeMXBean.getInputArguments.asScala.toSeq
       val cmd = Seq(new java.io.File(System.getProperty("java.home"), "bin/java").getPath) ++ jvmArgs ++
         Seq("-Xmx1g", "-cp", System.getProperty("java.class.path"), "graft.app.Main")
       val pb = new ProcessBuilder(cmd.asJava).directory(dir.toFile)
-        .redirectErrorStream(true).redirectOutput(log.toFile)
+        .redirectErrorStream(true).redirectOutput(dir.resolve("daemon.log").toFile)
       Seq("DATABASE_URL", "CF_CLIENT_ID", "CF_CLIENT_SECRET", "CF_USERNAME", "CF_PASSWORD",
         "SPLUNK_API_KEY", "SPLUNK_HEC_ENDPOINT_URL").foreach(pb.environment().remove)
       pb.environment().putAll(Map(
@@ -864,13 +859,37 @@ class StoreAndPipelineSpec extends SparkSpec {
         "PORT" -> metricsPort.toString,
         "SPARK_MASTER" -> "local[1]",
         "SPARK_GRAFT_CPUS" -> "1").asJava)
-      def logText = new String(Files.readAllBytes(log), "UTF-8")
-      val proc = pb.start()
+      pb.start()
+    }
+    def logOf(dir: Path): String = new String(Files.readAllBytes(dir.resolve("daemon.log")), "UTF-8")
+    /** Waits, at most 180 s, for the child's log to contain `marker`. */
+    def awaitLog(proc: Process, dir: Path, marker: String): Unit = {
+      val deadline = System.nanoTime() + 180L * 1000000000L
+      while (proc.isAlive && !logOf(dir).contains(marker) && System.nanoTime() < deadline)
+        Thread.sleep(50L)
+      withClue(logOf(dir)) { logOf(dir) should include (marker) }
+    }
+    def quietExit(lines: Seq[String]): Unit = {
+      lines.filter(l => l.contains("fatal:") || l.contains("SparkContext has been shutdown")) shouldBe empty
+      lines.filter(l => l.startsWith("{") && l.contains(".err-")) shouldBe empty
+      lines.filter(_.startsWith("Exception in thread")) shouldBe empty // no loop thread died
+    }
+
+    it("drains the collector before Spark stops: no fatal exit, no error line, page 1 stored once") {
+      // A CF stub that holds page 2 until after the SIGTERM, as a slow API
+      // would: the collector is then mid-tick while the JVM shuts down.
+      val release = new java.util.concurrent.CountDownLatch(1)
+      val (cf, pool) = cfStub { q =>
+        if (q.contains("page=2")) {
+          release.await(60, java.util.concurrent.TimeUnit.SECONDS)
+          pageJson(Seq("g3"), Seq("2024-01-01T10:00:02Z"), "")
+        } else pageJson(Seq("g1", "g2"), Seq("2024-01-01T10:00:00Z", "2024-01-01T10:00:01Z"),
+          "/v2/events?page=2")
+      }
+      val dir = Files.createTempDirectory("graft-main")
+      val proc = startMain(dir, cf)
       try {
-        val deadline = System.nanoTime() + 180L * 1000000000L
-        while (proc.isAlive && !logText.contains("run.stored-events") && System.nanoTime() < deadline)
-          Thread.sleep(100L)
-        withClue(logText) { logText should include ("cf-audit-event-collector.run.stored-events") }
+        awaitLog(proc, dir, "cf-audit-event-collector.run.stored-events")
         proc.destroy() // SIGTERM
         Thread.sleep(1000L) // long enough for Spark's own hook to stop an undrained context
         release.countDown()
@@ -881,10 +900,9 @@ class StoreAndPipelineSpec extends SparkSpec {
         cf.stop(0)
         pool.shutdownNow()
       }
-      val lines = logText.split("\n").toSeq
-      withClue(logText) {
-        lines.filter(l => l.contains("fatal:") || l.contains("SparkContext has been shutdown")) shouldBe empty
-        lines.filter(l => l.startsWith("{") && l.contains(".err-")) shouldBe empty
+      val lines = logOf(dir).split("\n").toSeq
+      withClue(logOf(dir)) {
+        quietExit(lines)
         lines.exists(_.contains("cf-audit-event-collector.run.end")) shouldBe true
         // A fresh warehouse's pages need no scan, so Spark never started:
         // not for the pages, and not at shutdown either.
@@ -894,6 +912,37 @@ class StoreAndPipelineSpec extends SparkSpec {
         .select("guid").collect().map(_.getString(0)).toSeq
       guids.filter(Set("g1", "g2")).sorted shouldBe Seq("g1", "g2")
       guids.distinct.size shouldBe guids.size
+    }
+
+    it("a restart stopped while its first page builds Spark exits with no fatal exit and no error line") {
+      // An existing warehouse: the restart's first page re-fetches g2, which
+      // its bloom sidecar holds, so the dedup probe scans and builds Spark.
+      val dir = Files.createTempDirectory("graft-main-restart")
+      val before = new ParquetEventStore(spark, s"$dir/warehouse")
+      before.init()
+      before.storeCFAuditEventPage(EventPage(spark, Seq(
+        CfWireEvent("g1", "2024-01-01T10:00:00Z", "t", "a", "at", "an", "au", "e", "et", "en", "", "sg", "{}"),
+        CfWireEvent("g2", "2024-01-01T10:00:01Z", "t", "a", "at", "an", "au", "e", "et", "en", "", "sg", "{}")))) shouldBe 2L
+      val (cf, pool) = cfStub(_ => pageJson(Seq("g2", "g3"), Seq("2024-01-01T10:00:01Z", "2024-01-01T10:00:02Z"), ""))
+      val proc = startMain(dir, cf)
+      try {
+        // SparkContext's first line: the build is under way inside the page
+        awaitLog(proc, dir, "Running Spark version")
+        proc.destroy() // SIGTERM
+        proc.waitFor(60, java.util.concurrent.TimeUnit.SECONDS) shouldBe true
+      } finally {
+        proc.destroyForcibly()
+        cf.stop(0)
+        pool.shutdownNow()
+      }
+      val lines = logOf(dir).split("\n").toSeq
+      withClue(logOf(dir)) {
+        quietExit(lines)
+        lines.filter(_.contains("stored-events")) shouldBe empty // the page ended as stopped
+      }
+      val guids = new ParquetEventStore(spark, s"$dir/warehouse").events
+        .select("guid").collect().map(_.getString(0)).toSeq
+      guids.sorted shouldBe Seq("g1", "g2")
     }
   }
 
@@ -2357,31 +2406,30 @@ class StoreAndPipelineSpec extends SparkSpec {
         .agg(graft.functions.BloomSupport.bloomAgg(F.col("g"), 1L << 20, 1L << 23)).head.getAs[Array[Byte]](0).toSeq
     }
 
-    it("a bloom-positive guid runs no probe while the tail holds every row of the scope, and a probe once it does not") {
+    it("a closed handle builds no session: a page that needs a scan ends the collector's run as stopped") {
+      val (first, dir) = newStoreAt()
+      first.storeCFAuditEventPage(EventPage(spark, Seq(mk("g1", "2024-05-01T10:00:00Z")))) shouldBe 1L
       val handle = lazySession()
-      val dir = Files.createTempDirectory("graft-store-noprobe")
-      val st = new ParquetEventStore(handle, dir.toString)
-      st.init() // a table init created: the watermark is epoch
-      st.storeCFAuditEventPage(EventPage(handle, Seq(mk("g1", "2024-05-01T10:00:00Z")))) shouldBe 1L
-      replaceBloom(dir, "2024-05-01", Seq("g1", "g2")) // g2 tests positive
-      var stored = 0L
-      jobsOf { stored = st.storeCFAuditEventPage(EventPage(handle, Seq(mk("g2", "2024-05-01T10:00:01Z")))) } shouldBe 0
-      stored shouldBe 1L
+      val restarted = new ParquetEventStore(handle, dir.toString)
+      restarted.init()
+      handle.close() // as Main's drain does
+      // the restart re-fetches g1, which its sidecar holds: the probe needs a scan
+      val transport = new FakeTransport(Map(
+        "/v2/events?q=timestamp%3E2024-05-01T09%3A59%3A55Z&results-per-page=100" ->
+          HttpReply(200, pageJson(Seq("g1", "g2"), Seq("2024-05-01T10:00:00Z", "2024-05-01T10:00:01Z"), ""))))
+      val registry = new MetricsRegistry
+      val collector = new Collector(handle, restarted,
+        new CfAuditEventFetcher(transport, "", paginationWaitMillis = 0), registry)
+      collector.run(60000L, () => false) shouldBe Right(())
+      registry.counterValue(Metrics.CollectorErrors) shouldBe 0.0
+      a[LazySession.Closed] should be thrownBy handle.session
       handle.isBuilt shouldBe false
-      // a restarted store's watermark is the table's max(created_at), inside the scope
-      val restarted = new ParquetEventStore(spark, dir.toString)
-      restarted.storeCFAuditEventPage(EventPage(spark, Seq(mk("g3", "2024-05-01T10:00:02Z")))) shouldBe 1L
-      replaceBloom(dir, "2024-05-01", Seq("g1", "g2", "g3", "g4")) // g4 tests positive
-      jobsOf { stored = restarted.storeCFAuditEventPage(EventPage(spark, Seq(mk("g4", "2024-05-01T10:00:03Z")))) } shouldBe 1
-      stored shouldBe 1L
-      guidsOf(restarted) shouldBe Seq("g1", "g2", "g3", "g4")
+      guidsOf(first) shouldBe Seq("g1")
     }
 
     it("a bloom sidecar deleted or replaced between pages is read again, not served from the filter the store holds") {
-      val (first, dir) = newStoreAt()
-      first.storeCFAuditEventPage(EventPage(spark, Seq(mk("g1", "2024-05-01T10:00:00Z")))) shouldBe 1L
-      // a restarted store probes: its watermark is inside the scope
-      val st = new ParquetEventStore(spark, dir.toString)
+      val (st, dir) = newStoreAt()
+      st.storeCFAuditEventPage(EventPage(spark, Seq(mk("g1", "2024-05-01T10:00:00Z")))) shouldBe 1L
       st.storeCFAuditEventPage(EventPage(spark, Seq(mk("g2", "2024-05-01T10:00:01Z")))) shouldBe 1L
       var stored = 0L
       // held, unchanged: g3 tests negative, no probe
